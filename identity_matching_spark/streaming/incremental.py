@@ -362,20 +362,33 @@ def incremental_fold(
 
 # --- bucketed, manifest-committed state store ------------------------------
 #
-# The three state tables (persons_silver, membership, cluster_keys) are laid
-# out as <root>/<table>/bucket=K/gen=G/ parquet leaves, with a SINGLE
-# atomically-replaced manifest JSON naming the live generation per bucket.
-# Per batch only the AFFECTED buckets are rewritten under gen=<batch_id>
-# (dynamic partition overwrite — untouched buckets are neither read nor
-# written), and the one os.replace of the manifest is the commit point:
+# The five state tables (persons_silver, membership, cluster_keys and the two
+# index copies members_by_comp, key_index) are laid out as
+# <root>/<table>/bucket=K/gen=G/ parquet leaves, with a SINGLE
+# atomically-replaced manifest JSON naming the live generation per bucket and
+# each table's schema. Per batch only the AFFECTED buckets are rewritten
+# under gen=<batch_id> (dynamic partition overwrite — untouched buckets are
+# neither read nor written), and the one os.replace of the manifest is the
+# commit point:
 #
+# * the five table writes run concurrently (one driver thread each, carrying
+#   the caller's job group and tags); each table's rows are repartitioned on
+#   their bucket first, so every written leaf holds exactly one part file;
+# * the commit waits for all five writes and re-raises the first failure
+#   before it touches the manifest, so no write outlives commit();
 # * crash anywhere before the manifest replace → the old manifest still
-#   names only old generations; all three tables stay mutually consistent;
-# * foreachBatch replays the batch → gen=<batch_id> leaves are deterministic
-#   overwrites of themselves, the commit re-applies idempotently;
+#   names only old generations; all tables stay mutually consistent;
+# * foreachBatch replays the batch → the commit first clears any
+#   gen=<batch_id> leaves a crashed attempt left in the affected buckets,
+#   then re-applies idempotently;
 # * a manifest batch_id >= the replayed batch's id → the fold is skipped
 #   (already committed);
-# * generations no manifest references are garbage-collected after commit.
+# * reads pass the manifest's schema, so opening a leaf set runs no
+#   footer-inference job;
+# * generations no manifest references are garbage-collected after the
+#   publish: the writer's first commit sweeps every bucket, later commits
+#   only their affected buckets. Opening a store never deletes anything, so
+#   a reader opened during a commit cannot remove unpublished leaves.
 #
 # Bronze appends are keyed by batch_id partition (overwrite-in-place), so a
 # replayed batch never double-appends.
@@ -421,12 +434,8 @@ class IncrementalState:
                 f"{self._manifest.get('n_buckets')}, opened with {n_buckets}"
             )
         self.exact_mode_checked = False
-        if self._manifest:
-            # full sweep once per open: commit-time GC is scoped to the
-            # batch's affected buckets, so orphans left by a crash between
-            # a commit and its GC (or by a pre-scoped-GC writer) are
-            # collected here instead of on every commit
-            self._gc(None)
+        # the first commit through this object sweeps every bucket
+        self._swept = False
 
     # -- manifest ----------------------------------------------------------
 
@@ -469,6 +478,22 @@ class IncrementalState:
         ``fold_batch`` must be re-resolved rather than folded)."""
         return bool(self._manifest) and self._manifest.get("exact_mode", False)
 
+    def _schema(self, table: str):
+        """The table's committed schema, or None when the manifest predates
+        recorded schemas for it."""
+        import json
+
+        from pyspark.sql.types import StructType
+
+        recorded = (self._manifest or {}).get("schemas", {}).get(table)
+        return StructType.fromJson(json.loads(recorded)) if recorded else None
+
+    def _read_leaves(self, table: str, paths: list[str]) -> DataFrame:
+        # the manifest's schema spares the read its footer-inference job
+        schema = self._schema(table)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(*paths)
+
     def read(self, table: str) -> DataFrame:
         """Current contents of a table (live generation of every bucket).
         An empty table (e.g. state bootstrapped from a zero-row first
@@ -476,15 +501,8 @@ class IncrementalState:
         gens = self._manifest["tables"][table]
         paths = [self._leaf(table, int(k), g) for k, g in sorted(gens.items())]
         if not paths:
-            import json
-
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(
-                json.loads(self._manifest["schemas"][table])
-            )
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(*paths)
+            return self.spark.createDataFrame([], self._schema(table))
+        return self._read_leaves(table, paths)
 
     def read_buckets(self, table: str, buckets: list[int]) -> DataFrame | None:
         """Only the named buckets (partition-pruned read); None if none of
@@ -493,36 +511,70 @@ class IncrementalState:
         paths = [self._leaf(table, b, gens[str(b)]) for b in buckets if str(b) in gens]
         if not paths:
             return None
-        return self.spark.read.parquet(*paths)
+        return self._read_leaves(table, paths)
 
     # -- commit ------------------------------------------------------------
 
-    def commit(self, batch_id: int, writes: dict[str, tuple[DataFrame, list[int]]]) -> None:
+    def commit(
+        self,
+        batch_id: int,
+        writes: dict[str, tuple[DataFrame, list[int]]],
+        exact_mode: bool,
+    ) -> None:
         """Persist ``{table: (content, affected_buckets)}`` as generation
         ``batch_id`` of the affected buckets, then atomically publish the
         new manifest. ``content`` must hold exactly the new rows of the
-        affected buckets (pass-through rows of other buckets excluded)."""
+        affected buckets (pass-through rows of other buckets excluded).
+        ``exact_mode`` is recorded in the manifest (see :meth:`exact_mode`):
+        pass True only for content of an exact-mode resolution.
+
+        The five writes run concurrently; every one finishes before the
+        first failure is re-raised, and only then is the manifest touched."""
         import json
         import os
+        import shutil
+        from concurrent.futures import ThreadPoolExecutor
 
-        new_tables = {}
-        schemas = dict(self._manifest.get("schemas", {})) if self._manifest else {}
+        from pyspark.util import inheritable_thread_target
+
+        live = self._manifest["tables"] if self._manifest else {}
         for table in self.TABLES:
-            df, affected = writes[table]
-            schemas[table] = df.schema.json()
+            for b in writes[table][1]:
+                # a crashed attempt at this batch may have left a leaf in a
+                # bucket this attempt leaves empty; the existence check below
+                # must not adopt it
+                if live.get(table, {}).get(str(b)) != batch_id:
+                    shutil.rmtree(self._leaf(table, b, batch_id), ignore_errors=True)
+
+        def write(table: str) -> None:
             (
-                df.withColumn("bucket", self.bucket_expr(table))
+                writes[table][0]
+                .withColumn("bucket", self.bucket_expr(table))
                 .withColumn("gen", F.lit(batch_id))
+                # every row of a bucket in one task → one part file per leaf
+                .repartition("bucket")
                 .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("bucket", "gen")
                 .parquet(os.path.join(self.root, table))
             )
-            gens = (
-                dict(self._manifest["tables"].get(table, {}))
-                if self._manifest
-                else {}
-            )
+
+        # each target is wrapped here, in the caller's thread, so its jobs
+        # inherit the caller's job group and tags
+        with ThreadPoolExecutor(len(self.TABLES)) as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(self.spark)(write), table)
+                for table in self.TABLES
+            ]
+        for f in futures:
+            f.result()  # all are done: re-raises the first failure
+
+        schemas = dict(self._manifest.get("schemas", {})) if self._manifest else {}
+        new_tables = {}
+        for table in self.TABLES:
+            df, affected = writes[table]
+            schemas[table] = df.schema.json()
+            gens = dict(live.get(table, {}))
             for b in affected:
                 # dynamic overwrite writes no leaf for an empty bucket: the
                 # manifest entry is dropped and the bucket reads as empty
@@ -534,7 +586,7 @@ class IncrementalState:
         manifest = {
             "batch_id": batch_id,
             "n_buckets": self.n_buckets,
-            "exact_mode": True,
+            "exact_mode": exact_mode,
             "tables": new_tables,
             "schemas": schemas,
         }
@@ -543,17 +595,25 @@ class IncrementalState:
             json.dump(manifest, fh)
         os.replace(tmp, self.manifest_path)  # the commit point
         self._manifest = manifest
-        # commit already knows exactly which buckets changed — GC only
-        # those (the per-commit full walk was O(n_buckets × tables) of
-        # driver listdir calls per batch; orphans elsewhere are swept once
-        # at open, see __init__)
-        self._gc({t: writes[t][1] for t in self.TABLES})
+        if not exact_mode:
+            self.exact_mode_checked = False
+        if self._swept:
+            # commit knows exactly which buckets changed — GC only those
+            # (a full walk is O(n_buckets × tables) driver listdir calls)
+            self._gc({t: writes[t][1] for t in self.TABLES})
+        else:
+            # the writer's first commit sweeps every bucket: orphans of a
+            # crash between a publish and its GC, or of a crashed attempt
+            # at another batch, are collected here. Only the writer sweeps,
+            # after its publish, so no unpublished leaf is ever at risk.
+            self._gc(None)
+            self._swept = True
 
     def _gc(self, affected: dict[str, list[int]] | None = None) -> None:
         """Delete generations the manifest no longer references. Runs after
         the commit point — a crash mid-GC leaves only unreferenced leaves.
-        ``affected`` limits the walk to those buckets per table (commit
-        path); None sweeps every bucket (open-time recovery sweep)."""
+        ``affected`` limits the walk to those buckets per table; None sweeps
+        every bucket (the writer's first commit)."""
         import os
         import shutil
 
@@ -586,6 +646,22 @@ def _collect_buckets(df: DataFrame, expr) -> list[int]:
     return [r[0] for r in df.select(expr.alias("b")).distinct().collect()]
 
 
+def _collect_bucket_sets(frames: dict[str, tuple[DataFrame, object]]) -> dict[str, list[int]]:
+    """:func:`_collect_buckets` of several frames in one round trip:
+    ``{name: (frame, bucket_expr)}`` → ``{name: buckets}``, each frame's
+    buckets tagged with its name inside one distinct."""
+    from functools import reduce
+
+    tagged = [
+        df.select(F.lit(name).alias("t"), expr.alias("b"))
+        for name, (df, expr) in frames.items()
+    ]
+    out: dict[str, list[int]] = {name: [] for name in frames}
+    for r in reduce(DataFrame.union, tagged).distinct().collect():
+        out[r["t"]].append(r["b"])
+    return out
+
+
 def _touched_closure_bucketed(
     state: IncrementalState, seed_keys: DataFrame, max_hops: int = 25
 ) -> tuple[DataFrame, int, int]:
@@ -615,10 +691,11 @@ def _touched_closure_bucketed(
             .join(touched, "component", "left_anti")
             .localCheckpoint(eager=False)
         )
-        if new_comps.isEmpty():
+        # new_comps is empty exactly when its bucket list is: one round trip
+        cb = _collect_buckets(new_comps, comp_expr)
+        if not cb:
             return touched, hops, buckets_read
         touched = touched.union(new_comps).localCheckpoint(eager=False)
-        cb = _collect_buckets(new_comps, comp_expr)
         ck = state.read_buckets("cluster_keys", cb)
         buckets_read += len(cb)
         if ck is None:
@@ -655,9 +732,15 @@ def fold_batch(
       (broadcast semi/anti joins; the groupBy shuffles colliding ∪ delta
       rows, never the corpus — metric ``merge_rows``);
     * membership/cluster_keys/index rewrites touch only the buckets
-      holding scoped/rescoped rows;
-    * the commit rewrites only those buckets' leaves (manifest publish is
-      the atomic point).
+      holding scoped/rescoped rows; the affected bucket sets come back in
+      two round trips (silver/membership/cluster_keys, then the indexes);
+    * the commit writes the five tables concurrently, one part file per
+      rewritten ``(bucket, gen)`` leaf, and publishes the manifest (the
+      atomic point) only after every write has finished; the jobs keep the
+      caller's job group and tags;
+    * every state read takes its schema from the manifest (no footer
+      inference job), and unreferenced generations are collected by the
+      writer after its publish, never by a reader opening the store.
 
     Stores written before the index tables existed are migrated in place:
     their first fold derives members_by_comp and key_index with one full
@@ -704,6 +787,7 @@ def fold_batch(
                 "members_by_comp": (membership.select("id", "component"), all_buckets),
                 "key_index": (keys, all_buckets),
             },
+            exact_mode=True,
         )
         return {"bootstrap": True, "delta_rows": delta.count() if collect_metrics else None}
 
@@ -776,8 +860,25 @@ def fold_batch(
         metrics["scope_rows"] = scoped.count()
         metrics["delta_rows"] = delta.count()
 
+    # --- affected buckets of silver, membership, cluster_keys: one collect -
+    # silver: the delta's ids; membership: the scoped/delta/rescoped ids;
+    # cluster_keys: removals by touched comps, additions by rescoped ones
+    changed_ids = (
+        scope_ids.unionByName(delta_ids).unionByName(rescoped.select("id"))
+    ).distinct().localCheckpoint(eager=False)
+    key_comps = touched.unionByName(new_keys.select("component"))
+    affected = _collect_bucket_sets(
+        {
+            "persons_silver": (delta_ids, silver_expr),
+            "membership": (changed_ids, member_expr),
+            "cluster_keys": (key_comps, keys_expr),
+        }
+    )
+    silver_buckets = affected["persons_silver"]
+    member_buckets = affected["membership"]
+    key_buckets = affected["cluster_keys"]
+
     # --- silver: merge colliding ids only (delta-sized) -------------------
-    silver_buckets = _collect_buckets(delta_ids, silver_expr)
     old_silver = state.read_buckets("persons_silver", silver_buckets)
     if old_silver is None:
         silver_content = delta
@@ -795,11 +896,7 @@ def fold_batch(
         merge_rows = merge_input.count() if collect_metrics else None
     metrics["merge_rows"] = merge_rows
 
-    # --- membership: affected buckets are the scoped/delta/rescoped ids' --
-    changed_ids = (
-        scope_ids.unionByName(delta_ids).unionByName(rescoped.select("id"))
-    ).distinct().localCheckpoint(eager=False)
-    member_buckets = _collect_buckets(changed_ids, member_expr)
+    # --- membership ------------------------------------------------------
     old_member = state.read_buckets("membership", member_buckets)
     if old_member is None:
         member_content = rescoped
@@ -817,9 +914,7 @@ def fold_batch(
         ).join(F.broadcast(rescoped.select("id")), "id", "left_anti")
         member_content = surviving.unionByName(rescoped)
 
-    # --- cluster_keys: removals by touched comps, additions by rescoped ---
-    key_comps = touched.unionByName(new_keys.select("component")).distinct()
-    key_buckets = _collect_buckets(key_comps, keys_expr)
+    # --- cluster_keys ----------------------------------------------------
     old_keys = state.read_buckets("cluster_keys", key_buckets)
     buckets_read += len(key_buckets)
     if old_keys is None:
@@ -835,18 +930,36 @@ def fold_batch(
             F.broadcast(touched), "component", "semi"
         ).localCheckpoint(eager=False)
 
-    # --- members_by_comp: same rows as membership, bucketed by component --
-    mbc_comps = touched.unionByName(rescoped.select("component")).distinct()
-    if old_changed_rows is not None:
-        mbc_comps = mbc_comps.unionByName(old_changed_rows.select("component")).distinct()
+    # --- index tables: affected buckets, one collect for both -----------
     if legacy:
-        # migration: derive the full by-component copy from the pre-fold
-        # membership, then apply the same removals/additions
-        mbc_buckets = list(range(state.n_buckets))
+        # migration: derive the full index copies from the pre-fold tables,
+        # then apply the same removals/additions
+        mbc_buckets = kidx_buckets = list(range(state.n_buckets))
         old_mbc = membership_full.select("id", "component")
+        old_kidx = cluster_keys_full
     else:
-        mbc_buckets = _collect_buckets(mbc_comps, mcomp_expr)
+        # members_by_comp: touched and rescoped components, plus the OLD
+        # components of re-resolved ids; key_index: the new keys plus the
+        # touched components' old keys, whose rows must be dropped
+        mbc_comps = touched.unionByName(rescoped.select("component"))
+        if old_changed_rows is not None:
+            mbc_comps = mbc_comps.unionByName(old_changed_rows.select("component"))
+        kidx_keys = new_keys.select("key")
+        if touched_old_keys is not None:
+            kidx_keys = kidx_keys.unionByName(touched_old_keys.select("key"))
+        affected = _collect_bucket_sets(
+            {
+                "members_by_comp": (mbc_comps, mcomp_expr),
+                "key_index": (kidx_keys, kidx_expr),
+            }
+        )
+        mbc_buckets = affected["members_by_comp"]
+        kidx_buckets = affected["key_index"]
         old_mbc = state.read_buckets("members_by_comp", mbc_buckets)
+        old_kidx = state.read_buckets("key_index", kidx_buckets)
+        buckets_read += len(kidx_buckets)
+
+    # --- members_by_comp: same rows as membership, bucketed by component --
     if old_mbc is None:
         mbc_content = rescoped.select("id", "component")
     else:
@@ -856,16 +969,6 @@ def fold_batch(
         mbc_content = mbc_surviving.unionByName(rescoped.select("id", "component"))
 
     # --- key_index: same rows as cluster_keys, bucketed by key ------------
-    if legacy:
-        kidx_buckets = list(range(state.n_buckets))
-        old_kidx = cluster_keys_full
-    else:
-        kidx_key_rows = new_keys.select("key")
-        if touched_old_keys is not None:
-            kidx_key_rows = kidx_key_rows.unionByName(touched_old_keys.select("key"))
-        kidx_buckets = _collect_buckets(kidx_key_rows.distinct(), kidx_expr)
-        old_kidx = state.read_buckets("key_index", kidx_buckets)
-        buckets_read += len(kidx_buckets)
     if old_kidx is None:
         kidx_content = new_keys
     else:
@@ -889,6 +992,7 @@ def fold_batch(
             "members_by_comp": (mbc_content, mbc_buckets),
             "key_index": (kidx_content, kidx_buckets),
         },
+        exact_mode=True,
     )
     return metrics
 

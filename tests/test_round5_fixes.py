@@ -252,6 +252,9 @@ class TestIncrementalStateStore:
         writes but before the manifest replace: both must leave the previous
         state fully readable and mutually consistent, and the replayed batch
         must then land exactly."""
+        import glob
+        import json
+        import os
         import os as os_mod
 
         from identity_matching_spark.operators.cluster import reduce_people
@@ -281,6 +284,13 @@ class TestIncrementalStateStore:
         with pytest.raises(RuntimeError, match="simulated"):
             fold_batch(state, _full_persons(spark, delta), bl, batch_id=1)
         monkeypatch.setattr(DataFrameWriter, "parquet", orig_parquet)
+        # the failure surfaced only after the other four writes finished,
+        # and the manifest was not touched
+        for table in IncrementalState.TABLES:
+            leaves = glob.glob(os.path.join(str(tmp_path), table, "bucket=*", "gen=1"))
+            assert bool(leaves) == (table != "membership"), table
+        with open(state.manifest_path) as fh:
+            assert json.load(fh)["batch_id"] == 0
         crashed = IncrementalState(spark, str(tmp_path), n_buckets=8)
         assert crashed.committed_batch() == 0
         assert _member_set(crashed.read("membership")) == before

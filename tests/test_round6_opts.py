@@ -314,10 +314,11 @@ def test_migrate_flat_bronze_recovers_full_corpus(spark, tmp_path):
     assert migrate_flat_bronze(bronze) == 0
 
 
-def test_gc_scoped_to_commit_buckets_full_sweep_on_open(spark, tmp_path):
+def test_gc_scoped_to_commit_buckets_full_sweep_on_first_commit(spark, tmp_path):
     """VERDICT r5 #3: commit-time GC walks only the batch's affected
     buckets; an orphan generation planted in an UNtouched bucket survives
-    the commit but is swept by the next open."""
+    that commit and a later open (opening never deletes), and is swept by
+    the first commit of the next writer."""
     import os
 
     bl = Blacklist.testing()
@@ -341,8 +342,10 @@ def test_gc_scoped_to_commit_buckets_full_sweep_on_open(spark, tmp_path):
 
     fold_batch(state, _full_persons(spark, delta), bl, batch_id=1)
     assert os.path.isdir(orphan), "commit-time GC must skip untouched buckets"
-    IncrementalState(spark, str(tmp_path), n_buckets=8)  # open → full sweep
-    assert not os.path.isdir(orphan), "open-time sweep must collect orphans"
+    writer = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    assert os.path.isdir(orphan), "opening a store must delete nothing"
+    fold_batch(writer, _full_persons(spark, delta), bl, batch_id=2)
+    assert not os.path.isdir(orphan), "the first commit must sweep orphans"
 
 
 def test_max_bucket_drop_counter(spark):
