@@ -14,7 +14,7 @@ Residual hot keys are a single groupBy per key — AQE skew handling applies.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 EMPTY_EXT = ""
@@ -37,25 +37,6 @@ def star_edges(df: DataFrame, key_cols: list[str], id_col: str = "id") -> DataFr
         .where(F.col("src") != F.col("dst"))
         .select("src", "dst")
     )
-
-
-def email_edges(
-    persons: DataFrame,
-    popular_email: Column,
-    matched_email: Column | None = None,
-) -> DataFrame:
-    """J1: star edges per shared email, skipping popular and matched emails.
-
-    ``popular_email`` — boolean Column flagging popular emails (precomputed
-    once upstream so the email column itself can be a dictionary-encoded
-    surrogate, not the string). ``matched_email`` — boolean Column: emails
-    resolved by the external matcher are excluded from email blocking
-    (matching.go:122-127).
-    """
-    df = persons.where(~popular_email)
-    if matched_email is not None:
-        df = df.where(~matched_email)
-    return star_edges(df, ["email"])
 
 
 def external_id_edges(persons: DataFrame, ext_col: str = "external_id") -> DataFrame:

@@ -297,61 +297,46 @@ def reduce_people(
         "pop_email",
     )
 
+    # Each person row holds exactly one email, so the email stars collapse
+    # without a join loop: every non-popular (and non-matched) email block
+    # maps to its hub (min person id) — the quotient node ``_q``. Without
+    # matcher or similarity edges the quotient nodes ARE the email-phase
+    # components. With them, only those edges — mapped to hub super-nodes
+    # — enter the iterative CC. Edge contraction preserves connectivity,
+    # and the final label (min member id of a component) is invariant
+    # because every hub IS the minimum id of its block, so min over
+    # quotient-node ids = min over person ids. The email stars are the bulk
+    # of the phase-1 edge volume (every multi-member email block), so the
+    # per-round shuffles run over the quotient graph (~4× fewer nodes at
+    # the bench corpus: 162k persons → ~40k hubs) and converge in fewer
+    # rounds (same-email chains are pre-collapsed). Equivalence pinned by
+    # the q33 golden + parity suite. A NULL-email person is its own quotient
+    # node (its email joins no hub): kept, never dropped.
+    matched = F.col("external_id").isNotNull()
+    eligible = ~F.col("pop_email") & ~matched
+    # partial-aggregated groupBy + join back — the skew-safe shape (hot
+    # emails never pile into one reducer)
+    hubs = (
+        persons.where(eligible)
+        .groupBy("email")
+        .agg(F.min("id").alias("_hub"))
+    )
+    # keep the person columns on the quotient map so members0 comes from
+    # one join on the (small) component table instead of a second
+    # persons-sized join on id
+    qfull = (
+        persons.join(hubs, "email", "left")
+        .select(
+            *persons.columns,
+            F.when(eligible, F.coalesce("_hub", F.col("id")))
+            .otherwise(F.col("id"))
+            .alias("_q"),
+        )
+        .localCheckpoint(eager=False)
+    )
     if external_ids is None and extra_edges is None:
-        # Each person row holds exactly one email, so the email-phase
-        # components ARE the email blocks: component = min(id) per
-        # non-popular email. Partial-aggregated groupBy + join back — the
-        # skew-safe shape (hot emails never pile into one reducer).
-        hubs = persons.groupBy("email").agg(F.min("id").alias("_hub"))
-        # carry the person columns through the hub join — a second
-        # persons⋈comp0 join on id would rebuild the same relation
-        members0 = (
-            persons.join(hubs, "email")
-            .select(
-                *persons.columns,
-                F.when(F.col("pop_email"), F.col("id"))
-                .otherwise(F.col("_hub"))
-                .alias("component"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        # every component's ext is the empty string here — attach it as a
-        # literal instead of a distinct+join against a constant relation
-        comp_ext = None
+        members0 = qfull.select(*persons.columns, F.col("_q").alias("component"))
     else:
-        # Contract the email-star edges BEFORE the iterative CC: each
-        # non-popular (and non-matched) email block collapses to its hub
-        # (min person id) exactly as in the fast path above, and only the
-        # matcher/similarity edges — mapped to hub super-nodes — enter the
-        # join loop. Edge contraction preserves connectivity, and the final
-        # label (min member id of a component) is invariant because every
-        # hub IS the minimum id of its block, so min over quotient-node ids
-        # = min over person ids. The email stars are the bulk of the phase-1
-        # edge volume (every multi-member email block), so the per-round
-        # shuffles run over the quotient graph (~4× fewer nodes at the
-        # bench corpus: 162k persons → ~40k hubs) and converge in fewer
-        # rounds (same-email chains are pre-collapsed). Equivalence pinned
-        # by the q33 golden + parity suite.
-        matched = F.col("external_id").isNotNull()
-        eligible = ~F.col("pop_email") & ~matched
-        hubs = (
-            persons.where(eligible)
-            .groupBy("email")
-            .agg(F.min("id").alias("_hub"))
-        )
-        # keep the person columns on the quotient map so members0 comes from
-        # one join on the (small) component table instead of a second
-        # persons-sized join on id
-        qfull = (
-            persons.join(hubs, "email", "left")
-            .select(
-                *persons.columns,
-                F.when(eligible, F.coalesce("_hub", F.col("id")))
-                .otherwise(F.col("id"))
-                .alias("_q"),
-            )
-            .localCheckpoint(eager=False)
-        )
         qmap = qfull.select("id", "_q")
 
         def _to_q(edges_df: DataFrame) -> DataFrame:
@@ -374,7 +359,9 @@ def reduce_people(
             .select(*persons.columns, "component")
             .localCheckpoint(eager=False)
         )
-        comp_ext = component_external_ids(members0)
+    # without external ids every component's ext is the empty string: the
+    # blocks take it as a literal instead of a strict aggregate + join
+    comp_ext = None if external_ids is None else component_external_ids(members0)
 
     # --- name pass over components ------------------------------------
     # component-level external id (the reference DFS-propagates person ids
@@ -466,9 +453,9 @@ def reduce_people(
         # counts (members/edges of non-popular multi-member email blocks),
         # computed in one aggregate rather than traced edge-by-edge. On the
         # star graphs this engine builds they equal the reference's edge-walk
-        # counters exactly in the fast path (no external matcher); with an
-        # external matcher the reference skips matched emails during email
-        # blocking, so the occupancy figure is an upper bound there.
+        # counters exactly when no external matcher is given; with one, the
+        # reference skips matched emails during email blocking, so the
+        # occupancy figure is an upper bound there.
         name_edges = name_edges.localCheckpoint(eager=False)
         email_stats = persons.groupBy("email").agg(
             F.count(F.lit(1)).alias("n"), F.max(F.col("pop_email").cast("int")).alias("pop")

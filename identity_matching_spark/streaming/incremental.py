@@ -21,8 +21,6 @@ Design (Spark-first):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -136,9 +134,17 @@ def stateful_signatures(turn_stream: DataFrame) -> DataFrame:
 # 2. the set of CURRENT final clusters that must be re-resolved is the
 #    closure of those keys over the bipartite cluster↔key graph: a key
 #    touches every cluster holding it, a touched cluster contributes all
-#    its keys, iterate to fixpoint (iterated equi-joins, like CC rounds);
+#    its keys, iterate to fixpoint (bucket-probing equi-joins, like CC
+#    rounds — :func:`_touched_closure_bucketed`);
 # 3. re-run ``reduce_people`` on the touched clusters' members plus the
-#    delta; union every untouched membership row through unchanged.
+#    delta; every untouched membership row passes through unchanged.
+#
+# :func:`fold_batch` is the one engine: it runs these steps against the
+# bucketed :class:`IncrementalState` below and commits only the buckets
+# they change. The closure covers name/email keys only, so the state must
+# come from an exact-mode resolution (no external ids, no similarity
+# edges); the manifest's ``exact_mode`` marker records that, and a store
+# without it is refused.
 #
 # Why this is EXACT, not approximate: at fixpoint, no non-popular blocking
 # key is shared between a scoped and an unscoped person (a shared key would
@@ -170,194 +176,18 @@ def person_blocking_keys(persons: DataFrame, blacklist) -> DataFrame:
     return names.union(emails)
 
 
-def touched_cluster_closure(
-    cluster_keys: DataFrame, seed_keys: DataFrame, max_hops: int = 25
-) -> tuple[DataFrame, int]:
-    """Fixpoint of clusters reachable from ``seed_keys`` over the bipartite
-    (component, key) relation. Returns (DataFrame[component], hops).
-
-    Each hop is two equi-joins + distincts — O(touched) work, never
-    O(corpus). Raises if the closure hasn't converged after ``max_hops``
-    (pathologically chained corpora): callers should fall back to a full
-    re-resolution in that case.
-    """
-    touched = cluster_keys.select("component").limit(0)
-    frontier = seed_keys.select("key").distinct()
-    for hops in range(max_hops):
-        new_comps = (
-            cluster_keys.join(frontier, "key")
-            .select("component")
-            .distinct()
-            .join(touched, "component", "left_anti")
-            .localCheckpoint(eager=False)
-        )
-        if new_comps.isEmpty():
-            return touched, hops
-        touched = touched.union(new_comps).localCheckpoint(eager=False)
-        frontier = cluster_keys.join(new_comps, "component").select("key").distinct()
-    raise RuntimeError(
-        f"cluster closure did not converge in {max_hops} hops — "
-        "fall back to a full re-resolution for this batch"
-    )
-
-
 def derive_cluster_keys(
     silver_persons: DataFrame, membership: DataFrame, blacklist
 ) -> DataFrame:
-    """Bootstrap the (component, key) state relation from scratch — one
-    full-corpus shuffle. Run once at stream start (or recovery);
-    ``incremental_fold`` maintains it incrementally afterwards."""
+    """Derive the (component, key) state relation from scratch — one
+    full-corpus shuffle. :func:`fold_batch` runs it once, at bootstrap,
+    and maintains the relation delta by delta afterwards."""
     return (
         person_blocking_keys(silver_persons, blacklist)
         .join(membership.select("id", "component"), "id")
         .select("component", "key")
         .distinct()
     )
-
-
-@dataclass
-class FoldParts:
-    """Delta-scoped pieces of one fold, for state stores that persist only
-    the affected partitions (see :class:`IncrementalState`). ``membership``
-    and ``cluster_keys`` are the full logical results (pass-through union);
-    the small frames let a bucketed store rewrite only what changed."""
-
-    membership: DataFrame      # full new membership (untouched ∪ rescoped)
-    cluster_keys: DataFrame    # full new (component, key) state
-    touched: DataFrame         # DataFrame[component] — re-resolved clusters
-    scope_ids: DataFrame       # DataFrame[id] — old members of touched clusters
-    rescoped: DataFrame        # membership rows re-emitted by the scope run
-    new_keys: DataFrame        # (component, key) rows of the rescoped clusters
-    metrics: dict
-
-
-def _require_exact_mode(membership: DataFrame) -> None:
-    """The closure covers name/email blocking keys ONLY: external-id and
-    similarity/LSH edges couple clusters through relations the (component,
-    key) state does not track, so folding such state silently under-scopes
-    (ADVICE r4). Resolutions carrying external ids must take the full
-    recompute path; reject them loudly."""
-    bad = (
-        membership.where(
-            F.col("external_id").isNotNull() & (F.col("external_id") != "")
-        )
-        .limit(1)
-        .collect()
-    )
-    if bad:
-        raise ValueError(
-            "incremental_fold requires an exact-mode resolution (no external "
-            f"ids, no similarity edges); found external_id={bad[0]['external_id']!r}"
-            " — re-resolve such corpora from scratch instead"
-        )
-
-
-def incremental_fold_parts(
-    silver_persons: DataFrame,
-    membership: DataFrame,
-    delta_persons: DataFrame,
-    blacklist,
-    max_identities: int | None = 20,
-    cluster_keys: DataFrame | None = None,
-    check_exact: bool = True,
-) -> FoldParts:
-    """Core of :func:`incremental_fold`; returns the delta-scoped parts."""
-    from identity_matching_spark.operators.cluster import reduce_people
-
-    if check_exact:
-        _require_exact_mode(membership)
-    delta_persons = delta_persons.localCheckpoint(eager=False)
-    seed_keys = person_blocking_keys(delta_persons, blacklist)
-    if cluster_keys is None:
-        cluster_keys = derive_cluster_keys(silver_persons, membership, blacklist)
-    cluster_keys = cluster_keys.localCheckpoint(eager=False)
-    touched, hops = touched_cluster_closure(cluster_keys, seed_keys)
-    scope_ids = membership.join(touched, "component").select("id")
-    scoped = (
-        silver_persons.join(scope_ids, "id")
-        .unionByName(delta_persons)
-        .dropDuplicates(["id"])
-        .localCheckpoint(eager=False)
-    )
-    rescoped = reduce_people(
-        scoped, blacklist, max_identities=max_identities, verify_keys=False
-    ).localCheckpoint(eager=False)
-    # untouched rows pass through verbatim — minus any id the scoped
-    # re-resolution re-emitted. (A re-arriving person whose keys are all
-    # popular seeds no closure — its old row stays untouched while the
-    # scope run also resolves it; without this anti-join it would appear
-    # twice. The rescoped side is delta-sized, so this broadcasts.)
-    untouched = membership.join(touched, "component", "left_anti").join(
-        rescoped.select("id"), "id", "left_anti"
-    )
-    out = untouched.unionByName(rescoped)
-    # maintain the key state the same way: touched clusters' keys are
-    # replaced by the re-scoped ones, everything else passes through
-    new_keys = (
-        person_blocking_keys(scoped, blacklist)
-        .join(rescoped.select("id", "component"), "id")
-        .select("component", "key")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    new_cluster_keys = cluster_keys.join(touched, "component", "left_anti").unionByName(
-        new_keys
-    )
-    metrics = {
-        "hops": hops,
-        "touched_clusters": touched.count(),
-        "scope_rows": scoped.count(),
-        "delta_rows": delta_persons.count(),
-    }
-    return FoldParts(
-        membership=out,
-        cluster_keys=new_cluster_keys,
-        touched=touched,
-        scope_ids=scope_ids,
-        rescoped=rescoped,
-        new_keys=new_keys,
-        metrics=metrics,
-    )
-
-
-def incremental_fold(
-    silver_persons: DataFrame,
-    membership: DataFrame,
-    delta_persons: DataFrame,
-    blacklist,
-    max_identities: int | None = 20,
-    cluster_keys: DataFrame | None = None,
-    check_exact: bool = True,
-) -> tuple[DataFrame, DataFrame, dict]:
-    """Fold a batch of new person rows into an existing exact-mode
-    resolution. Returns (new_membership, new_cluster_keys, metrics).
-
-    ``membership`` must be the current EXACT-MODE resolution of
-    ``silver_persons`` (id, component, external_id; external ids and
-    similarity-mode extra edges are rejected — their couplings are not in
-    the key state, see :func:`_require_exact_mode`); ``cluster_keys`` the
-    matching (component, key) state (bootstrapped via
-    :func:`derive_cluster_keys` and threaded through folds — deriving it
-    per batch would re-shuffle the whole corpus, exactly the cost this
-    operator exists to avoid; passing None does that derivation, for
-    one-off/batch callers). The result equals ``reduce_people(silver ∪
-    delta)`` exactly (see the module note for the decomposition argument;
-    pinned by tests/test_incremental_delta.py). Per-batch SHUFFLE cost is
-    proportional to the touched clusters; the pass-through union of
-    untouched membership/keys rows is narrow (no shuffle) —
-    :class:`IncrementalState` persists it as touched-bucket-only
-    overwrites.
-    """
-    parts = incremental_fold_parts(
-        silver_persons,
-        membership,
-        delta_persons,
-        blacklist,
-        max_identities=max_identities,
-        cluster_keys=cluster_keys,
-        check_exact=check_exact,
-    )
-    return parts.membership, parts.cluster_keys, parts.metrics
 
 
 # --- bucketed, manifest-committed state store ------------------------------
@@ -433,7 +263,6 @@ class IncrementalState:
                 f"state at {root} was written with n_buckets="
                 f"{self._manifest.get('n_buckets')}, opened with {n_buckets}"
             )
-        self.exact_mode_checked = False
         # the first commit through this object sweeps every bucket
         self._swept = False
 
@@ -462,37 +291,28 @@ class IncrementalState:
 
         return os.path.join(self.root, table, f"bucket={bucket}", f"gen={gen}")
 
-    def has_table(self, table: str) -> bool:
-        """Whether the manifest knows this table (stores written before the
-        index tables existed lack them until their first fold migrates)."""
-        return bool(self._manifest) and table in self._manifest["tables"]
-
     def exact_mode(self) -> bool:
         """True when the manifest records that this state was produced by an
         exact-mode resolution (no external ids, no similarity edges) — set
         at bootstrap by :func:`fold_batch`, whose reduce_people call can
-        produce nothing else, and preserved across commits. Legacy stores
-        without the marker fall back to the membership scan probe once
-        (see ADVICE r5: column shapes alone cannot distinguish a
-        similarity-mode resolution, so state NOT written through
-        ``fold_batch`` must be re-resolved rather than folded)."""
+        produce nothing else, and preserved across commits. :func:`fold_batch`
+        refuses to fold into a store without it (see ADVICE r5: column
+        shapes alone cannot distinguish a similarity-mode resolution, so
+        state NOT written through ``fold_batch`` must be re-resolved rather
+        than folded)."""
         return bool(self._manifest) and self._manifest.get("exact_mode", False)
 
     def _schema(self, table: str):
-        """The table's committed schema, or None when the manifest predates
-        recorded schemas for it."""
+        """The table's committed schema, as recorded in the manifest."""
         import json
 
         from pyspark.sql.types import StructType
 
-        recorded = (self._manifest or {}).get("schemas", {}).get(table)
-        return StructType.fromJson(json.loads(recorded)) if recorded else None
+        return StructType.fromJson(json.loads(self._manifest["schemas"][table]))
 
     def _read_leaves(self, table: str, paths: list[str]) -> DataFrame:
         # the manifest's schema spares the read its footer-inference job
-        schema = self._schema(table)
-        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
-        return reader.parquet(*paths)
+        return self.spark.read.schema(self._schema(table)).parquet(*paths)
 
     def read(self, table: str) -> DataFrame:
         """Current contents of a table (live generation of every bucket).
@@ -569,7 +389,7 @@ class IncrementalState:
         for f in futures:
             f.result()  # all are done: re-raises the first failure
 
-        schemas = dict(self._manifest.get("schemas", {})) if self._manifest else {}
+        schemas = {}
         new_tables = {}
         for table in self.TABLES:
             df, affected = writes[table]
@@ -595,8 +415,6 @@ class IncrementalState:
             json.dump(manifest, fh)
         os.replace(tmp, self.manifest_path)  # the commit point
         self._manifest = manifest
-        if not exact_mode:
-            self.exact_mode_checked = False
         if self._swept:
             # commit knows exactly which buckets changed — GC only those
             # (a full walk is O(n_buckets × tables) driver listdir calls)
@@ -665,13 +483,15 @@ def _collect_bucket_sets(frames: dict[str, tuple[DataFrame, object]]) -> dict[st
 def _touched_closure_bucketed(
     state: IncrementalState, seed_keys: DataFrame, max_hops: int = 25
 ) -> tuple[DataFrame, int, int]:
-    """Bucket-probing twin of :func:`touched_cluster_closure`: each hop
-    reads ONLY the key_index buckets matching the frontier keys and the
+    """Fixpoint of the clusters reachable from ``seed_keys`` over the
+    bipartite (component, key) relation. Each hop is two equi-joins that
+    read ONLY the key_index buckets matching the frontier keys and the
     cluster_keys buckets matching the newly touched components, so the
     fold's read volume tracks the delta the way its shuffles already do.
-    Exact for the same reason the full-table closure is — a bucket is a
-    pure function of the equi-join key, so probing matching buckets loses
-    no join partner. Returns (touched components, hops, buckets_read)."""
+    A bucket is a pure function of the equi-join key, so probing matching
+    buckets loses no join partner. Returns (touched components, hops,
+    buckets_read); raises if the closure has not converged after
+    ``max_hops`` (pathologically chained corpora)."""
     spark = seed_keys.sparkSession
     kidx_expr = state.bucket_expr("key_index")
     comp_expr = state.bucket_expr("cluster_keys")
@@ -742,11 +562,16 @@ def fold_batch(
       inference job), and unreferenced generations are collected by the
       writer after its publish, never by a reader opening the store.
 
-    Stores written before the index tables existed are migrated in place:
-    their first fold derives members_by_comp and key_index with one full
-    (narrow) scan and commits them alongside the batch; subsequent folds
-    are fully delta-scoped. ``metrics['buckets_read']`` reports the probe
-    volume so tests can assert reads track the delta, not the corpus.
+    The first batch bootstraps the store with a from-scratch
+    ``reduce_people``. Every later batch requires the manifest's
+    ``exact_mode`` marker (:meth:`IncrementalState.exact_mode`): a store
+    without it — written in similarity mode, or by a layout that predates
+    the marker — raises ``ValueError`` before anything is read or written,
+    and must be re-resolved from scratch. The folded membership equals a
+    from-scratch ``reduce_people`` over every batch so far (see the module
+    note; pinned by tests/test_incremental_delta.py).
+    ``metrics['buckets_read']`` reports the probe volume so tests can
+    assert reads track the delta, not the corpus.
     """
     import logging
 
@@ -772,6 +597,17 @@ def fold_batch(
             state.committed_batch(),
         )
         return {"skipped_replay": True}
+    if state.exists() and not state.exact_mode():
+        # The closure covers name/email blocking keys ONLY: external-id and
+        # similarity edges couple clusters through relations the (component,
+        # key) state does not track, so folding such state would silently
+        # under-scope (ADVICE r4).
+        raise ValueError(
+            f"fold_batch requires an exact-mode store; the manifest at "
+            f"{state.manifest_path} lacks the exact-mode marker (similarity "
+            "mode, external ids, or a layout that predates the marker) — "
+            "re-resolve the corpus from scratch into a fresh store"
+        )
     delta = delta_persons.localCheckpoint(eager=False)
 
     if not state.exists():
@@ -796,37 +632,21 @@ def fold_batch(
     keys_expr = state.bucket_expr("cluster_keys")
     mcomp_expr = state.bucket_expr("members_by_comp")
     kidx_expr = state.bucket_expr("key_index")
-
-    # exact-mode precondition: the manifest marker covers state maintained
-    # by this path; legacy stores (no marker) pay the membership probe once
-    # per process, then the next commit writes the marker.
-    if not state.exact_mode() and not state.exact_mode_checked:
-        _require_exact_mode(state.read("membership"))
-    state.exact_mode_checked = True
-
-    legacy = not (state.has_table("members_by_comp") and state.has_table("key_index"))
     metrics: dict = {}
-    buckets_read = 0
 
     delta_ids = delta.select("id").distinct().localCheckpoint(eager=False)
     seed_keys = person_blocking_keys(delta, blacklist)
 
-    # --- touched closure + scope (bucket probes; full reads on legacy) ----
-    if legacy:
-        cluster_keys_full = state.read("cluster_keys").localCheckpoint(eager=False)
-        touched, hops = touched_cluster_closure(cluster_keys_full, seed_keys)
-        membership_full = state.read("membership")
-        scope_ids = membership_full.join(touched, "component").select("id")
-    else:
-        touched, hops, buckets_read = _touched_closure_bucketed(state, seed_keys)
-        tb = _collect_buckets(touched, mcomp_expr)
-        mbc = state.read_buckets("members_by_comp", tb)
-        buckets_read += len(tb)
-        scope_ids = (
-            mbc.join(touched, "component").select("id")
-            if mbc is not None
-            else delta_ids.limit(0)
-        )
+    # --- touched closure + scope (bucket probes) -------------------------
+    touched, hops, buckets_read = _touched_closure_bucketed(state, seed_keys)
+    tb = _collect_buckets(touched, mcomp_expr)
+    mbc = state.read_buckets("members_by_comp", tb)
+    buckets_read += len(tb)
+    scope_ids = (
+        mbc.join(touched, "component").select("id")
+        if mbc is not None
+        else delta_ids.limit(0)
+    )
     scope_ids = scope_ids.localCheckpoint(eager=False)
     touched = touched.localCheckpoint(eager=False)
     metrics["hops"] = hops
@@ -931,33 +751,26 @@ def fold_batch(
         ).localCheckpoint(eager=False)
 
     # --- index tables: affected buckets, one collect for both -----------
-    if legacy:
-        # migration: derive the full index copies from the pre-fold tables,
-        # then apply the same removals/additions
-        mbc_buckets = kidx_buckets = list(range(state.n_buckets))
-        old_mbc = membership_full.select("id", "component")
-        old_kidx = cluster_keys_full
-    else:
-        # members_by_comp: touched and rescoped components, plus the OLD
-        # components of re-resolved ids; key_index: the new keys plus the
-        # touched components' old keys, whose rows must be dropped
-        mbc_comps = touched.unionByName(rescoped.select("component"))
-        if old_changed_rows is not None:
-            mbc_comps = mbc_comps.unionByName(old_changed_rows.select("component"))
-        kidx_keys = new_keys.select("key")
-        if touched_old_keys is not None:
-            kidx_keys = kidx_keys.unionByName(touched_old_keys.select("key"))
-        affected = _collect_bucket_sets(
-            {
-                "members_by_comp": (mbc_comps, mcomp_expr),
-                "key_index": (kidx_keys, kidx_expr),
-            }
-        )
-        mbc_buckets = affected["members_by_comp"]
-        kidx_buckets = affected["key_index"]
-        old_mbc = state.read_buckets("members_by_comp", mbc_buckets)
-        old_kidx = state.read_buckets("key_index", kidx_buckets)
-        buckets_read += len(kidx_buckets)
+    # members_by_comp: touched and rescoped components, plus the OLD
+    # components of re-resolved ids; key_index: the new keys plus the
+    # touched components' old keys, whose rows must be dropped
+    mbc_comps = touched.unionByName(rescoped.select("component"))
+    if old_changed_rows is not None:
+        mbc_comps = mbc_comps.unionByName(old_changed_rows.select("component"))
+    kidx_keys = new_keys.select("key")
+    if touched_old_keys is not None:
+        kidx_keys = kidx_keys.unionByName(touched_old_keys.select("key"))
+    affected = _collect_bucket_sets(
+        {
+            "members_by_comp": (mbc_comps, mcomp_expr),
+            "key_index": (kidx_keys, kidx_expr),
+        }
+    )
+    mbc_buckets = affected["members_by_comp"]
+    kidx_buckets = affected["key_index"]
+    old_mbc = state.read_buckets("members_by_comp", mbc_buckets)
+    old_kidx = state.read_buckets("key_index", kidx_buckets)
+    buckets_read += len(kidx_buckets)
 
     # --- members_by_comp: same rows as membership, bucketed by component --
     if old_mbc is None:
@@ -981,7 +794,6 @@ def fold_batch(
         metrics["member_buckets"] = len(member_buckets)
         metrics["key_buckets"] = len(key_buckets)
         metrics["buckets_read"] = buckets_read
-        metrics["legacy_migration"] = legacy
 
     state.commit(
         batch_id,
@@ -995,37 +807,6 @@ def fold_batch(
         exact_mode=True,
     )
     return metrics
-
-
-def migrate_flat_bronze(bronze: str) -> int:
-    """Pre-manifest bronze was written as flat part files at the bronze
-    root; once any ``batch_id=`` dir exists, partition discovery silently
-    ignores those root files (verified on this Spark), so a bootstrap over
-    mixed layouts would rebuild from a PARTIAL corpus — exactly the failure
-    the bootstrap exists to prevent (ADVICE r5). Move the flat files into a
-    synthetic ``batch_id=-1`` partition; idempotent (re-running moves
-    nothing) and crash-safe (each file is os.replace'd individually, and a
-    half-moved root reads fully once the rest move on the next attempt).
-    Returns the number of files migrated."""
-    import os
-
-    if not os.path.isdir(bronze):
-        return 0
-    flat = [
-        f
-        for f in os.listdir(bronze)
-        if f.startswith("part-") and not f.endswith(".crc")
-    ]
-    if not flat:
-        return 0
-    legacy_dir = os.path.join(bronze, "batch_id=-1")
-    os.makedirs(legacy_dir, exist_ok=True)
-    for f in flat:
-        os.replace(os.path.join(bronze, f), os.path.join(legacy_dir, f))
-    success = os.path.join(bronze, "_SUCCESS")
-    if os.path.exists(success):
-        os.replace(success, os.path.join(legacy_dir, "_SUCCESS"))
-    return len(flat)
 
 
 def run_incremental_resolution(
@@ -1045,10 +826,10 @@ def run_incremental_resolution(
     ``cluster_keys`` behind a manifest (:class:`IncrementalState`; read the
     current resolution via ``IncrementalState(spark, root).read(
     "membership")``). If the manifest is missing but bronze data exists
-    (state lost or pre-manifest layout), the fold REBUILDS from the full
-    bronze table instead of silently restarting from one batch."""
+    (state lost, or removed to re-bootstrap a store :func:`fold_batch`
+    refuses), the fold REBUILDS from the full bronze table instead of
+    silently restarting from one batch."""
     import datetime as dt
-    import os
 
     from identity_matching_spark.operators.blacklist import Blacklist
     from identity_matching_spark.operators.people import build_persons, dedup_signatures
@@ -1078,10 +859,7 @@ def run_incremental_resolution(
             delta = _persons_of(batch_df)
         else:
             # bootstrap — from ALL bronze (which already includes this
-            # batch), so a lost manifest recovers the corpus, not one slice;
-            # pre-manifest flat-layout files are migrated into a batch_id
-            # partition first so partition discovery cannot drop them
-            migrate_flat_bronze(bronze)
+            # batch), so a lost manifest recovers the corpus, not one slice
             delta = _persons_of(spark.read.parquet(bronze))
         fold_batch(
             state, delta, bl, max_identities=cfg.max_identities, batch_id=batch_id

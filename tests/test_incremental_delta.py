@@ -1,58 +1,47 @@
 """Delta-scoped incremental clustering (VERDICT r3 #2).
 
-The contract under test: ``incremental_fold`` resolves a batch of new
-person rows against an existing resolution at cost proportional to the
-TOUCHED clusters — and its output is bit-identical to a from-scratch
-``reduce_people`` over the full corpus, including under the
-max-identities cap (the closure argument in streaming/incremental.py).
+The contract under test: ``fold_batch`` resolves a batch of new person
+rows against the resolution kept in an ``IncrementalState`` store at cost
+proportional to the TOUCHED clusters — and the membership it keeps is
+identical to a from-scratch ``reduce_people`` over the full corpus,
+including under the max-identities cap (the closure argument in
+streaming/incremental.py).
 """
 
-import pytest
 from pyspark.sql import functions as F
 
 from identity_matching_spark.operators.blacklist import Blacklist
 from identity_matching_spark.operators.cluster import reduce_people
 from identity_matching_spark.streaming.incremental import (
+    IncrementalState,
     derive_cluster_keys,
-    incremental_fold,
-    person_blocking_keys,
-    touched_cluster_closure,
+    fold_batch,
+)
+from tests.test_state_store import (
+    _corpus,
+    _full_persons,
+    _kidx_matches_keys,
+    _mbc_matches_membership,
+    _member_set,
 )
 
 BL = Blacklist.testing()
 
 
-def _persons(spark, rows):
-    """rows: (id, name, email); name_key = name (no popular qualification)."""
-    return spark.createDataFrame(
-        [(i, n, n, e) for i, n, e in rows],
-        "id long, name string, name_key string, email string",
-    )
-
-
-def _membership(df):
-    return {(r["id"], r["component"]) for r in df.collect()}
-
-
-def _fold_batches(spark, batches, max_identities=20):
-    """Run batch 0 from scratch, fold the rest threading the maintained
-    cluster-key state; return (silver, membership, cluster_keys)."""
-    silver = _persons(spark, batches[0]).localCheckpoint()
-    membership = reduce_people(silver, BL, max_identities=max_identities).localCheckpoint()
-    keys = derive_cluster_keys(silver, membership, BL).localCheckpoint()
-    for batch in batches[1:]:
-        delta = _persons(spark, batch)
-        membership, keys, _ = incremental_fold(
-            silver, membership, delta, BL, max_identities=max_identities,
-            cluster_keys=keys,
+def _fold_batches(spark, root, batches, max_identities=20):
+    """Bootstrap an 8-bucket store at ``root`` from batch 0, fold the rest;
+    return (state, metrics of the last fold)."""
+    state = IncrementalState(spark, str(root), n_buckets=8)
+    metrics = None
+    for batch_id, rows in enumerate(batches):
+        metrics = fold_batch(
+            state, _full_persons(spark, rows), BL, max_identities=max_identities,
+            batch_id=batch_id, collect_metrics=True,
         )
-        membership = membership.localCheckpoint()
-        keys = keys.localCheckpoint()
-        silver = silver.unionByName(delta).dropDuplicates(["id"]).localCheckpoint()
-    return silver, membership, keys
+    return state, metrics
 
 
-def test_incremental_equals_from_scratch_mixed_links(spark):
+def test_incremental_equals_from_scratch_mixed_links(spark, tmp_path):
     """Three batches with email links, name links, and cross-batch links —
     the folded result must equal one from-scratch resolution."""
     b0 = [
@@ -71,19 +60,20 @@ def test_incremental_equals_from_scratch_mixed_links(spark):
         (9, "q one", "e4@x.com"),       # BRIDGES old singleton 4 and cluster {7}
         (10, "new", "e10@x.com"),       # new singleton
     ]
-    silver, got, keys = _fold_batches(spark, [b0, b1, b2])
-    want = reduce_people(_persons(spark, b0 + b1 + b2), BL, max_identities=20)
-    assert _membership(got) == _membership(want)
+    state, _ = _fold_batches(spark, tmp_path, [b0, b1, b2])
+    got = state.read("membership")
+    want = reduce_people(_full_persons(spark, b0 + b1 + b2), BL, max_identities=20)
+    assert _member_set(got) == _member_set(want)
     # membership rows are unique per person — no pass-through duplicates
     assert got.count() == got.select("id").distinct().count()
     # the incrementally-maintained key state equals a from-scratch derivation
-    fresh = derive_cluster_keys(silver, got, BL)
-    assert {(r["component"], r["key"]) for r in keys.collect()} == {
+    fresh = derive_cluster_keys(state.read("persons_silver"), got, BL)
+    assert {(r["component"], r["key"]) for r in state.read("cluster_keys").collect()} == {
         (r["component"], r["key"]) for r in fresh.collect()
     }
 
 
-def test_incremental_equals_from_scratch_under_cap(spark):
+def test_incremental_equals_from_scratch_under_cap(spark, tmp_path):
     """Cap-split blocks are the hard case: clusters that SHARE a blocking
     key but were separated by the max-identities cap must all re-enter the
     recompute scope (closure hop > 1), or the greedy re-packs differently
@@ -97,75 +87,127 @@ def test_incremental_equals_from_scratch_under_cap(spark):
         rows.append((pid, "shared nm", f"pair{c}@x.com")); pid += 1
     # delta: one new person in the shared name block re-packs the greedy
     delta = [(100, "shared nm", "new@x.com")]
-    silver, got, _ = _fold_batches(spark, [rows, delta], max_identities=4)
-    want = reduce_people(_persons(spark, rows + delta), BL, max_identities=4)
-    assert _membership(got) == _membership(want)
+    state, _ = _fold_batches(spark, tmp_path, [rows, delta], max_identities=4)
+    want = reduce_people(_full_persons(spark, rows + delta), BL, max_identities=4)
+    assert _member_set(state.read("membership")) == _member_set(want)
 
 
-def test_fold_cost_scales_with_delta(spark):
+def test_fold_cost_scales_with_delta(spark, tmp_path):
     """200 independent 3-row clusters; a 5-row delta touching 5 of them.
     The recompute scope must be those 5 clusters + the delta — never the
     corpus."""
-    rows = []
-    pid = 0
-    for g in range(200):
-        for j in range(3):
-            rows.append((pid, f"name {g} {j}", f"g{g}@x.com"))
-            pid += 1
-    silver = _persons(spark, rows).localCheckpoint()
-    membership = reduce_people(silver, BL, max_identities=20).localCheckpoint()
-    delta = _persons(
-        spark, [(1000 + g, f"fresh {g}", f"g{g}@x.com") for g in range(5)]
-    )
-    out, _, metrics = incremental_fold(
-        silver, membership, delta, BL, max_identities=20,
-        cluster_keys=derive_cluster_keys(silver, membership, BL),
-    )
+    rows = [
+        (3 * g + j, f"name {g} {j}", f"g{g}@x.com") for g in range(200) for j in range(3)
+    ]
+    delta = [(1000 + g, f"fresh {g}", f"g{g}@x.com") for g in range(5)]
+    state, metrics = _fold_batches(spark, tmp_path, [rows, delta])
     assert metrics["touched_clusters"] == 5
     assert metrics["scope_rows"] == 5 * 3 + 5      # touched members + delta
     assert metrics["delta_rows"] == 5
     assert metrics["hops"] == 1                    # no cap-chaining here
     # equality still holds
-    want = reduce_people(
-        silver.unionByName(delta), BL, max_identities=20
-    )
-    assert _membership(out) == _membership(want)
+    want = reduce_people(_full_persons(spark, rows + delta), BL, max_identities=20)
+    assert _member_set(state.read("membership")) == _member_set(want)
 
 
-def test_untouched_cluster_rows_pass_through_verbatim(spark):
+def test_untouched_cluster_rows_pass_through_verbatim(spark, tmp_path):
     """Rows of untouched clusters must be the SAME rows (id, component,
     external_id), not recomputed lookalikes — id stability across batches."""
     rows = [(i, f"n {i}", f"e{i % 10}@x.com") for i in range(30)]
-    silver = _persons(spark, rows).localCheckpoint()
-    membership = reduce_people(silver, BL, max_identities=20).localCheckpoint()
-    before = _membership(membership)
-    delta = _persons(spark, [(999, "n 0", "e0@x.com")])  # touches e0's cluster only
-    out, _, metrics = incremental_fold(silver, membership, delta, BL, max_identities=20)
-    after = _membership(out)
-    touched_before = {(i, c) for (i, c) in before if i % 10 == 0}
-    untouched_before = before - touched_before
+    state, _ = _fold_batches(spark, tmp_path, [rows])
+    before = set(state.read("membership").collect())
+    # touches e0's cluster only
+    m = fold_batch(
+        state, _full_persons(spark, [(999, "n 0", "e0@x.com")]), BL,
+        batch_id=1, collect_metrics=True,
+    )
+    after = set(state.read("membership").collect())
+    untouched_before = {r for r in before if r["id"] % 10 != 0}
     assert untouched_before <= after
-    assert metrics["touched_clusters"] == 1
+    assert m["touched_clusters"] == 1
 
 
-def test_closure_converges_and_reports_hops(spark):
-    """Direct closure unit: key shared by two clusters pulls both in one
-    hop; their remaining keys pull nothing new → fixpoint at hop 2."""
-    silver = _persons(
-        spark,
-        [(1, "na", "e1@x.com"), (2, "nb", "e1@x.com"), (3, "nb", "e3@x.com")],
+def test_closure_converges_and_reports_hops(spark, tmp_path):
+    """A delta key held by one cluster pulls it in at the first hop; its
+    remaining keys pull nothing new, so the closure stops there."""
+    silver = [(1, "na", "e1@x.com"), (2, "nb", "e1@x.com"), (3, "nb", "e3@x.com")]
+    _, metrics = _fold_batches(spark, tmp_path, [silver, [(9, "zz", "e3@x.com")]])
+    assert metrics["touched_clusters"] == 1  # {1,2,3} is one cluster
+    assert metrics["hops"] == 1
+
+
+def test_maintenance_cost_tracks_delta_not_corpus(spark, tmp_path):
+    """The silver merge groupBy must shuffle colliding ∪ delta rows only,
+    and bucket rewrites must touch O(delta) buckets — on a 600-row corpus
+    AND on a 60-row corpus the numbers are the same."""
+    bl = Blacklist.testing()
+    for n_groups, root in ((200, tmp_path / "big"), (20, tmp_path / "small")):
+        rows = _corpus(n_groups)
+        # delta: 3 fresh persons + 2 exact re-arrivals (id collision)
+        delta_rows = [(1000 + g, f"fresh {g}", f"g{g}@x.com") for g in range(3)]
+        rearrive = [rows[0], rows[3]]
+        state = IncrementalState(spark, str(root), n_buckets=16)
+        fold_batch(state, _full_persons(spark, rows), bl, batch_id=0)
+        m = fold_batch(
+            state,
+            _full_persons(spark, delta_rows + rearrive),
+            bl,
+            batch_id=1,
+            collect_metrics=True,
+        )
+        # merge input = colliding silver rows (2) + delta rows (5)
+        assert m["merge_rows"] == 7, (n_groups, m)
+        assert m["delta_rows"] == 5
+        # bucket rewrites bounded by the delta's spread, not the corpus
+        assert m["silver_buckets"] <= 5
+        assert m["member_buckets"] <= 16
+        assert state.read("persons_silver").count() == n_groups * 3 + 3
+
+
+def test_fold_reads_track_delta_not_corpus(spark, tmp_path):
+    """VERDICT r5 #1: the fold must READ O(delta) buckets, not the corpus.
+    Identical deltas over a 10x-larger corpus must probe the same number
+    of state buckets, and the index tables must stay exact mirrors."""
+    bl = Blacklist.testing()
+    reads = {}
+    for n_groups, root in ((200, tmp_path / "big"), (20, tmp_path / "small")):
+        rows = _corpus(n_groups)
+        delta_rows = [(1000 + g, f"fresh {g}", f"g{g}@x.com") for g in range(3)]
+        state = IncrementalState(spark, str(root), n_buckets=16)
+        fold_batch(state, _full_persons(spark, rows), bl, batch_id=0)
+        m = fold_batch(
+            state, _full_persons(spark, delta_rows), bl, batch_id=1,
+            collect_metrics=True,
+        )
+        reads[n_groups] = m["buckets_read"]
+        assert _mbc_matches_membership(state)
+        assert _kidx_matches_keys(state)
+    # same delta, same probe volume — reads are delta-scoped
+    assert reads[200] == reads[20], reads
+    # and far below a full sweep of all tables x hops
+    assert reads[200] <= 3 * 16, reads
+
+
+def test_popular_rearrival_updates_by_comp_index(spark, tmp_path):
+    """A re-arriving id whose keys are all popular seeds no closure; its
+    OLD membership row moves to the rescoped cluster and the by-component
+    index must not keep the stale row (it lives in an untouched bucket)."""
+    bl = Blacklist(
+        domains=frozenset(), top_level_domains=frozenset(), names=frozenset(),
+        emails=frozenset(), popular_emails=frozenset({"pop@x.com"}),
+        popular_names=frozenset({"popname"}),
     )
-    membership = reduce_people(silver, BL, max_identities=20)
-    cluster_keys = (
-        person_blocking_keys(silver, BL)
-        .join(membership.select("id", "component"), "id")
-        .select("component", "key")
-        .distinct()
+    rows = [(1, "popname", "pop@x.com"), (2, "other", "o@x.com")]
+    state = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    fold_batch(state, _full_persons(spark, rows), bl, batch_id=0)
+    # id 1 re-arrives alone: all-popular keys, no closure seeds
+    m = fold_batch(
+        state, _full_persons(spark, [rows[0]]), bl, batch_id=1,
+        collect_metrics=True,
     )
-    seeds = person_blocking_keys(_persons(spark, [(9, "zz", "e3@x.com")]), BL)
-    touched, hops = touched_cluster_closure(cluster_keys, seeds)
-    assert touched.count() == 1  # {1,2,3} is one cluster
-    assert hops >= 1
+    assert m["touched_clusters"] == 0
+    assert _mbc_matches_membership(state)
+    assert _kidx_matches_keys(state)
 
 
 def test_streaming_driver_folds_incrementally(spark, tmp_path):
@@ -173,7 +215,6 @@ def test_streaming_driver_folds_incrementally(spark, tmp_path):
     two slices, final membership equals a from-scratch resolution of the
     merged bronze signatures."""
     from identity_matching_spark.operators.people import build_persons, dedup_signatures
-    from identity_matching_spark.operators.signatures import extract_signatures
     from identity_matching_spark.sources.synth import synth_transcripts
     from identity_matching_spark.streaming.incremental import run_incremental_resolution
 
@@ -205,7 +246,6 @@ def test_streaming_driver_folds_incrementally(spark, tmp_path):
             break
         time.sleep(2)
     q.stop()
-    from identity_matching_spark.streaming.incremental import IncrementalState
 
     got = IncrementalState(spark, store).read("membership")
     bronze = spark.read.parquet(f"{store}/signatures_bronze")
@@ -219,10 +259,10 @@ def test_streaming_driver_folds_incrementally(spark, tmp_path):
         Blacklist.default(),
     )
     want = reduce_people(persons, Blacklist.default(), max_identities=20)
-    assert _membership(got) == _membership(want)
+    assert _member_set(got) == _member_set(want)
 
 
-def test_popular_key_rearrival_no_duplicate_rows(spark):
+def test_popular_key_rearrival_no_duplicate_rows(spark, tmp_path):
     """A re-arriving person whose keys are ALL popular seeds no closure, so
     its old membership row is untouched while the scope run also resolves
     it — the fold must emit it exactly once (and identically)."""
@@ -231,14 +271,12 @@ def test_popular_key_rearrival_no_duplicate_rows(spark):
         (2, "n two", "e2@x.com"),
         (3, "n two", "e3@x.com"),
     ]
-    silver = _persons(spark, rows).localCheckpoint()
-    membership = reduce_people(silver, BL, max_identities=20).localCheckpoint()
-    delta = _persons(spark, [(1, "popular", "popular@email.com")])  # same id
-    out, keys, metrics = incremental_fold(
-        silver, membership, delta, BL, max_identities=20,
-        cluster_keys=derive_cluster_keys(silver, membership, BL),
+    # same id re-arrives
+    state, metrics = _fold_batches(
+        spark, tmp_path, [rows, [(1, "popular", "popular@email.com")]]
     )
+    out = state.read("membership")
     assert metrics["touched_clusters"] == 0
     assert out.count() == out.select("id").distinct().count() == 3
-    want = reduce_people(silver, BL, max_identities=20)
-    assert _membership(out) == _membership(want)
+    want = reduce_people(_full_persons(spark, rows), BL, max_identities=20)
+    assert _member_set(out) == _member_set(want)

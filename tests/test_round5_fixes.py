@@ -1,6 +1,7 @@
 """Round-5 fix pins: distinct-pair JW scoring, verify-key null handling,
-match-cache crash recovery on write, PPM maxval guard, incremental-fold
-precondition asserts, delta-sized silver maintenance, crash-atomic state swap.
+match-cache crash recovery on write, PPM maxval guard, vectorized MinHash
+and distinct-text LSH equivalence. (The incremental state-store pins live
+in tests/test_state_store.py and tests/test_incremental_delta.py.)
 """
 
 from __future__ import annotations
@@ -96,8 +97,9 @@ class TestVerifyKeys:
     def test_null_keys_no_spurious_collision_and_string_semantics(self, spark):
         """NULL name_key/email must neither trip the collision check (ADVICE
         r4) nor cluster via the hash-of-NULL constant: the surrogate stays
-        NULL, reproducing the string key's join/group behavior exactly —
-        NULL-email persons drop out of the email join like they always did."""
+        NULL, reproducing the string key's join/group behavior exactly. A
+        NULL-email person joins no email block and is kept as a singleton —
+        with or without extra edges (one phase-1 path for both)."""
         rows = [
             (1, "alice", "a@x.com"),
             (2, "alicia", "a@x.com"),
@@ -105,15 +107,18 @@ class TestVerifyKeys:
             (4, "carol", None),
             (5, None, "e@x.com"),
         ]
-        out = reduce_people(
-            _keyed_persons(spark, rows), Blacklist.testing(), max_identities=None
-        )
-        comps = {r["id"]: r["component"] for r in out.collect()}
-        # 1,2 share an email; 5 clusters alone; NULL-email rows drop out of
-        # the email equi-join (string-key behavior, preserved)
-        assert comps[1] == comps[2] == 1
-        assert comps.get(5) == 5
-        assert 3 not in comps and 4 not in comps
+        persons = _keyed_persons(spark, rows)
+        no_edges = spark.createDataFrame([], "src long, dst long")
+        for kwargs in ({}, {"extra_edges": no_edges}):
+            out = reduce_people(
+                persons, Blacklist.testing(), max_identities=None, **kwargs
+            )
+            comps = {r["id"]: r["component"] for r in out.collect()}
+            # 1,2 share an email; 5 clusters alone; the NULL-email rows stay
+            # apart (no email equi-join match, not even with each other)
+            assert comps[1] == comps[2] == 1, kwargs
+            assert comps.get(5) == 5, kwargs
+            assert comps[3] == 3 and comps[4] == 4, kwargs
 
     def test_planted_surrogate_collision_raises(self, spark, monkeypatch):
         rows = [(1, "alice", "a@x.com"), (2, "bob", "b@x.com")]
@@ -156,180 +161,6 @@ class TestVerifyKeys:
             monkeypatch.setattr(cluster_mod.F, "xxhash64", real)
             cluster_mod._VERIFIED_KEY_TOKENS.discard("r5-token")
             cluster_mod._VERIFIED_KEY_TOKENS.discard("r5-other")
-
-
-import datetime as _dt
-
-_TS = _dt.datetime(2026, 1, 1)
-_SILVER_SCHEMA = (
-    "id long, repo string, name string, email string, name_key string, "
-    "popular_name boolean, hash string, ts timestamp"
-)
-
-
-def _full_persons(spark, rows):
-    """rows: (id, name, email) → build_persons-shaped frame (name_key=name)."""
-    return spark.createDataFrame(
-        [(i, "ch0", n, e, n, False, f"h{i}", _TS) for i, n, e in rows],
-        _SILVER_SCHEMA,
-    )
-
-
-def _member_set(df):
-    return {(r["id"], r["component"]) for r in df.collect()}
-
-
-class TestIncrementalStateStore:
-    def _corpus(self, n_groups=50):
-        rows = []
-        pid = 0
-        for g in range(n_groups):
-            for j in range(3):
-                rows.append((pid, f"name {g} {j}", f"g{g}@x.com"))
-                pid += 1
-        return rows
-
-    def test_fold_equals_from_scratch_and_replay_skips(self, spark, tmp_path):
-        from identity_matching_spark.operators.cluster import reduce_people
-        from identity_matching_spark.streaming.incremental import (
-            IncrementalState,
-            fold_batch,
-        )
-
-        bl = Blacklist.testing()
-        rows = self._corpus(20)
-        delta = [(1000 + g, f"fresh {g}", f"g{g}@x.com") for g in range(4)]
-        state = IncrementalState(spark, str(tmp_path), n_buckets=8)
-        fold_batch(state, _full_persons(spark, rows), bl, batch_id=0)
-        m = fold_batch(state, _full_persons(spark, delta), bl, batch_id=1)
-        assert "skipped_replay" not in m
-        want = reduce_people(_full_persons(spark, rows + delta), bl, max_identities=20)
-        assert _member_set(state.read("membership")) == _member_set(want)
-        assert state.read("persons_silver").count() == len(rows) + len(delta)
-        # replaying a committed batch is a no-op
-        m2 = fold_batch(state, _full_persons(spark, delta), bl, batch_id=1)
-        assert m2 == {"skipped_replay": True}
-        # a fresh open (new manifest load) sees the same state
-        reopened = IncrementalState(spark, str(tmp_path), n_buckets=8)
-        assert _member_set(reopened.read("membership")) == _member_set(want)
-
-    def test_maintenance_cost_tracks_delta_not_corpus(self, spark, tmp_path):
-        """The silver merge groupBy must shuffle colliding ∪ delta rows only,
-        and bucket rewrites must touch O(delta) buckets — on a 600-row corpus
-        AND on a 60-row corpus the numbers are the same."""
-        from identity_matching_spark.streaming.incremental import (
-            IncrementalState,
-            fold_batch,
-        )
-
-        bl = Blacklist.testing()
-        for n_groups, root in ((200, tmp_path / "big"), (20, tmp_path / "small")):
-            rows = self._corpus(n_groups)
-            # delta: 3 fresh persons + 2 exact re-arrivals (id collision)
-            delta_rows = [(1000 + g, f"fresh {g}", f"g{g}@x.com") for g in range(3)]
-            rearrive = [rows[0], rows[3]]
-            state = IncrementalState(spark, str(root), n_buckets=16)
-            fold_batch(state, _full_persons(spark, rows), bl, batch_id=0)
-            m = fold_batch(
-                state,
-                _full_persons(spark, delta_rows + rearrive),
-                bl,
-                batch_id=1,
-                collect_metrics=True,
-            )
-            # merge input = colliding silver rows (2) + delta rows (5)
-            assert m["merge_rows"] == 7, (n_groups, m)
-            assert m["delta_rows"] == 5
-            # bucket rewrites bounded by the delta's spread, not the corpus
-            assert m["silver_buckets"] <= 5
-            assert m["member_buckets"] <= 16
-            assert state.read("persons_silver").count() == n_groups * 3 + 3
-
-    def test_crash_before_manifest_publish_keeps_old_state(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """Kill the commit (a) between table writes and (b) after all table
-        writes but before the manifest replace: both must leave the previous
-        state fully readable and mutually consistent, and the replayed batch
-        must then land exactly."""
-        import glob
-        import json
-        import os
-        import os as os_mod
-
-        from identity_matching_spark.operators.cluster import reduce_people
-        from identity_matching_spark.streaming.incremental import (
-            IncrementalState,
-            fold_batch,
-        )
-
-        bl = Blacklist.testing()
-        rows = self._corpus(10)
-        delta = [(900, "fresh 0", "g0@x.com")]
-        state = IncrementalState(spark, str(tmp_path), n_buckets=8)
-        fold_batch(state, _full_persons(spark, rows), bl, batch_id=0)
-        before = _member_set(state.read("membership"))
-
-        # (a) crash during the second table's write
-        from pyspark.sql.readwriter import DataFrameWriter
-
-        orig_parquet = DataFrameWriter.parquet
-
-        def boom_on_membership(self, path, *a, **kw):
-            if path.rstrip("/").endswith("membership"):
-                raise RuntimeError("simulated crash mid-commit")
-            return orig_parquet(self, path, *a, **kw)
-
-        monkeypatch.setattr(DataFrameWriter, "parquet", boom_on_membership)
-        with pytest.raises(RuntimeError, match="simulated"):
-            fold_batch(state, _full_persons(spark, delta), bl, batch_id=1)
-        monkeypatch.setattr(DataFrameWriter, "parquet", orig_parquet)
-        # the failure surfaced only after the other four writes finished,
-        # and the manifest was not touched
-        for table in IncrementalState.TABLES:
-            leaves = glob.glob(os.path.join(str(tmp_path), table, "bucket=*", "gen=1"))
-            assert bool(leaves) == (table != "membership"), table
-        with open(state.manifest_path) as fh:
-            assert json.load(fh)["batch_id"] == 0
-        crashed = IncrementalState(spark, str(tmp_path), n_buckets=8)
-        assert crashed.committed_batch() == 0
-        assert _member_set(crashed.read("membership")) == before
-
-        # (b) crash after all writes, before the manifest replace
-        orig_replace = os_mod.replace
-
-        def boom_replace(src, dst):
-            if dst.endswith("state_manifest.json"):
-                raise RuntimeError("simulated crash pre-publish")
-            return orig_replace(src, dst)
-
-        monkeypatch.setattr(os_mod, "replace", boom_replace)
-        with pytest.raises(RuntimeError, match="simulated"):
-            fold_batch(crashed, _full_persons(spark, delta), bl, batch_id=1)
-        monkeypatch.setattr(os_mod, "replace", orig_replace)
-        recovered = IncrementalState(spark, str(tmp_path), n_buckets=8)
-        assert recovered.committed_batch() == 0
-        assert _member_set(recovered.read("membership")) == before
-
-        # replay lands exactly
-        fold_batch(recovered, _full_persons(spark, delta), bl, batch_id=1)
-        want = reduce_people(_full_persons(spark, rows + delta), bl, max_identities=20)
-        assert _member_set(recovered.read("membership")) == _member_set(want)
-
-    def test_similarity_state_rejected(self, spark):
-        """Membership carrying external ids must be refused — its couplings
-        are not in the (component, key) state (ADVICE r4)."""
-        from identity_matching_spark.streaming.incremental import incremental_fold
-
-        bl = Blacklist.testing()
-        silver = _full_persons(spark, [(1, "na", "e1@x.com"), (2, "nb", "e2@x.com")])
-        membership = spark.createDataFrame(
-            [(1, 1, "gh:alice"), (2, 2, "")],
-            "id long, component long, external_id string",
-        )
-        delta = _full_persons(spark, [(3, "nc", "e3@x.com")])
-        with pytest.raises(ValueError, match="exact-mode"):
-            incremental_fold(silver, membership, delta, bl)
 
 
 def _ppm_bytes(w=8, h=4, value=200, maxval=255):

@@ -1,13 +1,16 @@
 """The incremental state store's commit contract (``IncrementalState``):
 one part file per live leaf, concurrent table writes that keep the caller's
-job group, schema-pinned reads, writer-only garbage collection and an
-explicit exact-mode marker."""
+job group, schema-pinned reads, crash-atomic manifest publishes, replay and
+batch-id checks, writer-only garbage collection and an explicit exact-mode
+marker that ``fold_batch`` requires."""
 
 from __future__ import annotations
 
+import datetime as dt
 import glob
 import json
 import os
+import shutil
 import time
 
 import pytest
@@ -15,8 +18,48 @@ import pytest
 from identity_matching_spark.operators.blacklist import Blacklist
 from identity_matching_spark.operators.cluster import reduce_people
 from identity_matching_spark.streaming.incremental import IncrementalState, fold_batch
-from tests.test_round5_fixes import _full_persons, _member_set
-from tests.test_round6_opts import _corpus, _kidx_matches_keys, _mbc_matches_membership
+
+_TS = dt.datetime(2026, 1, 1)
+_SILVER_SCHEMA = (
+    "id long, repo string, name string, email string, name_key string, "
+    "popular_name boolean, hash string, ts timestamp"
+)
+
+
+def _full_persons(spark, rows):
+    """rows: (id, name, email) → build_persons-shaped frame (name_key=name)."""
+    return spark.createDataFrame(
+        [(i, "ch0", n, e, n, False, f"h{i}", _TS) for i, n, e in rows],
+        _SILVER_SCHEMA,
+    )
+
+
+def _member_set(df):
+    return {(r["id"], r["component"]) for r in df.collect()}
+
+
+def _corpus(n_groups):
+    """``n_groups`` email-linked 3-person clusters with distinct names."""
+    rows = []
+    pid = 0
+    for g in range(n_groups):
+        for j in range(3):
+            rows.append((pid, f"name {g} {j}", f"g{g}@x.com"))
+            pid += 1
+    return rows
+
+
+def _mbc_matches_membership(state):
+    m = {(r["id"], r["component"]) for r in state.read("membership").collect()}
+    c = {(r["id"], r["component"]) for r in state.read("members_by_comp").collect()}
+    return m == c
+
+
+def _kidx_matches_keys(state):
+    k = {(r["component"], r["key"]) for r in state.read("cluster_keys").collect()}
+    i = {(r["component"], r["key"]) for r in state.read("key_index").collect()}
+    return k == i
+
 
 DELTA = [(900, "fresh 0", "g0@x.com"), (901, "fresh 1", "g1@x.com")]
 
@@ -111,8 +154,10 @@ def test_reader_opened_mid_commit_deletes_nothing(spark, tmp_path, monkeypatch):
 
 def test_non_exact_commit_leaves_exact_mode_off(spark, tmp_path):
     """Only a writer that says so marks the state exact: after a commit
-    with ``exact_mode=False`` the next fold runs the membership probe, which
-    rejects external ids — also in a process that already folded once."""
+    with ``exact_mode=False`` (here: a membership carrying an external id,
+    as a similarity-mode resolution would) the store reads as non-exact,
+    also to a fresh open, and the next fold refuses it — also through a
+    writer that already folded once."""
     from pyspark.sql import functions as F
 
     bl = Blacklist.testing()
@@ -160,11 +205,156 @@ def test_commit_drops_stale_leaf_of_crashed_attempt(spark, tmp_path):
     assert {t: state.read(t).count() for t in IncrementalState.TABLES} == before
 
 
-def test_reads_fall_back_to_inference_without_recorded_schema(spark, tmp_path):
-    state = _folded(spark, tmp_path)
-    want = {t: sorted(state.read(t).collect()) for t in IncrementalState.TABLES}
-    man = json.load(open(state.manifest_path))
-    man.pop("schemas")
-    json.dump(man, open(state.manifest_path, "w"))
-    legacy = IncrementalState(spark, str(tmp_path), n_buckets=8)
-    assert {t: sorted(legacy.read(t).collect()) for t in IncrementalState.TABLES} == want
+def test_fold_equals_from_scratch_and_replay_skips(spark, tmp_path):
+    bl = Blacklist.testing()
+    rows = _corpus(20)
+    delta = [(1000 + g, f"fresh {g}", f"g{g}@x.com") for g in range(4)]
+    state = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    fold_batch(state, _full_persons(spark, rows), bl, batch_id=0)
+    m = fold_batch(state, _full_persons(spark, delta), bl, batch_id=1)
+    assert "skipped_replay" not in m
+    want = reduce_people(_full_persons(spark, rows + delta), bl, max_identities=20)
+    assert _member_set(state.read("membership")) == _member_set(want)
+    assert state.read("persons_silver").count() == len(rows) + len(delta)
+    # replaying a committed batch is a no-op
+    m2 = fold_batch(state, _full_persons(spark, delta), bl, batch_id=1)
+    assert m2 == {"skipped_replay": True}
+    # a fresh open (new manifest load) sees the same state
+    reopened = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    assert _member_set(reopened.read("membership")) == _member_set(want)
+
+
+def test_crash_before_manifest_publish_keeps_old_state(spark, tmp_path, monkeypatch):
+    """Kill the commit (a) between table writes and (b) after all table
+    writes but before the manifest replace: both must leave the previous
+    state fully readable and mutually consistent, and the replayed batch
+    must then land exactly."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    bl = Blacklist.testing()
+    rows = _corpus(10)
+    delta = [(900, "fresh 0", "g0@x.com")]
+    state = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    fold_batch(state, _full_persons(spark, rows), bl, batch_id=0)
+    before = _member_set(state.read("membership"))
+
+    # (a) crash during the second table's write
+    orig_parquet = DataFrameWriter.parquet
+
+    def boom_on_membership(self, path, *a, **kw):
+        if path.rstrip("/").endswith("membership"):
+            raise RuntimeError("simulated crash mid-commit")
+        return orig_parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", boom_on_membership)
+    with pytest.raises(RuntimeError, match="simulated"):
+        fold_batch(state, _full_persons(spark, delta), bl, batch_id=1)
+    monkeypatch.setattr(DataFrameWriter, "parquet", orig_parquet)
+    # the failure surfaced only after the other four writes finished,
+    # and the manifest was not touched
+    for table in IncrementalState.TABLES:
+        leaves = glob.glob(os.path.join(str(tmp_path), table, "bucket=*", "gen=1"))
+        assert bool(leaves) == (table != "membership"), table
+    with open(state.manifest_path) as fh:
+        assert json.load(fh)["batch_id"] == 0
+    crashed = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    assert crashed.committed_batch() == 0
+    assert _member_set(crashed.read("membership")) == before
+
+    # (b) crash after all writes, before the manifest replace
+    orig_replace = os.replace
+
+    def boom_replace(src, dst):
+        if dst.endswith("state_manifest.json"):
+            raise RuntimeError("simulated crash pre-publish")
+        return orig_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", boom_replace)
+    with pytest.raises(RuntimeError, match="simulated"):
+        fold_batch(crashed, _full_persons(spark, delta), bl, batch_id=1)
+    monkeypatch.setattr(os, "replace", orig_replace)
+    recovered = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    assert recovered.committed_batch() == 0
+    assert _member_set(recovered.read("membership")) == before
+
+    # replay lands exactly
+    fold_batch(recovered, _full_persons(spark, delta), bl, batch_id=1)
+    want = reduce_people(_full_persons(spark, rows + delta), bl, max_identities=20)
+    assert _member_set(recovered.read("membership")) == _member_set(want)
+
+
+def test_batch_id_below_committed_refuses(spark, tmp_path):
+    """Checkpoint-loss signature (ADVICE r5): ids restarting below the
+    committed batch must raise, not silently drop batches."""
+    bl = Blacklist.testing()
+    state = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    fold_batch(state, _full_persons(spark, _corpus(3)), bl, batch_id=0)
+    fold_batch(state, _full_persons(spark, [(90, "f", "g0@x.com")]), bl, batch_id=1)
+    # equal id: normal replay, skipped
+    assert fold_batch(
+        state, _full_persons(spark, [(90, "f", "g0@x.com")]), bl, batch_id=1
+    ) == {"skipped_replay": True}
+    with pytest.raises(ValueError, match="below the committed"):
+        fold_batch(state, _full_persons(spark, [(91, "g", "g1@x.com")]), bl, batch_id=0)
+
+
+def test_gc_scoped_to_commit_buckets_full_sweep_on_first_commit(spark, tmp_path):
+    """VERDICT r5 #3: commit-time GC walks only the batch's affected
+    buckets; an orphan generation planted in an UNtouched bucket survives
+    that commit and a later open (opening never deletes), and is swept by
+    the first commit of the next writer."""
+    from identity_matching_spark.streaming.incremental import _collect_buckets
+
+    bl = Blacklist.testing()
+    state = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    fold_batch(state, _full_persons(spark, _corpus(6)), bl, batch_id=0)
+    # find a bucket the next (tiny) delta will NOT touch, plant an orphan
+    delta = [(990, "fresh 0", "g0@x.com")]
+    d_ids = _full_persons(spark, delta).select("id")
+    touched_buckets = set(
+        _collect_buckets(d_ids, state.bucket_expr("persons_silver"))
+    )
+    orphan_bucket = next(b for b in range(8) if b not in touched_buckets)
+    orphan = os.path.join(
+        str(tmp_path), "persons_silver", f"bucket={orphan_bucket}", "gen=999"
+    )
+    os.makedirs(orphan)
+    open(os.path.join(orphan, "stale.parquet"), "w").write("x")
+
+    fold_batch(state, _full_persons(spark, delta), bl, batch_id=1)
+    assert os.path.isdir(orphan), "commit-time GC must skip untouched buckets"
+    writer = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    assert os.path.isdir(orphan), "opening a store must delete nothing"
+    fold_batch(writer, _full_persons(spark, delta), bl, batch_id=2)
+    assert not os.path.isdir(orphan), "the first commit must sweep orphans"
+
+
+def test_store_without_exact_marker_is_refused(spark, tmp_path):
+    """A store whose manifest lacks the exact-mode marker is refused before
+    anything is read or written. Stripped here the way a store from before
+    the index tables looks: no index tables, no schemas for them, no marker
+    (every such layout also predates the marker)."""
+    bl = Blacklist.testing()
+    state = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    fold_batch(state, _full_persons(spark, _corpus(10)), bl, batch_id=0)
+    with open(state.manifest_path) as fh:
+        man = json.load(fh)
+    for t in ("members_by_comp", "key_index"):
+        man["tables"].pop(t)
+        man["schemas"].pop(t)
+        shutil.rmtree(tmp_path / t)
+    man.pop("exact_mode")
+    with open(state.manifest_path, "w") as fh:
+        json.dump(man, fh)
+
+    def snapshot():
+        with open(state.manifest_path, "rb") as fh:
+            raw = fh.read()
+        return raw, sorted(str(p.relative_to(tmp_path)) for p in tmp_path.rglob("*"))
+
+    before = snapshot()
+    old = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    assert not old.exact_mode()
+    with pytest.raises(ValueError, match="exact-mode"):
+        fold_batch(old, _full_persons(spark, DELTA), bl, batch_id=1)
+    assert snapshot() == before
