@@ -106,7 +106,6 @@ def connected_components(
     max_iter: int = 50,
     store=None,
     stage_prefix: str = "cc",
-    rounds_per_check: int = 1,
 ) -> DataFrame:
     """Compute connected components of an undirected graph.
 
@@ -160,46 +159,27 @@ def connected_components(
                 start_iter = i + 1
                 break
 
-    # Labels only decrease, so an unchanged sum across a whole block of
-    # rounds proves no label moved in ANY of them — the convergence test
-    # stays exact when several rounds share one driver barrier.
-    # ``rounds_per_check`` defaults to 1: a convergence check is one
-    # aggregate over the labels table, while a round is three edge-scale
-    # joins, so a wasted round always costs more than a check (measured on
-    # the 206k-edge similarity phase-1 graph: rpc=1 runs 5 rounds in 2.97 s
-    # where rpc=2 runs 7 rounds in 4.20 s — the graph converges at round 4
-    # and batched checks overshoot by a whole block). The same asymmetry
-    # holds at cluster scale: checks are label-sized, rounds are edge-sized.
-    # Callers clustering pathologically deep graphs can raise it to
-    # amortize the per-block driver barrier.
-    _it = start_iter
-    first = True
     converged = False
     prev_cached: DataFrame | None = labels_handle
-    while _it < max_iter:
-        k = 1 if first else max(1, min(rounds_per_check, max_iter - _it))
-        first = False
-        lbl = labels
-        for _ in range(k):
-            lbl = _round(e, lbl)
+    for _it in range(start_iter, max_iter):
         # lazy checkpoint: the convergence aggregation below is the single
-        # action per block — it materializes the checkpoint as it runs
-        lbl, lbl_handle = _truncate(lbl, reliable, eager=False)
+        # action per round — it materializes the checkpoint as it runs
+        lbl, lbl_handle = _truncate(_round(e, labels), reliable, eager=False)
         cur_sum = lbl.agg(F.sum(F.col("component").cast("decimal(38,0)"))).collect()[0][0]
         if reliable:
-            # this block's checkpoint is on disk; free the previous block's
+            # this round's checkpoint is on disk; free the previous round's
             # cache (the PERSIST handle — unpersisting the post-checkpoint
             # DataFrame would be a no-op, see _truncate)
             if prev_cached is not None:
                 prev_cached.unpersist()
             prev_cached = lbl_handle
         labels = lbl
-        _it += k
+        # labels only decrease, so an unchanged sum proves no label moved
         if cur_sum == prev_sum:
             converged = True
             break
         if store is not None:
-            labels = store.write(f"{iter_key}_iter{_it - 1}", labels)
+            labels = store.write(f"{iter_key}_iter{_it}", labels)
         prev_sum = cur_sum
 
     # loop done: the surviving labels are backed by checkpoint files (or a

@@ -74,56 +74,6 @@ def stream_signatures(
     )
 
 
-def stateful_signatures(turn_stream: DataFrame) -> DataFrame:
-    """Custom stateful signature accumulation via ``applyInPandasWithState``.
-
-    Unlike the session-window aggregation above (which re-emits on window
-    close), this keeps explicit per-conversation state — earliest name/email
-    token by turn_idx, max ts, turn count — and emits the updated signature
-    every micro-batch. The state schema is tiny (five scalars per live
-    conversation), so state-store pressure stays bounded by the number of
-    *active* conversations, not total corpus size.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    turns = turn_stream.select(
-        "conv_id",
-        "turn_idx",
-        "ts",
-        F.regexp_extract("text", NAME_LINE, 1).alias("name_tok"),
-        F.regexp_extract("text", EMAIL_TOKEN, 0).alias("email_tok"),
-    )
-
-    out_schema = "conv_id string, name string, email string, ts timestamp, n_turns long"
-    state_schema = (
-        "name string, name_idx long, email string, email_idx long, ts timestamp, n long"
-    )
-
-    def update(key, pdfs, state: GroupState):
-        (conv_id,) = key
-        if state.exists:
-            name, name_idx, email, email_idx, ts, n = state.get
-        else:
-            name, name_idx, email, email_idx, ts, n = "", 1 << 62, "", 1 << 62, None, 0
-        for pdf in pdfs:
-            for row in pdf.itertuples():
-                n += 1
-                if row.name_tok and row.turn_idx < name_idx:
-                    name, name_idx = row.name_tok, row.turn_idx
-                if row.email_tok and row.turn_idx < email_idx:
-                    email, email_idx = row.email_tok, row.turn_idx
-                ts = row.ts if ts is None or row.ts > ts else ts
-        state.update((name, name_idx, email, email_idx, ts, n))
-        yield pd.DataFrame(
-            {"conv_id": [conv_id], "name": [name], "email": [email], "ts": [ts], "n_turns": [n]}
-        )
-
-    return turns.groupBy("conv_id").applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
 # --- delta-scoped incremental clustering ---------------------------------
 #
 # A continuously-appended corpus must not pay a full-corpus resolution per
@@ -192,20 +142,19 @@ def derive_cluster_keys(
 
 # --- bucketed, manifest-committed state store ------------------------------
 #
-# The five state tables (persons_silver, membership, cluster_keys and the two
-# index copies members_by_comp, key_index) are laid out as
-# <root>/<table>/bucket=K/gen=G/ parquet leaves, with a SINGLE
-# atomically-replaced manifest JSON naming the live generation per bucket and
-# each table's schema. Per batch only the AFFECTED buckets are rewritten
-# under gen=<batch_id> (dynamic partition overwrite — untouched buckets are
-# neither read nor written), and the one os.replace of the manifest is the
-# commit point:
+# The four state tables (persons_silver, membership, cluster_keys and
+# key_index) are laid out as <root>/<table>/bucket=K/gen=G/ parquet leaves,
+# with a SINGLE atomically-replaced manifest JSON naming the live generation
+# per bucket, each table's schema and its bucket column. Per batch only the
+# AFFECTED buckets are rewritten under gen=<batch_id> (dynamic partition
+# overwrite — untouched buckets are neither read nor written), and the one
+# os.replace of the manifest is the commit point:
 #
-# * the five table writes run concurrently (one driver thread each, carrying
-#   the caller's job group and tags); each table's rows are repartitioned on
+# * the table writes run concurrently (one driver thread each, carrying the
+#   caller's job group and tags); each table's rows are repartitioned on
 #   their bucket first, so every written leaf holds exactly one part file;
-# * the commit waits for all five writes and re-raises the first failure
-#   before it touches the manifest, so no write outlives commit();
+# * the commit waits for all writes and re-raises the first failure before
+#   it touches the manifest, so no write outlives commit();
 # * crash anywhere before the manifest replace → the old manifest still
 #   names only old generations; all tables stay mutually consistent;
 # * foreachBatch replays the batch → the commit first clears any
@@ -214,7 +163,10 @@ def derive_cluster_keys(
 # * a manifest batch_id >= the replayed batch's id → the fold is skipped
 #   (already committed);
 # * reads pass the manifest's schema, so opening a leaf set runs no
-#   footer-inference job;
+#   footer-inference job, and a bucket set holding no data reads as an
+#   empty frame of that schema;
+# * a store whose manifest records other bucket columns (or none) is
+#   refused on open, before anything is read or written;
 # * generations no manifest references are garbage-collected after the
 #   publish: the writer's first commit sweeps every bucket, later commits
 #   only their affected buckets. Opening a store never deletes anything, so
@@ -227,26 +179,18 @@ def derive_cluster_keys(
 class IncrementalState:
     """Versioned bucket-partitioned state with an atomic manifest commit."""
 
-    TABLES = (
-        "persons_silver",
-        "membership",
-        "cluster_keys",
-        "members_by_comp",
-        "key_index",
-    )
-    # bucket keys: silver/membership by person id (affected buckets are the
-    # delta/rescoped ids — never requires scanning old state to discover),
-    # cluster_keys by component (removals are keyed by touched components).
-    # members_by_comp and key_index are second copies of membership's
-    # (id, component) and cluster_keys' (component, key) bucketed by the
-    # OTHER side of each relation, so the per-batch closure and scope probes
-    # read only matching buckets instead of the whole table (the fold's
-    # reads then track the delta like its shuffles already did).
+    TABLES = ("persons_silver", "membership", "cluster_keys", "key_index")
+    # Each relation is stored once per direction the fold probes it: silver
+    # by person id (affected buckets are the delta's ids), membership and
+    # cluster_keys by component (scope probes and removals are keyed by
+    # touched components), and key_index — cluster_keys' (component, key)
+    # rows again, bucketed by key — for the closure's key → component hop.
+    # Every probe then reads only matching buckets, so the fold's reads
+    # track the delta like its shuffles do.
     BUCKET_COL = {
         "persons_silver": "id",
-        "membership": "id",
+        "membership": "component",
         "cluster_keys": "component",
-        "members_by_comp": "component",
         "key_index": "key",
     }
 
@@ -262,6 +206,15 @@ class IncrementalState:
             raise ValueError(
                 f"state at {root} was written with n_buckets="
                 f"{self._manifest.get('n_buckets')}, opened with {n_buckets}"
+            )
+        if self._manifest and self._manifest.get("bucket_cols") != self.BUCKET_COL:
+            # probing a table by a column it is not bucketed on would miss
+            # rows and silently under-scope the fold
+            raise ValueError(
+                f"state at {root} was written with another table layout "
+                f"(bucket_cols={self._manifest.get('bucket_cols')}, expected "
+                f"{self.BUCKET_COL}) — remove its state_manifest.json to "
+                "re-bootstrap it from bronze"
             )
         # the first commit through this object sweeps every bucket
         self._swept = False
@@ -310,28 +263,21 @@ class IncrementalState:
 
         return StructType.fromJson(json.loads(self._manifest["schemas"][table]))
 
-    def _read_leaves(self, table: str, paths: list[str]) -> DataFrame:
-        # the manifest's schema spares the read its footer-inference job
-        return self.spark.read.schema(self._schema(table)).parquet(*paths)
-
     def read(self, table: str) -> DataFrame:
-        """Current contents of a table (live generation of every bucket).
-        An empty table (e.g. state bootstrapped from a zero-row first
-        micro-batch) reads as an empty frame with its committed schema."""
-        gens = self._manifest["tables"][table]
-        paths = [self._leaf(table, int(k), g) for k, g in sorted(gens.items())]
-        if not paths:
-            return self.spark.createDataFrame([], self._schema(table))
-        return self._read_leaves(table, paths)
+        """Current contents of a table (live generation of every bucket)."""
+        return self.read_buckets(table, range(self.n_buckets))
 
-    def read_buckets(self, table: str, buckets: list[int]) -> DataFrame | None:
-        """Only the named buckets (partition-pruned read); None if none of
-        them currently hold data."""
+    def read_buckets(self, table: str, buckets) -> DataFrame:
+        """Only the named buckets (partition-pruned read). Buckets holding
+        no data — all of them, e.g. in a store bootstrapped from a zero-row
+        first micro-batch — read as an empty frame with the committed
+        schema, which also spares every read its footer-inference job."""
+        schema = self._schema(table)
         gens = self._manifest["tables"][table]
         paths = [self._leaf(table, b, gens[str(b)]) for b in buckets if str(b) in gens]
         if not paths:
-            return None
-        return self._read_leaves(table, paths)
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(*paths)
 
     # -- commit ------------------------------------------------------------
 
@@ -348,7 +294,7 @@ class IncrementalState:
         ``exact_mode`` is recorded in the manifest (see :meth:`exact_mode`):
         pass True only for content of an exact-mode resolution.
 
-        The five writes run concurrently; every one finishes before the
+        The table writes run concurrently; every one finishes before the
         first failure is re-raised, and only then is the manifest touched."""
         import json
         import os
@@ -406,6 +352,7 @@ class IncrementalState:
         manifest = {
             "batch_id": batch_id,
             "n_buckets": self.n_buckets,
+            "bucket_cols": self.BUCKET_COL,
             "exact_mode": exact_mode,
             "tables": new_tables,
             "schemas": schemas,
@@ -500,12 +447,12 @@ def _touched_closure_bucketed(
     buckets_read = 0
     for hops in range(max_hops):
         fb = _collect_buckets(frontier, kidx_expr)
-        ki = state.read_buckets("key_index", fb)
-        buckets_read += len(fb)
-        if ki is None:
+        if not fb:
             return touched, hops, buckets_read
+        buckets_read += len(fb)
         new_comps = (
-            ki.join(frontier, "key")
+            state.read_buckets("key_index", fb)
+            .join(frontier, "key")
             .select("component")
             .distinct()
             .join(touched, "component", "left_anti")
@@ -516,12 +463,10 @@ def _touched_closure_bucketed(
         if not cb:
             return touched, hops, buckets_read
         touched = touched.union(new_comps).localCheckpoint(eager=False)
-        ck = state.read_buckets("cluster_keys", cb)
         buckets_read += len(cb)
-        if ck is None:
-            return touched, hops + 1, buckets_read
         frontier = (
-            ck.join(new_comps, "component")
+            state.read_buckets("cluster_keys", cb)
+            .join(new_comps, "component")
             .select("key")
             .distinct()
             .localCheckpoint(eager=False)
@@ -545,16 +490,15 @@ def fold_batch(
 
     * the touched-cluster closure probes the key_index / cluster_keys
       tables bucket-by-bucket (never a full-table scan);
-    * the scope expands through the component-bucketed members_by_comp
-      copy, and the silver rows it re-reads come from the matching id
-      buckets only;
+    * the scope expands through the component-bucketed membership, and
+      the silver rows it re-reads come from the matching id buckets only;
     * silver maintenance merges ONLY ids colliding with the delta
       (broadcast semi/anti joins; the groupBy shuffles colliding ∪ delta
       rows, never the corpus — metric ``merge_rows``);
-    * membership/cluster_keys/index rewrites touch only the buckets
+    * membership/cluster_keys/key_index rewrites touch only the buckets
       holding scoped/rescoped rows; the affected bucket sets come back in
-      two round trips (silver/membership/cluster_keys, then the indexes);
-    * the commit writes the five tables concurrently, one part file per
+      two round trips (silver/cluster_keys, then membership/key_index);
+    * the commit writes the four tables concurrently, one part file per
       rewritten ``(bucket, gen)`` leaf, and publishes the manifest (the
       atomic point) only after every write has finished; the jobs keep the
       caller's job group and tags;
@@ -620,7 +564,6 @@ def fold_batch(
                 "persons_silver": (delta, all_buckets),
                 "membership": (membership, all_buckets),
                 "cluster_keys": (keys, all_buckets),
-                "members_by_comp": (membership.select("id", "component"), all_buckets),
                 "key_index": (keys, all_buckets),
             },
             exact_mode=True,
@@ -630,7 +573,6 @@ def fold_batch(
     silver_expr = state.bucket_expr("persons_silver")
     member_expr = state.bucket_expr("membership")
     keys_expr = state.bucket_expr("cluster_keys")
-    mcomp_expr = state.bucket_expr("members_by_comp")
     kidx_expr = state.bucket_expr("key_index")
     metrics: dict = {}
 
@@ -639,29 +581,25 @@ def fold_batch(
 
     # --- touched closure + scope (bucket probes) -------------------------
     touched, hops, buckets_read = _touched_closure_bucketed(state, seed_keys)
-    tb = _collect_buckets(touched, mcomp_expr)
-    mbc = state.read_buckets("members_by_comp", tb)
+    tb = _collect_buckets(touched, member_expr)
     buckets_read += len(tb)
     scope_ids = (
-        mbc.join(touched, "component").select("id")
-        if mbc is not None
-        else delta_ids.limit(0)
+        state.read_buckets("membership", tb)
+        .join(touched, "component")
+        .select("id")
+        .localCheckpoint(eager=False)
     )
-    scope_ids = scope_ids.localCheckpoint(eager=False)
     touched = touched.localCheckpoint(eager=False)
     metrics["hops"] = hops
 
     # --- re-resolve the scoped slice --------------------------------------
     scope_read_ids = scope_ids.unionByName(delta_ids).distinct()
     sread_buckets = _collect_buckets(scope_read_ids, silver_expr)
-    silver_subset = state.read_buckets("persons_silver", sread_buckets)
     buckets_read += len(sread_buckets)
-    scoped_old = (
-        silver_subset.join(scope_ids, "id") if silver_subset is not None
-        else delta.limit(0)
-    )
     scoped = (
-        scoped_old.unionByName(delta)
+        state.read_buckets("persons_silver", sread_buckets)
+        .join(scope_ids, "id")
+        .unionByName(delta)
         .dropDuplicates(["id"])
         .localCheckpoint(eager=False)
     )
@@ -680,114 +618,75 @@ def fold_batch(
         metrics["scope_rows"] = scoped.count()
         metrics["delta_rows"] = delta.count()
 
-    # --- affected buckets of silver, membership, cluster_keys: one collect -
-    # silver: the delta's ids; membership: the scoped/delta/rescoped ids;
-    # cluster_keys: removals by touched comps, additions by rescoped ones
-    changed_ids = (
-        scope_ids.unionByName(delta_ids).unionByName(rescoped.select("id"))
-    ).distinct().localCheckpoint(eager=False)
-    key_comps = touched.unionByName(new_keys.select("component"))
+    # --- affected buckets of silver and cluster_keys: one collect ---------
+    # silver: the delta's ids; cluster_keys: removals by touched comps,
+    # additions by rescoped ones
     affected = _collect_bucket_sets(
         {
             "persons_silver": (delta_ids, silver_expr),
-            "membership": (changed_ids, member_expr),
-            "cluster_keys": (key_comps, keys_expr),
+            "cluster_keys": (touched.unionByName(new_keys.select("component")), keys_expr),
         }
     )
     silver_buckets = affected["persons_silver"]
-    member_buckets = affected["membership"]
     key_buckets = affected["cluster_keys"]
 
     # --- silver: merge colliding ids only (delta-sized) -------------------
     old_silver = state.read_buckets("persons_silver", silver_buckets)
-    if old_silver is None:
-        silver_content = delta
-        merge_rows = delta.count() if collect_metrics else None
-    else:
-        colliding = old_silver.join(F.broadcast(delta_ids), "id", "semi")
-        keep = old_silver.join(F.broadcast(delta_ids), "id", "left_anti")
-        merge_input = colliding.unionByName(delta)
-        merged = (
-            merge_input.groupBy("id", "repo", "name", "email", "name_key", "popular_name")
-            .agg(F.max("hash").alias("hash"), F.max("ts").alias("ts"))
-            .select(old_silver.columns)
-        )
-        silver_content = keep.unionByName(merged)
-        merge_rows = merge_input.count() if collect_metrics else None
-    metrics["merge_rows"] = merge_rows
-
-    # --- membership ------------------------------------------------------
-    old_member = state.read_buckets("membership", member_buckets)
-    if old_member is None:
-        member_content = rescoped
-        old_changed_rows = None
-    else:
-        # old rows of re-resolved ids: needed both for the anti-join below
-        # and to locate their members_by_comp buckets (an id re-arriving
-        # with only popular keys seeds no closure, so its OLD component is
-        # not touched — its stale by-component row must still be replaced)
-        old_changed_rows = old_member.join(
-            F.broadcast(changed_ids), "id", "semi"
-        ).localCheckpoint(eager=False)
-        surviving = old_member.join(
-            F.broadcast(touched), "component", "left_anti"
-        ).join(F.broadcast(rescoped.select("id")), "id", "left_anti")
-        member_content = surviving.unionByName(rescoped)
+    merge_input = old_silver.join(F.broadcast(delta_ids), "id", "semi").unionByName(delta)
+    merged = (
+        merge_input.groupBy("id", "repo", "name", "email", "name_key", "popular_name")
+        .agg(F.max("hash").alias("hash"), F.max("ts").alias("ts"))
+        .select(old_silver.columns)
+    )
+    silver_content = old_silver.join(
+        F.broadcast(delta_ids), "id", "left_anti"
+    ).unionByName(merged)
+    metrics["merge_rows"] = merge_input.count() if collect_metrics else None
 
     # --- cluster_keys ----------------------------------------------------
     old_keys = state.read_buckets("cluster_keys", key_buckets)
     buckets_read += len(key_buckets)
-    if old_keys is None:
-        keys_content = new_keys
-        touched_old_keys = None
-    else:
-        keys_content = old_keys.join(
-            F.broadcast(touched), "component", "left_anti"
-        ).unionByName(new_keys)
-        # the touched components' OLD keys locate the key_index buckets
-        # whose rows must be dropped
-        touched_old_keys = old_keys.join(
-            F.broadcast(touched), "component", "semi"
-        ).localCheckpoint(eager=False)
+    keys_content = old_keys.join(
+        F.broadcast(touched), "component", "left_anti"
+    ).unionByName(new_keys)
 
-    # --- index tables: affected buckets, one collect for both -----------
-    # members_by_comp: touched and rescoped components, plus the OLD
-    # components of re-resolved ids; key_index: the new keys plus the
-    # touched components' old keys, whose rows must be dropped
-    mbc_comps = touched.unionByName(rescoped.select("component"))
-    if old_changed_rows is not None:
-        mbc_comps = mbc_comps.unionByName(old_changed_rows.select("component"))
-    kidx_keys = new_keys.select("key")
-    if touched_old_keys is not None:
-        kidx_keys = kidx_keys.unionByName(touched_old_keys.select("key"))
+    # --- membership and key_index: affected buckets, one collect ---------
+    # membership: the touched components, whose rows are replaced, and the
+    # rescoped ones; key_index: the new keys plus the touched components'
+    # old keys, whose rows must be dropped
+    touched_old_keys = old_keys.join(F.broadcast(touched), "component", "semi")
     affected = _collect_bucket_sets(
         {
-            "members_by_comp": (mbc_comps, mcomp_expr),
-            "key_index": (kidx_keys, kidx_expr),
+            "membership": (touched.unionByName(rescoped.select("component")), member_expr),
+            "key_index": (
+                new_keys.select("key").unionByName(touched_old_keys.select("key")),
+                kidx_expr,
+            ),
         }
     )
-    mbc_buckets = affected["members_by_comp"]
+    member_buckets = affected["membership"]
     kidx_buckets = affected["key_index"]
-    old_mbc = state.read_buckets("members_by_comp", mbc_buckets)
-    old_kidx = state.read_buckets("key_index", kidx_buckets)
-    buckets_read += len(kidx_buckets)
 
-    # --- members_by_comp: same rows as membership, bucketed by component --
-    if old_mbc is None:
-        mbc_content = rescoped.select("id", "component")
-    else:
-        mbc_surviving = old_mbc.join(
-            F.broadcast(touched), "component", "left_anti"
-        ).join(F.broadcast(changed_ids), "id", "left_anti")
-        mbc_content = mbc_surviving.unionByName(rescoped.select("id", "component"))
+    # --- membership: old rows minus the re-resolved ones, plus rescoped ---
+    # No old row of a re-resolved id is missed: it lies in a touched
+    # component, or the id has no usable key — then no closure seed finds
+    # it, and the exact cluster_keys (which every fold's exactness rests
+    # on) prove it was a singleton, whose component is its own id and so
+    # one of rescoped's components.
+    member_content = (
+        state.read_buckets("membership", member_buckets)
+        .join(F.broadcast(touched), "component", "left_anti")
+        .join(F.broadcast(rescoped.select("id")), "id", "left_anti")
+        .unionByName(rescoped)
+    )
 
     # --- key_index: same rows as cluster_keys, bucketed by key ------------
-    if old_kidx is None:
-        kidx_content = new_keys
-    else:
-        kidx_content = old_kidx.join(
-            F.broadcast(touched), "component", "left_anti"
-        ).unionByName(new_keys)
+    kidx_content = (
+        state.read_buckets("key_index", kidx_buckets)
+        .join(F.broadcast(touched), "component", "left_anti")
+        .unionByName(new_keys)
+    )
+    buckets_read += len(kidx_buckets)
 
     if collect_metrics:
         metrics["silver_buckets"] = len(silver_buckets)
@@ -801,7 +700,6 @@ def fold_batch(
             "persons_silver": (silver_content, silver_buckets),
             "membership": (member_content, member_buckets),
             "cluster_keys": (keys_content, key_buckets),
-            "members_by_comp": (mbc_content, mbc_buckets),
             "key_index": (kidx_content, kidx_buckets),
         },
         exact_mode=True,
@@ -822,13 +720,14 @@ def run_incremental_resolution(
     the NEW persons into the maintained resolution via the delta-scoped
     closure above — per-batch cost follows the delta, not the bronze table.
     Returns the StreamingQuery (caller awaits/stops it). State under
-    ``store_root``: bucketed ``persons_silver``/``membership``/
-    ``cluster_keys`` behind a manifest (:class:`IncrementalState`; read the
-    current resolution via ``IncrementalState(spark, root).read(
-    "membership")``). If the manifest is missing but bronze data exists
-    (state lost, or removed to re-bootstrap a store :func:`fold_batch`
-    refuses), the fold REBUILDS from the full bronze table instead of
-    silently restarting from one batch."""
+    ``store_root``: the four bucketed tables of :class:`IncrementalState`
+    behind one manifest (read the current resolution, ``(id, component,
+    external_id)`` rows, via ``IncrementalState(spark, root).read(
+    "membership")``); a store of another layout raises ``ValueError``
+    before the stream starts. If the manifest is missing but bronze data
+    exists (state lost, or removed to re-bootstrap a store this layout or
+    :func:`fold_batch` refuses), the fold REBUILDS from the full bronze
+    table instead of silently restarting from one batch."""
     import datetime as dt
 
     from identity_matching_spark.operators.blacklist import Blacklist

@@ -21,7 +21,6 @@ from tests.test_state_store import (
     _corpus,
     _full_persons,
     _kidx_matches_keys,
-    _mbc_matches_membership,
     _member_set,
 )
 
@@ -167,7 +166,8 @@ def test_maintenance_cost_tracks_delta_not_corpus(spark, tmp_path):
 def test_fold_reads_track_delta_not_corpus(spark, tmp_path):
     """VERDICT r5 #1: the fold must READ O(delta) buckets, not the corpus.
     Identical deltas over a 10x-larger corpus must probe the same number
-    of state buckets, and the index tables must stay exact mirrors."""
+    of state buckets, key_index must stay an exact mirror of cluster_keys
+    and membership must hold one row per id."""
     bl = Blacklist.testing()
     reads = {}
     for n_groups, root in ((200, tmp_path / "big"), (20, tmp_path / "small")):
@@ -180,7 +180,8 @@ def test_fold_reads_track_delta_not_corpus(spark, tmp_path):
             collect_metrics=True,
         )
         reads[n_groups] = m["buckets_read"]
-        assert _mbc_matches_membership(state)
+        got = state.read("membership")
+        assert got.count() == got.select("id").distinct().count()
         assert _kidx_matches_keys(state)
     # same delta, same probe volume — reads are delta-scoped
     assert reads[200] == reads[20], reads
@@ -188,10 +189,11 @@ def test_fold_reads_track_delta_not_corpus(spark, tmp_path):
     assert reads[200] <= 3 * 16, reads
 
 
-def test_popular_rearrival_updates_by_comp_index(spark, tmp_path):
-    """A re-arriving id whose keys are all popular seeds no closure; its
-    OLD membership row moves to the rescoped cluster and the by-component
-    index must not keep the stale row (it lives in an untouched bucket)."""
+def test_popular_rearrival_replaces_its_singleton_row(spark, tmp_path):
+    """A re-arriving id whose keys are all popular seeds no closure, so its
+    old component is not touched: its old singleton row must still be
+    replaced (it lies in the bucket of its own id, which is also its
+    rescoped component), not kept next to the rescoped row."""
     bl = Blacklist(
         domains=frozenset(), top_level_domains=frozenset(), names=frozenset(),
         emails=frozenset(), popular_emails=frozenset({"pop@x.com"}),
@@ -206,7 +208,10 @@ def test_popular_rearrival_updates_by_comp_index(spark, tmp_path):
         collect_metrics=True,
     )
     assert m["touched_clusters"] == 0
-    assert _mbc_matches_membership(state)
+    got = state.read("membership")
+    assert got.count() == got.select("id").distinct().count()
+    want = reduce_people(_full_persons(spark, rows), bl, max_identities=20)
+    assert _member_set(got) == _member_set(want)
     assert _kidx_matches_keys(state)
 
 

@@ -59,3 +59,31 @@ def test_build_persons_counts_drops(spark):
     assert report["ignored names"] == 1
     assert report["ignored emails"] == 1
     assert report["people after filtering"] == kept == 2
+
+
+def test_max_bucket_drop_counter(spark):
+    """VERDICT r5 #2/#4: the max_bucket drop must be counted, not silent.
+    Plant one degenerate bucket (10 copies of a text, cap 5) and assert the
+    committed counters equal the planted drop exactly."""
+    from identity_matching_spark.functions.hashing import lsh_candidate_edges
+    from identity_matching_spark.reporter import Reporter
+
+    n_bands = 4
+    rows = [(i, "the same boilerplate text every time") for i in range(10)]
+    rows += [(100, "completely different contents alpha beta"),
+             (101, "unrelated third document gamma delta")]
+    df = spark.createDataFrame(rows, "id long, text string")
+    rep = Reporter(spark)
+    out = lsh_candidate_edges(
+        df, "text", n_perm=16, n_bands=n_bands, shingle_k=3,
+        max_bucket=5, reporter=rep,
+    )
+    out.write.format("noop").mode("overwrite").save()
+    got = rep.report()
+    # the 10-copy text owns all of its n_bands buckets (10 members each,
+    # > cap); the two singles stay under cap in every bucket they touch
+    assert got["buckets dropped by max_bucket"] == n_bands
+    assert got["candidates dropped by max_bucket"] == n_bands * 10
+    # and the capped bucket emitted no edges among the 10 clones
+    pairs = {(r["src"], r["dst"]) for r in out.collect()}
+    assert all(s >= 100 or d >= 100 for s, d in pairs) or not pairs

@@ -1,8 +1,9 @@
 """The incremental state store's commit contract (``IncrementalState``):
 one part file per live leaf, concurrent table writes that keep the caller's
 job group, schema-pinned reads, crash-atomic manifest publishes, replay and
-batch-id checks, writer-only garbage collection and an explicit exact-mode
-marker that ``fold_batch`` requires."""
+batch-id checks, writer-only garbage collection, an explicit exact-mode
+marker that ``fold_batch`` requires and a recorded table layout that opening
+the store checks."""
 
 from __future__ import annotations
 
@@ -10,7 +11,6 @@ import datetime as dt
 import glob
 import json
 import os
-import shutil
 import time
 
 import pytest
@@ -47,12 +47,6 @@ def _corpus(n_groups):
             rows.append((pid, f"name {g} {j}", f"g{g}@x.com"))
             pid += 1
     return rows
-
-
-def _mbc_matches_membership(state):
-    m = {(r["id"], r["component"]) for r in state.read("membership").collect()}
-    c = {(r["id"], r["component"]) for r in state.read("members_by_comp").collect()}
-    return m == c
 
 
 def _kidx_matches_keys(state):
@@ -148,7 +142,8 @@ def test_reader_opened_mid_commit_deletes_nothing(spark, tmp_path, monkeypatch):
     assert reopened.read("persons_silver").count() == len(rows) + len(DELTA)
     want = reduce_people(_full_persons(spark, rows + DELTA), bl, max_identities=20)
     assert _member_set(reopened.read("membership")) == _member_set(want)
-    assert _mbc_matches_membership(reopened)
+    got = reopened.read("membership")
+    assert got.count() == got.select("id").distinct().count()
     assert _kidx_matches_keys(reopened)
 
 
@@ -250,7 +245,7 @@ def test_crash_before_manifest_publish_keeps_old_state(spark, tmp_path, monkeypa
     with pytest.raises(RuntimeError, match="simulated"):
         fold_batch(state, _full_persons(spark, delta), bl, batch_id=1)
     monkeypatch.setattr(DataFrameWriter, "parquet", orig_parquet)
-    # the failure surfaced only after the other four writes finished,
+    # the failure surfaced only after the other three writes finished,
     # and the manifest was not touched
     for table in IncrementalState.TABLES:
         leaves = glob.glob(os.path.join(str(tmp_path), table, "bucket=*", "gen=1"))
@@ -329,32 +324,45 @@ def test_gc_scoped_to_commit_buckets_full_sweep_on_first_commit(spark, tmp_path)
     assert not os.path.isdir(orphan), "the first commit must sweep orphans"
 
 
-def test_store_without_exact_marker_is_refused(spark, tmp_path):
-    """A store whose manifest lacks the exact-mode marker is refused before
-    anything is read or written. Stripped here the way a store from before
-    the index tables looks: no index tables, no schemas for them, no marker
-    (every such layout also predates the marker)."""
-    bl = Blacklist.testing()
-    state = IncrementalState(spark, str(tmp_path), n_buckets=8)
-    fold_batch(state, _full_persons(spark, _corpus(10)), bl, batch_id=0)
+def _snapshot(root, manifest_path):
+    """The manifest's bytes and the store's file listing."""
+    with open(manifest_path, "rb") as fh:
+        raw = fh.read()
+    return raw, sorted(str(p.relative_to(root)) for p in root.rglob("*"))
+
+
+def _strip_manifest_key(spark, root, key):
+    """Bootstrap an 8-bucket store at ``root``, drop ``key`` from its
+    manifest; return the manifest path."""
+    state = IncrementalState(spark, str(root), n_buckets=8)
+    fold_batch(state, _full_persons(spark, _corpus(10)), Blacklist.testing(), batch_id=0)
     with open(state.manifest_path) as fh:
         man = json.load(fh)
-    for t in ("members_by_comp", "key_index"):
-        man["tables"].pop(t)
-        man["schemas"].pop(t)
-        shutil.rmtree(tmp_path / t)
-    man.pop("exact_mode")
+    man.pop(key)
     with open(state.manifest_path, "w") as fh:
         json.dump(man, fh)
+    return state.manifest_path
 
-    def snapshot():
-        with open(state.manifest_path, "rb") as fh:
-            raw = fh.read()
-        return raw, sorted(str(p.relative_to(tmp_path)) for p in tmp_path.rglob("*"))
 
-    before = snapshot()
+def test_store_without_exact_marker_is_refused(spark, tmp_path):
+    """A store whose manifest lacks the exact-mode marker is refused before
+    anything is read or written."""
+    manifest_path = _strip_manifest_key(spark, tmp_path, "exact_mode")
+    before = _snapshot(tmp_path, manifest_path)
     old = IncrementalState(spark, str(tmp_path), n_buckets=8)
     assert not old.exact_mode()
     with pytest.raises(ValueError, match="exact-mode"):
-        fold_batch(old, _full_persons(spark, DELTA), bl, batch_id=1)
-    assert snapshot() == before
+        fold_batch(old, _full_persons(spark, DELTA), Blacklist.testing(), batch_id=1)
+    assert _snapshot(tmp_path, manifest_path) == before
+
+
+def test_store_with_other_layout_is_refused(spark, tmp_path):
+    """A manifest that does not record the current bucket columns — every
+    store of an earlier layout, e.g. one with membership bucketed by id —
+    is refused on open, before anything is read or written: probing a
+    table by a column it is not bucketed on would under-scope the fold."""
+    manifest_path = _strip_manifest_key(spark, tmp_path, "bucket_cols")
+    before = _snapshot(tmp_path, manifest_path)
+    with pytest.raises(ValueError, match="layout"):
+        IncrementalState(spark, str(tmp_path), n_buckets=8)
+    assert _snapshot(tmp_path, manifest_path) == before

@@ -50,45 +50,6 @@ def test_stream_signatures_match_batch(spark, tmp_path):
     assert missing == 0 and extra == 0, (missing, extra)
 
 
-def test_stateful_signatures_match_batch(spark, tmp_path):
-    """applyInPandasWithState accumulator converges to the batch extraction
-    (latest update per conversation)."""
-    from identity_matching_spark.streaming.incremental import stateful_signatures
-
-    t = synth_transcripts(spark, n_convs=80, n_persons=8, seed=13)
-    src = str(tmp_path / "turns2")
-    t.write.parquet(src)
-    stream = spark.readStream.schema(t.schema).parquet(src)
-    sigs = stateful_signatures(stream)
-    out_dir = str(tmp_path / "state_sigs")
-    q = (
-        sigs.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("state_sigs")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = (
-        spark.table("state_sigs")
-        .groupBy("conv_id")
-        .agg(
-            F.max_by("name", "n_turns").alias("name"),
-            F.max_by("email", "n_turns").alias("email"),
-        )
-    )
-    batch = extract_signatures(t).select(
-        "conv_id",
-        F.col("name").alias("b_name"),
-        F.col("email").alias("b_email"),
-    )
-    joined = got.join(batch, "conv_id")
-    bad = joined.where(
-        (F.col("name") != F.col("b_name")) | (F.col("email") != F.col("b_email"))
-    ).count()
-    assert bad == 0 and joined.count() == 80
-
-
 def test_incremental_clustering_stable_across_batches(spark, tmp_path):
     """Multi-batch incremental resolution at ~100k turn rows: cluster
     assignments of already-resolved persons must not churn when later
