@@ -3,11 +3,23 @@
 The reference clusters with an in-core graph (gonum
 ``topo.ConnectedComponents``, /root/reference/matching.go:211-222) or a
 union-find (/root/reference/research/idmatching/people.py:36-110). Neither
-survives 10^12 rows, so this is an iterative-join min-label propagation with
-pointer-jumping (the standard Spark CC shape; Kiveris et al., "Connected
-Components in MapReduce and Beyond").
+survives 10^12 rows, so a large graph runs an iterative-join min-label
+propagation with pointer-jumping (the standard Spark CC shape; Kiveris et
+al., "Connected Components in MapReduce and Beyond"); a small one still
+finishes in-core, on the driver.
 
 Scale notes:
+* Small graphs finish on the driver. The symmetrized edges are materialized
+  once by an eager barrier that also counts them (an ``Observation``, no
+  extra job). When ``rows × 16 B`` (two longs) fits the session's
+  ``spark.sql.autoBroadcastJoinThreshold`` — the size this engine already
+  treats as "small enough to build on the driver and broadcast" (8 MB under
+  ``session.get_spark``; −1 means never) — the edges are collected once via
+  Arrow, labelled by hook-to-min-root union with pointer jumping in numpy,
+  and broadcast back. On such graphs the join loop's rounds are nearly all
+  driver overhead (Kiveris et al. observe the same of CC's tail rounds).
+* Larger graphs run the join loop below; everything from here on applies
+  to the loop only.
 * Identity graphs here are built from *star* edges per block
   (operators/blocking.py), so per-block diameter ≤ 2 and chains across
   blocks are bounded by aliases-per-person — convergence in a handful of
@@ -32,8 +44,13 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+# bytes per symmetrized edge row on the driver: two longs
+EDGE_ROW_BYTES = 16
 
 
 def symmetrize(edges: DataFrame) -> DataFrame:
@@ -82,6 +99,54 @@ def _truncate(df: DataFrame, reliable: bool, eager: bool) -> tuple[DataFrame, Da
     return cached.checkpoint(eager=eager), cached
 
 
+def _min_labels(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Min-id component labels of an edge list, computed on the driver.
+
+    Each pass hooks every root that shares an edge with a smaller root onto
+    the smallest such root, then pointer-jumps every node to its root.
+    Parents only ever decrease, so the forest stays acyclic and each
+    component's root is its minimum id. Returns ``(ids, component)`` over
+    the edge endpoints."""
+    ids, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    s, d = idx[: len(src)], idx[len(src) :]
+    parent = np.arange(len(ids))
+    while True:
+        rs, rd = parent[s], parent[d]
+        live = rs != rd
+        if not live.any():
+            return ids, ids[parent]
+        s, d, rs, rd = s[live], d[live], rs[live], rd[live]
+        np.minimum.at(parent, np.maximum(rs, rd), np.minimum(rs, rd))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+
+
+def _finish_on_driver(e: DataFrame, nodes: DataFrame | None) -> DataFrame:
+    """Labels of the (small) symmetrized edge set ``e``: collect it once,
+    label on the driver, broadcast the labels back to ``nodes``."""
+    edges = e.withColumnRenamed("src", "id")
+    if nodes is not None:
+        # the join loop ignores an edge with an endpoint outside ``nodes``:
+        # (a, b) survives this join iff a is a node, and b is a node iff the
+        # reverse edge (b, a) survives too
+        edges = nodes.join(F.broadcast(edges), "id")
+    pdf = edges.toPandas()
+    if nodes is not None:
+        pdf = pdf[pdf["dst"].isin(pdf["id"])]
+    ids, comp = _min_labels(pdf["id"].to_numpy("int64"), pdf["dst"].to_numpy("int64"))
+    labels = e.sparkSession.createDataFrame(
+        pd.DataFrame({"id": ids, "component": comp}), "id long, component long"
+    )
+    if nodes is None:
+        return labels
+    return nodes.join(F.broadcast(labels), "id", "left").select(
+        "id", F.coalesce("component", "id").alias("component")
+    )
+
+
 def _round(e: DataFrame, labels: DataFrame) -> DataFrame:
     """One min-label propagation + pointer-jump round (lazy plan)."""
     nbr_min = (
@@ -113,13 +178,24 @@ def connected_components(
     ----------
     edges : DataFrame[src: long, dst: long]
     nodes : optional DataFrame[id: long] — include isolated nodes; defaults
-        to the nodes present in ``edges``.
-    store : optional CheckpointStore — when given, every iteration's labels
+        to the nodes present in ``edges``. An edge with an endpoint absent
+        from ``nodes`` is ignored: it neither labels that endpoint nor
+        connects anything through it.
+    max_iter : loop rounds before giving up (the returned labels are then
+        unconverged); the driver finish always converges.
+    store : optional CheckpointStore — loop only: every iteration's labels
         are written durably under ``{stage_prefix}_{edge_fingerprint}_iter{i}``
         (north_rule: checkpointed CC iterations; a killed run resumes from
         the last completed iteration instead of restarting the loop, and the
         fingerprint guarantees resume only against the same graph). The
         iteration files are removed once the loop converges.
+
+    The symmetrized edges are counted by the barrier that materializes
+    them. When ``rows × EDGE_ROW_BYTES`` is at most the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (−1: never), the labels are
+    computed on the driver and returned as ``nodes ⋈ broadcast(labels)``;
+    no store file is written and no fingerprint computed. Otherwise the
+    join loop runs, with the store, resume and fingerprint logic above.
 
     Returns DataFrame[id: long, component: long] where ``component`` is the
     minimum node id in the component (reference semantics: merged person id =
@@ -128,11 +204,23 @@ def connected_components(
     spark = edges.sparkSession
     reliable = spark.sparkContext.getCheckpointDir() is not None
 
-    e, e_handle = _truncate(symmetrize(edges), reliable, eager=True)
+    counted = Observation()
+    e, e_handle = _truncate(
+        symmetrize(edges).observe(counted, F.count(F.lit(1)).alias("rows")),
+        reliable,
+        eager=True,
+    )
+    if nodes is not None:
+        nodes = nodes.select(F.col("id").cast("long")).distinct()
+    cap = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if counted.get["rows"] * EDGE_ROW_BYTES <= cap:
+        labels = _finish_on_driver(e, nodes)
+        if e_handle is not None:
+            e_handle.unpersist()
+        return labels
+
     if nodes is None:
         nodes = e.select(F.col("src").alias("id")).distinct()
-    else:
-        nodes = nodes.select(F.col("id").cast("long")).distinct()
 
     labels, labels_handle = _truncate(
         nodes.select("id", F.col("id").alias("component")), reliable, eager=True

@@ -1,5 +1,6 @@
 """Durable / reliable checkpointing of the CC iteration loop (north_rule:
-checkpointed CC iterations). Covers:
+checkpointed CC iterations). Small graphs finish on the driver, so every
+loop test here runs under ``cc_loop`` (broadcast threshold -1). Covers:
 
 * resume: a store holding a completed iteration of the SAME graph is picked
   up (the loop continues from the planted labels instead of restarting);
@@ -7,11 +8,13 @@ checkpointed CC iterations). Covers:
   stage prefix are never resumed (the ADVICE stale-resume hazard);
 * cleanup: iteration scaffolding is deleted once the loop converges;
 * reliable mode: with a Spark checkpoint dir configured the loop writes
-  reliable checkpoints into it (executor-loss durability on a cluster).
+  reliable checkpoints into it (executor-loss durability on a cluster), and
+  releases its caches (ADVICE r2 regression).
 """
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from identity_matching_spark.operators.cc import (
@@ -20,6 +23,8 @@ from identity_matching_spark.operators.cc import (
     symmetrize,
 )
 from identity_matching_spark.sources.io import CheckpointStore
+
+pytestmark = pytest.mark.usefixtures("cc_loop")
 
 
 def _edges(spark, pairs):
@@ -90,5 +95,21 @@ def test_reliable_checkpoint_used_when_dir_configured(spark, tmp_path):
         # unset so the session-scoped fixture's other tests keep the fast
         # localCheckpoint path (no public unset API; the Scala var is
         # package-public in bytecode)
+        jsc = spark.sparkContext._jsc.sc()
+        getattr(jsc, "checkpointDir_$eq")(spark.sparkContext._jvm.scala.Option.apply(None))
+
+
+def test_cc_reliable_mode_leaves_no_cached_plans(spark, tmp_path):
+    from identity_matching_spark.operators.cc import connected_components
+
+    spark.catalog.clearCache()
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        e = spark.createDataFrame([(i, i + 1) for i in range(1, 30)], "src long, dst long")
+        labels = connected_components(e)
+        assert {r["component"] for r in labels.collect()} == {1}
+        cm = spark._jsparkSession.sharedState().cacheManager()
+        assert cm.isEmpty(), "CC left persisted plans in the CacheManager"
+    finally:
         jsc = spark.sparkContext._jsc.sc()
         getattr(jsc, "checkpointDir_$eq")(spark.sparkContext._jvm.scala.Option.apply(None))

@@ -5,6 +5,7 @@ deterministic per-block greedy documented in operators/cluster.py; these
 fixtures pin that both paths produce the reference's expected clusters.
 """
 
+import os
 import random
 
 import pytest
@@ -13,6 +14,7 @@ from pyspark.sql import functions as F
 from identity_matching_spark.operators.blacklist import Blacklist
 from identity_matching_spark.operators.cc import connected_components
 from identity_matching_spark.operators.cluster import reduce_people, set_primary_values
+from identity_matching_spark.sources.io import CheckpointStore
 from tests.test_reference_parity import _random_persons
 
 
@@ -213,8 +215,34 @@ class _UF:
             self.p[max(ra, rb)] = min(ra, rb)
 
 
+def _uf_components(edges, nodes=None):
+    """Min-id labels by union-find under connected_components' rules:
+    self-loops add nothing, an edge with an endpoint outside ``nodes`` is
+    ignored, and ``nodes`` defaults to the endpoints of the other edges."""
+    edges = [(a, b) for a, b in edges if a != b]
+    nodes = {x for e in edges for x in e} if nodes is None else set(nodes)
+    uf = _UF()
+    for a, b in edges:
+        if a in nodes and b in nodes:
+            uf.union(a, b)
+    return {i: uf.find(i) for i in nodes}
+
+
+def _cc_both_paths(spark, broadcast_threshold, edges, nodes=None):
+    """``{id: component}`` from connected_components finished on the driver
+    (get_spark's 8 MB threshold) and from its join loop (threshold -1)."""
+    edf = spark.createDataFrame(edges, "src long, dst long")
+    ndf = None if nodes is None else spark.createDataFrame([(i,) for i in nodes], "id long")
+    out = []
+    for cap in (str(8 * 1024 * 1024), "-1"):
+        broadcast_threshold(cap)
+        labels = connected_components(edf, nodes=ndf)
+        out.append({r["id"]: r["component"] for r in labels.collect()})
+    return out
+
+
 @pytest.mark.parametrize("seed,n,m", [(1, 50, 40), (2, 200, 150), (3, 100, 300)])
-def test_connected_components_random(spark, seed, n, m):
+def test_connected_components_random(spark, broadcast_threshold, seed, n, m):
     rng = random.Random(seed)
     edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
     uf = _UF()
@@ -224,22 +252,72 @@ def test_connected_components_random(spark, seed, n, m):
         uf.find(i)
     expected = {i: min(j for j in range(n) if uf.find(j) == uf.find(i)) for i in range(n)}
 
-    edf = spark.createDataFrame(edges, "src long, dst long")
-    ndf = spark.createDataFrame([(i,) for i in range(n)], "id long")
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components(edf, nodes=ndf).collect()
-    }
-    assert got == expected
+    driver, loop = _cc_both_paths(spark, broadcast_threshold, edges, range(n))
+    assert driver == expected
+    assert loop == expected
 
 
-def test_connected_components_chain(spark):
+def test_connected_components_chain(spark, broadcast_threshold):
     """Worst-case diameter: a path graph must still converge."""
     n = 64
     edges = [(i, i + 1) for i in range(n - 1)]
-    edf = spark.createDataFrame(edges, "src long, dst long")
-    got = connected_components(edf).select("component").distinct().collect()
-    assert [r["component"] for r in got] == [0]
+    for got in _cc_both_paths(spark, broadcast_threshold, edges):
+        assert set(got.values()) == {0}
+        assert got == _uf_components(edges)
+
+
+@pytest.mark.parametrize(
+    "edges,nodes",
+    [
+        pytest.param([(-3, -1), (-1, 4), (7, -9), (8, 7)], None, id="negative_ids"),
+        pytest.param([], [5, 2, 9], id="no_edges_given_nodes"),
+        pytest.param(
+            [(1, 2), (2, 1), (1, 2), (3, 3), (4, 4), (4, 5), (5, 4)],
+            None,
+            id="duplicates_and_self_loops",
+        ),
+        pytest.param([(1, 2), (2, 1), (3, 3)], [1, 2, 3], id="self_loop_given_node"),
+        pytest.param([(1, 99), (99, 2), (2, 3), (4, 98)], [1, 2, 3, 4], id="edge_to_absent_id"),
+    ],
+)
+def test_connected_components_edge_cases(spark, broadcast_threshold, edges, nodes):
+    want = _uf_components(edges, nodes)
+    driver, loop = _cc_both_paths(spark, broadcast_threshold, edges, nodes)
+    assert driver == want
+    assert loop == want
+
+
+def test_small_graph_finishes_on_driver(spark, tmp_path, broadcast_threshold):
+    """Under get_spark's threshold a small graph skips the join loop: the
+    edge barrier plus one collect, no store iteration files, and in reliable
+    mode no persisted plan left behind."""
+    broadcast_threshold(str(8 * 1024 * 1024))
+    e = spark.createDataFrame([(1, 2), (2, 3), (3, 4), (10, 11)], "src long, dst long")
+    want = {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+    store = CheckpointStore(spark, str(tmp_path), {"t": 1})
+
+    def run():
+        labels = connected_components(e, store=store, stage_prefix="cc")
+        return {r["id"]: r["component"] for r in labels.collect()}
+
+    sc = spark.sparkContext
+    sc.setJobGroup("cc_driver_finish", "cc driver finish")
+    try:
+        assert run() == want
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("cc_driver_finish")) <= 3
+
+    spark.catalog.clearCache()
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        assert run() == want
+        cm = spark._jsparkSession.sharedState().cacheManager()
+        assert cm.isEmpty(), "the driver finish left persisted plans in the CacheManager"
+    finally:
+        jsc = sc._jsc.sc()
+        getattr(jsc, "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
+    assert [d for d in os.listdir(tmp_path) if "_iter" in d] == []
 
 
 def test_reduce_people_empty_input(spark):

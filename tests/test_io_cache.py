@@ -4,6 +4,7 @@ happens at read time; rows with empty fields or bad timestamps are dropped."""
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from identity_matching_spark.sources.io import (
@@ -72,6 +73,7 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_identities")
 
 
+@pytest.mark.usefixtures("cc_loop")
 def test_cc_durable_iteration_checkpoints(spark, tmp_path):
     """With a store, CC iterations checkpoint durably under a
     graph-fingerprinted key and the scaffolding is removed on convergence

@@ -1,7 +1,6 @@
 """Round-3 hardening: default-on id-collision safety, external-match cache
 merge semantics (external/cache.go:153-259), SF-aware golden oracles,
-per-class edge counters, Iceberg-table checkpoint mode, and the CC reliable-
-mode cache-release regression (ADVICE r2)."""
+per-class edge counters and Iceberg-table checkpoint mode."""
 
 import os
 
@@ -189,22 +188,3 @@ def test_checkpoint_store_table_mode(spark, tmp_path):
         store.delete(stage)
         store.delete(f"{stage}_metrics")
         assert not store.exists(stage)
-
-
-# --- CC reliable mode releases its caches (ADVICE r2 regression) ------------
-
-
-def test_cc_reliable_mode_leaves_no_cached_plans(spark, tmp_path):
-    from identity_matching_spark.operators.cc import connected_components
-
-    spark.catalog.clearCache()
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    try:
-        e = spark.createDataFrame([(i, i + 1) for i in range(1, 30)], "src long, dst long")
-        labels = connected_components(e)
-        assert {r["component"] for r in labels.collect()} == {1}
-        cm = spark._jsparkSession.sharedState().cacheManager()
-        assert cm.isEmpty(), "CC left persisted plans in the CacheManager"
-    finally:
-        jsc = spark.sparkContext._jsc.sc()
-        getattr(jsc, "checkpointDir_$eq")(spark.sparkContext._jvm.scala.Option.apply(None))
