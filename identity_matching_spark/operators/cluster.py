@@ -41,10 +41,6 @@ from identity_matching_spark.operators.cc import connected_components
 
 _EDGE_SCHEMA = "src long, dst long, is_j3 boolean"
 
-# process-lifetime memo of persons-input fingerprints whose surrogate keys
-# already verified collision-free (see reduce_people ``verify_token``)
-_VERIFIED_KEY_TOKENS: set[str] = set()
-
 
 def _greedy_block_edges(pdf: pd.DataFrame, cap: float) -> list[tuple[int, int]]:
     """Deterministic greedy packing of one name block's components.
@@ -158,7 +154,6 @@ def reduce_people(
     store=None,
     reporter=None,
     verify_keys: bool = True,
-    verify_token: str | None = None,
 ) -> DataFrame:
     """Resolve person rows into clusters.
 
@@ -178,12 +173,6 @@ def reduce_people(
         collision-free before clustering on them (two cheap per-code
         aggregate jobs; same default-on contract as ``build_persons``'s
         ``verify_ids``).
-    verify_token : optional stable fingerprint of the persons input (e.g.
-        the stage checkpoint path+confighash). When set, a passing key
-        verification is memoized for the process lifetime — resumed or
-        repeated runs over the same checkpointed persons skip the
-        re-verification jobs. Collisions depend only on the key SET, which
-        the fingerprint pins.
 
     Returns DataFrame[id, component, external_id] — person → final cluster
     (component = min person id in cluster) plus the cluster's external id
@@ -250,7 +239,7 @@ def reduce_people(
         blacklist.is_popular_name(F.col("name_key")).alias("pop_name"),
         blacklist.is_popular_email(F.col("email")).alias("pop_email"),
     )
-    if verify_keys and verify_token not in _VERIFIED_KEY_TOKENS:
+    if verify_keys:
         # Collision iff some surrogate covers >1 distinct string, i.e. iff
         # count_distinct(strings) > count_distinct(codes) (the code map is a
         # function of the string, and NULL strings map to NULL codes, so both
@@ -286,8 +275,6 @@ def reduce_people(
                 f"{bad[0][code]} covers {bad[0]['n']} distinct values; "
                 "re-salt the key hash"
             )
-        if verify_token is not None:
-            _VERIFIED_KEY_TOKENS.add(verify_token)
     persons = keyed.select(
         "id",
         F.col("_nk").alias("name_key"),

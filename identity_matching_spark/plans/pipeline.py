@@ -166,10 +166,6 @@ def run_pipeline(
             store=store,
             reporter=reporter,
             verify_keys=cfg.verify_ids,
-            # memoize the collision verdict per durable persons fingerprint:
-            # a resumed run over the same checkpointed persons skips the
-            # re-verification jobs (the key set is pinned by the path+hash)
-            verify_token=store.fingerprint("persons") if store is not None else None,
         ),
     )
     members = persons.join(membership, "id")

@@ -69,32 +69,6 @@ class CheckpointStore:
             return f"{self.table_prefix}.{stage}__{self.suffix}"
         return os.path.join(self.root, f"{stage}__{self.suffix}")
 
-    def fingerprint(self, stage: str) -> str | None:
-        """Stable identity of a stage's CURRENT contents, or ``None`` when
-        no trustworthy content version exists (callers must then never
-        memoize — ADVICE r5: a version-less fingerprint can alias a
-        memoized verdict across a rewrite of the underlying data).
-
-        Parquet stores: path+confighash plus the commit-marker mtime;
-        ``None`` before the stage committed. Table stores: path plus the
-        newest snapshot id when the catalog exposes an Iceberg-style
-        ``.snapshots`` metadata table; ``None`` otherwise (no cheap
-        content version → no memoization)."""
-        p = self.path(stage)
-        if self.table_prefix:
-            try:
-                row = self.spark.sql(
-                    f"SELECT snapshot_id FROM {p}.snapshots "
-                    "ORDER BY committed_at DESC LIMIT 1"
-                ).collect()
-            except Exception:
-                return None
-            return f"{p}@{row[0][0]}" if row else None
-        marker = os.path.join(p, "_SUCCESS")
-        if not os.path.exists(marker):
-            return None
-        return f"{p}@{os.path.getmtime(marker)}"
-
     def exists(self, stage: str) -> bool:
         if self.table_prefix:
             return self.spark.catalog.tableExists(self.path(stage))

@@ -83,11 +83,12 @@ def stream_signatures(
 #    email + name_key, same 64-bit surrogates ``reduce_people`` encodes);
 # 2. the set of CURRENT final clusters that must be re-resolved is the
 #    closure of those keys over the bipartite cluster↔key graph: a key
-#    touches every cluster holding it, a touched cluster contributes all
-#    its keys, iterate to fixpoint (bucket-probing equi-joins, like CC
-#    rounds — :func:`_touched_closure_bucketed`);
-# 3. re-run ``reduce_people`` on the touched clusters' members plus the
-#    delta; every untouched membership row passes through unchanged.
+#    touches every cluster holding it, a touched cluster contributes the
+#    keys of all its members, iterate to fixpoint (bucket-probing
+#    equi-joins, like CC rounds — :func:`_touched_closure_bucketed`);
+# 3. re-run ``reduce_people`` on the touched clusters' members (the silver
+#    rows the closure read) plus the delta; every untouched membership row
+#    passes through unchanged.
 #
 # :func:`fold_batch` is the one engine: it runs these steps against the
 # bucketed :class:`IncrementalState` below and commits only the buckets
@@ -129,9 +130,10 @@ def person_blocking_keys(persons: DataFrame, blacklist) -> DataFrame:
 def derive_cluster_keys(
     silver_persons: DataFrame, membership: DataFrame, blacklist
 ) -> DataFrame:
-    """Derive the (component, key) state relation from scratch — one
-    full-corpus shuffle. :func:`fold_batch` runs it once, at bootstrap,
-    and maintains the relation delta by delta afterwards."""
+    """Derive the (component, key) relation — the ``key_index`` table's
+    rows — from scratch: one full-corpus shuffle. :func:`fold_batch` runs
+    it once, at bootstrap, and maintains ``key_index`` delta by delta
+    afterwards."""
     return (
         person_blocking_keys(silver_persons, blacklist)
         .join(membership.select("id", "component"), "id")
@@ -142,8 +144,8 @@ def derive_cluster_keys(
 
 # --- bucketed, manifest-committed state store ------------------------------
 #
-# The four state tables (persons_silver, membership, cluster_keys and
-# key_index) are laid out as <root>/<table>/bucket=K/gen=G/ parquet leaves,
+# The three state tables (persons_silver, membership and key_index) are
+# laid out as <root>/<table>/bucket=K/gen=G/ parquet leaves,
 # with a SINGLE atomically-replaced manifest JSON naming the live generation
 # per bucket, each table's schema and its bucket column. Per batch only the
 # AFFECTED buckets are rewritten under gen=<batch_id> (dynamic partition
@@ -179,20 +181,14 @@ def derive_cluster_keys(
 class IncrementalState:
     """Versioned bucket-partitioned state with an atomic manifest commit."""
 
-    TABLES = ("persons_silver", "membership", "cluster_keys", "key_index")
-    # Each relation is stored once per direction the fold probes it: silver
-    # by person id (affected buckets are the delta's ids), membership and
-    # cluster_keys by component (scope probes and removals are keyed by
-    # touched components), and key_index — cluster_keys' (component, key)
-    # rows again, bucketed by key — for the closure's key → component hop.
-    # Every probe then reads only matching buckets, so the fold's reads
-    # track the delta like its shuffles do.
-    BUCKET_COL = {
-        "persons_silver": "id",
-        "membership": "component",
-        "cluster_keys": "component",
-        "key_index": "key",
-    }
+    TABLES = ("persons_silver", "membership", "key_index")
+    # Each relation is stored once, bucketed by the column the closure
+    # probes it on: key_index's (component, key) rows by key (key →
+    # component), membership by component (component → member ids) and
+    # silver by person id (id → row, whose blocking keys are the next
+    # frontier). Every probe then reads only matching buckets, so the
+    # fold's reads track the delta like its shuffles do.
+    BUCKET_COL = {"persons_silver": "id", "membership": "component", "key_index": "key"}
 
     def __init__(self, spark, root: str, n_buckets: int = 64):
         import os
@@ -406,52 +402,54 @@ class IncrementalState:
                     os.rmdir(bpath)
 
 
-def _collect_buckets(df: DataFrame, expr) -> list[int]:
-    """Distinct bucket values of a delta-scoped frame (small by contract)."""
-    return [r[0] for r in df.select(expr.alias("b")).distinct().collect()]
-
-
-def _collect_bucket_sets(frames: dict[str, tuple[DataFrame, object]]) -> dict[str, list[int]]:
-    """:func:`_collect_buckets` of several frames in one round trip:
-    ``{name: (frame, bucket_expr)}`` → ``{name: buckets}``, each frame's
-    buckets tagged with its name inside one distinct."""
+def _collect_bucket_sets(state: IncrementalState, **frames: DataFrame) -> dict[str, list[int]]:
+    """Distinct buckets of delta-scoped frames (small by contract) in one
+    round trip: ``table=frame`` → ``{table: buckets}``, each frame holding
+    the table's bucket column and tagged with its name inside one
+    distinct."""
     from functools import reduce
 
     tagged = [
-        df.select(F.lit(name).alias("t"), expr.alias("b"))
-        for name, (df, expr) in frames.items()
+        df.select(F.lit(table).alias("t"), state.bucket_expr(table).alias("b"))
+        for table, df in frames.items()
     ]
-    out: dict[str, list[int]] = {name: [] for name in frames}
+    out: dict[str, list[int]] = {table: [] for table in frames}
     for r in reduce(DataFrame.union, tagged).distinct().collect():
         out[r["t"]].append(r["b"])
     return out
 
 
 def _touched_closure_bucketed(
-    state: IncrementalState, seed_keys: DataFrame, max_hops: int = 25
-) -> tuple[DataFrame, int, int]:
-    """Fixpoint of the clusters reachable from ``seed_keys`` over the
-    bipartite (component, key) relation. Each hop is two equi-joins that
-    read ONLY the key_index buckets matching the frontier keys and the
-    cluster_keys buckets matching the newly touched components, so the
-    fold's read volume tracks the delta the way its shuffles already do.
-    A bucket is a pure function of the equi-join key, so probing matching
-    buckets loses no join partner. Returns (touched components, hops,
-    buckets_read); raises if the closure has not converged after
-    ``max_hops`` (pathologically chained corpora)."""
-    spark = seed_keys.sparkSession
-    kidx_expr = state.bucket_expr("key_index")
-    comp_expr = state.bucket_expr("cluster_keys")
-    touched = spark.createDataFrame([], "component long")
-    frontier = seed_keys.select("key").distinct().localCheckpoint(eager=False)
+    state: IncrementalState, delta: DataFrame, blacklist, max_hops: int = 25
+) -> tuple[DataFrame, DataFrame, int, int]:
+    """Fixpoint of the clusters reachable from the delta's blocking keys
+    over the bipartite (component, key) relation. Each hop reads ONLY
+    matching buckets: the frontier keys' key_index buckets give the newly
+    touched components, their membership buckets give the members, and
+    the members' persons_silver buckets give their rows, whose blocking
+    keys are the next frontier. So the fold's read volume tracks the delta
+    the way its shuffles already do. A bucket is a pure function of the
+    equi-join key, so probing matching buckets loses no join partner.
+    Returns (touched components, the silver rows of their members — the
+    re-resolve scope, hops, buckets_read); raises if the closure has not
+    converged after ``max_hops`` (pathologically chained corpora)."""
+    touched = state.spark.createDataFrame([], "component long")
+    scope = state.read_buckets("persons_silver", [])
+    rows = delta
     buckets_read = 0
     for hops in range(max_hops):
-        fb = _collect_buckets(frontier, kidx_expr)
-        if not fb:
-            return touched, hops, buckets_read
-        buckets_read += len(fb)
+        frontier = (
+            person_blocking_keys(rows, blacklist)
+            .select("key")
+            .distinct()
+            .localCheckpoint(eager=False)
+        )
+        kb = _collect_bucket_sets(state, key_index=frontier)["key_index"]
+        if not kb:
+            return touched, scope, hops, buckets_read
+        buckets_read += len(kb)
         new_comps = (
-            state.read_buckets("key_index", fb)
+            state.read_buckets("key_index", kb)
             .join(frontier, "key")
             .select("component")
             .distinct()
@@ -459,18 +457,24 @@ def _touched_closure_bucketed(
             .localCheckpoint(eager=False)
         )
         # new_comps is empty exactly when its bucket list is: one round trip
-        cb = _collect_buckets(new_comps, comp_expr)
-        if not cb:
-            return touched, hops, buckets_read
+        mb = _collect_bucket_sets(state, membership=new_comps)["membership"]
+        if not mb:
+            return touched, scope, hops, buckets_read
         touched = touched.union(new_comps).localCheckpoint(eager=False)
-        buckets_read += len(cb)
-        frontier = (
-            state.read_buckets("cluster_keys", cb)
+        members = (
+            state.read_buckets("membership", mb)
             .join(new_comps, "component")
-            .select("key")
-            .distinct()
+            .select("id")
             .localCheckpoint(eager=False)
         )
+        sb = _collect_bucket_sets(state, persons_silver=members)["persons_silver"]
+        buckets_read += len(mb) + len(sb)
+        rows = (
+            state.read_buckets("persons_silver", sb)
+            .join(members, "id")
+            .localCheckpoint(eager=False)
+        )
+        scope = scope.unionByName(rows)
     raise RuntimeError(
         f"cluster closure did not converge in {max_hops} hops — "
         "fall back to a full re-resolution for this batch"
@@ -488,17 +492,16 @@ def fold_batch(
     """Fold one batch of person rows into the maintained state — every
     Spark job in here is delta-scoped, READS included:
 
-    * the touched-cluster closure probes the key_index / cluster_keys
-      tables bucket-by-bucket (never a full-table scan);
-    * the scope expands through the component-bucketed membership, and
-      the silver rows it re-reads come from the matching id buckets only;
+    * the touched-cluster closure probes key_index, membership and
+      persons_silver bucket-by-bucket (never a full-table scan), and the
+      silver rows it reads are the re-resolve scope;
     * silver maintenance merges ONLY ids colliding with the delta
       (broadcast semi/anti joins; the groupBy shuffles colliding ∪ delta
       rows, never the corpus — metric ``merge_rows``);
-    * membership/cluster_keys/key_index rewrites touch only the buckets
-      holding scoped/rescoped rows; the affected bucket sets come back in
-      two round trips (silver/cluster_keys, then membership/key_index);
-    * the commit writes the four tables concurrently, one part file per
+    * membership/key_index rewrites touch only the buckets holding
+      scoped/rescoped rows; the affected bucket sets of all three tables
+      come back in one round trip;
+    * the commit writes the three tables concurrently, one part file per
       rewritten ``(bucket, gen)`` leaf, and publishes the manifest (the
       atomic point) only after every write has finished; the jobs keep the
       caller's job group and tags;
@@ -543,9 +546,9 @@ def fold_batch(
         return {"skipped_replay": True}
     if state.exists() and not state.exact_mode():
         # The closure covers name/email blocking keys ONLY: external-id and
-        # similarity edges couple clusters through relations the (component,
-        # key) state does not track, so folding such state would silently
-        # under-scope (ADVICE r4).
+        # similarity edges couple clusters through relations the blocking
+        # keys of silver rows do not carry, so folding such state would
+        # silently under-scope (ADVICE r4).
         raise ValueError(
             f"fold_batch requires an exact-mode store; the manifest at "
             f"{state.manifest_path} lacks the exact-mode marker (similarity "
@@ -556,59 +559,33 @@ def fold_batch(
 
     if not state.exists():
         membership = reduce_people(delta, blacklist, max_identities=max_identities)
-        keys = derive_cluster_keys(delta, membership, blacklist)
         all_buckets = list(range(state.n_buckets))
         state.commit(
             batch_id,
             {
                 "persons_silver": (delta, all_buckets),
                 "membership": (membership, all_buckets),
-                "cluster_keys": (keys, all_buckets),
-                "key_index": (keys, all_buckets),
+                "key_index": (derive_cluster_keys(delta, membership, blacklist), all_buckets),
             },
             exact_mode=True,
         )
         return {"bootstrap": True, "delta_rows": delta.count() if collect_metrics else None}
 
-    silver_expr = state.bucket_expr("persons_silver")
-    member_expr = state.bucket_expr("membership")
-    keys_expr = state.bucket_expr("cluster_keys")
-    kidx_expr = state.bucket_expr("key_index")
     metrics: dict = {}
-
     delta_ids = delta.select("id").distinct().localCheckpoint(eager=False)
-    seed_keys = person_blocking_keys(delta, blacklist)
 
-    # --- touched closure + scope (bucket probes) -------------------------
-    touched, hops, buckets_read = _touched_closure_bucketed(state, seed_keys)
-    tb = _collect_buckets(touched, member_expr)
-    buckets_read += len(tb)
-    scope_ids = (
-        state.read_buckets("membership", tb)
-        .join(touched, "component")
-        .select("id")
-        .localCheckpoint(eager=False)
-    )
-    touched = touched.localCheckpoint(eager=False)
+    # --- touched closure, which reads the scope (bucket probes) -----------
+    touched, scope, hops, buckets_read = _touched_closure_bucketed(state, delta, blacklist)
     metrics["hops"] = hops
 
     # --- re-resolve the scoped slice --------------------------------------
-    scope_read_ids = scope_ids.unionByName(delta_ids).distinct()
-    sread_buckets = _collect_buckets(scope_read_ids, silver_expr)
-    buckets_read += len(sread_buckets)
-    scoped = (
-        state.read_buckets("persons_silver", sread_buckets)
-        .join(scope_ids, "id")
-        .unionByName(delta)
-        .dropDuplicates(["id"])
-        .localCheckpoint(eager=False)
-    )
+    scoped = scope.unionByName(delta).dropDuplicates(["id"]).localCheckpoint(eager=False)
     rescoped = reduce_people(
         scoped, blacklist, max_identities=max_identities, verify_keys=False
     ).localCheckpoint(eager=False)
+    scope_keys = person_blocking_keys(scoped, blacklist)
     new_keys = (
-        person_blocking_keys(scoped, blacklist)
-        .join(rescoped.select("id", "component"), "id")
+        scope_keys.join(rescoped.select("id", "component"), "id")
         .select("component", "key")
         .distinct()
         .localCheckpoint(eager=False)
@@ -618,17 +595,20 @@ def fold_batch(
         metrics["scope_rows"] = scoped.count()
         metrics["delta_rows"] = delta.count()
 
-    # --- affected buckets of silver and cluster_keys: one collect ---------
-    # silver: the delta's ids; cluster_keys: removals by touched comps,
-    # additions by rescoped ones
+    # --- affected buckets of all three tables: one collect ----------------
+    # silver: the delta's ids; membership: the touched components, whose
+    # rows are replaced, and the rescoped ones; key_index: the scope's keys,
+    # which are the keys of the touched components' old rows (to drop) and
+    # of the new rows alike
     affected = _collect_bucket_sets(
-        {
-            "persons_silver": (delta_ids, silver_expr),
-            "cluster_keys": (touched.unionByName(new_keys.select("component")), keys_expr),
-        }
+        state,
+        persons_silver=delta_ids,
+        membership=touched.unionByName(rescoped.select("component")),
+        key_index=scope_keys.select("key"),
     )
     silver_buckets = affected["persons_silver"]
-    key_buckets = affected["cluster_keys"]
+    member_buckets = affected["membership"]
+    kidx_buckets = affected["key_index"]
 
     # --- silver: merge colliding ids only (delta-sized) -------------------
     old_silver = state.read_buckets("persons_silver", silver_buckets)
@@ -643,36 +623,12 @@ def fold_batch(
     ).unionByName(merged)
     metrics["merge_rows"] = merge_input.count() if collect_metrics else None
 
-    # --- cluster_keys ----------------------------------------------------
-    old_keys = state.read_buckets("cluster_keys", key_buckets)
-    buckets_read += len(key_buckets)
-    keys_content = old_keys.join(
-        F.broadcast(touched), "component", "left_anti"
-    ).unionByName(new_keys)
-
-    # --- membership and key_index: affected buckets, one collect ---------
-    # membership: the touched components, whose rows are replaced, and the
-    # rescoped ones; key_index: the new keys plus the touched components'
-    # old keys, whose rows must be dropped
-    touched_old_keys = old_keys.join(F.broadcast(touched), "component", "semi")
-    affected = _collect_bucket_sets(
-        {
-            "membership": (touched.unionByName(rescoped.select("component")), member_expr),
-            "key_index": (
-                new_keys.select("key").unionByName(touched_old_keys.select("key")),
-                kidx_expr,
-            ),
-        }
-    )
-    member_buckets = affected["membership"]
-    kidx_buckets = affected["key_index"]
-
     # --- membership: old rows minus the re-resolved ones, plus rescoped ---
     # No old row of a re-resolved id is missed: it lies in a touched
     # component, or the id has no usable key — then no closure seed finds
-    # it, and the exact cluster_keys (which every fold's exactness rests
-    # on) prove it was a singleton, whose component is its own id and so
-    # one of rescoped's components.
+    # it, and the exact key_index (which every fold's exactness rests on)
+    # proves it was a singleton, whose component is its own id and so one
+    # of rescoped's components.
     member_content = (
         state.read_buckets("membership", member_buckets)
         .join(F.broadcast(touched), "component", "left_anti")
@@ -680,7 +636,7 @@ def fold_batch(
         .unionByName(rescoped)
     )
 
-    # --- key_index: same rows as cluster_keys, bucketed by key ------------
+    # --- key_index: old rows minus the touched components', plus new -----
     kidx_content = (
         state.read_buckets("key_index", kidx_buckets)
         .join(F.broadcast(touched), "component", "left_anti")
@@ -691,7 +647,6 @@ def fold_batch(
     if collect_metrics:
         metrics["silver_buckets"] = len(silver_buckets)
         metrics["member_buckets"] = len(member_buckets)
-        metrics["key_buckets"] = len(key_buckets)
         metrics["buckets_read"] = buckets_read
 
     state.commit(
@@ -699,7 +654,6 @@ def fold_batch(
         {
             "persons_silver": (silver_content, silver_buckets),
             "membership": (member_content, member_buckets),
-            "cluster_keys": (keys_content, key_buckets),
             "key_index": (kidx_content, kidx_buckets),
         },
         exact_mode=True,
@@ -720,7 +674,7 @@ def run_incremental_resolution(
     the NEW persons into the maintained resolution via the delta-scoped
     closure above — per-batch cost follows the delta, not the bronze table.
     Returns the StreamingQuery (caller awaits/stops it). State under
-    ``store_root``: the four bucketed tables of :class:`IncrementalState`
+    ``store_root``: the three bucketed tables of :class:`IncrementalState`
     behind one manifest (read the current resolution, ``(id, component,
     external_id)`` rows, via ``IncrementalState(spark, root).read(
     "membership")``); a store of another layout raises ``ValueError``

@@ -12,11 +12,7 @@ from pyspark.sql import functions as F
 
 from identity_matching_spark.operators.blacklist import Blacklist
 from identity_matching_spark.operators.cluster import reduce_people
-from identity_matching_spark.streaming.incremental import (
-    IncrementalState,
-    derive_cluster_keys,
-    fold_batch,
-)
+from identity_matching_spark.streaming.incremental import IncrementalState, fold_batch
 from tests.test_state_store import (
     _corpus,
     _full_persons,
@@ -65,11 +61,8 @@ def test_incremental_equals_from_scratch_mixed_links(spark, tmp_path):
     assert _member_set(got) == _member_set(want)
     # membership rows are unique per person — no pass-through duplicates
     assert got.count() == got.select("id").distinct().count()
-    # the incrementally-maintained key state equals a from-scratch derivation
-    fresh = derive_cluster_keys(state.read("persons_silver"), got, BL)
-    assert {(r["component"], r["key"]) for r in state.read("cluster_keys").collect()} == {
-        (r["component"], r["key"]) for r in fresh.collect()
-    }
+    # the incrementally-maintained key_index equals a from-scratch derivation
+    assert _kidx_matches_keys(state, BL)
 
 
 def test_incremental_equals_from_scratch_under_cap(spark, tmp_path):
@@ -135,6 +128,24 @@ def test_closure_converges_and_reports_hops(spark, tmp_path):
     assert metrics["hops"] == 1
 
 
+def test_closure_walks_a_second_hop_through_a_shared_name(spark, tmp_path):
+    """Four email-pair components share the name block "shared nm"; cap=4
+    packs them into two clusters that both hold it. A delta email-linked to
+    the first cluster only must reach the second through the first
+    cluster's members' keys: two hops, both clusters re-resolved."""
+    rows = []
+    pid = 1
+    for c in range(4):
+        rows.append((pid, f"nm {c}a", f"pair{c}@x.com")); pid += 1
+        rows.append((pid, "shared nm", f"pair{c}@x.com")); pid += 1
+    delta = [(100, "other", "pair0@x.com")]
+    state, metrics = _fold_batches(spark, tmp_path, [rows, delta], max_identities=4)
+    assert metrics["hops"] == 2
+    assert metrics["touched_clusters"] == 2
+    want = reduce_people(_full_persons(spark, rows + delta), BL, max_identities=4)
+    assert _member_set(state.read("membership")) == _member_set(want)
+
+
 def test_maintenance_cost_tracks_delta_not_corpus(spark, tmp_path):
     """The silver merge groupBy must shuffle colliding ∪ delta rows only,
     and bucket rewrites must touch O(delta) buckets — on a 600-row corpus
@@ -166,8 +177,8 @@ def test_maintenance_cost_tracks_delta_not_corpus(spark, tmp_path):
 def test_fold_reads_track_delta_not_corpus(spark, tmp_path):
     """VERDICT r5 #1: the fold must READ O(delta) buckets, not the corpus.
     Identical deltas over a 10x-larger corpus must probe the same number
-    of state buckets, key_index must stay an exact mirror of cluster_keys
-    and membership must hold one row per id."""
+    of state buckets, key_index must equal the (component, key) relation
+    derived from scratch and membership must hold one row per id."""
     bl = Blacklist.testing()
     reads = {}
     for n_groups, root in ((200, tmp_path / "big"), (20, tmp_path / "small")):
@@ -182,7 +193,7 @@ def test_fold_reads_track_delta_not_corpus(spark, tmp_path):
         reads[n_groups] = m["buckets_read"]
         got = state.read("membership")
         assert got.count() == got.select("id").distinct().count()
-        assert _kidx_matches_keys(state)
+        assert _kidx_matches_keys(state, bl)
     # same delta, same probe volume — reads are delta-scoped
     assert reads[200] == reads[20], reads
     # and far below a full sweep of all tables x hops
@@ -212,7 +223,7 @@ def test_popular_rearrival_replaces_its_singleton_row(spark, tmp_path):
     assert got.count() == got.select("id").distinct().count()
     want = reduce_people(_full_persons(spark, rows), bl, max_identities=20)
     assert _member_set(got) == _member_set(want)
-    assert _kidx_matches_keys(state)
+    assert _kidx_matches_keys(state, bl)
 
 
 def test_streaming_driver_folds_incrementally(spark, tmp_path):

@@ -1,8 +1,6 @@
-"""Round-3 hardening: default-on id-collision safety, external-match cache
-merge semantics (external/cache.go:153-259), SF-aware golden oracles,
-per-class edge counters and Iceberg-table checkpoint mode."""
-
-import os
+"""Round-3 hardening: default-on id-collision safety, SF-aware golden
+oracles, per-class edge counters and Iceberg-table checkpoint mode (the
+external-match cache tests live in test_match_cache.py)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,12 +9,7 @@ from identity_matching_spark.operators.blacklist import Blacklist
 from identity_matching_spark.operators.cluster import reduce_people
 from identity_matching_spark.operators.people import build_persons, verify_unique_ids
 from identity_matching_spark.reporter import Reporter
-from identity_matching_spark.sources.io import (
-    CheckpointStore,
-    external_ids_from_cache,
-    read_match_cache,
-    write_match_cache,
-)
+from identity_matching_spark.sources.io import CheckpointStore
 
 
 # --- id-collision safety (default on) -------------------------------------
@@ -46,48 +39,6 @@ def test_build_persons_planted_collision_raises(spark, monkeypatch):
     )
     with pytest.raises(ValueError, match="collision"):
         build_persons(df, Blacklist.default()).count()
-
-
-# --- external-match cache (J4 persistence) ---------------------------------
-
-
-def _write_csv(path, rows):
-    with open(path, "w") as fh:
-        fh.write("email,user,match\n")
-        for r in rows:
-            fh.write(",".join(r) + "\n")
-
-
-def test_match_cache_last_row_wins_on_read(spark, tmp_path):
-    """The reference loader maps email → last CSV occurrence
-    (cache.go:178-198): appended corrections override earlier rows."""
-    p = str(tmp_path / "cache.csv")
-    _write_csv(p, [("a@x", "ua", "1"), ("b@x", "ub", "0"), ("a@x", "ua2", "1")])
-    got = {r["email"]: (r["user"], r["matched"]) for r in read_match_cache(spark, p).collect()}
-    assert got == {"a@x": ("ua2", True), "b@x": ("ub", False)}
-
-
-def test_match_cache_read_merge_rewrite(spark, tmp_path):
-    """DumpOnDisk semantics: identical entries are kept once, changed
-    entries are overridden by the update, untouched entries survive, new
-    entries appear (cache.go:204-259)."""
-    p = str(tmp_path / "cache.csv")
-    _write_csv(p, [("a@x", "ua", "1"), ("b@x", "ub", "0"), ("d@x", "ud", "1")])
-    updates = spark.createDataFrame(
-        [("a@x", "ua", True), ("b@x", "ub", True), ("c@x", "uc", True)],
-        "email string, user string, matched boolean",
-    )
-    write_match_cache(spark, p, updates)
-    back = {r["email"]: (r["user"], r["matched"]) for r in read_match_cache(spark, p).collect()}
-    assert back == {
-        "a@x": ("ua", True),   # identical — kept
-        "b@x": ("ub", True),   # changed — update wins
-        "c@x": ("uc", True),   # new
-        "d@x": ("ud", True),   # untouched — survives
-    }
-    # resumed-run contract: positive entries feed J4's static lookup
-    ext = external_ids_from_cache(read_match_cache(spark, p))
-    assert {r["email"] for r in ext.collect()} == {"a@x", "b@x", "c@x", "d@x"}
 
 
 # --- SF-aware golden oracle map --------------------------------------------

@@ -1,7 +1,8 @@
 """Round-5 fix pins: distinct-pair JW scoring, verify-key null handling,
-match-cache crash recovery on write, PPM maxval guard, vectorized MinHash
-and distinct-text LSH equivalence. (The incremental state-store pins live
-in tests/test_state_store.py and tests/test_incremental_delta.py.)
+PPM maxval guard, vectorized MinHash and distinct-text LSH equivalence.
+(The incremental state-store pins live in tests/test_state_store.py and
+tests/test_incremental_delta.py, the match-cache crash recovery on write
+in tests/test_match_cache.py.)
 """
 
 from __future__ import annotations
@@ -134,35 +135,6 @@ class TestVerifyKeys:
         finally:
             monkeypatch.setattr(cluster_mod.F, "xxhash64", real)
 
-    def test_verify_token_memoizes_verdict(self, spark, monkeypatch):
-        rows = [(1, "alice", "a@x.com"), (2, "bob", "b@x.com")]
-        persons = _keyed_persons(spark, rows)
-        cluster_mod._VERIFIED_KEY_TOKENS.discard("r5-token")
-        reduce_people(
-            persons, Blacklist.testing(), max_identities=None, verify_token="r5-token"
-        ).collect()
-        assert "r5-token" in cluster_mod._VERIFIED_KEY_TOKENS
-        # plant a collision: with the memoized token it must be skipped,
-        # with a fresh token it must raise
-        real = F.xxhash64
-        monkeypatch.setattr(
-            cluster_mod.F, "xxhash64", lambda *cols: F.lit(7).cast("long")
-        )
-        try:
-            reduce_people(
-                persons, Blacklist.testing(), max_identities=None, verify_token="r5-token"
-            ).collect()
-            with pytest.raises(ValueError, match="surrogate collision"):
-                reduce_people(
-                    persons, Blacklist.testing(), max_identities=None,
-                    verify_token="r5-other",
-                )
-        finally:
-            monkeypatch.setattr(cluster_mod.F, "xxhash64", real)
-            cluster_mod._VERIFIED_KEY_TOKENS.discard("r5-token")
-            cluster_mod._VERIFIED_KEY_TOKENS.discard("r5-other")
-
-
 def _ppm_bytes(w=8, h=4, value=200, maxval=255):
     header = f"P6\n{w} {h}\n{maxval}\n".encode()
     return header + bytes([value, value, value]) * (w * h)
@@ -239,41 +211,6 @@ class TestMultimodalDecode:
         assert _ppm_frames(good[:-5]) is None           # truncated pixels
         assert _ppm_frames(good + b"junk") is None      # trailing garbage
         assert _ppm_frames(_ppm_bytes(maxval=300)) is None
-
-
-class TestMatchCacheWriteRecovery:
-    def test_write_after_interrupted_swap_keeps_prior_entries(self, spark, tmp_path):
-        """A crash that left only <path>__old must be recovered by the NEXT
-        WRITE too (ADVICE r4): without recovery the merge starts empty and
-        the aside cleanup destroys the sole surviving copy."""
-        import os
-
-        from identity_matching_spark.sources.io import (
-            read_match_cache,
-            write_match_cache,
-        )
-
-        path = str(tmp_path / "cache.csv")
-        first = spark.createDataFrame(
-            [("a@x.com", "ua", True), ("b@x.com", "ub", False)],
-            "email string, user string, matched boolean",
-        )
-        write_match_cache(spark, path, first)
-        # simulate the crash window: cache renamed aside, new cache missing
-        os.rename(path, path + "__old")
-        second = spark.createDataFrame(
-            [("c@x.com", "uc", True)], "email string, user string, matched boolean"
-        )
-        write_match_cache(spark, path, second)
-        got = {
-            r["email"]: (r["user"], r["matched"])
-            for r in read_match_cache(spark, path).collect()
-        }
-        assert got == {
-            "a@x.com": ("ua", True),
-            "b@x.com": ("ub", False),
-            "c@x.com": ("uc", True),
-        }
 
 
 class TestVectorizedMinhash:

@@ -17,7 +17,11 @@ import pytest
 
 from identity_matching_spark.operators.blacklist import Blacklist
 from identity_matching_spark.operators.cluster import reduce_people
-from identity_matching_spark.streaming.incremental import IncrementalState, fold_batch
+from identity_matching_spark.streaming.incremental import (
+    IncrementalState,
+    derive_cluster_keys,
+    fold_batch,
+)
 
 _TS = dt.datetime(2026, 1, 1)
 _SILVER_SCHEMA = (
@@ -49,8 +53,11 @@ def _corpus(n_groups):
     return rows
 
 
-def _kidx_matches_keys(state):
-    k = {(r["component"], r["key"]) for r in state.read("cluster_keys").collect()}
+def _kidx_matches_keys(state, bl):
+    """The maintained key_index equals a from-scratch derivation of the
+    (component, key) relation from the store's silver rows and membership."""
+    fresh = derive_cluster_keys(state.read("persons_silver"), state.read("membership"), bl)
+    k = {(r["component"], r["key"]) for r in fresh.collect()}
     i = {(r["component"], r["key"]) for r in state.read("key_index").collect()}
     return k == i
 
@@ -69,6 +76,10 @@ def _folded(spark, root, n_buckets=8):
 
 def test_every_live_leaf_holds_one_part_file(spark, tmp_path):
     state = _folded(spark, tmp_path)
+    # a bootstrap and a fold write one directory per table, nothing else
+    assert sorted(p.name for p in tmp_path.iterdir() if p.is_dir()) == sorted(
+        IncrementalState.TABLES
+    )
     man = json.load(open(state.manifest_path))
     for table in IncrementalState.TABLES:
         gens = man["tables"][table]
@@ -144,7 +155,7 @@ def test_reader_opened_mid_commit_deletes_nothing(spark, tmp_path, monkeypatch):
     assert _member_set(reopened.read("membership")) == _member_set(want)
     got = reopened.read("membership")
     assert got.count() == got.select("id").distinct().count()
-    assert _kidx_matches_keys(reopened)
+    assert _kidx_matches_keys(reopened, bl)
 
 
 def test_non_exact_commit_leaves_exact_mode_off(spark, tmp_path):
@@ -245,7 +256,7 @@ def test_crash_before_manifest_publish_keeps_old_state(spark, tmp_path, monkeypa
     with pytest.raises(RuntimeError, match="simulated"):
         fold_batch(state, _full_persons(spark, delta), bl, batch_id=1)
     monkeypatch.setattr(DataFrameWriter, "parquet", orig_parquet)
-    # the failure surfaced only after the other three writes finished,
+    # the failure surfaced only after the other two writes finished,
     # and the manifest was not touched
     for table in IncrementalState.TABLES:
         leaves = glob.glob(os.path.join(str(tmp_path), table, "bucket=*", "gen=1"))
@@ -298,7 +309,7 @@ def test_gc_scoped_to_commit_buckets_full_sweep_on_first_commit(spark, tmp_path)
     buckets; an orphan generation planted in an UNtouched bucket survives
     that commit and a later open (opening never deletes), and is swept by
     the first commit of the next writer."""
-    from identity_matching_spark.streaming.incremental import _collect_buckets
+    from identity_matching_spark.streaming.incremental import _collect_bucket_sets
 
     bl = Blacklist.testing()
     state = IncrementalState(spark, str(tmp_path), n_buckets=8)
@@ -307,7 +318,7 @@ def test_gc_scoped_to_commit_buckets_full_sweep_on_first_commit(spark, tmp_path)
     delta = [(990, "fresh 0", "g0@x.com")]
     d_ids = _full_persons(spark, delta).select("id")
     touched_buckets = set(
-        _collect_buckets(d_ids, state.bucket_expr("persons_silver"))
+        _collect_bucket_sets(state, persons_silver=d_ids)["persons_silver"]
     )
     orphan_bucket = next(b for b in range(8) if b not in touched_buckets)
     orphan = os.path.join(
@@ -331,14 +342,14 @@ def _snapshot(root, manifest_path):
     return raw, sorted(str(p.relative_to(root)) for p in root.rglob("*"))
 
 
-def _strip_manifest_key(spark, root, key):
-    """Bootstrap an 8-bucket store at ``root``, drop ``key`` from its
-    manifest; return the manifest path."""
+def _edit_manifest(spark, root, edit):
+    """Bootstrap an 8-bucket store at ``root``, apply ``edit`` to its
+    manifest dict; return the manifest path."""
     state = IncrementalState(spark, str(root), n_buckets=8)
     fold_batch(state, _full_persons(spark, _corpus(10)), Blacklist.testing(), batch_id=0)
     with open(state.manifest_path) as fh:
         man = json.load(fh)
-    man.pop(key)
+    edit(man)
     with open(state.manifest_path, "w") as fh:
         json.dump(man, fh)
     return state.manifest_path
@@ -347,7 +358,7 @@ def _strip_manifest_key(spark, root, key):
 def test_store_without_exact_marker_is_refused(spark, tmp_path):
     """A store whose manifest lacks the exact-mode marker is refused before
     anything is read or written."""
-    manifest_path = _strip_manifest_key(spark, tmp_path, "exact_mode")
+    manifest_path = _edit_manifest(spark, tmp_path, lambda man: man.pop("exact_mode"))
     before = _snapshot(tmp_path, manifest_path)
     old = IncrementalState(spark, str(tmp_path), n_buckets=8)
     assert not old.exact_mode()
@@ -358,11 +369,23 @@ def test_store_without_exact_marker_is_refused(spark, tmp_path):
 
 def test_store_with_other_layout_is_refused(spark, tmp_path):
     """A manifest that does not record the current bucket columns — every
-    store of an earlier layout, e.g. one with membership bucketed by id —
-    is refused on open, before anything is read or written: probing a
-    table by a column it is not bucketed on would under-scope the fold."""
-    manifest_path = _strip_manifest_key(spark, tmp_path, "bucket_cols")
-    before = _snapshot(tmp_path, manifest_path)
-    with pytest.raises(ValueError, match="layout"):
-        IncrementalState(spark, str(tmp_path), n_buckets=8)
-    assert _snapshot(tmp_path, manifest_path) == before
+    store of an earlier layout: one with no recorded columns, or the
+    four-table layout that also kept a component-bucketed ``cluster_keys``
+    copy — is refused on open, before anything is read or written: probing
+    a table by a column it is not bucketed on would under-scope the fold."""
+    four_tables = {
+        "persons_silver": "id",
+        "membership": "component",
+        "cluster_keys": "component",
+        "key_index": "key",
+    }
+    for name, edit in (
+        ("no_cols", lambda man: man.pop("bucket_cols")),
+        ("four_tables", lambda man: man.update(bucket_cols=four_tables)),
+    ):
+        root = tmp_path / name
+        manifest_path = _edit_manifest(spark, root, edit)
+        before = _snapshot(root, manifest_path)
+        with pytest.raises(ValueError, match="layout"):
+            IncrementalState(spark, str(root), n_buckets=8)
+        assert _snapshot(root, manifest_path) == before, name
