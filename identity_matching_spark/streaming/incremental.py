@@ -86,9 +86,9 @@ def stream_signatures(
 #    touches every cluster holding it, a touched cluster contributes the
 #    keys of all its members, iterate to fixpoint (bucket-probing
 #    equi-joins, like CC rounds — :func:`_touched_closure_bucketed`);
-# 3. re-run ``reduce_people`` on the touched clusters' members (the silver
-#    rows the closure read) plus the delta; every untouched membership row
-#    passes through unchanged.
+# 3. re-run ``reduce_people`` on the touched clusters' members (the
+#    membership rows the closure read) plus the delta; every untouched
+#    membership row passes through unchanged.
 #
 # :func:`fold_batch` is the one engine: it runs these steps against the
 # bucketed :class:`IncrementalState` below and commits only the buckets
@@ -112,42 +112,37 @@ def stream_signatures(
 # decomposition; the incremental path pins static-blacklist popularity.)
 
 
-def person_blocking_keys(persons: DataFrame, blacklist) -> DataFrame:
-    """DataFrame[id, key] — one row per usable (non-popular) blocking key,
-    encoded with the same domain-separated xxhash64 surrogates the batch
-    clusterer uses (operators/cluster.py). NULL keys are excluded — the
-    clusterer masks their surrogate to NULL (never equi-joins), so they
-    couple nothing and must not seed or carry closure edges."""
-    names = persons.where(
+def blocking_keys(rows: DataFrame, blacklist, owner: str) -> DataFrame:
+    """DataFrame[<owner>, key] — one row per usable (non-popular) blocking
+    key of each row, encoded with the same domain-separated xxhash64
+    surrogates the batch clusterer uses (operators/cluster.py). NULL keys
+    are excluded — the clusterer masks their surrogate to NULL (never
+    equi-joins), so they couple nothing and must not seed or carry closure
+    edges."""
+    names = rows.where(
         F.col("name_key").isNotNull() & ~blacklist.is_popular_name(F.col("name_key"))
-    ).select("id", F.xxhash64(F.lit(1), "name_key").alias("key"))
-    emails = persons.where(
+    ).select(owner, F.xxhash64(F.lit(1), "name_key").alias("key"))
+    emails = rows.where(
         F.col("email").isNotNull() & ~blacklist.is_popular_email(F.col("email"))
-    ).select("id", F.xxhash64(F.lit(2), "email").alias("key"))
+    ).select(owner, F.xxhash64(F.lit(2), "email").alias("key"))
     return names.union(emails)
 
 
-def derive_cluster_keys(
-    silver_persons: DataFrame, membership: DataFrame, blacklist
-) -> DataFrame:
-    """Derive the (component, key) relation — the ``key_index`` table's
-    rows — from scratch: one full-corpus shuffle. :func:`fold_batch` runs
-    it once, at bootstrap, and maintains ``key_index`` delta by delta
-    afterwards."""
-    return (
-        person_blocking_keys(silver_persons, blacklist)
-        .join(membership.select("id", "component"), "id")
-        .select("component", "key")
-        .distinct()
-    )
+def derive_cluster_keys(members: DataFrame, blacklist) -> DataFrame:
+    """The (component, key) relation — the ``key_index`` table's rows — of
+    member rows (person rows carrying their ``component``). At bootstrap
+    :func:`fold_batch` derives it from the whole membership (one
+    full-corpus shuffle); each fold derives it from the re-resolved rows
+    only."""
+    return blocking_keys(members, blacklist, "component").distinct()
 
 
 # --- bucketed, manifest-committed state store ------------------------------
 #
-# The three state tables (persons_silver, membership and key_index) are
-# laid out as <root>/<table>/bucket=K/gen=G/ parquet leaves,
-# with a SINGLE atomically-replaced manifest JSON naming the live generation
-# per bucket, each table's schema and its bucket column. Per batch only the
+# The two state tables (membership and key_index) are laid out as
+# <root>/<table>/bucket=K/gen=G/ parquet leaves, with a SINGLE
+# atomically-replaced manifest JSON naming the live generation per
+# bucket, each table's schema and its bucket column. Per batch only the
 # AFFECTED buckets are rewritten under gen=<batch_id> (dynamic partition
 # overwrite — untouched buckets are neither read nor written), and the one
 # os.replace of the manifest is the commit point:
@@ -181,14 +176,15 @@ def derive_cluster_keys(
 class IncrementalState:
     """Versioned bucket-partitioned state with an atomic manifest commit."""
 
-    TABLES = ("persons_silver", "membership", "key_index")
+    TABLES = ("membership", "key_index")
     # Each relation is stored once, bucketed by the column the closure
     # probes it on: key_index's (component, key) rows by key (key →
-    # component), membership by component (component → member ids) and
-    # silver by person id (id → row, whose blocking keys are the next
-    # frontier). Every probe then reads only matching buckets, so the
-    # fold's reads track the delta like its shuffles do.
-    BUCKET_COL = {"persons_silver": "id", "membership": "component", "key_index": "key"}
+    # component) and membership — one row per person: its attributes, its
+    # component and external_id — by component (component → member rows,
+    # whose blocking keys are the next frontier). Every probe then reads
+    # only matching buckets, so the fold's reads track the delta like its
+    # shuffles do.
+    BUCKET_COL = {"membership": "component", "key_index": "key"}
 
     def __init__(self, spark, root: str, n_buckets: int = 64):
         import os
@@ -423,23 +419,22 @@ def _touched_closure_bucketed(
     state: IncrementalState, delta: DataFrame, blacklist, max_hops: int = 25
 ) -> tuple[DataFrame, DataFrame, int, int]:
     """Fixpoint of the clusters reachable from the delta's blocking keys
-    over the bipartite (component, key) relation. Each hop reads ONLY
-    matching buckets: the frontier keys' key_index buckets give the newly
-    touched components, their membership buckets give the members, and
-    the members' persons_silver buckets give their rows, whose blocking
-    keys are the next frontier. So the fold's read volume tracks the delta
-    the way its shuffles already do. A bucket is a pure function of the
-    equi-join key, so probing matching buckets loses no join partner.
-    Returns (touched components, the silver rows of their members — the
-    re-resolve scope, hops, buckets_read); raises if the closure has not
-    converged after ``max_hops`` (pathologically chained corpora)."""
+    over the bipartite (component, key) relation. A hop is two probes that
+    read ONLY matching buckets: the frontier keys' key_index buckets give
+    the newly touched components, and their membership buckets give the
+    member rows, whose blocking keys are the next frontier. So the fold's
+    read volume tracks the delta the way its shuffles already do. A bucket
+    is a pure function of the equi-join key, so probing matching buckets
+    loses no join partner. Returns (touched components, their member rows —
+    the re-resolve scope, hops, buckets_read); raises if the closure has
+    not converged after ``max_hops`` (pathologically chained corpora)."""
     touched = state.spark.createDataFrame([], "component long")
-    scope = state.read_buckets("persons_silver", [])
+    scope = state.read_buckets("membership", [])
     rows = delta
     buckets_read = 0
     for hops in range(max_hops):
         frontier = (
-            person_blocking_keys(rows, blacklist)
+            blocking_keys(rows, blacklist, "id")
             .select("key")
             .distinct()
             .localCheckpoint(eager=False)
@@ -447,31 +442,23 @@ def _touched_closure_bucketed(
         kb = _collect_bucket_sets(state, key_index=frontier)["key_index"]
         if not kb:
             return touched, scope, hops, buckets_read
-        buckets_read += len(kb)
         new_comps = (
             state.read_buckets("key_index", kb)
-            .join(frontier, "key")
+            .join(F.broadcast(frontier), "key")
             .select("component")
             .distinct()
-            .join(touched, "component", "left_anti")
+            .join(F.broadcast(touched), "component", "left_anti")
             .localCheckpoint(eager=False)
         )
         # new_comps is empty exactly when its bucket list is: one round trip
         mb = _collect_bucket_sets(state, membership=new_comps)["membership"]
+        buckets_read += len(kb) + len(mb)
         if not mb:
             return touched, scope, hops, buckets_read
         touched = touched.union(new_comps).localCheckpoint(eager=False)
-        members = (
-            state.read_buckets("membership", mb)
-            .join(new_comps, "component")
-            .select("id")
-            .localCheckpoint(eager=False)
-        )
-        sb = _collect_bucket_sets(state, persons_silver=members)["persons_silver"]
-        buckets_read += len(mb) + len(sb)
         rows = (
-            state.read_buckets("persons_silver", sb)
-            .join(members, "id")
+            state.read_buckets("membership", mb)
+            .join(F.broadcast(new_comps), "component", "semi")
             .localCheckpoint(eager=False)
         )
         scope = scope.unionByName(rows)
@@ -492,16 +479,15 @@ def fold_batch(
     """Fold one batch of person rows into the maintained state — every
     Spark job in here is delta-scoped, READS included:
 
-    * the touched-cluster closure probes key_index, membership and
-      persons_silver bucket-by-bucket (never a full-table scan), and the
-      silver rows it reads are the re-resolve scope;
-    * silver maintenance merges ONLY ids colliding with the delta
-      (broadcast semi/anti joins; the groupBy shuffles colliding ∪ delta
-      rows, never the corpus — metric ``merge_rows``);
-    * membership/key_index rewrites touch only the buckets holding
-      scoped/rescoped rows; the affected bucket sets of all three tables
-      come back in one round trip;
-    * the commit writes the three tables concurrently, one part file per
+    * the touched-cluster closure probes key_index and membership
+      bucket-by-bucket (never a full-table scan), and the member rows it
+      reads are the re-resolve scope;
+    * the membership/key_index rewrites touch only the buckets holding
+      scoped/rescoped rows, whose sets come back in one round trip; an id
+      colliding with the delta merges its old row from the same membership
+      read (the groupBy shuffles colliding ∪ delta rows, never the corpus
+      — metric ``merge_rows``);
+    * the commit writes both tables concurrently, one part file per
       rewritten ``(bucket, gen)`` leaf, and publishes the manifest (the
       atomic point) only after every write has finished; the jobs keep the
       caller's job group and tags;
@@ -517,7 +503,8 @@ def fold_batch(
     and must be re-resolved from scratch. The folded membership equals a
     from-scratch ``reduce_people`` over every batch so far (see the module
     note; pinned by tests/test_incremental_delta.py).
-    ``metrics['buckets_read']`` reports the probe volume so tests can
+    ``metrics['buckets_read']`` counts every bucket the fold reads (closure
+    probes plus the membership and key_index rewrite reads) so tests can
     assert reads track the delta, not the corpus.
     """
     import logging
@@ -547,7 +534,7 @@ def fold_batch(
     if state.exists() and not state.exact_mode():
         # The closure covers name/email blocking keys ONLY: external-id and
         # similarity edges couple clusters through relations the blocking
-        # keys of silver rows do not carry, so folding such state would
+        # keys of member rows do not carry, so folding such state would
         # silently under-scope (ADVICE r4).
         raise ValueError(
             f"fold_batch requires an exact-mode store; the manifest at "
@@ -558,14 +545,15 @@ def fold_batch(
     delta = delta_persons.localCheckpoint(eager=False)
 
     if not state.exists():
-        membership = reduce_people(delta, blacklist, max_identities=max_identities)
+        membership = delta.join(
+            reduce_people(delta, blacklist, max_identities=max_identities), "id"
+        )
         all_buckets = list(range(state.n_buckets))
         state.commit(
             batch_id,
             {
-                "persons_silver": (delta, all_buckets),
                 "membership": (membership, all_buckets),
-                "key_index": (derive_cluster_keys(delta, membership, blacklist), all_buckets),
+                "key_index": (derive_cluster_keys(membership, blacklist), all_buckets),
             },
             exact_mode=True,
         )
@@ -579,80 +567,69 @@ def fold_batch(
     metrics["hops"] = hops
 
     # --- re-resolve the scoped slice --------------------------------------
+    scope = scope.drop("component", "external_id")
     scoped = scope.unionByName(delta).dropDuplicates(["id"]).localCheckpoint(eager=False)
     rescoped = reduce_people(
         scoped, blacklist, max_identities=max_identities, verify_keys=False
     ).localCheckpoint(eager=False)
-    scope_keys = person_blocking_keys(scoped, blacklist)
-    new_keys = (
-        scope_keys.join(rescoped.select("id", "component"), "id")
-        .select("component", "key")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
     if collect_metrics:
         metrics["touched_clusters"] = touched.count()
         metrics["scope_rows"] = scoped.count()
         metrics["delta_rows"] = delta.count()
 
-    # --- affected buckets of all three tables: one collect ----------------
-    # silver: the delta's ids; membership: the touched components, whose
-    # rows are replaced, and the rescoped ones; key_index: the scope's keys,
-    # which are the keys of the touched components' old rows (to drop) and
-    # of the new rows alike
+    # --- affected buckets of both tables: one collect ---------------------
+    # membership: the touched components, whose rows are replaced, and the
+    # rescoped ones; key_index: the scope's keys, which are the keys of the
+    # touched components' old rows (to drop) and of the new rows alike
     affected = _collect_bucket_sets(
         state,
-        persons_silver=delta_ids,
         membership=touched.unionByName(rescoped.select("component")),
-        key_index=scope_keys.select("key"),
+        key_index=blocking_keys(scoped, blacklist, "id").select("key"),
     )
-    silver_buckets = affected["persons_silver"]
     member_buckets = affected["membership"]
     kidx_buckets = affected["key_index"]
 
-    # --- silver: merge colliding ids only (delta-sized) -------------------
-    old_silver = state.read_buckets("persons_silver", silver_buckets)
-    merge_input = old_silver.join(F.broadcast(delta_ids), "id", "semi").unionByName(delta)
-    merged = (
-        merge_input.groupBy("id", "repo", "name", "email", "name_key", "popular_name")
-        .agg(F.max("hash").alias("hash"), F.max("ts").alias("ts"))
-        .select(old_silver.columns)
+    # --- membership: old rows minus the rescoped ids, plus the new rows ---
+    # No old row of a rescoped id is missed: it lies in a touched component,
+    # or the id has no usable key — then no closure seed finds it, and the
+    # exact key_index (which every fold's exactness rests on) proves it was
+    # a singleton, whose component is its own id and so one of rescoped's
+    # components. The same read gives the old rows of ids colliding with
+    # the delta, merged with their new rows (delta-sized groupBy).
+    old_members = state.read_buckets("membership", member_buckets)
+    merge_input = (
+        old_members.join(F.broadcast(delta_ids), "id", "semi")
+        .drop("component", "external_id")
+        .unionByName(delta)
     )
-    silver_content = old_silver.join(
-        F.broadcast(delta_ids), "id", "left_anti"
-    ).unionByName(merged)
+    merged = merge_input.groupBy(
+        "id", "repo", "name", "email", "name_key", "popular_name"
+    ).agg(F.max("hash").alias("hash"), F.max("ts").alias("ts"))
+    new_members = (
+        scope.join(F.broadcast(delta_ids), "id", "left_anti")
+        .unionByName(merged)
+        .join(F.broadcast(rescoped), "id")
+        .localCheckpoint(eager=False)
+    )
+    member_content = old_members.join(
+        F.broadcast(rescoped.select("id")), "id", "left_anti"
+    ).unionByName(new_members)
     metrics["merge_rows"] = merge_input.count() if collect_metrics else None
-
-    # --- membership: old rows minus the re-resolved ones, plus rescoped ---
-    # No old row of a re-resolved id is missed: it lies in a touched
-    # component, or the id has no usable key — then no closure seed finds
-    # it, and the exact key_index (which every fold's exactness rests on)
-    # proves it was a singleton, whose component is its own id and so one
-    # of rescoped's components.
-    member_content = (
-        state.read_buckets("membership", member_buckets)
-        .join(F.broadcast(touched), "component", "left_anti")
-        .join(F.broadcast(rescoped.select("id")), "id", "left_anti")
-        .unionByName(rescoped)
-    )
 
     # --- key_index: old rows minus the touched components', plus new -----
     kidx_content = (
         state.read_buckets("key_index", kidx_buckets)
         .join(F.broadcast(touched), "component", "left_anti")
-        .unionByName(new_keys)
+        .unionByName(derive_cluster_keys(new_members, blacklist))
     )
-    buckets_read += len(kidx_buckets)
 
     if collect_metrics:
-        metrics["silver_buckets"] = len(silver_buckets)
         metrics["member_buckets"] = len(member_buckets)
-        metrics["buckets_read"] = buckets_read
+        metrics["buckets_read"] = buckets_read + len(member_buckets) + len(kidx_buckets)
 
     state.commit(
         batch_id,
         {
-            "persons_silver": (silver_content, silver_buckets),
             "membership": (member_content, member_buckets),
             "key_index": (kidx_content, kidx_buckets),
         },
@@ -674,14 +651,15 @@ def run_incremental_resolution(
     the NEW persons into the maintained resolution via the delta-scoped
     closure above — per-batch cost follows the delta, not the bronze table.
     Returns the StreamingQuery (caller awaits/stops it). State under
-    ``store_root``: the three bucketed tables of :class:`IncrementalState`
-    behind one manifest (read the current resolution, ``(id, component,
-    external_id)`` rows, via ``IncrementalState(spark, root).read(
-    "membership")``); a store of another layout raises ``ValueError``
-    before the stream starts. If the manifest is missing but bronze data
-    exists (state lost, or removed to re-bootstrap a store this layout or
-    :func:`fold_batch` refuses), the fold REBUILDS from the full bronze
-    table instead of silently restarting from one batch."""
+    ``store_root``: the two bucketed tables of :class:`IncrementalState`
+    behind one manifest (read the current resolution — one row per person:
+    its attributes plus ``component`` and ``external_id`` — via
+    ``IncrementalState(spark, root).read("membership")``); a store of
+    another layout raises ``ValueError`` before the stream starts. If the
+    manifest is missing but bronze data exists (state lost, or removed to
+    re-bootstrap a store this layout or :func:`fold_batch` refuses), the
+    fold REBUILDS from the full bronze table instead of silently
+    restarting from one batch."""
     import datetime as dt
 
     from identity_matching_spark.operators.blacklist import Blacklist

@@ -8,12 +8,16 @@ including under the max-identities cap (the closure argument in
 streaming/incremental.py).
 """
 
+import datetime as dt
+
 from pyspark.sql import functions as F
 
 from identity_matching_spark.operators.blacklist import Blacklist
 from identity_matching_spark.operators.cluster import reduce_people
 from identity_matching_spark.streaming.incremental import IncrementalState, fold_batch
 from tests.test_state_store import (
+    _SILVER_SCHEMA,
+    _TS,
     _corpus,
     _full_persons,
     _kidx_matches_keys,
@@ -122,8 +126,8 @@ def test_untouched_cluster_rows_pass_through_verbatim(spark, tmp_path):
 def test_closure_converges_and_reports_hops(spark, tmp_path):
     """A delta key held by one cluster pulls it in at the first hop; its
     remaining keys pull nothing new, so the closure stops there."""
-    silver = [(1, "na", "e1@x.com"), (2, "nb", "e1@x.com"), (3, "nb", "e3@x.com")]
-    _, metrics = _fold_batches(spark, tmp_path, [silver, [(9, "zz", "e3@x.com")]])
+    rows = [(1, "na", "e1@x.com"), (2, "nb", "e1@x.com"), (3, "nb", "e3@x.com")]
+    _, metrics = _fold_batches(spark, tmp_path, [rows, [(9, "zz", "e3@x.com")]])
     assert metrics["touched_clusters"] == 1  # {1,2,3} is one cluster
     assert metrics["hops"] == 1
 
@@ -147,7 +151,7 @@ def test_closure_walks_a_second_hop_through_a_shared_name(spark, tmp_path):
 
 
 def test_maintenance_cost_tracks_delta_not_corpus(spark, tmp_path):
-    """The silver merge groupBy must shuffle colliding ∪ delta rows only,
+    """The re-arrival merge groupBy must shuffle colliding ∪ delta rows only,
     and bucket rewrites must touch O(delta) buckets — on a 600-row corpus
     AND on a 60-row corpus the numbers are the same."""
     bl = Blacklist.testing()
@@ -165,13 +169,12 @@ def test_maintenance_cost_tracks_delta_not_corpus(spark, tmp_path):
             batch_id=1,
             collect_metrics=True,
         )
-        # merge input = colliding silver rows (2) + delta rows (5)
+        # merge input = colliding membership rows (2) + delta rows (5)
         assert m["merge_rows"] == 7, (n_groups, m)
         assert m["delta_rows"] == 5
         # bucket rewrites bounded by the delta's spread, not the corpus
-        assert m["silver_buckets"] <= 5
-        assert m["member_buckets"] <= 16
-        assert state.read("persons_silver").count() == n_groups * 3 + 3
+        assert m["member_buckets"] <= 5
+        assert state.read("membership").count() == n_groups * 3 + 3
 
 
 def test_fold_reads_track_delta_not_corpus(spark, tmp_path):
@@ -219,8 +222,42 @@ def test_popular_rearrival_replaces_its_singleton_row(spark, tmp_path):
         collect_metrics=True,
     )
     assert m["touched_clusters"] == 0
+    # no closure probe: the one bucket read is the rewrite's membership read
+    assert m["buckets_read"] == m["member_buckets"] == 1
     got = state.read("membership")
     assert got.count() == got.select("id").distinct().count()
+    want = reduce_people(_full_persons(spark, rows), bl, max_identities=20)
+    assert _member_set(got) == _member_set(want)
+    assert _kidx_matches_keys(state, bl)
+
+
+def test_rearrival_merges_into_one_membership_row(spark, tmp_path):
+    """A keyed id and an all-popular id re-sent with a later ``ts`` and a
+    larger ``hash`` each keep one membership row, carrying the max of both
+    (the keyed one's old row is found through the closure, the popular
+    one's in the bucket of its own id), and the membership still equals a
+    from-scratch resolution."""
+    bl = Blacklist(
+        domains=frozenset(), top_level_domains=frozenset(), names=frozenset(),
+        emails=frozenset(), popular_emails=frozenset({"pop@x.com"}),
+        popular_names=frozenset({"popname"}),
+    )
+    rows = [(1, "popname", "pop@x.com"), (2, "n two", "e2@x.com"), (3, "n two", "e3@x.com")]
+    state = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    fold_batch(state, _full_persons(spark, rows), bl, batch_id=0)
+    later = _TS + dt.timedelta(days=1)
+    resent = spark.createDataFrame(
+        [(i, "ch0", n, e, n, False, f"z{i}", later) for i, n, e in rows[:2]],
+        _SILVER_SCHEMA,
+    )
+    m = fold_batch(state, resent, bl, batch_id=1, collect_metrics=True)
+    assert m["merge_rows"] == 4  # two old rows + two re-sent rows
+    got = state.read("membership")
+    by_id = {r["id"]: r for r in got.collect()}
+    assert got.count() == len(by_id) == 3
+    assert [(by_id[i]["hash"], by_id[i]["ts"]) for i in (1, 2, 3)] == [
+        ("z1", later), ("z2", later), ("h3", _TS)
+    ]
     want = reduce_people(_full_persons(spark, rows), bl, max_identities=20)
     assert _member_set(got) == _member_set(want)
     assert _kidx_matches_keys(state, bl)

@@ -1,44 +1,12 @@
-"""Round-3 hardening: default-on id-collision safety, SF-aware golden
-oracles, per-class edge counters and Iceberg-table checkpoint mode (the
-external-match cache tests live in test_match_cache.py)."""
-
-import pytest
-from pyspark.sql import functions as F
+"""Round-3 hardening: SF-aware golden oracles, per-class edge counters and
+Iceberg-table checkpoint mode (the id-collision checks live in
+test_key_checks.py, the external-match cache tests in
+test_match_cache.py)."""
 
 from identity_matching_spark.operators.blacklist import Blacklist
 from identity_matching_spark.operators.cluster import reduce_people
-from identity_matching_spark.operators.people import build_persons, verify_unique_ids
 from identity_matching_spark.reporter import Reporter
 from identity_matching_spark.sources.io import CheckpointStore
-
-
-# --- id-collision safety (default on) -------------------------------------
-
-
-def test_verify_unique_ids_raises_on_duplicate(spark):
-    df = spark.createDataFrame([(1,), (2,), (2,)], "id long")
-    with pytest.raises(ValueError, match="collision"):
-        verify_unique_ids(df)
-    verify_unique_ids(df.where(F.col("id") != 2))  # distinct ids pass
-
-
-def test_build_persons_planted_collision_raises(spark, monkeypatch):
-    """Pipeline-level: degrade the id hash to a constant → two distinct
-    cleaned triplets collide → the default verify_ids must refuse to let
-    them fuse into one graph node."""
-    import pyspark.sql.functions as SF
-
-    real = SF.xxhash64
-    monkeypatch.setattr(SF, "xxhash64", lambda *cols: real(F.lit(1)))
-    rows = [
-        ("r", "Alice", "alice@good.org", "h1", None),
-        ("r", "Bob", "bob@good.org", "h2", None),
-    ]
-    df = spark.createDataFrame(
-        rows, "repo string, name string, email string, hash string, ts timestamp"
-    )
-    with pytest.raises(ValueError, match="collision"):
-        build_persons(df, Blacklist.default()).count()
 
 
 # --- SF-aware golden oracle map --------------------------------------------

@@ -1,8 +1,9 @@
-"""Round-5 fix pins: distinct-pair JW scoring, verify-key null handling,
-PPM maxval guard, vectorized MinHash and distinct-text LSH equivalence.
-(The incremental state-store pins live in tests/test_state_store.py and
-tests/test_incremental_delta.py, the match-cache crash recovery on write
-in tests/test_match_cache.py.)
+"""Round-5 fix pins: distinct-pair JW scoring, PPM maxval guard,
+vectorized MinHash and distinct-text LSH equivalence. (The incremental
+state-store pins live in tests/test_state_store.py and
+tests/test_incremental_delta.py, the verify-key checks in
+tests/test_key_checks.py, the match-cache crash recovery on write in
+tests/test_match_cache.py.)
 """
 
 from __future__ import annotations
@@ -12,9 +13,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from identity_matching_spark.functions.similarity import jaro_winkler, levenshtein_ratio
-from identity_matching_spark.operators import cluster as cluster_mod
-from identity_matching_spark.operators.blacklist import Blacklist
-from identity_matching_spark.operators.cluster import reduce_people
 from identity_matching_spark.operators.scoring import score_pairs
 
 
@@ -85,55 +83,6 @@ class TestDistinctPairScoring:
         assert "ArrowEvalPython" in plan or "arrowevalpython" in plan.lower()
         assert "Deduplicate" in plan or "Aggregate" in plan
 
-
-def _keyed_persons(spark, rows):
-    # rows: (id, name_key, email) — name == name_key (pre-qualified)
-    return spark.createDataFrame(
-        [(i, n, n, e) for i, n, e in rows],
-        "id long, name string, name_key string, email string",
-    )
-
-
-class TestVerifyKeys:
-    def test_null_keys_no_spurious_collision_and_string_semantics(self, spark):
-        """NULL name_key/email must neither trip the collision check (ADVICE
-        r4) nor cluster via the hash-of-NULL constant: the surrogate stays
-        NULL, reproducing the string key's join/group behavior exactly. A
-        NULL-email person joins no email block and is kept as a singleton —
-        with or without extra edges (one phase-1 path for both)."""
-        rows = [
-            (1, "alice", "a@x.com"),
-            (2, "alicia", "a@x.com"),
-            (3, "bob", None),
-            (4, "carol", None),
-            (5, None, "e@x.com"),
-        ]
-        persons = _keyed_persons(spark, rows)
-        no_edges = spark.createDataFrame([], "src long, dst long")
-        for kwargs in ({}, {"extra_edges": no_edges}):
-            out = reduce_people(
-                persons, Blacklist.testing(), max_identities=None, **kwargs
-            )
-            comps = {r["id"]: r["component"] for r in out.collect()}
-            # 1,2 share an email; 5 clusters alone; the NULL-email rows stay
-            # apart (no email equi-join match, not even with each other)
-            assert comps[1] == comps[2] == 1, kwargs
-            assert comps.get(5) == 5, kwargs
-            assert comps[3] == 3 and comps[4] == 4, kwargs
-
-    def test_planted_surrogate_collision_raises(self, spark, monkeypatch):
-        rows = [(1, "alice", "a@x.com"), (2, "bob", "b@x.com")]
-        real = F.xxhash64
-        monkeypatch.setattr(
-            cluster_mod.F, "xxhash64", lambda *cols: F.lit(7).cast("long")
-        )
-        try:
-            with pytest.raises(ValueError, match="surrogate collision"):
-                reduce_people(
-                    _keyed_persons(spark, rows), Blacklist.testing(), max_identities=None
-                )
-        finally:
-            monkeypatch.setattr(cluster_mod.F, "xxhash64", real)
 
 def _ppm_bytes(w=8, h=4, value=200, maxval=255):
     header = f"P6\n{w} {h}\n{maxval}\n".encode()

@@ -55,8 +55,8 @@ def _corpus(n_groups):
 
 def _kidx_matches_keys(state, bl):
     """The maintained key_index equals a from-scratch derivation of the
-    (component, key) relation from the store's silver rows and membership."""
-    fresh = derive_cluster_keys(state.read("persons_silver"), state.read("membership"), bl)
+    (component, key) relation from the store's membership rows."""
+    fresh = derive_cluster_keys(state.read("membership"), bl)
     k = {(r["component"], r["key"]) for r in fresh.collect()}
     i = {(r["component"], r["key"]) for r in state.read("key_index").collect()}
     return k == i
@@ -150,7 +150,7 @@ def test_reader_opened_mid_commit_deletes_nothing(spark, tmp_path, monkeypatch):
     assert reopened.committed_batch() == 1
     for table in IncrementalState.TABLES:
         assert reopened.read(table).count() > 0, table
-    assert reopened.read("persons_silver").count() == len(rows) + len(DELTA)
+    assert reopened.read("membership").count() == len(rows) + len(DELTA)
     want = reduce_people(_full_persons(spark, rows + DELTA), bl, max_identities=20)
     assert _member_set(reopened.read("membership")) == _member_set(want)
     got = reopened.read("membership")
@@ -221,7 +221,7 @@ def test_fold_equals_from_scratch_and_replay_skips(spark, tmp_path):
     assert "skipped_replay" not in m
     want = reduce_people(_full_persons(spark, rows + delta), bl, max_identities=20)
     assert _member_set(state.read("membership")) == _member_set(want)
-    assert state.read("persons_silver").count() == len(rows) + len(delta)
+    assert state.read("membership").count() == len(rows) + len(delta)
     # replaying a committed batch is a no-op
     m2 = fold_batch(state, _full_persons(spark, delta), bl, batch_id=1)
     assert m2 == {"skipped_replay": True}
@@ -256,7 +256,7 @@ def test_crash_before_manifest_publish_keeps_old_state(spark, tmp_path, monkeypa
     with pytest.raises(RuntimeError, match="simulated"):
         fold_batch(state, _full_persons(spark, delta), bl, batch_id=1)
     monkeypatch.setattr(DataFrameWriter, "parquet", orig_parquet)
-    # the failure surfaced only after the other two writes finished,
+    # the failure surfaced only after the other write finished,
     # and the manifest was not touched
     for table in IncrementalState.TABLES:
         leaves = glob.glob(os.path.join(str(tmp_path), table, "bucket=*", "gen=1"))
@@ -314,15 +314,14 @@ def test_gc_scoped_to_commit_buckets_full_sweep_on_first_commit(spark, tmp_path)
     bl = Blacklist.testing()
     state = IncrementalState(spark, str(tmp_path), n_buckets=8)
     fold_batch(state, _full_persons(spark, _corpus(6)), bl, batch_id=0)
-    # find a bucket the next (tiny) delta will NOT touch, plant an orphan
+    # find a membership bucket the next (tiny) delta will NOT touch — it
+    # only joins the cluster of g0@x.com — and plant an orphan there
     delta = [(990, "fresh 0", "g0@x.com")]
-    d_ids = _full_persons(spark, delta).select("id")
-    touched_buckets = set(
-        _collect_bucket_sets(state, persons_silver=d_ids)["persons_silver"]
-    )
+    comps = state.read("membership").where("email = 'g0@x.com'").select("component")
+    touched_buckets = set(_collect_bucket_sets(state, membership=comps)["membership"])
     orphan_bucket = next(b for b in range(8) if b not in touched_buckets)
     orphan = os.path.join(
-        str(tmp_path), "persons_silver", f"bucket={orphan_bucket}", "gen=999"
+        str(tmp_path), "membership", f"bucket={orphan_bucket}", "gen=999"
     )
     os.makedirs(orphan)
     open(os.path.join(orphan, "stale.parquet"), "w").write("x")
@@ -369,10 +368,13 @@ def test_store_without_exact_marker_is_refused(spark, tmp_path):
 
 def test_store_with_other_layout_is_refused(spark, tmp_path):
     """A manifest that does not record the current bucket columns — every
-    store of an earlier layout: one with no recorded columns, or the
+    store of an earlier layout: one with no recorded columns, the
     four-table layout that also kept a component-bucketed ``cluster_keys``
-    copy — is refused on open, before anything is read or written: probing
-    a table by a column it is not bucketed on would under-scope the fold."""
+    copy, or the three-table layout that kept person rows apart in an
+    id-bucketed ``persons_silver`` — is refused on open, before anything is
+    read or written: probing a table by a column it is not bucketed on
+    would under-scope the fold."""
+    three_tables = {"persons_silver": "id", "membership": "component", "key_index": "key"}
     four_tables = {
         "persons_silver": "id",
         "membership": "component",
@@ -382,6 +384,7 @@ def test_store_with_other_layout_is_refused(spark, tmp_path):
     for name, edit in (
         ("no_cols", lambda man: man.pop("bucket_cols")),
         ("four_tables", lambda man: man.update(bucket_cols=four_tables)),
+        ("three_tables", lambda man: man.update(bucket_cols=three_tables)),
     ):
         root = tmp_path / name
         manifest_path = _edit_manifest(spark, root, edit)
