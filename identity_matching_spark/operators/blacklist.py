@@ -17,12 +17,21 @@ stays inside whole-stage codegen and can be pushed into the scan — cheaper
 than a broadcast join for lists this size. Computed (co-occurrence) popular
 keys of arbitrary size instead flow through broadcast joins in
 ``operators/stats.py``.
+
+Each set's literal Columns are built once per ``Blacklist`` instance, on
+first use, in sorted order: a literal costs several py4j round trips to
+create, and a pipeline or fold builds the same predicate several times (the
+popular-name one six times per fold), so rebuilding them dominated plan
+construction. ``Column.isin`` forwards Column arguments as they are, so
+later predicates create no literal, and the sorted ``In`` list no longer
+follows the Python hash seed.
 """
 
 from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -92,13 +101,26 @@ class Blacklist:
             popular_names=frozenset({"popular"}),
         )
 
+    # --- set membership, literals built once (see the module note) --------
+
+    @cached_property
+    def _literals(self) -> dict[str, tuple[Column, ...]]:
+        """Set name → its entries' literal Columns, filled on first use."""
+        return {}
+
+    def _isin(self, col: Column, name: str) -> Column:
+        lits = self._literals.get(name)
+        if lits is None:
+            lits = self._literals[name] = tuple(F.lit(e) for e in sorted(getattr(self, name)))
+        return col.isin(*lits) if lits else F.lit(False)
+
     # --- predicates over a (already cleaned) email column -----------------
 
     def is_multiple_email(self, email: Column) -> Column:
         return F.size(F.split(email, "@", -1)) > 2
 
     def is_blacklisted_email(self, email: Column) -> Column:
-        return email.isin(*self.emails) if self.emails else F.lit(False)
+        return self._isin(email, "emails")
 
     def _domain(self, email: Column) -> Column:
         # parts[1], exactly like blacklist.go:77-78 (multiple-@ already true'd);
@@ -108,11 +130,11 @@ class Blacklist:
 
     def is_ignored_domain(self, domain: Column) -> Column:
         d = F.element_at(F.split(domain, "@", -1), -1)
-        return d.isin(*self.domains) if self.domains else F.lit(False)
+        return self._isin(d, "domains")
 
     def is_ignored_tld(self, domain: Column) -> Column:
         tld = F.element_at(F.split(F.element_at(F.split(domain, "@", -1), -1), r"\.", -1), -1)
-        return tld.isin(*self.top_level_domains) if self.top_level_domains else F.lit(False)
+        return self._isin(tld, "top_level_domains")
 
     @staticmethod
     def is_single_label_domain(domain: Column) -> Column:
@@ -138,10 +160,10 @@ class Blacklist:
 
     def is_ignored_name(self, name: Column) -> Column:
         low = F.lower(name)
-        return low.isin(*self.names) if self.names else F.lit(False)
+        return self._isin(low, "names")
 
     def is_popular_name(self, name: Column) -> Column:
-        return name.isin(*self.popular_names) if self.popular_names else F.lit(False)
+        return self._isin(name, "popular_names")
 
     def is_popular_email(self, email: Column) -> Column:
-        return email.isin(*self.popular_emails) if self.popular_emails else F.lit(False)
+        return self._isin(email, "popular_emails")

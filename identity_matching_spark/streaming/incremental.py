@@ -159,9 +159,10 @@ def derive_cluster_keys(members: DataFrame, blacklist) -> DataFrame:
 #   then re-applies idempotently;
 # * a manifest batch_id >= the replayed batch's id → the fold is skipped
 #   (already committed);
-# * reads pass the manifest's schema, so opening a leaf set runs no
-#   footer-inference job, and a bucket set holding no data reads as an
-#   empty frame of that schema;
+# * reads pass the manifest's schema and open its leaves in groups small
+#   enough for Spark to list on the driver, so opening a leaf set runs no
+#   footer-inference or file-listing job, and a bucket set holding no data
+#   reads as an empty frame of that schema;
 # * a store whose manifest records other bucket columns (or none) is
 #   refused on open, before anything is read or written;
 # * generations no manifest references are garbage-collected after the
@@ -263,13 +264,29 @@ class IncrementalState:
         """Only the named buckets (partition-pruned read). Buckets holding
         no data — all of them, e.g. in a store bootstrapped from a zero-row
         first micro-batch — read as an empty frame with the committed
-        schema, which also spares every read its footer-inference job."""
+        schema, which also spares every read its footer-inference job.
+
+        Spark lists more than ``spark.sql.sources.parallelPartitionDiscovery
+        .threshold`` paths with a Spark job, so the leaves are opened in
+        groups of at most that many and unioned: each group is listed on the
+        driver, as ``commit`` and ``_gc`` list leaves, and building the frame
+        starts no job. Raises ``ValueError`` on a store with no manifest."""
+        from functools import reduce
+
+        if self._manifest is None:
+            raise ValueError(f"no committed state at {self.root}: nothing to read")
         schema = self._schema(table)
         gens = self._manifest["tables"][table]
         paths = [self._leaf(table, b, gens[str(b)]) for b in buckets if str(b) in gens]
         if not paths:
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*paths)
+        threshold = self.spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
+        step = max(int(threshold), 1)
+        reader = self.spark.read.schema(schema)
+        return reduce(
+            DataFrame.union,
+            (reader.parquet(*paths[i : i + step]) for i in range(0, len(paths), step)),
+        )
 
     # -- commit ------------------------------------------------------------
 
@@ -492,8 +509,10 @@ def fold_batch(
       atomic point) only after every write has finished; the jobs keep the
       caller's job group and tags;
     * every state read takes its schema from the manifest (no footer
-      inference job), and unreferenced generations are collected by the
-      writer after its publish, never by a reader opening the store.
+      inference job) and opens the manifest's leaves in groups Spark lists
+      on the driver (no file-listing job); unreferenced generations are
+      collected by the writer after its publish, never by a reader opening
+      the store.
 
     The first batch bootstraps the store with a from-scratch
     ``reduce_people``. Every later batch requires the manifest's
@@ -654,7 +673,8 @@ def run_incremental_resolution(
     ``store_root``: the two bucketed tables of :class:`IncrementalState`
     behind one manifest (read the current resolution — one row per person:
     its attributes plus ``component`` and ``external_id`` — via
-    ``IncrementalState(spark, root).read("membership")``); a store of
+    ``IncrementalState(spark, root).read("membership")``, which raises
+    ``ValueError`` until the first batch has committed); a store of
     another layout raises ``ValueError`` before the stream starts. If the
     manifest is missing but bronze data exists (state lost, or removed to
     re-bootstrap a store this layout or :func:`fold_batch` refuses), the

@@ -1,14 +1,20 @@
-"""Blacklist predicate tests, ported from /root/reference/blacklist_test.go:51-132."""
+"""Blacklist predicate tests, ported from the reference's blacklist_test.go:51-132,
+and pins that the predicates built from cached literals equal the plain
+``Column.isin`` form."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from identity_matching_spark.operators.blacklist import Blacklist
 
 
-def _eval(spark, pred_builder, values):
+def _raw(spark, pred_builder, values):
     df = spark.createDataFrame([(v,) for v in values], "s string")
-    rows = df.select(pred_builder(F.col("s")).alias("out")).collect()
-    return [bool(r["out"]) for r in rows]
+    return [r["out"] for r in df.select(pred_builder(F.col("s")).alias("out")).collect()]
+
+
+def _eval(spark, pred_builder, values):
+    return [bool(v) for v in _raw(spark, pred_builder, values)]
 
 
 def test_default_blacklist_contents():
@@ -114,3 +120,73 @@ def test_is_ignored_email(spark):
     ]
     assert _eval(spark, b.is_ignored_email, trues) == [True] * len(trues)
     assert _eval(spark, b.is_ignored_email, falses) == [False] * len(falses)
+
+
+# --- literal reuse: the predicates keep the plain ``isin`` semantics ---------
+
+# predicate → (set it reads, the column it compares), as in the reference
+_PLAIN = {
+    "is_blacklisted_email": ("emails", lambda c: c),
+    "is_ignored_domain": ("domains", lambda c: F.element_at(F.split(c, "@", -1), -1)),
+    "is_ignored_tld": (
+        "top_level_domains",
+        lambda c: F.element_at(F.split(F.element_at(F.split(c, "@", -1), -1), r"\.", -1), -1),
+    ),
+    "is_ignored_name": ("names", F.lower),
+    "is_popular_name": ("popular_names", lambda c: c),
+    "is_popular_email": ("popular_emails", lambda c: c),
+}
+_HOSTILE = [None, "", "o'brien", 'say "hi"', "back\\slash", "josé garcía", "ÜNÏCØDÉ", "ünïcødé",
+            "a@b.c", "@", "x@@y", "  ", "\t"]
+
+
+@pytest.mark.parametrize("which", ["testing", "default"])
+def test_predicates_equal_plain_isin(spark, which):
+    """Every set predicate returns the same values (NULL included) as the
+    plain ``Column.isin(*set)`` form, also when built a second time from the
+    instance's cached literals."""
+    b = getattr(Blacklist, which)()
+    for pred, (name, transform) in _PLAIN.items():
+        entries = getattr(b, name)
+        some = min(entries)
+        values = _HOSTILE + [some, some.upper(), some.title(), f"x@{some}", f"x@y.{some}"]
+
+        def plain(c):
+            return transform(c).isin(*entries) if entries else F.lit(False)
+
+        want = _raw(spark, plain, values)
+        assert True in want, pred  # the set's own entry is a hit
+        for _ in range(2):
+            assert _raw(spark, getattr(b, pred), values) == want, pred
+
+
+def test_empty_sets_give_literal_false(spark):
+    b = Blacklist(frozenset(), frozenset(), frozenset(), frozenset(), frozenset(), frozenset())
+    for pred in _PLAIN:
+        # lit(False) is False on NULL input too, where an ``isin`` is NULL
+        assert _raw(spark, getattr(b, pred), [None, "", "x@y.z"]) == [False] * 3, pred
+
+
+def test_second_build_reuses_literals(spark, monkeypatch):
+    """A predicate built again on the same instance sends its literals'
+    Columns as they are: fewer than half the py4j commands of the first
+    build, which creates one literal per entry."""
+    from py4j.java_gateway import GatewayClient
+
+    sent = [0]
+    send = GatewayClient.send_command
+
+    def counting(self, *args, **kwargs):
+        sent[0] += 1
+        return send(self, *args, **kwargs)
+
+    b = Blacklist.default()
+    col = F.col("s")  # created before counting starts
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    counts = []
+    for _ in range(2):
+        sent[0] = 0
+        b.is_popular_name(col)
+        counts.append(sent[0])
+    assert counts[0] > len(b.popular_names)
+    assert counts[1] < counts[0] / 2, counts

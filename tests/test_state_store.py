@@ -1,7 +1,8 @@
 """The incremental state store's commit contract (``IncrementalState``):
 one part file per live leaf, concurrent table writes that keep the caller's
-job group, schema-pinned reads, crash-atomic manifest publishes, replay and
-batch-id checks, writer-only garbage collection, an explicit exact-mode
+job group, schema-pinned reads that start no file-listing job (and name the
+root of a store with no manifest), crash-atomic manifest publishes, replay
+and batch-id checks, writer-only garbage collection, an explicit exact-mode
 marker that ``fold_batch`` requires and a recorded table layout that opening
 the store checks."""
 
@@ -11,6 +12,7 @@ import datetime as dt
 import glob
 import json
 import os
+import re
 import time
 
 import pytest
@@ -62,6 +64,20 @@ def _kidx_matches_keys(state, bl):
     return k == i
 
 
+def _last_job_in(spark, group):
+    """Run one job under job group ``group`` and return its id, once the
+    status store shows it (the store is fed asynchronously, in job order,
+    so every earlier job is visible then too)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup(group, group)
+    sc.parallelize([1], 1).count()
+    deadline = time.time() + 60
+    while not tracker.getJobIdsForGroup(group) and time.time() < deadline:
+        time.sleep(0.05)
+    return max(tracker.getJobIdsForGroup(group))
+
+
 DELTA = [(900, "fresh 0", "g0@x.com"), (901, "fresh 1", "g1@x.com")]
 
 
@@ -100,20 +116,11 @@ def test_fold_jobs_inherit_caller_job_group(spark, tmp_path):
     state = IncrementalState(spark, str(tmp_path), n_buckets=8)
     fold_batch(state, _full_persons(spark, _corpus(10)), bl, batch_id=0)
 
-    def last_job_in(group):
-        sc.setJobGroup(group, group)
-        sc.parallelize([1], 1).count()
-        # the status store is fed asynchronously, in job order
-        deadline = time.time() + 60
-        while not tracker.getJobIdsForGroup(group) and time.time() < deadline:
-            time.sleep(0.05)
-        return max(tracker.getJobIdsForGroup(group))
-
     try:
-        lo = last_job_in("before-fold")
+        lo = _last_job_in(spark, "before-fold")
         sc.setJobGroup("g", "fold")
         fold_batch(state, _full_persons(spark, DELTA), bl, batch_id=1)
-        hi = last_job_in("after-fold")
+        hi = _last_job_in(spark, "after-fold")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -392,3 +399,75 @@ def test_store_with_other_layout_is_refused(spark, tmp_path):
         with pytest.raises(ValueError, match="layout"):
             IncrementalState(spark, str(root), n_buckets=8)
         assert _snapshot(root, manifest_path) == before, name
+
+
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _jobs_while(spark, group, build):
+    """Run ``build()`` under job group ``group``; return its result and the
+    ids of the jobs it started."""
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup(group, group)
+        out = build()
+        _last_job_in(spark, f"{group}-after")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _leaf_rows(spark, state, table, buckets):
+    """The rows of each named bucket's live leaf, read one leaf at a time."""
+    gens = state._manifest["tables"][table]
+    schema = state._schema(table)
+    rows = []
+    for b in buckets:
+        if str(b) in gens:
+            rows += spark.read.schema(schema).parquet(state._leaf(table, b, gens[str(b)])).collect()
+    return sorted(rows)
+
+
+@pytest.mark.parametrize("threshold", [None, "5"])
+def test_state_reads_start_no_listing_job(spark, tmp_path, threshold):
+    """Spark lists more than the parallel-discovery threshold's paths with a
+    job; the store opens its leaves in groups under it, so building a frame
+    of a whole table, or of more than 32 buckets, starts no job — also with
+    the threshold lowered so that three or more groups are unioned — and
+    reads the same rows as the leaves one by one."""
+    state = IncrementalState(spark, str(tmp_path), n_buckets=64)
+    fold_batch(state, _full_persons(spark, _corpus(60)), Blacklist.testing(), batch_id=0)
+    member_buckets = sorted(int(b) for b in state._manifest["tables"]["membership"])
+    assert len(member_buckets) > 32
+    assert len(state._manifest["tables"]["key_index"]) > 32
+    old = spark.conf.get(_LISTING_THRESHOLD)
+    try:
+        if threshold is not None:
+            spark.conf.set(_LISTING_THRESHOLD, threshold)
+        step = int(spark.conf.get(_LISTING_THRESHOLD))
+        for table, buckets, build in (
+            ("key_index", range(64), lambda: state.read("key_index")),
+            ("membership", member_buckets,
+             lambda: state.read_buckets("membership", member_buckets)),
+        ):
+            df, jobs = _jobs_while(spark, f"build-{table}-{threshold}", build)
+            assert jobs == [], (table, jobs)
+            n_leaves = sum(str(b) in state._manifest["tables"][table] for b in buckets)
+            scans = str(df._jdf.queryExecution().analyzed()).count("Relation [")
+            assert scans == -(-n_leaves // step), (table, scans, n_leaves)
+            if threshold is not None:
+                assert scans >= 3
+            assert sorted(df.collect()) == _leaf_rows(spark, state, table, buckets)
+    finally:
+        spark.conf.set(_LISTING_THRESHOLD, old)
+
+
+def test_store_without_manifest_raises_on_read(spark, tmp_path):
+    """Reading a root that holds no committed state names the root instead
+    of failing inside the schema lookup."""
+    state = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    with pytest.raises(ValueError, match="no committed state"):
+        state.read("membership")
+    with pytest.raises(ValueError, match=re.escape(str(tmp_path))):
+        state.read_buckets("key_index", [0, 1])
