@@ -10,14 +10,29 @@ insertion order.
 Skew: popular emails emit no edges (matching.go:128-131); popular names were
 repo-qualified upstream (people.go:140-145), so no single name key explodes.
 Residual hot keys are a single groupBy per key — AQE skew handling applies.
+
+Clustering blocks on 64-bit surrogates of the two key strings
+(:func:`key_surrogate`); the batch clusterer and the incremental fold's key
+index must encode them alike, so this module owns the encoding.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 EMPTY_EXT = ""
+
+# hash domain per blocking-key column: a name and an email never share a code
+KEY_DOMAINS = {"name_key": 1, "email": 2}
+
+
+def key_surrogate(key: str) -> Column:
+    """The 64-bit surrogate of blocking-key column ``key`` (``name_key`` or
+    ``email``): ``xxhash64(<domain>, key)``, NULL for a NULL key. xxhash64
+    maps NULL to a constant, so an unmasked surrogate would equi-join NULL
+    keys the string key never joins."""
+    return F.when(F.col(key).isNotNull(), F.xxhash64(F.lit(KEY_DOMAINS[key]), key))
 
 
 def star_edges(df: DataFrame, key_cols: list[str], id_col: str = "id") -> DataFrame:

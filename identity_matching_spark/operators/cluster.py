@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from identity_matching_spark.operators import blocking
 from identity_matching_spark.operators.blacklist import Blacklist
 from identity_matching_spark.operators.blocking import (
     EMPTY_EXT,
@@ -107,21 +108,19 @@ def _make_block_merger(cap: float):
     return merge_block
 
 
-def component_weights(members: DataFrame, comp_col: str = "component") -> DataFrame:
+def component_weights(members: DataFrame) -> DataFrame:
     """Unique emails + name keys per component (matching.go:287-303)."""
-    return members.groupBy(F.col(comp_col).alias("comp")).agg(
+    return members.groupBy(F.col("component").alias("comp")).agg(
         F.count_distinct("email").alias("n_emails"),
         F.count_distinct("name_key").alias("n_names"),
     )
 
 
-def component_external_ids(
-    members: DataFrame, comp_col: str = "component", strict: bool = True
-) -> DataFrame:
-    """One external id per component; >1 distinct non-empty is an error
-    (reference ``setEdge``/``Merge`` reject those graphs,
+def component_external_ids(members: DataFrame) -> DataFrame:
+    """One external id per component; >1 distinct non-empty raises
+    ``ValueError`` (reference ``setEdge``/``Merge`` reject those graphs,
     matching.go:251-285, people.go:332-353)."""
-    agg = members.groupBy(F.col(comp_col).alias("comp")).agg(
+    agg = members.groupBy(F.col("component").alias("comp")).agg(
         F.count_distinct(
             F.when(
                 F.col("external_id").isNotNull() & (F.col("external_id") != EMPTY_EXT),
@@ -135,13 +134,12 @@ def component_external_ids(
             )
         ).alias("ext"),
     )
-    if strict:
-        bad = agg.where(F.col("n_ext") > 1).count()
-        if bad:
-            raise ValueError(
-                f"{bad} component(s) hold multiple distinct external ids — "
-                "cannot merge identities with conflicting external ids"
-            )
+    bad = agg.where(F.col("n_ext") > 1).count()
+    if bad:
+        raise ValueError(
+            f"{bad} component(s) hold multiple distinct external ids — "
+            "cannot merge identities with conflicting external ids"
+        )
     return agg.select("comp", F.coalesce("ext", F.lit(EMPTY_EXT)).alias("ext"))
 
 
@@ -197,11 +195,12 @@ def reduce_people(
     # in the caller's alias/identity build).
     #
     # Dictionary-encode the two blocking keys to 64-bit surrogates
-    # (domain-separated xxhash64) and precompute the popular flags from the
-    # strings before they are dropped: every clustering shuffle below —
-    # email hubs, members0, weights, name blocks, star edges, the greedy
-    # groupBy — then carries 3 longs + 2 booleans instead of two strings per
-    # row (the measured dominant bytes on the bandwidth-bound stages,
+    # (``blocking.key_surrogate``: domain-separated xxhash64, the encoding
+    # the incremental fold's key index shares) and precompute the popular
+    # flags from the strings before they are dropped: every clustering
+    # shuffle below — email hubs, members0, weights, name blocks, star
+    # edges, the greedy groupBy — then carries 3 longs + 2 booleans instead
+    # of two strings per row (the measured dominant bytes on the bandwidth-bound stages,
     # BENCH/BASELINE.md r3 attribution). Clustering is key-equality algebra
     # throughout — groupBy/join/count_distinct/min — so equality-preserving
     # surrogates are semantics-preserving; ``external_id`` stays a string
@@ -232,10 +231,8 @@ def reduce_people(
         "name_key",
         "email",
         "external_id",
-        F.when(
-            F.col("name_key").isNotNull(), F.xxhash64(F.lit(1), "name_key")
-        ).alias("_nk"),
-        F.when(F.col("email").isNotNull(), F.xxhash64(F.lit(2), "email")).alias("_em"),
+        blocking.key_surrogate("name_key").alias("_nk"),
+        blocking.key_surrogate("email").alias("_em"),
         blacklist.is_popular_name(F.col("name_key")).alias("pop_name"),
         blacklist.is_popular_email(F.col("email")).alias("pop_email"),
     )
@@ -607,11 +604,12 @@ def build_identities(
     name_freqs: DataFrame,
     email_freqs: DataFrame,
     min_recent_count: int = 5,
-    external_id_provider: str = "",
 ) -> DataFrame:
     """Identity rows matching the reference parquet schema
     (people.go:178-184): id, primary_name, primary_email,
-    external_id_provider, external_id."""
+    external_id_provider, external_id. The external ids come from a static
+    lookup table, not a named provider, so ``external_id_provider`` is
+    always ``""``."""
     primaries = set_primary_values(members, name_freqs, email_freqs, min_recent_count)
     ext = members.select(F.col("component").alias("id"), "external_id").distinct()
     return (
@@ -620,9 +618,7 @@ def build_identities(
             "id",
             F.coalesce("primary_name", F.lit("")).alias("primary_name"),
             F.coalesce("primary_email", F.lit("")).alias("primary_email"),
-            F.when(F.col("external_id") != "", F.lit(external_id_provider))
-            .otherwise(F.lit(""))
-            .alias("external_id_provider"),
+            F.lit("").alias("external_id_provider"),
             F.coalesce("external_id", F.lit("")).alias("external_id"),
         )
     )

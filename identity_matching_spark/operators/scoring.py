@@ -28,12 +28,12 @@ def score_pairs(
     candidates: DataFrame,
     name_col: str = "name",
     jw_threshold: float = 0.90,
-    lev_threshold: float | None = None,
 ) -> DataFrame:
     """Attach similarity scores to candidate edges and filter.
 
     persons: DataFrame[id, <name_col>, ...]; candidates: DataFrame[src, dst].
-    Returns DataFrame[src, dst, jw, lev] for pairs passing the threshold(s).
+    Returns DataFrame[src, dst, jw, lev] for pairs with ``jw >= jw_threshold``
+    (``lev`` is reported, not filtered on).
     """
     left = persons.select(F.col("id").alias("src"), F.col(name_col).alias("_name_src"))
     right = persons.select(F.col("id").alias("dst"), F.col(name_col).alias("_name_dst"))
@@ -74,7 +74,4 @@ def score_pairs(
         .withColumn("jw", F.when(trivial, F.lit(1.0)).otherwise(F.col("_jw_pair")))
         .withColumn("lev", levenshtein_ratio(F.col("_name_src"), F.col("_name_dst")))
     )
-    cond = F.col("jw") >= jw_threshold
-    if lev_threshold is not None:
-        cond = cond | (F.col("lev") >= lev_threshold)
-    return scored.where(cond).select("src", "dst", "jw", "lev")
+    return scored.where(F.col("jw") >= jw_threshold).select("src", "dst", "jw", "lev")

@@ -7,23 +7,25 @@ identity signature per conversation:
 
 * ``repo``   — provenance channel (prefix of conv_id before '-'): the
   popular-name qualification scope, like the git repository was.
-* ``name``   — the name-like token: first ``name: ...`` line in turn order.
-* ``email``  — the email-like token: first email-shaped string in turn order.
+* ``name``   — the name-like token: the ``name: ...`` line of the lowest
+  ``turn_idx`` that has one.
+* ``email``  — the email-like token: the first email-shaped string of the
+  lowest ``turn_idx`` that has one.
 * ``hash``   — sample provenance (the conv_id, like the sample commit hash).
 * ``ts``     — max turn timestamp (drives the recent/total split).
-* ``tools``  — sorted distinct tool set (similarity-mode feature).
-* ``doc``    — turn texts joined in stable (conv_id, turn_idx) order
-  (optional; MinHash shingle source).
 
-Everything is native expressions — one hash aggregation per conversation, no
-Python. Ordering never relies on partition order: the per-turn invariant
-(text equality under stable (conv_id, turn_idx) order) is enforced by
-sorting collected structs by turn_idx inside the aggregation.
+Batch (:func:`extract_signatures`) and stream (:func:`stream_signatures`)
+share one per-turn token projection and one aggregation; they differ only
+in the grouping keys. Everything is native expressions — one hash
+aggregation per group, no Python. Ordering never relies on partition or
+arrival order: each token is ``min_by(token, turn_idx)`` over the turns
+whose token is non-empty, so a turn with a NULL text or an empty token
+never wins, and the result is the same however the turns are partitioned.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 NAME_LINE = r"(?m)^name:\s*(.+)$"
@@ -34,17 +36,13 @@ def channel_of(conv_id) -> F.Column:
     return F.regexp_extract(conv_id, r"^([^-]+)", 1)
 
 
-def extract_signatures(
-    transcripts: DataFrame, include_doc: bool = False, include_tools: bool = False
-) -> DataFrame:
-    """One signature row per conversation (see module docstring).
+def _signatures(transcripts: DataFrame, *keys: str | Column) -> DataFrame:
+    """One signature row per ``keys`` group of turns.
 
     The token regexes are gated behind ``contains`` probes — a substring
     scan is far cheaper than the regex NFA and CASE WHEN short-circuits in
     codegen, so turns without candidate tokens (most of a conversation)
-    never pay the regex. ``tools``/``doc`` aggregation is opt-in: collect_set
-    forces an ObjectHashAggregate (off the codegen path), and only the
-    similarity mode consumes those columns.
+    never pay the regex.
     """
     name_tok = F.when(
         F.col("text").contains("name:"), F.regexp_extract("text", NAME_LINE, 1)
@@ -58,38 +56,42 @@ def extract_signatures(
         "ts",
         name_tok.alias("name_tok"),
         email_tok.alias("email_tok"),
-        F.coalesce("tool", F.lit("")).alias("tool"),
-        *( [F.col("text")] if include_doc else [] ),
     )
-    aggs = [
+    sig = turns.groupBy(*keys).agg(
         F.min_by("name_tok", F.when(F.col("name_tok") != "", F.col("turn_idx"))).alias("name"),
         F.min_by("email_tok", F.when(F.col("email_tok") != "", F.col("turn_idx"))).alias("email"),
         F.max("ts").alias("ts"),
-    ]
-    if include_tools:
-        aggs.append(
-            F.array_sort(F.collect_set(F.when(F.col("tool") != "", F.col("tool")))).alias(
-                "tools"
-            )
-        )
-    if include_doc:
-        aggs.append(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("turn_idx", "text"))),
-                    lambda s: s.text,
-                ),
-                "\n",
-            ).alias("doc")
-        )
-    sig = turns.groupBy("conv_id").agg(*aggs)
+    )
     return sig.select(
         channel_of(F.col("conv_id")).alias("repo"),
         F.coalesce("name", F.lit("")).alias("name"),
         F.coalesce("email", F.lit("")).alias("email"),
         F.col("conv_id").alias("hash"),
         "ts",
-        *( [F.col("tools")] if include_tools else [] ),
-        *( [F.col("doc")] if include_doc else [] ),
         F.col("conv_id"),
+    )
+
+
+def extract_signatures(transcripts: DataFrame) -> DataFrame:
+    """One signature row per conversation (see module docstring)."""
+    return _signatures(transcripts, "conv_id")
+
+
+def stream_signatures(
+    turn_stream: DataFrame,
+    watermark: str = "10 minutes",
+    session_gap: str = "30 minutes",
+) -> DataFrame:
+    """Streaming per-conversation signature aggregation.
+
+    ``turn_stream`` must be a streaming DataFrame with the transcript
+    schema. Returns a streaming DataFrame with the batch columns: one
+    signature row per (conv_id, session window), updated as turns arrive;
+    late turns beyond the watermark are dropped (documented divergence from
+    batch, which has no lateness bound).
+    """
+    return _signatures(
+        turn_stream.withWatermark("ts", watermark),
+        "conv_id",
+        F.session_window("ts", session_gap),
     )

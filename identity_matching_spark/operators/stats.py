@@ -7,11 +7,9 @@
 * ``cooccurrence_popular_keys`` — research-prototype popularity: a key is
   popular when it co-occurs with ≥ threshold distinct values
   (/root/reference/research/idmatching/pipeline.py:62-79; thresholds 5/28 at
-  :272). At corpus scale an exact ``count_distinct`` per key shuffles every
-  (key, value) pair once — acceptable because the pair stream is the same
-  width as the input; for trillion-row inputs pass ``approximate=True`` to
-  pre-filter with ``approx_count_distinct`` (±5% on a threshold of 5 only
-  matters at the boundary; survivors can then be recounted exactly).
+  :272). An exact ``count_distinct`` per key shuffles every (key, value)
+  pair once — acceptable because the pair stream is the same width as the
+  input; ``salted=True`` splits a hot key's pairs across reducers.
 """
 
 from __future__ import annotations
@@ -32,22 +30,24 @@ def frequency_stats(values: DataFrame, value_col: str, recent_cutoff) -> DataFra
     )
 
 
-def salted_count_distinct(
-    df: DataFrame, key_col: str, value_col: str, n_salts: int = 32
-) -> DataFrame:
+# reducers a hot key's distinct count is split across
+N_SALTS = 32
+
+
+def salted_count_distinct(df: DataFrame, key_col: str, value_col: str) -> DataFrame:
     """Exact distinct-value count per key, skew-proof via value-hash salting.
 
     A plain ``groupBy(key).agg(count_distinct(value))`` cannot partially
     aggregate distincts — every (key,value) pair of a hot key lands on one
-    reducer. Salting by ``hash(value) % n_salts`` splits a hot key across
-    ``n_salts`` reducers; distinct values are disjoint across salts, so the
+    reducer. Salting by ``hash(value) % N_SALTS`` splits a hot key across
+    ``N_SALTS`` reducers; distinct values are disjoint across salts, so the
     per-salt exact counts sum to the exact total (north_rule: salted
     repartitioning for hot-key skew). Returns DataFrame[key, n_values].
     """
     salted = df.select(
         F.col(key_col).alias("key"),
         F.col(value_col).alias("value"),
-        F.pmod(F.xxhash64(value_col), F.lit(n_salts)).alias("_salt"),
+        F.pmod(F.xxhash64(value_col), F.lit(N_SALTS)).alias("_salt"),
     )
     per_salt = salted.groupBy("key", "_salt").agg(F.count_distinct("value").alias("_n"))
     return per_salt.groupBy("key").agg(F.sum("_n").alias("n_values"))
@@ -60,26 +60,23 @@ def cooccurrence_popular_keys(
     threshold: int,
     ignored_key: Column | None = None,
     ignored_value: Column | None = None,
-    approximate: bool = False,
     salted: bool = False,
-    n_salts: int = 32,
 ) -> DataFrame:
     """Keys whose distinct-value co-occurrence count ≥ threshold.
 
     Returns DataFrame[key]. ``ignored_key``/``ignored_value`` are boolean
     Column predicates over the respective columns (rows where either is true
     are excluded, mirroring CooccurrenceFiltering.fit's skip). ``salted``
-    switches to the two-level exact aggregation for skewed key
-    distributions; ``approximate`` trades ±5% for a single sketch pass.
+    switches to the two-level exact aggregation (:func:`salted_count_distinct`)
+    for skewed key distributions.
     """
     df = pairs.select(F.col(key_col).alias("key"), F.col(value_col).alias("value"))
     if ignored_key is not None:
         df = df.where(~ignored_key)
     if ignored_value is not None:
         df = df.where(~ignored_value)
-    if salted and not approximate:
-        counts = salted_count_distinct(df, "key", "value", n_salts)
+    if salted:
+        counts = salted_count_distinct(df, "key", "value")
     else:
-        counter = F.approx_count_distinct("value") if approximate else F.count_distinct("value")
-        counts = df.groupBy("key").agg(counter.alias("n_values"))
+        counts = df.groupBy("key").agg(F.count_distinct("value").alias("n_values"))
     return counts.where(F.col("n_values") >= threshold).select("key")

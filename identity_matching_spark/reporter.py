@@ -2,8 +2,10 @@
 
 The reference accumulates named counters during the run and dumps them as
 one JSON object at exit (/root/reference/reporter/reporter.go:10-53). Here
-the counters are Spark accumulators — safe to increment from executors —
-plus driver-side gauges; ``dump()`` renders the same one-object JSON report.
+every counter is a driver-side gauge: the operators commit counts their
+own aggregate actions return to the driver, so none needs an
+executor-side accumulator. ``dump()`` renders the same one-object JSON
+report.
 """
 
 from __future__ import annotations
@@ -16,27 +18,16 @@ from pyspark.sql import SparkSession
 
 class Reporter:
     def __init__(self, spark: SparkSession):
-        self._spark = spark
-        self._acc: dict[str, Any] = {}
+        # ``spark``: the session whose run is reported; gauges need nothing
+        # from it, the argument keeps the callers' ``Reporter(spark)`` shape
         self._gauges: dict[str, Any] = {}
-
-    def counter(self, name: str):
-        """Executor-incrementable counter (LongAccumulator)."""
-        if name not in self._acc:
-            self._acc[name] = self._spark.sparkContext.accumulator(0)
-        return self._acc[name]
-
-    def increment(self, name: str, amount: int = 1) -> None:
-        self.counter(name).add(amount)
 
     def commit(self, name: str, value) -> None:
         """Driver-side gauge (reporter.go Commit)."""
         self._gauges[name] = value
 
     def report(self) -> dict:
-        out = {k: v.value for k, v in self._acc.items()}
-        out.update(self._gauges)
-        return out
+        return dict(self._gauges)
 
     def dump(self) -> str:
         return json.dumps(self.report(), sort_keys=True, default=str)

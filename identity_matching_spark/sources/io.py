@@ -74,19 +74,16 @@ class CheckpointStore:
             return self.spark.catalog.tableExists(self.path(stage))
         return os.path.exists(os.path.join(self.path(stage), "_SUCCESS"))
 
-    def write(self, stage: str, df: DataFrame, partition_by: list[str] | None = None) -> DataFrame:
+    def write(self, stage: str, df: DataFrame) -> DataFrame:
         """Materialize a stage output + metrics/lineage sidecar; returns the
         re-read DataFrame so downstream plans start from the checkpoint (no
         recomputation, truncated lineage)."""
         t0 = time.time()
         if self.table_prefix:
-            self._create_or_replace(df, self.path(stage), partition_by)
+            self._create_or_replace(df, self.path(stage))
             out = self.spark.read.table(self.path(stage))
         else:
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(self.path(stage))
+            df.write.mode("overwrite").parquet(self.path(stage))
             out = self.spark.read.parquet(self.path(stage))
         # per-partition lineage + row counts (north_rule)
         lineage = (
@@ -109,9 +106,7 @@ class CheckpointStore:
                 json.dump(meta, fh)
         return out
 
-    def _create_or_replace(
-        self, df: DataFrame, name: str, partition_by: list[str] | None = None
-    ) -> None:
+    def _create_or_replace(self, df: DataFrame, name: str) -> None:
         """``writeTo(...).createOrReplace()`` with a session-catalog fallback.
 
         The primary path is the DSv2 atomic RTAS an Iceberg/v2 catalog
@@ -124,18 +119,12 @@ class CheckpointStore:
         keeps the table-mode code path executable everywhere.
         """
         try:
-            writer = df.writeTo(name)
-            if partition_by:
-                writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
-            writer.createOrReplace()
+            df.writeTo(name).createOrReplace()
         except Exception as exc:  # AnalysisException; keyed on the error class
             if "UNSUPPORTED_FEATURE.TABLE_OPERATION" not in str(exc):
                 raise
             self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.saveAsTable(name)
+            df.write.mode("overwrite").saveAsTable(name)
 
     def read(self, stage: str) -> DataFrame:
         if self.table_prefix:
@@ -152,11 +141,11 @@ class CheckpointStore:
 
         shutil.rmtree(self.path(stage), ignore_errors=True)
 
-    def get_or_compute(self, stage: str, compute, partition_by: list[str] | None = None) -> DataFrame:
+    def get_or_compute(self, stage: str, compute) -> DataFrame:
         """Resume-from-checkpoint contract (reference cache-or-source S4)."""
         if self.exists(stage):
             return self.read(stage)
-        return self.write(stage, compute(), partition_by=partition_by)
+        return self.write(stage, compute())
 
 
 # --- reference-parity CSV signature cache (S2/S3) ------------------------

@@ -8,11 +8,11 @@ periodically fold finished conversations into the batch pipeline.
 
 Design (Spark-first):
 
-* ``stream_signatures`` — readStream → the same stateless projections the
-  batch extractor uses (token regexes per turn) → watermarked groupBy on
-  (conv_id, session window) so late turns within the allowed lateness still
-  update the signature; output mode "update" into a sink the batch pipeline
-  treats as the signatures source.
+* signatures come from ``operators.signatures.stream_signatures`` — the
+  batch extractor's per-turn projection and aggregation, grouped by
+  (conv_id, session window) over a watermarked turn stream, so late turns
+  within the allowed lateness still update the signature and the bronze
+  rows carry the batch signature columns.
 * clustering itself stays batch-incremental (foreachBatch → checkpointed
   pipeline stages): transitive closure is a global fixpoint — streaming it
   row-by-row would re-derive CC per update; re-running the checkpointed CC
@@ -24,54 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from identity_matching_spark.operators.signatures import EMAIL_TOKEN, NAME_LINE, channel_of
-
-
-def stream_signatures(
-    turn_stream: DataFrame,
-    watermark: str = "10 minutes",
-    session_gap: str = "30 minutes",
-) -> DataFrame:
-    """Streaming per-conversation signature aggregation.
-
-    ``turn_stream`` must be a streaming DataFrame with the transcript
-    schema. Returns a streaming DataFrame keyed by conversation session:
-    one signature row per (conv_id, session window), updated as turns
-    arrive; late turns beyond the watermark are dropped (documented
-    divergence from batch, which has no lateness bound).
-    """
-    turns = turn_stream.withWatermark("ts", watermark).select(
-        "conv_id",
-        "turn_idx",
-        "ts",
-        F.regexp_extract("text", NAME_LINE, 1).alias("name_tok"),
-        F.regexp_extract("text", EMAIL_TOKEN, 0).alias("email_tok"),
-        F.coalesce("tool", F.lit("")).alias("tool"),
-    )
-    return (
-        turns.groupBy("conv_id", F.session_window("ts", session_gap))
-        .agg(
-            F.min_by("name_tok", F.when(F.col("name_tok") != "", F.col("turn_idx"))).alias(
-                "name"
-            ),
-            F.min_by("email_tok", F.when(F.col("email_tok") != "", F.col("turn_idx"))).alias(
-                "email"
-            ),
-            F.max("ts").alias("ts"),
-            F.array_sort(F.collect_set(F.when(F.col("tool") != "", F.col("tool")))).alias(
-                "tools"
-            ),
-        )
-        .select(
-            channel_of(F.col("conv_id")).alias("repo"),
-            F.coalesce("name", F.lit("")).alias("name"),
-            F.coalesce("email", F.lit("")).alias("email"),
-            F.col("conv_id").alias("hash"),
-            "ts",
-            "tools",
-            "conv_id",
-        )
-    )
+from identity_matching_spark.operators import blocking
 
 
 # --- delta-scoped incremental clustering ---------------------------------
@@ -114,17 +67,16 @@ def stream_signatures(
 
 def blocking_keys(rows: DataFrame, blacklist, owner: str) -> DataFrame:
     """DataFrame[<owner>, key] — one row per usable (non-popular) blocking
-    key of each row, encoded with the same domain-separated xxhash64
-    surrogates the batch clusterer uses (operators/cluster.py). NULL keys
-    are excluded — the clusterer masks their surrogate to NULL (never
-    equi-joins), so they couple nothing and must not seed or carry closure
-    edges."""
+    key of each row, encoded by :func:`operators.blocking.key_surrogate`,
+    as the batch clusterer encodes it. NULL keys are excluded — their
+    surrogate is NULL (never equi-joins), so they couple nothing and must
+    not seed or carry closure edges."""
     names = rows.where(
         F.col("name_key").isNotNull() & ~blacklist.is_popular_name(F.col("name_key"))
-    ).select(owner, F.xxhash64(F.lit(1), "name_key").alias("key"))
+    ).select(owner, blocking.key_surrogate("name_key").alias("key"))
     emails = rows.where(
         F.col("email").isNotNull() & ~blacklist.is_popular_email(F.col("email"))
-    ).select(owner, F.xxhash64(F.lit(2), "email").alias("key"))
+    ).select(owner, blocking.key_surrogate("email").alias("key"))
     return names.union(emails)
 
 
@@ -588,9 +540,9 @@ def fold_batch(
     # --- re-resolve the scoped slice --------------------------------------
     scope = scope.drop("component", "external_id")
     scoped = scope.unionByName(delta).dropDuplicates(["id"]).localCheckpoint(eager=False)
-    rescoped = reduce_people(
-        scoped, blacklist, max_identities=max_identities, verify_keys=False
-    ).localCheckpoint(eager=False)
+    # keys verified as in a from-scratch run: a surrogate collision must raise, not merge
+    rescoped = reduce_people(scoped, blacklist, max_identities=max_identities)
+    rescoped = rescoped.localCheckpoint(eager=False)
     if collect_metrics:
         metrics["touched_clusters"] = touched.count()
         metrics["scope_rows"] = scoped.count()
@@ -684,6 +636,7 @@ def run_incremental_resolution(
 
     from identity_matching_spark.operators.blacklist import Blacklist
     from identity_matching_spark.operators.people import build_persons, dedup_signatures
+    from identity_matching_spark.operators.signatures import stream_signatures
     from identity_matching_spark.plans.pipeline import PipelineConfig
 
     cfg = config or PipelineConfig(reference_time=dt.datetime.now())
@@ -703,9 +656,7 @@ def run_incremental_resolution(
         )
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.drop("tools").write.mode("overwrite").parquet(
-            f"{bronze}/batch_id={batch_id}"
-        )
+        batch_df.write.mode("overwrite").parquet(f"{bronze}/batch_id={batch_id}")
         if state.exists():
             delta = _persons_of(batch_df)
         else:

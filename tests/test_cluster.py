@@ -491,3 +491,61 @@ def test_multi_component_overcap_block_still_greedy(spark):
     # deterministically under the cap
     assert len(set(got.values())) >= 2
     assert got[2] == got[3] == got[4] == got[5]
+
+
+def test_greedy_retirement_matches_naive_scan():
+    """The full-accumulator retirement in _greedy_block_edges must emit the
+    exact edge list of the naive scan-every-accumulator greedy (the pinned
+    deterministic cap semantics, q22 golden) on randomized blocks."""
+    import random
+
+    import pandas as pd
+
+    from identity_matching_spark.operators.cluster import _greedy_block_edges
+
+    def naive(pdf, cap):
+        edges = []
+
+        def greedy(items, is_j3=False):
+            accs = []
+            for it in items:
+                placed = False
+                for a in accs:
+                    if a["ne"] + a["nn"] < cap and it["ne"] + it["nn"] < cap:
+                        edges.append((a["id"], it["id"], is_j3))
+                        a["ne"] += it["ne"]
+                        a["nn"] += it["nn"] - 1
+                        placed = True
+                        break
+                if not placed:
+                    accs.append(dict(it))
+            return accs
+
+        exts = sorted(pdf["ext"].unique())
+        survivors = []
+        for ext in exts:
+            sub = pdf[pdf["ext"] == ext].sort_values("comp")
+            items = [
+                {"id": int(r.comp), "ne": int(r.n_emails), "nn": int(r.n_names), "ext": ext}
+                for r in sub.itertuples()
+            ]
+            survivors.extend(greedy(items))
+        if len(exts) == 2 and "" in exts:
+            survivors.sort(key=lambda a: a["id"])
+            greedy(survivors, is_j3=True)
+        return edges
+
+    rng = random.Random(404)
+    for trial in range(200):
+        n = rng.randint(1, 40)
+        cap = float(rng.randint(2, 8))
+        exts = ["", "E1"][: rng.randint(1, 2)]
+        pdf = pd.DataFrame(
+            {
+                "comp": rng.sample(range(1000), n),
+                "ext": [rng.choice(exts) for _ in range(n)],
+                "n_emails": [rng.randint(1, 5) for _ in range(n)],
+                "n_names": [rng.randint(1, 5) for _ in range(n)],
+            }
+        )
+        assert _greedy_block_edges(pdf, cap) == naive(pdf, cap), (trial, cap)

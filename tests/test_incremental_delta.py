@@ -303,6 +303,8 @@ def test_streaming_driver_folds_incrementally(spark, tmp_path):
     got = IncrementalState(spark, store).read("membership")
     bronze = spark.read.parquet(f"{store}/signatures_bronze")
     assert bronze.count() > 100, "sessions must actually have flushed"
+    # the stream extractor's signature columns, plus the bronze partition
+    assert bronze.columns == ["repo", "name", "email", "hash", "ts", "conv_id", "batch_id"]
     persons = build_persons(
         dedup_signatures(
             bronze.where((F.col("name") != "") & (F.col("email") != "")).select(

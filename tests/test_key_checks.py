@@ -1,7 +1,8 @@
 """Id and blocking-key collision checks: ``verify_unique_ids`` and the
 default-on ``verify_ids`` of ``build_persons`` refuse colliding person ids,
 and ``reduce_people``'s ``verify_keys`` refuses colliding 64-bit key
-surrogates without tripping on NULL keys."""
+surrogates without tripping on NULL keys — in a from-scratch run and in the
+incremental fold's re-resolve alike."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -91,3 +92,49 @@ class TestVerifyKeys:
                 )
         finally:
             monkeypatch.setattr(cluster_mod.F, "xxhash64", real)
+
+
+def test_fold_refuses_a_planted_surrogate_collision(spark, tmp_path, monkeypatch):
+    """The fold verifies its re-resolve scope's key surrogates as a
+    from-scratch run does: a delta email whose code equals a stored email's
+    code would pull that email's cluster into the scope and silently merge
+    it. The fold must raise before it writes anything."""
+    import os
+
+    from identity_matching_spark.operators import blocking
+    from identity_matching_spark.streaming.incremental import IncrementalState, fold_batch
+    from tests.test_state_store import _full_persons
+
+    bl = Blacklist.testing()
+    state = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    stored = [(1, "alice", "a@x.com"), (2, "bob", "b@x.com")]
+    fold_batch(state, _full_persons(spark, stored), bl, batch_id=0)
+
+    def listing():
+        return sorted(
+            os.path.relpath(os.path.join(d, f), tmp_path)
+            for d, _, files in os.walk(tmp_path)
+            for f in files
+        )
+
+    files_before = listing()
+    with open(state.manifest_path) as fh:
+        manifest_before = fh.read()
+
+    real = blocking.key_surrogate
+    b_code = spark.createDataFrame([("b@x.com",)], "email string").select(real("email")).first()[0]
+
+    def planted(key):
+        # the delta's c@x.com takes b@x.com's code; every other key is honest
+        code = real(key)
+        if key != "email":
+            return code
+        return F.when(F.col("email") == "c@x.com", F.lit(b_code).cast("long")).otherwise(code)
+
+    monkeypatch.setattr(blocking, "key_surrogate", planted)
+    with pytest.raises(ValueError, match="surrogate collision"):
+        fold_batch(state, _full_persons(spark, [(3, "carol", "c@x.com")]), bl, batch_id=1)
+    assert IncrementalState(spark, str(tmp_path), n_buckets=8).committed_batch() == 0
+    with open(state.manifest_path) as fh:
+        assert fh.read() == manifest_before
+    assert listing() == files_before

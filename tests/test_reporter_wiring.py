@@ -5,6 +5,7 @@ reference's JSON report keys (people.go:141-167, matching.go:129-233)."""
 import datetime as dt
 
 from identity_matching_spark.operators.blacklist import Blacklist
+from identity_matching_spark.operators.cluster import reduce_people
 from identity_matching_spark.plans.pipeline import PipelineConfig, run_pipeline
 from identity_matching_spark.reporter import Reporter
 from identity_matching_spark.sources.synth import synth_transcripts
@@ -87,3 +88,59 @@ def test_max_bucket_drop_counter(spark):
     # and the capped bucket emitted no edges among the 10 clones
     pairs = {(r["src"], r["dst"]) for r in out.collect()}
     assert all(s >= 100 or d >= 100 for s, d in pairs) or not pairs
+
+
+# --- per-class edge counters ------------------------------------------------
+
+
+def _persons(spark, rows):
+    return spark.createDataFrame(
+        [(i, n, n, e) for i, n, e in rows],
+        "id long, name string, name_key string, email string",
+    )
+
+
+def test_edge_class_counters_fast_path(spark):
+    persons = _persons(
+        spark,
+        [
+            (1, "n one", "p1@google.com"),
+            (2, "n oneb", "p1@google.com"),  # shares email → 1 J1 edge
+            (3, "n two", "p2@google.com"),
+            (4, "n two", "p3@google.com"),   # shares name → 1 J2 edge
+        ],
+    )
+    rep = Reporter(spark)
+    reduce_people(persons, Blacklist.testing(), max_identities=20, reporter=rep).count()
+    r = rep.report()
+    assert r["graph edges by email (J1)"] == 1
+    assert r["graph edges by name (J2)"] == 1
+    assert r["graph edges anonymous merge (J3)"] == 0
+    assert r["graph edges"] == 1  # name-pass edges (reference matching.go:283)
+
+
+def test_edge_class_counters_with_external_ids(spark):
+    persons = _persons(
+        spark,
+        [
+            (1, "n one", "p1@google.com"),
+            (2, "n oneb", "p1@google.com"),  # matched email block (occupancy J1 = 1)
+            (3, "n two", "p2@google.com"),
+            (4, "n two", "p3@google.com"),   # J2 edge
+            (5, "n three", "p5@google.com"),  # ext E5
+            (6, "n three", "p6@google.com"),  # anonymous → J3 edge with 5
+        ],
+    )
+    ext = spark.createDataFrame(
+        [("p1@google.com", "EXT1"), ("p5@google.com", "E5")],
+        "email string, external_id string",
+    )
+    rep = Reporter(spark)
+    reduce_people(
+        persons, Blacklist.testing(), max_identities=20, external_ids=ext, reporter=rep
+    ).count()
+    r = rep.report()
+    assert r["graph edges by email (J1)"] == 1
+    assert r["graph edges by name (J2)"] == 1
+    assert r["graph edges anonymous merge (J3)"] == 1
+    assert r["graph edges"] == 2

@@ -13,6 +13,7 @@ from identity_matching_spark.functions.similarity import (
     jaro_winkler,
     jaro_winkler_batch,
 )
+from identity_matching_spark.operators.scoring import score_pairs
 
 CURATED = [
     ("martha", "marhta"),
@@ -74,3 +75,74 @@ def test_empty_and_identity_semantics():
     assert jaro_winkler("", "") == 0.0  # pinned: DuckDB/classic C behavior
     assert jaro_winkler("", "x") == 0.0
     assert jaro_winkler("same", "same") == 1.0
+
+
+# --- distinct-pair scoring ---------------------------------------------------
+
+
+def _persons(spark, rows):
+    return spark.createDataFrame(rows, "id long, name string")
+
+
+def _cands(spark, pairs):
+    return spark.createDataFrame(pairs, "src long, dst long")
+
+
+class TestDistinctPairScoring:
+    """score_pairs must be edge-for-edge identical to the naive per-edge
+    scorer — the distinct-pair dedupe and equal-name short-circuit are pure
+    plan optimizations."""
+
+    def test_matches_scalar_kernel_per_edge(self, spark):
+        rows = [
+            (1, "alice smith"),
+            (2, "alice smith"),   # duplicate name -> shares a scored pair
+            (3, "alcie smith"),   # typo
+            (4, "bob jones"),
+            (5, ""),              # empty name
+            (6, None),            # null name
+        ]
+        persons = _persons(spark, rows)
+        pairs = [
+            (1, 2),  # equal non-empty -> trivial 1.0
+            (1, 3),  # unequal -> UDF
+            (2, 3),  # same name pair as (1,3) -> must reuse, same value
+            (3, 4),
+            (5, 5),  # empty==empty -> pinned 0.0 (NOT trivial)
+            (1, 6),  # null side -> jw 0.0, lev null
+            (6, 6),  # null==null
+        ]
+        out = {
+            (r.src, r.dst): (r.jw, r.lev)
+            for r in score_pairs(persons, _cands(spark, pairs), jw_threshold=0.0).collect()
+        }
+        names = dict(rows)
+        for s, d in pairs:
+            a, b = names[s], names[d]
+            exp_jw = jaro_winkler("" if a is None else a, "" if b is None else b)
+            if (s, d) == (1, 6) or (s, d) == (6, 6):
+                # lev on null input is null -> cond(jw>=0.0) still keeps row
+                assert out[(s, d)][0] == pytest.approx(exp_jw)
+                assert out[(s, d)][1] is None
+                continue
+            assert out[(s, d)][0] == pytest.approx(exp_jw), (s, d)
+        assert out[(1, 2)] == (1.0, 1.0)
+        assert out[(5, 5)][0] == 0.0 and out[(5, 5)][1] == 1.0
+        assert out[(1, 3)] == out[(2, 3)]
+
+    def test_threshold_filter_unchanged(self, spark):
+        persons = _persons(spark, [(1, "alice"), (2, "alice"), (3, "zzzz")])
+        cands = _cands(spark, [(1, 2), (1, 3)])
+        kept = score_pairs(persons, cands, jw_threshold=0.9).select("src", "dst").collect()
+        assert [(r.src, r.dst) for r in kept] == [(1, 2)]
+
+    def test_udf_sees_only_distinct_unequal_pairs(self, spark):
+        """The physical plan's ArrowEvalPython must sit above the dedup, so
+        equal-name edges never reach Python."""
+        persons = _persons(spark, [(1, "alice"), (2, "alice"), (3, "alcie")])
+        cands = _cands(spark, [(1, 2), (1, 3), (2, 3)])
+        plan = score_pairs(persons, cands, jw_threshold=0.0)._jdf.queryExecution().optimizedPlan().toString()
+        # the pandas UDF is evaluated on the deduplicated pair relation:
+        # optimizer puts ArrowEvalPython after an Aggregate/Deduplicate node
+        assert "ArrowEvalPython" in plan or "arrowevalpython" in plan.lower()
+        assert "Deduplicate" in plan or "Aggregate" in plan

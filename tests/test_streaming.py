@@ -5,9 +5,8 @@ import time
 
 from pyspark.sql import functions as F
 
-from identity_matching_spark.operators.signatures import extract_signatures
+from identity_matching_spark.operators.signatures import extract_signatures, stream_signatures
 from identity_matching_spark.sources.synth import synth_transcripts
-from identity_matching_spark.streaming.incremental import stream_signatures
 
 
 def test_stream_signatures_match_batch(spark, tmp_path):

@@ -6,7 +6,9 @@ Runs operations of a ``perfbench`` workload untraced, as
 ``perfbench/workloads.py`` code, imported only), with every
 ``py4j.java_gateway.GatewayClient.send_command`` wrapped. It prints, per
 call site, the number of commands sent to the JVM and the seconds the
-caller was blocked in them, largest first, then each operation's totals.
+caller was blocked in them, largest first (with more than one operation,
+followed by those seconds split by operation), then each operation's
+totals.
 
 A command's call site is its innermost frame in the ``identity_matching_spark``
 package (e.g. ``identity_matching_spark/operators/blacklist.py:115 _isin``),
@@ -74,8 +76,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     workload.prepare(spark, run.WORK, seed)
 
-    sites: dict[str, list[float]] = defaultdict(lambda: [0, 0.0])
+    sites: dict[str, list] = defaultdict(lambda: [0, 0.0, [0.0] * n_ops])
     totals = [0, 0.0]
+    current = 0
     lock = threading.Lock()
     send = GatewayClient.send_command
 
@@ -90,11 +93,13 @@ def main() -> None:
                 for acc in (sites[site], totals):
                     acc[0] += 1
                     acc[1] += blocked
+                sites[site][2][current] += blocked
 
     per_op = []
     GatewayClient.send_command = counting
     try:
         for index in range(n_ops):
+            current = index
             n0, secs0, wall0 = totals[0], totals[1], time.perf_counter()
             workload.op(index)
             per_op.append((totals[0] - n0, totals[1] - secs0, time.perf_counter() - wall0))
@@ -102,8 +107,9 @@ def main() -> None:
         GatewayClient.send_command = send
         run._stop(spark)
 
-    for site, (n, secs) in sorted(sites.items(), key=lambda kv: (-kv[1][0], -kv[1][1])):
-        print(f"{n:7d} {secs:8.2f}s  {site}")
+    for site, (n, secs, by_op) in sorted(sites.items(), key=lambda kv: (-kv[1][0], -kv[1][1])):
+        split = " / ".join(f"{s:.2f}s" for s in by_op) if n_ops > 1 else ""
+        print(f"{n:7d} {secs:8.2f}s  {site}" + (f"  ({split})" if split else ""))
     for index, (n, secs, wall) in enumerate(per_op):
         print(f"{n:7d} {secs:8.2f}s  total of operation {index} ({wall:.1f} s wall)")
 
