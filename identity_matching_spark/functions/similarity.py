@@ -74,22 +74,16 @@ def jaro(s1: str, s2: str) -> float:
     return (matches / n1 + matches / n2 + (matches - t) / matches) / 3
 
 
-def jaro_winkler(
-    s1: str,
-    s2: str,
-    p: float = JW_PREFIX_WEIGHT,
-    max_prefix: int = JW_MAX_PREFIX,
-    boost_threshold: float = JW_BOOST_THRESHOLD,
-) -> float:
+def jaro_winkler(s1: str, s2: str) -> float:
     j = jaro(s1, s2)
-    if j <= boost_threshold:
+    if j <= JW_BOOST_THRESHOLD:
         return j
     prefix = 0
-    for a, b in zip(s1[:max_prefix], s2[:max_prefix]):
+    for a, b in zip(s1[:JW_MAX_PREFIX], s2[:JW_MAX_PREFIX]):
         if a != b:
             break
         prefix += 1
-    return j + prefix * p * (1 - j)
+    return j + prefix * JW_PREFIX_WEIGHT * (1 - j)
 
 
 # --- numpy-vectorized batch kernel ---------------------------------------

@@ -54,7 +54,7 @@ def star_edges(df: DataFrame, key_cols: list[str], id_col: str = "id") -> DataFr
     )
 
 
-def external_id_edges(persons: DataFrame, ext_col: str = "external_id") -> DataFrame:
+def external_id_edges(persons: DataFrame) -> DataFrame:
     """Matcher edges: star per shared external id (matching.go:77-84)."""
-    df = persons.where(F.col(ext_col).isNotNull() & (F.col(ext_col) != EMPTY_EXT))
-    return star_edges(df, [ext_col])
+    ext = F.col("external_id")
+    return star_edges(persons.where(ext.isNotNull() & (ext != EMPTY_EXT)), ["external_id"])

@@ -51,6 +51,9 @@ from pyspark.sql import functions as F
 
 # bytes per symmetrized edge row on the driver: two longs
 EDGE_ROW_BYTES = 16
+# join-loop rounds before giving up (the returned labels are then
+# unconverged); the driver finish always converges
+MAX_ITER = 50
 
 
 def symmetrize(edges: DataFrame) -> DataFrame:
@@ -168,7 +171,6 @@ def _round(e: DataFrame, labels: DataFrame) -> DataFrame:
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
-    max_iter: int = 50,
     store=None,
     stage_prefix: str = "cc",
 ) -> DataFrame:
@@ -181,8 +183,6 @@ def connected_components(
         to the nodes present in ``edges``. An edge with an endpoint absent
         from ``nodes`` is ignored: it neither labels that endpoint nor
         connects anything through it.
-    max_iter : loop rounds before giving up (the returned labels are then
-        unconverged); the driver finish always converges.
     store : optional CheckpointStore — loop only: every iteration's labels
         are written durably under ``{stage_prefix}_{edge_fingerprint}_iter{i}``
         (north_rule: checkpointed CC iterations; a killed run resumes from
@@ -232,7 +232,7 @@ def connected_components(
     if store is not None:
         iter_key = f"{stage_prefix}_{edges_fingerprint(e)}"
         # resume from the last durably completed iteration of THIS graph
-        for i in range(max_iter - 1, -1, -1):
+        for i in range(MAX_ITER - 1, -1, -1):
             if store.exists(f"{iter_key}_iter{i}"):
                 # materialize off the store file: the scaffolding is deleted
                 # after convergence and the result must not depend on it
@@ -249,7 +249,7 @@ def connected_components(
 
     converged = False
     prev_cached: DataFrame | None = labels_handle
-    for _it in range(start_iter, max_iter):
+    for _it in range(start_iter, MAX_ITER):
         # lazy checkpoint: the convergence aggregation below is the single
         # action per round — it materializes the checkpoint as it runs
         lbl, lbl_handle = _truncate(_round(e, labels), reliable, eager=False)
@@ -278,11 +278,11 @@ def connected_components(
 
     if store is not None and converged:
         # converged: iteration scaffolding is no longer a valid resume point.
-        # An unconverged (max_iter-exhausted) run keeps its files — they are
+        # An unconverged (MAX_ITER-exhausted) run keeps its files — they are
         # both the resume point for a follow-up run and, when the loop exited
         # right after a store.write, the backing storage of the returned
         # DataFrame.
-        for i in range(max_iter):
+        for i in range(MAX_ITER):
             store.delete(f"{iter_key}_iter{i}")
             store.delete(f"{iter_key}_iter{i}_metrics")
     return labels

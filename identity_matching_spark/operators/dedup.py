@@ -1,16 +1,9 @@
-"""Document deduplication operators for large-scale training-data pipelines.
+"""Near-duplicate document clustering (MinHash-LSH), DataFrame-native: the
+heavy lifting — hashing, grouping, bucket joins — stays in the JVM; MinHash
+uses the Arrow-vectorized UDF from functions/hashing.py.
 
-Four families, all DataFrame-native (the heavy lifting — hashing, grouping,
-bucket joins — stays in the JVM; MinHash uses the Arrow-vectorized UDF from
-functions/hashing.py):
-
-* exact        — hash-groupBy on a canonicalized key; one shuffle.
-* minhash_lsh  — shingle → minhash → band → bucket star-join → verified
-                 Jaccard → connected components → keep min doc per cluster.
-* simhash      — bitwise-majority fingerprint; near-dups share fingerprint
-                 (or a banded prefix at scale).
-* ngram_jaccard — exact Jaccard over word n-gram sets via explode + join
-                 (candidate pairs bounded by shared-shingle blocking).
+shingle → minhash → band → bucket star-join → verified word-n-gram Jaccard
+→ connected components → keep the min doc per cluster.
 
 Scale notes: every pairing step is a star join per bucket (linear edge
 count), never an all-pairs blowup; degenerate buckets are dropped with a
@@ -20,29 +13,18 @@ popular emails in the identity pipeline).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from identity_matching_spark.functions.hashing import lsh_candidate_edges
 from identity_matching_spark.operators.cc import connected_components
 
-
-def canonical_text_key(text, n_words: int | None = None):
-    """Canonicalized dedup key: lowercase, collapsed whitespace, optionally
-    truncated to the first ``n_words`` words; hashed with md5."""
-    t = F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
-    if n_words is not None:
-        t = F.array_join(F.slice(F.split(t, " "), 1, n_words), " ")
-    return F.md5(t)
-
-
-def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """One row per distinct canonical text: keep min id + duplicate count."""
-    return (
-        docs.select(F.col(id_col).alias("id"), canonical_text_key(F.col(text_col)).alias("key"))
-        .groupBy("key")
-        .agg(F.min("id").alias("keep_id"), F.count(F.lit(1)).alias("n_docs"))
-    )
+# MinHash signature width, LSH bands and character-shingle width of the
+# candidate pass; word n-gram width of the Jaccard verify
+N_PERM = 64
+N_BANDS = 16
+SHINGLE_K = 5
+NGRAM_N = 3
 
 
 def word_shingles(docs: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
@@ -57,64 +39,14 @@ def word_shingles(docs: DataFrame, text_col: str, id_col: str, n: int = 3) -> Da
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.8,
-    max_shingle_freq: int = 1000,
-) -> DataFrame:
-    """Pairs with exact word-n-gram Jaccard ≥ threshold.
-
-    Candidates come from shared shingles; shingles occurring in more than
-    ``max_shingle_freq`` docs are dropped (boilerplate — would produce a
-    quadratic bucket; with a threshold < 1 a true near-dup pair always
-    shares a rarer shingle too, so recall loss is bounded and logged by the
-    caller via the returned metrics).
-    """
-    sh = word_shingles(docs, text_col, id_col, n)
-    freq = sh.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-    sh = sh.join(freq.where(F.col("df") <= max_shingle_freq).select("g"), "g")
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-    inter = (
-        sh.select(F.col("id").alias("id_a"), "g")
-        .join(sh.select(F.col("id").alias("id_b"), "g"), "g")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    return (
-        inter.join(sizes.select(F.col("id").alias("id_a"), F.col("n").alias("na")), "id_a")
-        .join(sizes.select(F.col("id").alias("id_b"), F.col("n").alias("nb")), "id_b")
-        .withColumn("jaccard", F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")))
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def minhash_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_perm: int = 64,
-    n_bands: int = 16,
-    shingle_k: int = 5,
-    jaccard_threshold: float = 0.7,
-    ngram_n: int = 3,
-    reporter=None,
-) -> DataFrame:
-    """Near-duplicate clusters: LSH candidates → exact-Jaccard verification →
-    connected components. Returns DataFrame[id, cluster, keep] where
-    ``keep`` marks the representative (min id) of each near-dup cluster.
-    With a ``reporter``, the ``max_bucket`` drop is committed as a counter
-    (see :func:`lsh_candidate_edges`)."""
-    d = docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-    cands = lsh_candidate_edges(
-        d, "text", n_perm=n_perm, n_bands=n_bands, shingle_k=shingle_k,
-        reporter=reporter,
-    )
-    sh = word_shingles(d, "text", "id", ngram_n)
+def minhash_dedup(docs: DataFrame, jaccard_threshold: float = 0.7) -> DataFrame:
+    """Near-duplicate clusters of DataFrame[doc_id, text]: LSH candidates →
+    exact-Jaccard verification → connected components. Returns
+    DataFrame[id, cluster, keep] where ``keep`` marks the representative
+    (min id) of each near-dup cluster."""
+    d = docs.select(F.col("doc_id").alias("id"), F.col("text").alias("text"))
+    cands = lsh_candidate_edges(d, "text", n_perm=N_PERM, n_bands=N_BANDS, shingle_k=SHINGLE_K)
+    sh = word_shingles(d, "text", "id", NGRAM_N)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
     verified = (
         cands.join(sh.select(F.col("id").alias("src"), "g"), "src")
@@ -133,42 +65,4 @@ def minhash_dedup(
         "id",
         F.col("component").alias("cluster"),
         (F.col("id") == F.col("component")).alias("keep"),
-    )
-
-
-def simhash_fingerprints(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 64
-) -> DataFrame:
-    """Bitwise-majority simhash over word tokens (JVM-side: xxhash64 bit
-    probes + conditional sums). Near-dups = small Hamming distance; exact
-    fingerprint equality catches shuffled/boilerplate variants."""
-    toks = docs.select(
-        F.col(id_col).alias("id"), F.explode(F.split(F.col(text_col), r"\s+")).alias("tok")
-    ).distinct()
-    h = toks.select("id", F.xxhash64("tok").alias("th"))
-    sums = [
-        F.sum(F.when(F.shiftright(F.col("th"), b).bitwiseAND(1) == 1, 1).otherwise(-1)).alias(
-            f"b{b}"
-        )
-        for b in range(bits)
-    ]
-    agg = h.groupBy("id").agg(*sums)
-    fp = None
-    for b in range(bits):
-        term = F.when(
-            F.col(f"b{b}") > 0, F.shiftleft(F.lit(1).cast("long"), b)
-        ).otherwise(F.lit(0).cast("long"))
-        fp = term if fp is None else fp.bitwiseOR(term)
-    return agg.select("id", fp.alias("simhash"))
-
-
-def simhash_dup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Documents sharing an identical 64-bit simhash, grouped."""
-    fp = simhash_fingerprints(docs, text_col, id_col)
-    w = Window.partitionBy("simhash")
-    return (
-        fp.withColumn("group_size", F.count(F.lit(1)).over(w))
-        .withColumn("keep_id", F.min("id").over(w))
-        .where(F.col("group_size") > 1)
-        .select("id", "simhash", "keep_id", "group_size")
     )

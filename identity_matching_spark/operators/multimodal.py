@@ -239,7 +239,11 @@ def image_features(dim: int = 64):
     return kernel, out_schema
 
 
-def frame_sample(n_frames_out: int = 4, frame_dim: int = 16):
+# pooled width of a sampled video frame
+FRAME_DIM = 16
+
+
+def frame_sample(n_frames_out: int = 4):
     """mapInPandas kernel: video rows → one row per sampled frame with a
     deterministic stride. Payloads that parse as a concatenated-PPM
     container (see :func:`_ppm_frames`) decode for real — the stride runs
@@ -270,7 +274,7 @@ def frame_sample(n_frames_out: int = 4, frame_dim: int = 16):
                         fi = j * stride
                         ids.append(mid)
                         idxs.append(fi)
-                        frames.append(_pool_1d(decoded[fi].ravel(), frame_dim).tolist())
+                        frames.append(_pool_1d(decoded[fi].ravel(), FRAME_DIM).tolist())
                     continue
                 total = (meta or {}).get("n_frames") or n_frames_out
                 stride = max(total // n_frames_out, 1)
@@ -279,7 +283,7 @@ def frame_sample(n_frames_out: int = 4, frame_dim: int = 16):
                     ids.append(mid)
                     idxs.append(fi)
                     frames.append(
-                        _fake_decode((payload or b"") + fi.to_bytes(4, "big"), frame_dim).tolist()
+                        _fake_decode((payload or b"") + fi.to_bytes(4, "big"), FRAME_DIM).tolist()
                     )
             yield pd.DataFrame({"media_id": ids, "frame_idx": idxs, "frame": frames})
 
@@ -331,10 +335,10 @@ def extract_audio_features(media: DataFrame, n_mfcc: int = 16) -> DataFrame:
     return media.where(F.col("kind") == "audio").mapInPandas(kernel, schema)
 
 
-def extract_image_features(media: DataFrame, dim: int = 64, rows_per_batch: int = 64) -> DataFrame:
-    """Feature extraction over image rows; payload-heavy rows get small
-    Arrow batches (spark.sql.execution.arrow.maxRecordsPerBatch should be
-    sized so batch_bytes ≈ rows_per_batch × avg payload)."""
+def extract_image_features(media: DataFrame, dim: int = 64) -> DataFrame:
+    """Feature extraction over image rows; for payload-heavy rows size
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` so one Arrow batch
+    stays small (rows × avg payload)."""
     kernel, schema = image_features(dim)
     return media.where(F.col("kind") == "image").mapInPandas(kernel, schema)
 
@@ -344,12 +348,13 @@ def sample_video_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
     return media.where(F.col("kind") == "video").mapInPandas(kernel, schema)
 
 
-def synth_media(spark: SparkSession, n: int = 64, seed: int = 5) -> DataFrame:
-    """Deterministic fake media table for tests (payload = hash bytes)."""
+def synth_media(spark: SparkSession, n: int = 64) -> DataFrame:
+    """Deterministic fake media table for tests (payload = hash bytes of
+    ``5:<row>``)."""
     rows = []
     for i in range(n):
         kind = ["image", "audio", "video"][i % 3]
-        payload = hashlib.sha256(f"{seed}:{i}".encode()).digest() * 4
+        payload = hashlib.sha256(f"5:{i}".encode()).digest() * 4
         meta = {
             "width": 32 + (i % 8) * 16 if kind == "image" else None,
             "height": 32 + (i % 5) * 16 if kind == "image" else None,

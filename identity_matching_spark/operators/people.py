@@ -7,23 +7,20 @@ dedup query (/root/reference/people.go:428-432) Spark-first:
   Catalyst runs this as partial + final hash aggregation (map-side combine),
   so the shuffle carries one row per distinct triplet, not per commit.
 * normalization + popular-name repo-qualification + blacklist row filter.
-* person id assignment: deterministic, either a 64-bit hash of the identity
-  triplet (scalable default — no global sort, stable across reruns and
-  cluster sizes) or a sequential ``row_number`` (test/parity mode, matches
-  the reference's insertion-order ids at the cost of a single-partition
-  sort — never use at scale).
+* person id assignment: a 64-bit hash of the identity triplet —
+  deterministic, no global sort, stable across reruns and cluster sizes.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from identity_matching_spark.functions.normalize import clean_email, clean_name, name_key
 from identity_matching_spark.operators.blacklist import Blacklist
 
 
-def verify_unique_ids(df: DataFrame, id_col: str = "id") -> None:
+def verify_unique_ids(df: DataFrame) -> None:
     """Assert no 64-bit person-id hash collision (default-on safety).
 
     64-bit ids birthday-collide around 2^32 rows; a collision would silently
@@ -35,7 +32,7 @@ def verify_unique_ids(df: DataFrame, id_col: str = "id") -> None:
     and the corpus is far below 2^32 rows.
     """
     bad = (
-        df.groupBy(id_col)
+        df.groupBy("id")
         .agg(F.count(F.lit(1)).alias("n"))
         .where(F.col("n") > 1)
         .limit(1)
@@ -43,7 +40,7 @@ def verify_unique_ids(df: DataFrame, id_col: str = "id") -> None:
     )
     if bad:
         raise ValueError(
-            f"person id hash collision: id {bad[0][id_col]} covers "
+            f"person id hash collision: id {bad[0]['id']} covers "
             f"{bad[0]['n']} distinct triplets; re-key with a salted hash "
             "or partition the corpus"
         )
@@ -67,7 +64,6 @@ def build_persons(
     signatures: DataFrame,
     blacklist: Blacklist,
     popular_names: DataFrame | None = None,
-    id_strategy: str = "hash",
     reporter=None,
     verify_ids: bool = True,
 ) -> DataFrame:
@@ -154,15 +150,7 @@ def build_persons(
         )
     )
 
-    if id_strategy == "hash":
-        df = df.withColumn("id", F.xxhash64("repo", "name", "email"))
-        if verify_ids:
-            verify_unique_ids(df)
-    elif id_strategy == "sequence":
-        # parity mode: reference assigns 1..n in input order
-        # (/root/reference/people.go:159-160); global sort — small data only.
-        w = Window.orderBy("repo", "name", "email")
-        df = df.withColumn("id", F.row_number().over(w).cast("long"))
-    else:
-        raise ValueError(f"unknown id_strategy: {id_strategy}")
+    df = df.withColumn("id", F.xxhash64("repo", "name", "email"))
+    if verify_ids:
+        verify_unique_ids(df)
     return df.select("id", "repo", "name", "email", "name_key", "popular_name", "hash", "ts")

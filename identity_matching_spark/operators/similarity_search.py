@@ -17,27 +17,25 @@ deterministic across runs and cluster sizes.
 
 from __future__ import annotations
 
-
-
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from identity_matching_spark.functions.similarity import cosine_similarity
 
+# quantizer seed; cosine similarities are rounded to this many digits
+SEED = 13
+ROUND_DIGITS = 4
 
-def _as_double(col):
-    return col.cast("array<double>")
+
+def _vectors(df: DataFrame, id_alias: str, vec_alias: str) -> DataFrame:
+    """``DataFrame[id, embedding: array<float>]`` → (id, array<double>)."""
+    return df.select(
+        F.col("id").alias(id_alias), F.col("embedding").cast("array<double>").alias(vec_alias)
+    )
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "id",
-    vec_col: str = "embedding",
-    round_digits: int | None = 4,
-) -> DataFrame:
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector — the BASELINE/
     ORACLE shape (broadcast corpus×queries). Production searches take
     :func:`ivf_topk` / :func:`ivf_neardup_pairs`; nothing in the package
@@ -46,11 +44,9 @@ def brute_force_topk(
     Returns DataFrame[query_id, neighbor_id, sim, rank]; ties broken by
     neighbor id ascending (deterministic).
     """
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("emb"))
-    q = queries.select(F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qemb"))
-    sim = cosine_similarity(F.col("qemb"), F.col("emb"))
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
+    c = _vectors(corpus, "neighbor_id", "emb")
+    q = _vectors(queries, "query_id", "qemb")
+    sim = F.round(cosine_similarity(F.col("qemb"), F.col("emb")), ROUND_DIGITS)
     sims = (
         c.crossJoin(F.broadcast(q))
         .where(F.col("neighbor_id") != F.col("query_id"))
@@ -60,8 +56,8 @@ def brute_force_topk(
     return sims.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
-def _hyperplanes(dim: int, bits: int, seed: int) -> np.ndarray:
-    rng = np.random.RandomState(seed)
+def _hyperplanes(dim: int, bits: int) -> np.ndarray:
+    rng = np.random.RandomState(SEED)
     return rng.randn(bits, dim)
 
 
@@ -110,13 +106,10 @@ def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "id",
-    vec_col: str = "embedding",
     bits: int = 4,
     n_probe: int = 5,
-    dim: int | None = None,
-    seed: int = 13,
-    round_digits: int | None = 4,
+    *,
+    dim: int,
 ) -> DataFrame:
     """Approximate top-k: only corpus vectors in the query's probed cells
     are scored. Recall rises with n_probe (n_probe = 2^bits → exact).
@@ -125,25 +118,14 @@ def ivf_topk(
     ``.first()`` — a driver-side Spark action during plan construction,
     which serializes pipelines that build many plans before running them.
     """
-    if dim is None:
-        raise ValueError(
-            "pass dim explicitly (embedding width); inferring it would run a "
-            "driver action during plan construction"
-        )
-    planes = _hyperplanes(dim, bits, seed)
+    planes = _hyperplanes(dim, bits)
 
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("emb")
-    ).withColumn("cell", cell_of(F.col("emb"), planes))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qemb")
-    ).withColumn("qcell", cell_of(F.col("qemb"), planes))
+    c = _vectors(corpus, "neighbor_id", "emb").withColumn("cell", cell_of(F.col("emb"), planes))
+    q = _vectors(queries, "query_id", "qemb").withColumn("qcell", cell_of(F.col("qemb"), planes))
 
     q = _expand_probes(q.withColumnRenamed("qcell", "cell"), "cell", _probe_masks(bits, n_probe))
 
-    sim = cosine_similarity(F.col("qemb"), F.col("emb"))
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
+    sim = F.round(cosine_similarity(F.col("qemb"), F.col("emb")), ROUND_DIGITS)
     sims = (
         c.join(F.broadcast(q), "cell")
         .where(F.col("neighbor_id") != F.col("query_id"))
@@ -157,13 +139,10 @@ def ivf_topk(
 def ivf_neardup_pairs(
     corpus: DataFrame,
     threshold: float = 0.9,
-    id_col: str = "id",
-    vec_col: str = "embedding",
     bits: int = 4,
     n_probe: int = 2,
-    dim: int | None = None,
-    seed: int = 13,
-    round_digits: int | None = 4,
+    *,
+    dim: int,
 ) -> DataFrame:
     """Corpus-vs-corpus embedding near-duplicate pairs — the 100 TB scale
     path that replaces the all-pairs non-equi join.
@@ -182,16 +161,9 @@ def ivf_neardup_pairs(
     ``dim`` is required for the same reason as in ``ivf_topk``: no driver
     action during plan construction.
     """
-    if dim is None:
-        raise ValueError(
-            "pass dim explicitly (embedding width); inferring it would run a "
-            "driver action during plan construction"
-        )
-    planes = _hyperplanes(dim, bits, seed)
+    planes = _hyperplanes(dim, bits)
 
-    base = corpus.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("emb")
-    ).withColumn("cell", cell_of(F.col("emb"), planes))
+    base = _vectors(corpus, "id", "emb").withColumn("cell", cell_of(F.col("emb"), planes))
     probed = _expand_probes(
         base.select(F.col("id").alias("id_a"), F.col("emb").alias("ea"), "cell"),
         "cell",
@@ -199,9 +171,7 @@ def ivf_neardup_pairs(
     )
     home = base.select(F.col("id").alias("id_b"), F.col("emb").alias("eb"), "cell")
 
-    sim = cosine_similarity(F.col("ea"), F.col("eb"))
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
+    sim = F.round(cosine_similarity(F.col("ea"), F.col("eb")), ROUND_DIGITS)
     # no dedup needed: each pair (a, b) joins through exactly one mask —
     # m = cell(a) XOR cell(b) — and the mask list is duplicate-free, so a
     # dropDuplicates here would only add a second full shuffle of the

@@ -7,9 +7,9 @@
 * ``cooccurrence_popular_keys`` — research-prototype popularity: a key is
   popular when it co-occurs with ≥ threshold distinct values
   (/root/reference/research/idmatching/pipeline.py:62-79; thresholds 5/28 at
-  :272). An exact ``count_distinct`` per key shuffles every (key, value)
-  pair once — acceptable because the pair stream is the same width as the
-  input; ``salted=True`` splits a hot key's pairs across reducers.
+  :272). The exact distinct count per key is salted by value hash
+  (:func:`salted_count_distinct`), so a hot key's pairs spread across
+  reducers instead of piling onto one.
 """
 
 from __future__ import annotations
@@ -60,23 +60,18 @@ def cooccurrence_popular_keys(
     threshold: int,
     ignored_key: Column | None = None,
     ignored_value: Column | None = None,
-    salted: bool = False,
 ) -> DataFrame:
-    """Keys whose distinct-value co-occurrence count ≥ threshold.
+    """Keys whose distinct-value co-occurrence count ≥ threshold, counted by
+    the skew-proof two-level aggregation (:func:`salted_count_distinct`).
 
     Returns DataFrame[key]. ``ignored_key``/``ignored_value`` are boolean
     Column predicates over the respective columns (rows where either is true
-    are excluded, mirroring CooccurrenceFiltering.fit's skip). ``salted``
-    switches to the two-level exact aggregation (:func:`salted_count_distinct`)
-    for skewed key distributions.
+    are excluded, mirroring CooccurrenceFiltering.fit's skip).
     """
     df = pairs.select(F.col(key_col).alias("key"), F.col(value_col).alias("value"))
     if ignored_key is not None:
         df = df.where(~ignored_key)
     if ignored_value is not None:
         df = df.where(~ignored_value)
-    if salted:
-        counts = salted_count_distinct(df, "key", "value")
-    else:
-        counts = df.groupBy("key").agg(F.count_distinct("value").alias("n_values"))
+    counts = salted_count_distinct(df, "key", "value")
     return counts.where(F.col("n_values") >= threshold).select("key")

@@ -42,6 +42,10 @@ from identity_matching_spark.operators.stats import (
 )
 from identity_matching_spark.sources.io import CheckpointStore
 
+# a name is popular once it co-occurs with this many distinct emails
+# (research pipeline.py:272)
+NAME_POPULARITY_THRESHOLD = 5
+
 
 @dataclass
 class PipelineConfig:
@@ -50,8 +54,6 @@ class PipelineConfig:
     min_recent_count: int = 5                # --min-count (main.go:159-162)
     reference_time: dt.datetime | None = None  # 'now' for the recent window
     use_cooccurrence_popularity: bool = False
-    name_popularity_threshold: int = 5       # research pipeline.py:272
-    email_popularity_threshold: int = 28
     similarity_mode: bool = False            # MinHash-LSH + Jaro-Winkler pass
     jw_threshold: float = 0.95
     # LSH defaults from the measured sweep (tools/similarity_sweep.py, table
@@ -62,7 +64,6 @@ class PipelineConfig:
     lsh_bands: int = 32
     lsh_perms: int = 64
     lsh_shingle_k: int = 2
-    id_strategy: str = "hash"
     verify_ids: bool = True                  # assert no 64-bit person-id hash collision
 
     def as_dict(self) -> dict:
@@ -73,14 +74,13 @@ def run_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
     config: PipelineConfig | None = None,
-    blacklist: Blacklist | None = None,
     store: CheckpointStore | None = None,
     external_ids: DataFrame | None = None,
     reporter=None,
 ) -> dict[str, DataFrame]:
     """Run the full resolution pipeline; returns all stage outputs."""
     cfg = config or PipelineConfig()
-    bl = blacklist or Blacklist.default()
+    bl = Blacklist.default()
 
     def checkpoint(stage: str, compute):
         if store is None:
@@ -116,7 +116,7 @@ def run_pipeline(
                 cleaned,
                 "name_c",
                 "email_c",
-                cfg.name_popularity_threshold,
+                NAME_POPULARITY_THRESHOLD,
                 ignored_key=bl.is_ignored_name(F.col("name_c")),
                 ignored_value=bl.is_ignored_email(F.col("email_c")),
             ),
@@ -126,8 +126,8 @@ def run_pipeline(
     persons = checkpoint(
         "persons",
         lambda: build_persons(
-            signatures, bl, popular_names=popular_names, id_strategy=cfg.id_strategy,
-            reporter=reporter, verify_ids=cfg.verify_ids,
+            signatures, bl, popular_names=popular_names, reporter=reporter,
+            verify_ids=cfg.verify_ids,
         ),
     )
 
@@ -135,7 +135,11 @@ def run_pipeline(
     # proposes candidates; batched Jaro-Winkler keeps confident pairs. The
     # shingle source is the identity signature (the ER signal), not the
     # conversation body — body text is boilerplate-heavy and buckets
-    # unrelated identities together.
+    # unrelated identities together. Filter, then verify: a candidate pair
+    # whose names carry different digits is dropped in the JVM before the
+    # JW UDF — digits in a name are identifiers (account numbers, bot ids),
+    # so `smith1601` and `smith1602` are two people however close the
+    # strings are, just as the reference's exact-name match keeps them apart.
     extra_edges = None
     if cfg.similarity_mode:
 
@@ -147,6 +151,13 @@ def run_pipeline(
                 n_bands=cfg.lsh_bands,
                 shingle_k=cfg.lsh_shingle_k,
                 reporter=reporter,
+            )
+            digits = persons.select("id", F.regexp_replace("name", "[^0-9]", "").alias("d"))
+            cands = (
+                cands.join(digits.toDF("src", "d_src"), "src")
+                .join(digits.toDF("dst", "d_dst"), "dst")
+                .where(F.col("d_src") == F.col("d_dst"))
+                .select("src", "dst")
             )
             return score_pairs(
                 persons, cands, name_col="name", jw_threshold=cfg.jw_threshold

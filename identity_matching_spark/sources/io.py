@@ -363,22 +363,24 @@ def read_outputs(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     )
 
 
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int = 64,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Persist a stage as a bucketed table so repeated joins/aggregations on
-    the bucket key are co-located (no Exchange in the join plan). The right
-    physical layout for the alias tables at 100 TB: aliases bucketed by
-    ``id`` join identities/freqs shuffle-free, and bucket pruning applies.
+# buckets of a table written by write_bucketed_table
+N_BUCKETS = 64
+
+
+def write_bucketed_table(df: DataFrame, table: str, bucket_cols: list[str]) -> None:
+    """Persist a stage as a table bucketed (and sorted within each bucket)
+    by ``bucket_cols``, so repeated joins/aggregations on the bucket key are
+    co-located (no Exchange in the join plan). The right physical layout
+    for the alias tables at 100 TB: aliases bucketed by ``id`` join
+    identities/freqs shuffle-free, and bucket pruning applies.
     """
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.format("parquet").saveAsTable(table)
+    (
+        df.write.mode("overwrite")
+        .bucketBy(N_BUCKETS, *bucket_cols)
+        .sortBy(*bucket_cols)
+        .format("parquet")
+        .saveAsTable(table)
+    )
 
 
 def export_jdbc(
@@ -400,9 +402,7 @@ def export_jdbc(
     df.write.jdbc(url=url, table=table, mode=mode, properties=props)
 
 
-def export_csv(df: DataFrame, path: str, order_by: list[str] | None = None) -> None:
+def export_csv(df: DataFrame, path: str) -> None:
     """Parquet→CSV export utility (reference research/parquet2csv.py — its
-    only Spark usage); deterministic row order via explicit sort."""
-    if order_by:
-        df = df.orderBy(*order_by)
-    df.write.mode("overwrite").option("header", True).csv(path)
+    only Spark usage); deterministic row order: sorted by every column."""
+    df.orderBy(*df.columns).write.mode("overwrite").option("header", True).csv(path)

@@ -125,6 +125,10 @@ def derive_cluster_keys(members: DataFrame, blacklist) -> DataFrame:
 # Bronze appends are keyed by batch_id partition (overwrite-in-place), so a
 # replayed batch never double-appends.
 
+# buckets per state table; the manifest records it and a store written with
+# another count is refused on open
+N_BUCKETS = 64
+
 
 class IncrementalState:
     """Versioned bucket-partitioned state with an atomic manifest commit."""
@@ -139,18 +143,18 @@ class IncrementalState:
     # shuffles do.
     BUCKET_COL = {"membership": "component", "key_index": "key"}
 
-    def __init__(self, spark, root: str, n_buckets: int = 64):
+    def __init__(self, spark, root: str):
         import os
 
         self.spark = spark
         self.root = root
-        self.n_buckets = n_buckets
+        self.n_buckets = N_BUCKETS
         self.manifest_path = os.path.join(root, "state_manifest.json")
         self._manifest = self._load()
-        if self._manifest and self._manifest.get("n_buckets") != n_buckets:
+        if self._manifest and self._manifest.get("n_buckets") != self.n_buckets:
             raise ValueError(
                 f"state at {root} was written with n_buckets="
-                f"{self._manifest.get('n_buckets')}, opened with {n_buckets}"
+                f"{self._manifest.get('n_buckets')}, opened with {self.n_buckets}"
             )
         if self._manifest and self._manifest.get("bucket_cols") != self.BUCKET_COL:
             # probing a table by a column it is not bucketed on would miss
@@ -613,9 +617,7 @@ def run_incremental_resolution(
     spark,
     turn_stream: DataFrame,
     store_root: str,
-    config=None,
     trigger_seconds: int = 60,
-    n_buckets: int = 64,
 ):
     """foreachBatch driver: write each micro-batch of signatures to a
     batch_id-partitioned bronze table (idempotent under replay), then fold
@@ -632,18 +634,14 @@ def run_incremental_resolution(
     re-bootstrap a store this layout or :func:`fold_batch` refuses), the
     fold REBUILDS from the full bronze table instead of silently
     restarting from one batch."""
-    import datetime as dt
-
     from identity_matching_spark.operators.blacklist import Blacklist
     from identity_matching_spark.operators.people import build_persons, dedup_signatures
     from identity_matching_spark.operators.signatures import stream_signatures
-    from identity_matching_spark.plans.pipeline import PipelineConfig
 
-    cfg = config or PipelineConfig(reference_time=dt.datetime.now())
     bl = Blacklist.default()
     sigs = stream_signatures(turn_stream)
     bronze = f"{store_root}/signatures_bronze"
-    state = IncrementalState(spark, store_root, n_buckets=n_buckets)
+    state = IncrementalState(spark, store_root)
 
     def _persons_of(sig_df: DataFrame) -> DataFrame:
         return build_persons(
@@ -663,9 +661,7 @@ def run_incremental_resolution(
             # bootstrap — from ALL bronze (which already includes this
             # batch), so a lost manifest recovers the corpus, not one slice
             delta = _persons_of(spark.read.parquet(bronze))
-        fold_batch(
-            state, delta, bl, max_identities=cfg.max_identities, batch_id=batch_id
-        )
+        fold_batch(state, delta, bl, batch_id=batch_id)
 
     return (
         sigs.writeStream.outputMode("append")

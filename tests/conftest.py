@@ -1,6 +1,7 @@
 import pytest
 
 from identity_matching_spark.session import get_spark
+from identity_matching_spark.streaming import incremental
 
 
 @pytest.fixture(scope="session")
@@ -26,3 +27,15 @@ def cc_loop(broadcast_threshold):
     """Run ``connected_components`` on its join loop, whatever the graph size:
     for tests that pin the loop's store, resume and checkpoint behaviour."""
     broadcast_threshold("-1")
+
+
+@pytest.fixture
+def store_buckets(monkeypatch):
+    """Setter for the bucket count of the fold stores a test opens
+    (``incremental.N_BUCKETS``), restored after the test; 8 until set, so
+    test stores stay small."""
+    def set_buckets(n: int) -> None:
+        monkeypatch.setattr(incremental, "N_BUCKETS", n)
+
+    set_buckets(8)
+    return set_buckets

@@ -3,8 +3,8 @@
 tests/test_identities.txt) run through the full Spark pipeline with the
 production blacklist.
 
-Expected (ids differ — the reference numbers persons by input order, we by
-deterministic sort — cluster contents are the contract):
+Expected (ids differ — the reference numbers persons by input order, we
+hash the identity triplet — cluster contents are the contract):
   bob:   email bob@google.com, names {bob,repo1},{bob,repo2} (popular → repo-qualified)
   alice: email alice@google.com, name {alice,repo1}
   dropped: bad-email@domen (single-label domain), admin (ignored name)
@@ -43,7 +43,7 @@ def test_commits_e2e_golden(spark):
     signatures = dedup_signatures(raw)
     assert signatures.count() == 5  # GROUP BY repo,name,email
 
-    persons = build_persons(signatures, blacklist, id_strategy="sequence")
+    persons = build_persons(signatures, blacklist)
     assert persons.count() == 3  # admin + bad-email dropped
 
     result = reduce_people(persons, blacklist, max_identities=20)

@@ -36,10 +36,10 @@ class TestVectorizedMinhash:
 
         from identity_matching_spark.functions import hashing as H
 
-        def ref_bands(text, n_perm, n_bands, shingle_k, seed):
+        def ref_bands(text, n_perm, n_bands, shingle_k):
             if text is None or text == "":
                 return None
-            a, b = H._perm_params(n_perm, seed)
+            a, b = H._perm_params(n_perm)
             r = n_perm // n_bands
 
             def fnv(s):
@@ -69,16 +69,16 @@ class TestVectorizedMinhash:
             cases.append(
                 "".join(rng.choice(string.ascii_letters + "  .'-éü") for _ in range(n))
             )
-        fn = H.make_minhash_bands_udf(64, 32, 2, 7).func
+        fn = H.make_minhash_bands_udf(64, 32, 2).func
         got = fn(pd.Series(cases))
         for text, g in zip(cases, got):
-            assert ref_bands(text, 64, 32, 2, 7) == g, repr(text)
+            assert ref_bands(text, 64, 32, 2) == g, repr(text)
 
         # k=5 long docs with the chunk boundary forced tiny (crosses docs)
         old_chunk = H._CHUNK_SHINGLES
         H._CHUNK_SHINGLES = 100
         try:
-            fn5 = H.make_minhash_bands_udf(64, 16, 5, 7).func
+            fn5 = H.make_minhash_bands_udf(64, 16, 5).func
             docs = [
                 "".join(
                     rng.choice(string.ascii_lowercase + " ")
@@ -88,7 +88,7 @@ class TestVectorizedMinhash:
             ]
             got5 = fn5(pd.Series(docs))
             for t, g in zip(docs, got5):
-                assert ref_bands(t, 64, 16, 5, 7) == g
+                assert ref_bands(t, 64, 16, 5) == g
         finally:
             H._CHUNK_SHINGLES = old_chunk
 
@@ -102,9 +102,10 @@ class TestDistinctTextLsh:
     """lsh_candidate_edges bands per DISTINCT text but must emit the exact
     per-row edge set (src = min id per bucket, bucket_n = member ROWS)."""
 
-    def test_equals_per_row_banding(self, spark):
+    def test_equals_per_row_banding(self, spark, monkeypatch):
         import random
 
+        from identity_matching_spark.functions import hashing
         from identity_matching_spark.functions.hashing import (
             lsh_candidate_edges,
             make_minhash_bands_udf,
@@ -118,15 +119,14 @@ class TestDistinctTextLsh:
         rows += [(1000 + i, "boilerplate text") for i in range(40)]
         df = spark.createDataFrame(rows, "id long, text string")
 
+        monkeypatch.setattr(hashing, "MAX_BUCKET", 30)
         got = {
             (r.src, r.dst)
-            for r in lsh_candidate_edges(
-                df, "text", n_perm=16, n_bands=8, shingle_k=2, max_bucket=30
-            ).collect()
+            for r in lsh_candidate_edges(df, "text", n_perm=16, n_bands=8, shingle_k=2).collect()
         }
 
         # pre-rewrite plan: band every ROW, bucket stats over rows
-        udf = make_minhash_bands_udf(16, 8, 2, 7)
+        udf = make_minhash_bands_udf(16, 8, 2)
         bands = df.select("id", F.explode(udf(F.col("text"))).alias("bucket"))
         stats = bands.groupBy("bucket").agg(
             F.min("id").alias("src"), F.count(F.lit(1)).alias("bucket_n")

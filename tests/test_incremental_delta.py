@@ -10,6 +10,7 @@ streaming/incremental.py).
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from identity_matching_spark.operators.blacklist import Blacklist
@@ -24,13 +25,16 @@ from tests.test_state_store import (
     _member_set,
 )
 
+# every store a test here opens has 8 buckets unless the test sets more
+pytestmark = pytest.mark.usefixtures("store_buckets")
+
 BL = Blacklist.testing()
 
 
 def _fold_batches(spark, root, batches, max_identities=20):
     """Bootstrap an 8-bucket store at ``root`` from batch 0, fold the rest;
     return (state, metrics of the last fold)."""
-    state = IncrementalState(spark, str(root), n_buckets=8)
+    state = IncrementalState(spark, str(root))
     metrics = None
     for batch_id, rows in enumerate(batches):
         metrics = fold_batch(
@@ -150,17 +154,18 @@ def test_closure_walks_a_second_hop_through_a_shared_name(spark, tmp_path):
     assert _member_set(state.read("membership")) == _member_set(want)
 
 
-def test_maintenance_cost_tracks_delta_not_corpus(spark, tmp_path):
+def test_maintenance_cost_tracks_delta_not_corpus(spark, tmp_path, store_buckets):
     """The re-arrival merge groupBy must shuffle colliding ∪ delta rows only,
     and bucket rewrites must touch O(delta) buckets — on a 600-row corpus
     AND on a 60-row corpus the numbers are the same."""
     bl = Blacklist.testing()
+    store_buckets(16)
     for n_groups, root in ((200, tmp_path / "big"), (20, tmp_path / "small")):
         rows = _corpus(n_groups)
         # delta: 3 fresh persons + 2 exact re-arrivals (id collision)
         delta_rows = [(1000 + g, f"fresh {g}", f"g{g}@x.com") for g in range(3)]
         rearrive = [rows[0], rows[3]]
-        state = IncrementalState(spark, str(root), n_buckets=16)
+        state = IncrementalState(spark, str(root))
         fold_batch(state, _full_persons(spark, rows), bl, batch_id=0)
         m = fold_batch(
             state,
@@ -177,17 +182,18 @@ def test_maintenance_cost_tracks_delta_not_corpus(spark, tmp_path):
         assert state.read("membership").count() == n_groups * 3 + 3
 
 
-def test_fold_reads_track_delta_not_corpus(spark, tmp_path):
+def test_fold_reads_track_delta_not_corpus(spark, tmp_path, store_buckets):
     """VERDICT r5 #1: the fold must READ O(delta) buckets, not the corpus.
     Identical deltas over a 10x-larger corpus must probe the same number
     of state buckets, key_index must equal the (component, key) relation
     derived from scratch and membership must hold one row per id."""
     bl = Blacklist.testing()
     reads = {}
+    store_buckets(16)
     for n_groups, root in ((200, tmp_path / "big"), (20, tmp_path / "small")):
         rows = _corpus(n_groups)
         delta_rows = [(1000 + g, f"fresh {g}", f"g{g}@x.com") for g in range(3)]
-        state = IncrementalState(spark, str(root), n_buckets=16)
+        state = IncrementalState(spark, str(root))
         fold_batch(state, _full_persons(spark, rows), bl, batch_id=0)
         m = fold_batch(
             state, _full_persons(spark, delta_rows), bl, batch_id=1,
@@ -214,7 +220,7 @@ def test_popular_rearrival_replaces_its_singleton_row(spark, tmp_path):
         popular_names=frozenset({"popname"}),
     )
     rows = [(1, "popname", "pop@x.com"), (2, "other", "o@x.com")]
-    state = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    state = IncrementalState(spark, str(tmp_path))
     fold_batch(state, _full_persons(spark, rows), bl, batch_id=0)
     # id 1 re-arrives alone: all-popular keys, no closure seeds
     m = fold_batch(
@@ -243,7 +249,7 @@ def test_rearrival_merges_into_one_membership_row(spark, tmp_path):
         popular_names=frozenset({"popname"}),
     )
     rows = [(1, "popname", "pop@x.com"), (2, "n two", "e2@x.com"), (3, "n two", "e3@x.com")]
-    state = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    state = IncrementalState(spark, str(tmp_path))
     fold_batch(state, _full_persons(spark, rows), bl, batch_id=0)
     later = _TS + dt.timedelta(days=1)
     resent = spark.createDataFrame(

@@ -49,17 +49,19 @@ def test_cache_drops_unparseable_time(spark, tmp_path):
     assert names == ["alice"]
 
 
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
+def test_bucketed_join_is_shuffle_free(spark, tmp_path, monkeypatch):
     """Bucketed tables joined on the bucket key must not re-shuffle either
     side (SortMergeJoin over pre-bucketed scans — no Exchange)."""
     from pyspark.sql import functions as F
 
+    from identity_matching_spark.sources import io
     from identity_matching_spark.sources.io import write_bucketed_table
 
     a = spark.range(5000).select(F.col("id"), (F.col("id") % 7).alias("x"))
     b = spark.range(5000).select(F.col("id"), (F.col("id") % 11).alias("y"))
-    write_bucketed_table(a, "t_aliases", ["id"], n_buckets=8, sort_cols=["id"])
-    write_bucketed_table(b, "t_identities", ["id"], n_buckets=8, sort_cols=["id"])
+    monkeypatch.setattr(io, "N_BUCKETS", 8)
+    write_bucketed_table(a, "t_aliases", ["id"])
+    write_bucketed_table(b, "t_identities", ["id"])
     # broadcast would bypass bucketing — force the shuffle-join path
     prev_threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

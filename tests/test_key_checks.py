@@ -94,7 +94,7 @@ class TestVerifyKeys:
             monkeypatch.setattr(cluster_mod.F, "xxhash64", real)
 
 
-def test_fold_refuses_a_planted_surrogate_collision(spark, tmp_path, monkeypatch):
+def test_fold_refuses_a_planted_surrogate_collision(spark, tmp_path, monkeypatch, store_buckets):
     """The fold verifies its re-resolve scope's key surrogates as a
     from-scratch run does: a delta email whose code equals a stored email's
     code would pull that email's cluster into the scope and silently merge
@@ -106,7 +106,7 @@ def test_fold_refuses_a_planted_surrogate_collision(spark, tmp_path, monkeypatch
     from tests.test_state_store import _full_persons
 
     bl = Blacklist.testing()
-    state = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    state = IncrementalState(spark, str(tmp_path))
     stored = [(1, "alice", "a@x.com"), (2, "bob", "b@x.com")]
     fold_batch(state, _full_persons(spark, stored), bl, batch_id=0)
 
@@ -134,7 +134,7 @@ def test_fold_refuses_a_planted_surrogate_collision(spark, tmp_path, monkeypatch
     monkeypatch.setattr(blocking, "key_surrogate", planted)
     with pytest.raises(ValueError, match="surrogate collision"):
         fold_batch(state, _full_persons(spark, [(3, "carol", "c@x.com")]), bl, batch_id=1)
-    assert IncrementalState(spark, str(tmp_path), n_buckets=8).committed_batch() == 0
+    assert IncrementalState(spark, str(tmp_path)).committed_batch() == 0
     with open(state.manifest_path) as fh:
         assert fh.read() == manifest_before
     assert listing() == files_before

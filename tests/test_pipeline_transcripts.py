@@ -104,6 +104,35 @@ def test_similarity_mode_recovers_typos(spark):
     assert r_sim["f1"] >= 0.95, r_sim
 
 
+def test_similarity_mode_keeps_names_with_other_digits_apart(spark):
+    """A fuzzy name match must agree on the name's digits: two names that
+    differ only in their digits stay two people, though Jaro-Winkler puts
+    them above the threshold, while a typo'd name still merges."""
+    from identity_matching_spark.functions.similarity import jaro_winkler
+
+    def conv(i, name, email):
+        return (f"c{i}-{i:09d}", 0, "user", f"name: {name}\nemail: {email}", "",
+                dt.datetime(2025, 1, 1, i))
+
+    t = spark.createDataFrame(
+        [
+            conv(0, "Orla Brennan1601", "ob1601@x.io"),
+            conv(1, "Orla Brennan1602", "ob1602@x.io"),
+            conv(2, "Jonathan Whitfield", "jw@x.io"),
+            conv(3, "Jonthan Whitfield", "jw2@x.io"),
+        ],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    cfg = PipelineConfig(reference_time=dt.datetime(2026, 1, 1), similarity_mode=True)
+    assert jaro_winkler("orla brennan1601", "orla brennan1602") >= cfg.jw_threshold
+    assert jaro_winkler("jonathan whitfield", "jonthan whitfield") >= cfg.jw_threshold
+    out = run_pipeline(spark, t, cfg)
+    comp = {r["name"]: r["component"] for r in out["members"].collect()}
+    assert len(comp) == 4
+    assert comp["orla brennan1601"] != comp["orla brennan1602"]
+    assert comp["jonathan whitfield"] == comp["jonthan whitfield"]
+
+
 def test_cooccurrence_popularity_qualifies_hot_names(spark):
     """A name co-occurring with ≥ threshold distinct emails is computed as
     popular and repo-qualified, so it stops merging across channels
@@ -124,7 +153,6 @@ def test_cooccurrence_popularity_qualifies_hot_names(spark):
     cfg = PipelineConfig(
         reference_time=dt.datetime(2026, 1, 1),
         use_cooccurrence_popularity=True,
-        name_popularity_threshold=5,
     )
     out = run_pipeline(spark, t, cfg)
     persons = out["persons"].collect()

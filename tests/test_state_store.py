@@ -25,6 +25,9 @@ from identity_matching_spark.streaming.incremental import (
     fold_batch,
 )
 
+# every store a test here opens has 8 buckets unless the test sets more
+pytestmark = pytest.mark.usefixtures("store_buckets")
+
 _TS = dt.datetime(2026, 1, 1)
 _SILVER_SCHEMA = (
     "id long, repo string, name string, email string, name_key string, "
@@ -81,10 +84,10 @@ def _last_job_in(spark, group):
 DELTA = [(900, "fresh 0", "g0@x.com"), (901, "fresh 1", "g1@x.com")]
 
 
-def _folded(spark, root, n_buckets=8):
+def _folded(spark, root):
     """A store bootstrapped from a 10-group corpus, then one delta folded."""
     bl = Blacklist.testing()
-    state = IncrementalState(spark, str(root), n_buckets=n_buckets)
+    state = IncrementalState(spark, str(root))
     fold_batch(state, _full_persons(spark, _corpus(10)), bl, batch_id=0)
     fold_batch(state, _full_persons(spark, DELTA), bl, batch_id=1)
     return state
@@ -113,7 +116,7 @@ def test_fold_jobs_inherit_caller_job_group(spark, tmp_path):
     tracker = sc.statusTracker()
     assert not spark.streams.active  # no job outside the fold may interleave
     bl = Blacklist.testing()
-    state = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    state = IncrementalState(spark, str(tmp_path))
     fold_batch(state, _full_persons(spark, _corpus(10)), bl, batch_id=0)
 
     try:
@@ -135,17 +138,17 @@ def test_reader_opened_mid_commit_deletes_nothing(spark, tmp_path, monkeypatch):
     table reads back in full."""
     bl = Blacklist.testing()
     rows = _corpus(10)
-    state = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    state = IncrementalState(spark, str(tmp_path))
     fold_batch(state, _full_persons(spark, rows), bl, batch_id=0)
     # a fresh writer object: its first commit runs the full sweep
-    state = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    state = IncrementalState(spark, str(tmp_path))
 
     orig_replace = os.replace
     readers = []
 
     def open_reader_then_publish(src, dst):
         if dst == state.manifest_path:
-            readers.append(IncrementalState(spark, str(tmp_path), n_buckets=8))
+            readers.append(IncrementalState(spark, str(tmp_path)))
         return orig_replace(src, dst)
 
     monkeypatch.setattr(os, "replace", open_reader_then_publish)
@@ -153,7 +156,7 @@ def test_reader_opened_mid_commit_deletes_nothing(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(os, "replace", orig_replace)
 
     assert len(readers) == 1 and readers[0].committed_batch() == 0
-    reopened = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    reopened = IncrementalState(spark, str(tmp_path))
     assert reopened.committed_batch() == 1
     for table in IncrementalState.TABLES:
         assert reopened.read(table).count() > 0, table
@@ -174,7 +177,7 @@ def test_non_exact_commit_leaves_exact_mode_off(spark, tmp_path):
     from pyspark.sql import functions as F
 
     bl = Blacklist.testing()
-    state = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    state = IncrementalState(spark, str(tmp_path))
     fold_batch(state, _full_persons(spark, _corpus(4)), bl, batch_id=0)
     fold_batch(state, _full_persons(spark, DELTA[:1]), bl, batch_id=1)
     assert state.exact_mode()
@@ -192,7 +195,7 @@ def test_non_exact_commit_leaves_exact_mode_off(spark, tmp_path):
     )
     state.commit(2, writes, exact_mode=False)
     assert not state.exact_mode()
-    assert not IncrementalState(spark, str(tmp_path), n_buckets=8).exact_mode()
+    assert not IncrementalState(spark, str(tmp_path)).exact_mode()
     with pytest.raises(ValueError, match="exact-mode"):
         fold_batch(state, _full_persons(spark, DELTA[1:]), bl, batch_id=3)
 
@@ -201,7 +204,7 @@ def test_commit_drops_stale_leaf_of_crashed_attempt(spark, tmp_path):
     """A crashed attempt at a batch may leave a gen=<batch> leaf in a bucket
     the replay leaves empty; the replay's manifest must not adopt it."""
     bl = Blacklist.testing()
-    state = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    state = IncrementalState(spark, str(tmp_path))
     # 6 ids over 8 buckets: some membership bucket is empty
     fold_batch(state, _full_persons(spark, _corpus(2)), bl, batch_id=0)
     before = {t: state.read(t).count() for t in IncrementalState.TABLES}
@@ -222,7 +225,7 @@ def test_fold_equals_from_scratch_and_replay_skips(spark, tmp_path):
     bl = Blacklist.testing()
     rows = _corpus(20)
     delta = [(1000 + g, f"fresh {g}", f"g{g}@x.com") for g in range(4)]
-    state = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    state = IncrementalState(spark, str(tmp_path))
     fold_batch(state, _full_persons(spark, rows), bl, batch_id=0)
     m = fold_batch(state, _full_persons(spark, delta), bl, batch_id=1)
     assert "skipped_replay" not in m
@@ -233,7 +236,7 @@ def test_fold_equals_from_scratch_and_replay_skips(spark, tmp_path):
     m2 = fold_batch(state, _full_persons(spark, delta), bl, batch_id=1)
     assert m2 == {"skipped_replay": True}
     # a fresh open (new manifest load) sees the same state
-    reopened = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    reopened = IncrementalState(spark, str(tmp_path))
     assert _member_set(reopened.read("membership")) == _member_set(want)
 
 
@@ -247,7 +250,7 @@ def test_crash_before_manifest_publish_keeps_old_state(spark, tmp_path, monkeypa
     bl = Blacklist.testing()
     rows = _corpus(10)
     delta = [(900, "fresh 0", "g0@x.com")]
-    state = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    state = IncrementalState(spark, str(tmp_path))
     fold_batch(state, _full_persons(spark, rows), bl, batch_id=0)
     before = _member_set(state.read("membership"))
 
@@ -270,7 +273,7 @@ def test_crash_before_manifest_publish_keeps_old_state(spark, tmp_path, monkeypa
         assert bool(leaves) == (table != "membership"), table
     with open(state.manifest_path) as fh:
         assert json.load(fh)["batch_id"] == 0
-    crashed = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    crashed = IncrementalState(spark, str(tmp_path))
     assert crashed.committed_batch() == 0
     assert _member_set(crashed.read("membership")) == before
 
@@ -286,7 +289,7 @@ def test_crash_before_manifest_publish_keeps_old_state(spark, tmp_path, monkeypa
     with pytest.raises(RuntimeError, match="simulated"):
         fold_batch(crashed, _full_persons(spark, delta), bl, batch_id=1)
     monkeypatch.setattr(os, "replace", orig_replace)
-    recovered = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    recovered = IncrementalState(spark, str(tmp_path))
     assert recovered.committed_batch() == 0
     assert _member_set(recovered.read("membership")) == before
 
@@ -300,7 +303,7 @@ def test_batch_id_below_committed_refuses(spark, tmp_path):
     """Checkpoint-loss signature (ADVICE r5): ids restarting below the
     committed batch must raise, not silently drop batches."""
     bl = Blacklist.testing()
-    state = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    state = IncrementalState(spark, str(tmp_path))
     fold_batch(state, _full_persons(spark, _corpus(3)), bl, batch_id=0)
     fold_batch(state, _full_persons(spark, [(90, "f", "g0@x.com")]), bl, batch_id=1)
     # equal id: normal replay, skipped
@@ -319,7 +322,7 @@ def test_gc_scoped_to_commit_buckets_full_sweep_on_first_commit(spark, tmp_path)
     from identity_matching_spark.streaming.incremental import _collect_bucket_sets
 
     bl = Blacklist.testing()
-    state = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    state = IncrementalState(spark, str(tmp_path))
     fold_batch(state, _full_persons(spark, _corpus(6)), bl, batch_id=0)
     # find a membership bucket the next (tiny) delta will NOT touch — it
     # only joins the cluster of g0@x.com — and plant an orphan there
@@ -335,7 +338,7 @@ def test_gc_scoped_to_commit_buckets_full_sweep_on_first_commit(spark, tmp_path)
 
     fold_batch(state, _full_persons(spark, delta), bl, batch_id=1)
     assert os.path.isdir(orphan), "commit-time GC must skip untouched buckets"
-    writer = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    writer = IncrementalState(spark, str(tmp_path))
     assert os.path.isdir(orphan), "opening a store must delete nothing"
     fold_batch(writer, _full_persons(spark, delta), bl, batch_id=2)
     assert not os.path.isdir(orphan), "the first commit must sweep orphans"
@@ -351,7 +354,7 @@ def _snapshot(root, manifest_path):
 def _edit_manifest(spark, root, edit):
     """Bootstrap an 8-bucket store at ``root``, apply ``edit`` to its
     manifest dict; return the manifest path."""
-    state = IncrementalState(spark, str(root), n_buckets=8)
+    state = IncrementalState(spark, str(root))
     fold_batch(state, _full_persons(spark, _corpus(10)), Blacklist.testing(), batch_id=0)
     with open(state.manifest_path) as fh:
         man = json.load(fh)
@@ -366,7 +369,7 @@ def test_store_without_exact_marker_is_refused(spark, tmp_path):
     anything is read or written."""
     manifest_path = _edit_manifest(spark, tmp_path, lambda man: man.pop("exact_mode"))
     before = _snapshot(tmp_path, manifest_path)
-    old = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    old = IncrementalState(spark, str(tmp_path))
     assert not old.exact_mode()
     with pytest.raises(ValueError, match="exact-mode"):
         fold_batch(old, _full_persons(spark, DELTA), Blacklist.testing(), batch_id=1)
@@ -397,7 +400,7 @@ def test_store_with_other_layout_is_refused(spark, tmp_path):
         manifest_path = _edit_manifest(spark, root, edit)
         before = _snapshot(root, manifest_path)
         with pytest.raises(ValueError, match="layout"):
-            IncrementalState(spark, str(root), n_buckets=8)
+            IncrementalState(spark, str(root))
         assert _snapshot(root, manifest_path) == before, name
 
 
@@ -430,13 +433,14 @@ def _leaf_rows(spark, state, table, buckets):
 
 
 @pytest.mark.parametrize("threshold", [None, "5"])
-def test_state_reads_start_no_listing_job(spark, tmp_path, threshold):
+def test_state_reads_start_no_listing_job(spark, tmp_path, threshold, store_buckets):
     """Spark lists more than the parallel-discovery threshold's paths with a
     job; the store opens its leaves in groups under it, so building a frame
     of a whole table, or of more than 32 buckets, starts no job — also with
     the threshold lowered so that three or more groups are unioned — and
     reads the same rows as the leaves one by one."""
-    state = IncrementalState(spark, str(tmp_path), n_buckets=64)
+    store_buckets(64)
+    state = IncrementalState(spark, str(tmp_path))
     fold_batch(state, _full_persons(spark, _corpus(60)), Blacklist.testing(), batch_id=0)
     member_buckets = sorted(int(b) for b in state._manifest["tables"]["membership"])
     assert len(member_buckets) > 32
@@ -466,7 +470,7 @@ def test_state_reads_start_no_listing_job(spark, tmp_path, threshold):
 def test_store_without_manifest_raises_on_read(spark, tmp_path):
     """Reading a root that holds no committed state names the root instead
     of failing inside the schema lookup."""
-    state = IncrementalState(spark, str(tmp_path), n_buckets=8)
+    state = IncrementalState(spark, str(tmp_path))
     with pytest.raises(ValueError, match="no committed state"):
         state.read("membership")
     with pytest.raises(ValueError, match=re.escape(str(tmp_path))):

@@ -1,0 +1,18 @@
+"""Gate: no option that only its default reaches. ``tools/unused_params.py``
+lists the defaulted parameters (and dataclass fields) of public package
+functions that no caller outside ``tests/`` sets, and exits non-zero when one
+is not on its allowlist or an allowlist entry lists nothing."""
+
+import os
+import subprocess
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_every_default_only_option_is_allowlisted():
+    run = subprocess.run(
+        [sys.executable, os.path.join(ROOT, "tools", "unused_params.py")],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert run.returncode == 0, run.stdout + run.stderr

@@ -1,5 +1,6 @@
 #!/usr/bin/env python
-"""List defaulted parameters of public package functions that no caller sets.
+"""List defaulted parameters of public package functions that no caller sets,
+and fail on any that is not on the allowlist below.
 
 An option that only its default reaches is a branch nothing runs: fold it
 into a constant. This scans the ``identity_matching_spark`` package for
@@ -8,15 +9,21 @@ whose names do not start with ``_``; a class's ``__init__`` is its
 constructor) and prints every parameter with a default that no call in the
 package, ``perfbench/``, ``tools/``, ``bench/``, ``bench.py`` or
 ``__spark_entry__.py`` sets, by keyword or by position. Callers under
-``tests/`` do not count.
+``tests/`` do not count. The fields with defaults of public dataclasses
+(``PipelineConfig``) are checked the same way against the keywords of
+``ClassName(...)`` calls.
 
 Calls are matched to functions by name only (``f(...)``, ``x.f(...)``;
 ``ClassName(...)`` for ``__init__``), so a call of another function of the
 same name counts as setting the parameter, and a call that passes
 ``*args``/``**kwargs`` counts as setting every parameter from that point.
 The list can therefore miss an unused option, but does not name one that a
-caller sets directly. Prints one ``path:line function(parameter)`` line per
-parameter, then their count.
+caller sets directly. A dataclass field set only through a ``**mapping``
+is listed (the mapping's keys are not read).
+
+Prints one ``path:line function(parameter)`` line per parameter (allowed
+ones with their reason), then their count. Exits 1 when a listed parameter
+is not on ``ALLOWED`` or an ``ALLOWED`` entry lists nothing (remove it).
 
 Usage: python tools/unused_params.py
 """
@@ -31,6 +38,23 @@ from collections import defaultdict
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "identity_matching_spark"
 CALLER_PATHS = (PACKAGE, "perfbench", "tools", "bench", "bench.py", "__spark_entry__.py")
+
+# options a user really sets, though no caller in this repo does; keyed by
+# module (dotted, under the package) and the printed label
+ALLOWED = {
+    "cli.main(argv)": "the console entry point reads sys.argv when argv is None",
+    "plans.pipeline.run_pipeline(external_ids)":
+        "J4 external matcher: a deployment passes its id lookup table",
+    "operators.signatures.stream_signatures(watermark)":
+        "event-time deployment setting: how late a turn may arrive",
+    "operators.signatures.stream_signatures(session_gap)":
+        "event-time deployment setting: idle time that closes a conversation",
+    "streaming.incremental.run_incremental_resolution(trigger_seconds)":
+        "stream deployment setting: micro-batch interval",
+    "sources.io.export_jdbc(mode)": "S8 parquet->SQL export, run only with a JDBC driver jar",
+    "sources.io.export_jdbc(properties)": "S8 parquet->SQL export: connection properties",
+    "sources.io.export_jdbc(batch_size)": "S8 parquet->SQL export: insert batching",
+}
 
 
 def _py_files(rel: str) -> list[str]:
@@ -65,13 +89,29 @@ def _defaulted(fn: ast.FunctionDef, is_method: bool) -> list[tuple[str, int | No
     return out
 
 
+def _is_dataclass(cls: ast.ClassDef) -> bool:
+    for d in cls.decorator_list:
+        f = d.func if isinstance(d, ast.Call) else d
+        if isinstance(f, ast.Name) and f.id == "dataclass":
+            return True
+    return False
+
+
+def _fields(cls: ast.ClassDef) -> list[tuple[str, int | None]]:
+    """(name, positional index) of each dataclass field with a default."""
+    fields = [n for n in cls.body if isinstance(n, ast.AnnAssign) and isinstance(n.target, ast.Name)]
+    return [(f.target.id, i) for i, f in enumerate(fields) if f.value is not None]
+
+
 def _public_functions():
-    """Yield (path, line, call name, label, defaulted parameters)."""
+    """Yield (path, line, call name, label, defaulted parameters, is field)."""
     for path in _py_files(PACKAGE):
         for node in _parse(path).body:
             if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
-                yield path, node.lineno, node.name, node.name, _defaulted(node, False)
+                yield path, node.lineno, node.name, node.name, _defaulted(node, False), False
             elif isinstance(node, ast.ClassDef) and not node.name.startswith("_"):
+                if _is_dataclass(node):
+                    yield path, node.lineno, node.name, node.name, _fields(node), True
                 for item in node.body:
                     if not isinstance(item, ast.FunctionDef):
                         continue
@@ -82,14 +122,15 @@ def _public_functions():
                     else:
                         call = item.name
                     label = f"{node.name}.{item.name}"
-                    yield path, item.lineno, call, label, _defaulted(item, True)
+                    yield path, item.lineno, call, label, _defaulted(item, True), False
 
 
-def _set_by_calls() -> dict[str, tuple[set[str], int]]:
-    """Per call name: the keywords any call passes and the largest number of
-    leading positional arguments any call passes (a starred argument or
-    ``**kwargs`` counts as every position/keyword: large sentinel)."""
-    seen: dict[str, list] = defaultdict(lambda: [set(), 0])
+def _set_by_calls() -> dict[str, tuple[set[str], int, bool]]:
+    """Per call name: the keywords any call passes, the largest number of
+    leading positional arguments any call passes (a starred argument counts
+    as every position: large sentinel) and whether any call passes
+    ``**kwargs``."""
+    seen: dict[str, list] = defaultdict(lambda: [set(), 0, False])
     everything = 1 << 30
     for rel in CALLER_PATHS:
         for path in _py_files(rel):
@@ -114,30 +155,43 @@ def _set_by_calls() -> dict[str, tuple[set[str], int]]:
                 entry[1] = max(entry[1], n_pos)
                 for kw in node.keywords:
                     if kw.arg is None:  # **kwargs
-                        entry[0].add("*")
-                        entry[1] = everything
+                        entry[2] = True
                     else:
                         entry[0].add(kw.arg)
-    return {k: (v[0], v[1]) for k, v in seen.items()}
+    return {k: (v[0], v[1], v[2]) for k, v in seen.items()}
 
 
-def main() -> None:
+def _allow_key(path: str, label: str, name: str) -> str:
+    module = os.path.relpath(path, os.path.join(ROOT, PACKAGE))[: -len(".py")]
+    return f"{module.replace(os.sep, '.')}.{label}({name})"
+
+
+def main() -> int:
     if len(sys.argv) != 1:
         sys.exit(__doc__.strip().splitlines()[-1])
     calls = _set_by_calls()
     unused = []
-    for path, line, call, label, params in _public_functions():
-        keywords, n_pos = calls.get(call, (set(), 0))
+    for path, line, call, label, params, is_field in _public_functions():
+        keywords, n_pos, double_star = calls.get(call, (set(), 0, False))
         for name, index in params:
-            if "*" in keywords or name in keywords:
+            if name in keywords or (double_star and not is_field):
                 continue
             if index is not None and index < n_pos:
                 continue
-            unused.append(f"{os.path.relpath(path, ROOT)}:{line} {label}({name})")
-    for row in sorted(unused):
-        print(row)
-    print(f"{len(unused)} defaulted parameters no caller outside tests/ sets")
+            key = _allow_key(path, label, name)
+            unused.append((f"{os.path.relpath(path, ROOT)}:{line} {label}({name})", key))
+    bad = 0
+    for row, key in sorted(unused):
+        reason = ALLOWED.get(key)
+        print(f"{row}  [allowed: {reason}]" if reason else f"{row}  NOT ALLOWED")
+        bad += reason is None
+    stale = sorted(set(ALLOWED) - {key for _, key in unused})
+    for key in stale:
+        print(f"allowlist entry {key} lists nothing: remove it")
+    print(f"{len(unused)} defaulted parameters no caller outside tests/ sets "
+          f"({bad} not allowed, {len(stale)} stale allowlist entries)")
+    return 1 if bad or stale else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
