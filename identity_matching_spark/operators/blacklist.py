@@ -22,9 +22,13 @@ Each set's literal Columns are built once per ``Blacklist`` instance, on
 first use, in sorted order: a literal costs several py4j round trips to
 create, and a pipeline or fold builds the same predicate several times (the
 popular-name one six times per fold), so rebuilding them dominated plan
-construction. ``Column.isin`` forwards Column arguments as they are, so
-later predicates create no literal, and the sorted ``In`` list no longer
-follows the Python hash seed.
+construction. The sorted ``In`` list no longer follows the Python hash seed.
+``Column.isin`` still sends one py4j command per literal to build the JVM
+list, so the built predicate is kept too, keyed by the set and the column's
+text (``str(col)``, one command): a repeat build of the same predicate costs
+that one command. The text of a DataFrame-bound column (``df["x"]``) equals
+that of ``F.col("x")``, so the package passes name-based columns only; a
+bound one cached first would fail analysis on another frame, loudly.
 """
 
 from __future__ import annotations
@@ -108,11 +112,20 @@ class Blacklist:
         """Set name → its entries' literal Columns, filled on first use."""
         return {}
 
+    @cached_property
+    def _predicates(self) -> dict[tuple[str, str], Column]:
+        """(set name, column text) → the built membership predicate."""
+        return {}
+
     def _isin(self, col: Column, name: str) -> Column:
-        lits = self._literals.get(name)
-        if lits is None:
-            lits = self._literals[name] = tuple(F.lit(e) for e in sorted(getattr(self, name)))
-        return col.isin(*lits) if lits else F.lit(False)
+        key = (name, str(col))
+        pred = self._predicates.get(key)
+        if pred is None:
+            lits = self._literals.get(name)
+            if lits is None:
+                lits = self._literals[name] = tuple(F.lit(e) for e in sorted(getattr(self, name)))
+            pred = self._predicates[key] = col.isin(*lits) if lits else F.lit(False)
+        return pred
 
     # --- predicates over a (already cleaned) email column -----------------
 

@@ -366,10 +366,15 @@ def reduce_people(
         """No-cap name edges: star per (name_key, ext) + J3 star across the
         block when exactly two ext groups exist and one is anonymous.
         J3 edges are tagged: they are the only edges that can mix external
-        ids transitively, and conflict resolution below removes them."""
+        ids transitively, and conflict resolution below removes them.
+        Without external ids every block's ext is the one literal
+        ``EMPTY_EXT``, so no block holds two ext groups: the J3 branch is
+        provably empty and is not built."""
         per_ext = star_edges(b, ["name_key", "ext"], id_col="comp").withColumn(
             "is_j3", F.lit(False)
         )
+        if comp_ext is None:
+            return per_ext
         j3_keys = (
             b.groupBy("name_key")
             .agg(
@@ -410,9 +415,9 @@ def reduce_people(
         # bench corpus, a 10.7 s straggler stage. Output-identical by the
         # argument above (pinned by test_single_component_blocks_pruned).
         #
-        # barrier: block_input fans out into safe/unsafe × star/J3 consumers
-        # (5 references) — without it each consumer recomputes the
-        # blocks⋈weights⋈totals shuffle chain
+        # barrier: block_input fans out into the safe star, the unsafe
+        # greedy and, with external ids, the J3 star's consumers — without
+        # it each consumer recomputes the blocks⋈weights⋈totals shuffle chain
         block_input = (
             block_input.join(totals, "name_key")
             .where(F.col("_nc") >= 2)

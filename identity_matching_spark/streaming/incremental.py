@@ -21,6 +21,9 @@ Design (Spark-first):
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -101,7 +104,9 @@ def derive_cluster_keys(members: DataFrame, blacklist) -> DataFrame:
 #
 # * the table writes run concurrently (one driver thread each, carrying the
 #   caller's job group and tags); each table's rows are repartitioned on
-#   their bucket first, so every written leaf holds exactly one part file;
+#   their bucket into min(affected buckets, cores) tasks first, so every
+#   written leaf holds exactly one part file and the leaves are written on
+#   every core;
 # * the commit waits for all writes and re-raises the first failure before
 #   it touches the manifest, so no write outlives commit();
 # * crash anywhere before the manifest replace → the old manifest still
@@ -277,13 +282,20 @@ class IncrementalState:
                 if live.get(table, {}).get(str(b)) != batch_id:
                     shutil.rmtree(self._leaf(table, b, batch_id), ignore_errors=True)
 
+        # the tables write at once: each gets its share of the cores
+        cores = max(1, self.spark.sparkContext.defaultParallelism // len(self.TABLES))
+
         def write(table: str) -> None:
+            content, affected = writes[table]
             (
-                writes[table][0]
-                .withColumn("bucket", self.bucket_expr(table))
+                content.withColumn("bucket", self.bucket_expr(table))
                 .withColumn("gen", F.lit(batch_id))
-                # every row of a bucket in one task → one part file per leaf
-                .repartition("bucket")
+                # every row of a bucket in one task → one part file per leaf;
+                # AQE coalesces a shuffle without an explicit count to one
+                # task here (a commit moves little data), which then writes
+                # every leaf in turn, so the count spreads the leaves over
+                # the table's cores
+                .repartition(max(1, min(len(affected), cores)), "bucket")
                 .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("bucket", "gen")
@@ -374,23 +386,22 @@ class IncrementalState:
 def _collect_bucket_sets(state: IncrementalState, **frames: DataFrame) -> dict[str, list[int]]:
     """Distinct buckets of delta-scoped frames (small by contract) in one
     round trip: ``table=frame`` → ``{table: buckets}``, each frame holding
-    the table's bucket column and tagged with its name inside one
-    distinct."""
+    the table's bucket column and tagged with its name. The rows come back
+    through Arrow and are deduplicated on the driver: a distinct would add
+    a shuffle, which AQE runs as a job of its own."""
     from functools import reduce
 
     tagged = [
         df.select(F.lit(table).alias("t"), state.bucket_expr(table).alias("b"))
         for table, df in frames.items()
     ]
-    out: dict[str, list[int]] = {table: [] for table in frames}
-    for r in reduce(DataFrame.union, tagged).distinct().collect():
-        out[r["t"]].append(r["b"])
-    return out
+    rows = reduce(DataFrame.union, tagged).toPandas()
+    return {table: sorted(set(rows.loc[rows["t"] == table, "b"].tolist())) for table in frames}
 
 
 def _touched_closure_bucketed(
     state: IncrementalState, delta: DataFrame, blacklist, max_hops: int = 25
-) -> tuple[DataFrame, DataFrame, int, int]:
+) -> tuple[dict[int, int], DataFrame, int, int]:
     """Fixpoint of the clusters reachable from the delta's blocking keys
     over the bipartite (component, key) relation. A hop is two probes that
     read ONLY matching buckets: the frontier keys' key_index buckets give
@@ -398,37 +409,46 @@ def _touched_closure_bucketed(
     member rows, whose blocking keys are the next frontier. So the fold's
     read volume tracks the delta the way its shuffles already do. A bucket
     is a pure function of the equi-join key, so probing matching buckets
-    loses no join partner. Returns (touched components, their member rows —
-    the re-resolve scope, hops, buckets_read); raises if the closure has
+    loses no join partner.
+
+    Each probe collects its delta-sized rows with their buckets through
+    Arrow in one action — the frontier's (key, bucket) and the new
+    components' (component, bucket), deduplicated on the driver, as a
+    distinct would add a shuffle job — and hands them back to the next
+    probe as a local relation to broadcast, so a hop runs two collects plus
+    the member-rows barrier, and the touched set lives on the driver. Returns
+    (touched — {component: its membership bucket} —, their member rows —
+    the re-resolve scope —, hops, buckets_read); raises if the closure has
     not converged after ``max_hops`` (pathologically chained corpora)."""
-    touched = state.spark.createDataFrame([], "component long")
+    spark = state.spark
+    touched: dict[int, int] = {}
     scope = state.read_buckets("membership", [])
     rows = delta
     buckets_read = 0
     for hops in range(max_hops):
         frontier = (
             blocking_keys(rows, blacklist, "id")
-            .select("key")
-            .distinct()
-            .localCheckpoint(eager=False)
+            .select("key", state.bucket_expr("key_index").alias("b"))
+            .toPandas()
+            .drop_duplicates()
         )
-        kb = _collect_bucket_sets(state, key_index=frontier)["key_index"]
-        if not kb:
+        if frontier.empty:
             return touched, scope, hops, buckets_read
-        new_comps = (
+        kb = sorted(set(frontier["b"].tolist()))
+        comps = (
             state.read_buckets("key_index", kb)
-            .join(F.broadcast(frontier), "key")
-            .select("component")
-            .distinct()
-            .join(F.broadcast(touched), "component", "left_anti")
-            .localCheckpoint(eager=False)
+            .join(F.broadcast(spark.createDataFrame(frontier[["key"]], "key long")), "key")
+            .select("component", state.bucket_expr("membership").alias("b"))
+            .toPandas()
+            .drop_duplicates()
         )
-        # new_comps is empty exactly when its bucket list is: one round trip
-        mb = _collect_bucket_sets(state, membership=new_comps)["membership"]
+        comps = comps[~comps["component"].isin(set(touched))]
+        mb = sorted(set(comps["b"].tolist()))
         buckets_read += len(kb) + len(mb)
         if not mb:
             return touched, scope, hops, buckets_read
-        touched = touched.union(new_comps).localCheckpoint(eager=False)
+        touched.update(zip(comps["component"].tolist(), comps["b"].tolist()))
+        new_comps = spark.createDataFrame(comps[["component"]], "component long")
         rows = (
             state.read_buckets("membership", mb)
             .join(F.broadcast(new_comps), "component", "semi")
@@ -439,6 +459,28 @@ def _touched_closure_bucketed(
         f"cluster closure did not converge in {max_hops} hops — "
         "fall back to a full re-resolution for this batch"
     )
+
+
+def _observed_rows(observation) -> int:
+    """The ``rows`` an Observation counted. A frame AQE finds empty at run
+    time is pruned from the plan with its observation, which then completes
+    with an empty row that PySpark cannot convert: that frame had 0 rows."""
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        return observation.get["rows"]
+    except Py4JJavaError:
+        return 0
+
+
+@contextmanager
+def _job_tag(spark, tag: str):
+    """Tag every Spark job started in the block (this thread) with ``tag``."""
+    spark.addTag(tag)
+    try:
+        yield
+    finally:
+        spark.removeTag(tag)
 
 
 def fold_batch(
@@ -470,6 +512,9 @@ def fold_batch(
       collected by the writer after its publish, never by a reader opening
       the store.
 
+    The jobs of a fold's three steps carry the job tags ``fold:closure``,
+    ``fold:re-resolve`` and ``fold:commit``.
+
     The first batch bootstraps the store with a from-scratch
     ``reduce_people``. Every later batch requires the manifest's
     ``exact_mode`` marker (:meth:`IncrementalState.exact_mode`): a store
@@ -480,9 +525,13 @@ def fold_batch(
     note; pinned by tests/test_incremental_delta.py).
     ``metrics['buckets_read']`` counts every bucket the fold reads (closure
     probes plus the membership and key_index rewrite reads) so tests can
-    assert reads track the delta, not the corpus.
+    assert reads track the delta, not the corpus. With ``collect_metrics``
+    the row counts (``scope_rows``, ``delta_rows``, ``merge_rows``) come
+    from ``Observation``s on actions the fold runs anyway: no count job.
     """
     import logging
+
+    from pyspark.sql import Observation
 
     from identity_matching_spark.operators.cluster import reduce_people
 
@@ -517,6 +566,7 @@ def fold_batch(
             "mode, external ids, or a layout that predates the marker) — "
             "re-resolve the corpus from scratch into a fresh store"
         )
+    spark = state.spark
     delta = delta_persons.localCheckpoint(eager=False)
 
     if not state.exists():
@@ -532,36 +582,44 @@ def fold_batch(
             },
             exact_mode=True,
         )
-        return {"bootstrap": True, "delta_rows": delta.count() if collect_metrics else None}
+        return {"bootstrap": True}
 
-    metrics: dict = {}
+    observations: dict[str, Observation] = {}
+
+    def observed(df: DataFrame, metric: str) -> DataFrame:
+        """``df``, counting its rows into ``metrics[metric]`` when metrics
+        are collected; ``df`` must feed exactly one action's plan directly
+        (an Observation reads 0 through a lazy checkpoint)."""
+        if not collect_metrics:
+            return df
+        observations[metric] = Observation()
+        return df.observe(observations[metric], F.count(F.lit(1)).alias("rows"))
+
     delta_ids = delta.select("id").distinct().localCheckpoint(eager=False)
 
     # --- touched closure, which reads the scope (bucket probes) -----------
-    touched, scope, hops, buckets_read = _touched_closure_bucketed(state, delta, blacklist)
-    metrics["hops"] = hops
+    with _job_tag(spark, "fold:closure"):
+        touched, scope, hops, buckets_read = _touched_closure_bucketed(state, delta, blacklist)
+    metrics: dict = {"hops": hops, "touched_clusters": len(touched)}
 
-    # --- re-resolve the scoped slice --------------------------------------
-    scope = scope.drop("component", "external_id")
-    scoped = scope.unionByName(delta).dropDuplicates(["id"]).localCheckpoint(eager=False)
-    # keys verified as in a from-scratch run: a surrogate collision must raise, not merge
-    rescoped = reduce_people(scoped, blacklist, max_identities=max_identities)
-    rescoped = rescoped.localCheckpoint(eager=False)
-    if collect_metrics:
-        metrics["touched_clusters"] = touched.count()
-        metrics["scope_rows"] = scoped.count()
-        metrics["delta_rows"] = delta.count()
-
-    # --- affected buckets of both tables: one collect ---------------------
-    # membership: the touched components, whose rows are replaced, and the
-    # rescoped ones; key_index: the scope's keys, which are the keys of the
-    # touched components' old rows (to drop) and of the new rows alike
-    affected = _collect_bucket_sets(
-        state,
-        membership=touched.unionByName(rescoped.select("component")),
-        key_index=blocking_keys(scoped, blacklist, "id").select("key"),
-    )
-    member_buckets = affected["membership"]
+    # --- re-resolve the scoped slice, then its affected buckets -----------
+    with _job_tag(spark, "fold:re-resolve"):
+        scope = scope.drop("component", "external_id")
+        scoped = scope.unionByName(delta).dropDuplicates(["id"]).localCheckpoint(eager=False)
+        # keys verified as in a from-scratch run: a surrogate collision must raise, not merge
+        rescoped = reduce_people(scoped, blacklist, max_identities=max_identities)
+        rescoped = rescoped.localCheckpoint(eager=False)
+        # membership: the touched components (their buckets are known from
+        # the closure), whose rows are replaced, and the rescoped ones — one
+        # row per scoped person; key_index: the scope's keys, which are the
+        # keys of the touched components' old rows (to drop) and of the new
+        # rows alike
+        affected = _collect_bucket_sets(
+            state,
+            membership=observed(rescoped, "scope_rows").select("component"),
+            key_index=blocking_keys(scoped, blacklist, "id").select("key"),
+        )
+    member_buckets = sorted(set(affected["membership"]) | set(touched.values()))
     kidx_buckets = affected["key_index"]
 
     # --- membership: old rows minus the rescoped ids, plus the new rows ---
@@ -572,10 +630,11 @@ def fold_batch(
     # components. The same read gives the old rows of ids colliding with
     # the delta, merged with their new rows (delta-sized groupBy).
     old_members = state.read_buckets("membership", member_buckets)
-    merge_input = (
+    merge_input = observed(
         old_members.join(F.broadcast(delta_ids), "id", "semi")
         .drop("component", "external_id")
-        .unionByName(delta)
+        .unionByName(observed(delta, "delta_rows")),
+        "merge_rows",
     )
     merged = merge_input.groupBy(
         "id", "repo", "name", "email", "name_key", "popular_name"
@@ -584,32 +643,36 @@ def fold_batch(
         scope.join(F.broadcast(delta_ids), "id", "left_anti")
         .unionByName(merged)
         .join(F.broadcast(rescoped), "id")
-        .localCheckpoint(eager=False)
     )
     member_content = old_members.join(
         F.broadcast(rescoped.select("id")), "id", "left_anti"
     ).unionByName(new_members)
-    metrics["merge_rows"] = merge_input.count() if collect_metrics else None
 
     # --- key_index: old rows minus the touched components', plus new -----
+    # The new rows' keys are the scoped rows' own: an id is a hash of the
+    # (repo, name, email) its keys derive from, so a merged row keeps them.
+    touched_comps = spark.createDataFrame(
+        pd.DataFrame({"component": list(touched)}, dtype="int64"), "component long"
+    )
     kidx_content = (
         state.read_buckets("key_index", kidx_buckets)
-        .join(F.broadcast(touched), "component", "left_anti")
-        .unionByName(derive_cluster_keys(new_members, blacklist))
+        .join(F.broadcast(touched_comps), "component", "left_anti")
+        .unionByName(derive_cluster_keys(scoped.join(F.broadcast(rescoped), "id"), blacklist))
     )
 
+    with _job_tag(spark, "fold:commit"):
+        state.commit(
+            batch_id,
+            {
+                "membership": (member_content, member_buckets),
+                "key_index": (kidx_content, kidx_buckets),
+            },
+            exact_mode=True,
+        )
     if collect_metrics:
+        metrics.update({metric: _observed_rows(o) for metric, o in observations.items()})
         metrics["member_buckets"] = len(member_buckets)
         metrics["buckets_read"] = buckets_read + len(member_buckets) + len(kidx_buckets)
-
-    state.commit(
-        batch_id,
-        {
-            "membership": (member_content, member_buckets),
-            "key_index": (kidx_content, kidx_buckets),
-        },
-        exact_mode=True,
-    )
     return metrics
 
 

@@ -167,10 +167,9 @@ def test_empty_sets_give_literal_false(spark):
         assert _raw(spark, getattr(b, pred), [None, "", "x@y.z"]) == [False] * 3, pred
 
 
-def test_second_build_reuses_literals(spark, monkeypatch):
-    """A predicate built again on the same instance sends its literals'
-    Columns as they are: fewer than half the py4j commands of the first
-    build, which creates one literal per entry."""
+def _count_commands(monkeypatch):
+    """Wrap ``GatewayClient.send_command``; return the list whose one item
+    counts the py4j commands sent since (reset it by assigning 0)."""
     from py4j.java_gateway import GatewayClient
 
     sent = [0]
@@ -180,13 +179,34 @@ def test_second_build_reuses_literals(spark, monkeypatch):
         sent[0] += 1
         return send(self, *args, **kwargs)
 
-    b = Blacklist.default()
-    col = F.col("s")  # created before counting starts
     monkeypatch.setattr(GatewayClient, "send_command", counting)
+    return sent
+
+
+def test_second_build_reuses_literals(spark, monkeypatch):
+    """A predicate built on the same instance over another column sends
+    its literals' Columns as they are: fewer than half the py4j commands of
+    the first build, which creates one literal per entry."""
+    b = Blacklist.default()
+    cols = [F.col("s"), F.col("t")]  # created before counting starts
+    sent = _count_commands(monkeypatch)
     counts = []
-    for _ in range(2):
+    for col in cols:
         sent[0] = 0
         b.is_popular_name(col)
         counts.append(sent[0])
     assert counts[0] > len(b.popular_names)
     assert counts[1] < counts[0] / 2, counts
+
+
+def test_repeat_predicate_is_built_once(spark, monkeypatch):
+    """The same predicate over the same column, built again, costs the one
+    command that reads the column's text, and is the same ``In``."""
+    b = Blacklist.default()
+    cols = [F.col("name_key"), F.col("name_key")]  # created before counting starts
+    first = b.is_popular_name(cols[0])
+    sent = _count_commands(monkeypatch)
+    again = b.is_popular_name(cols[1])
+    assert sent[0] <= 5, sent
+    assert str(again) == str(first)
+    assert str(first).startswith("Column<'in(name_key, ")

@@ -133,6 +133,37 @@ def test_anonymous_group_merges_into_single_external_id(spark):
     assert ext_by_comp[1] == "bob_gh"
 
 
+@pytest.mark.parametrize("max_identities", [None, 100])
+def test_j3_star_is_built_only_with_external_ids(spark, monkeypatch, max_identities):
+    """Without external ids every block's ext is the one literal EMPTY_EXT,
+    so the J3 star (one block key, ``name_key`` alone) could emit nothing:
+    reduce_people does not build it. With them it is built, and the J3
+    merge still happens."""
+    from identity_matching_spark.operators import cluster
+
+    star_keys = []
+    star = cluster.star_edges
+
+    def recording(df, key_cols, id_col="id"):
+        star_keys.append(tuple(key_cols))
+        return star(df, key_cols, id_col)
+
+    monkeypatch.setattr(cluster, "star_edges", recording)
+    rows = [(1, "Bob", "a@x.com"), (2, "Bob", "b@x.com"), (3, "Bob", "c@x.com")]
+    bl = Blacklist.testing()
+    plain = reduce_people(_persons(spark, rows), bl, max_identities=max_identities)
+    assert ("name_key",) not in star_keys, star_keys
+    assert _clusters(plain)[0] == {frozenset({1, 2, 3})}
+
+    star_keys.clear()
+    ext = spark.createDataFrame([("a@x.com", "bob_gh")], "email string, external_id string")
+    with_ext = reduce_people(
+        _persons(spark, rows), bl, max_identities=max_identities, external_ids=ext
+    )
+    assert star_keys.count(("name_key",)) == 1, star_keys
+    assert _clusters(with_ext) == ({frozenset({1, 2, 3})}, {1: "bob_gh"})
+
+
 # --- primary values (matching_test.go:317-407) ---------------------------
 
 

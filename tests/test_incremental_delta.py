@@ -15,7 +15,12 @@ from pyspark.sql import functions as F
 
 from identity_matching_spark.operators.blacklist import Blacklist
 from identity_matching_spark.operators.cluster import reduce_people
-from identity_matching_spark.streaming.incremental import IncrementalState, fold_batch
+from identity_matching_spark.streaming.incremental import (
+    IncrementalState,
+    _touched_closure_bucketed,
+    blocking_keys,
+    fold_batch,
+)
 from tests.test_state_store import (
     _SILVER_SCHEMA,
     _TS,
@@ -323,6 +328,23 @@ def test_streaming_driver_folds_incrementally(spark, tmp_path):
     assert _member_set(got) == _member_set(want)
 
 
+def test_empty_delta_folds_to_zero_metrics(spark, tmp_path):
+    """An empty batch folds as a no-op, and its metrics read 0: the frames
+    the fold's Observations count are empty, which AQE prunes from the
+    plans they ride on."""
+    rows = [(1, "n one", "e1@x.com"), (2, "n one", "e2@x.com")]
+    state, _ = _fold_batches(spark, tmp_path, [rows])
+    before = _member_set(state.read("membership"))
+    # batch 0 is a replay here, skipped
+    state, metrics = _fold_batches(spark, tmp_path, [rows, []])
+    assert {k: metrics[k] for k in ("hops", "touched_clusters", "scope_rows",
+                                    "delta_rows", "merge_rows", "buckets_read")} == {
+        "hops": 0, "touched_clusters": 0, "scope_rows": 0, "delta_rows": 0,
+        "merge_rows": 0, "buckets_read": 0,
+    }
+    assert _member_set(state.read("membership")) == before
+
+
 def test_popular_key_rearrival_no_duplicate_rows(spark, tmp_path):
     """A re-arriving person whose keys are ALL popular seeds no closure, so
     its old membership row is untouched while the scope run also resolves
@@ -341,3 +363,67 @@ def test_popular_key_rearrival_no_duplicate_rows(spark, tmp_path):
     assert out.count() == out.select("id").distinct().count() == 3
     want = reduce_people(_full_persons(spark, rows), BL, max_identities=20)
     assert _member_set(out) == _member_set(want)
+
+
+def _closure_by_hand(state, delta, bl):
+    """The closure walked on the driver over full reads of both tables:
+    (touched components, hops), hops counted as the store's closure counts
+    them (the index of the hop that found nothing new)."""
+    comps_of, keys_of = {}, {}
+    for r in state.read("key_index").collect():
+        comps_of.setdefault(r["key"], set()).add(r["component"])
+    for r in blocking_keys(state.read("membership"), bl, "component").collect():
+        keys_of.setdefault(r["component"], set()).add(r["key"])
+    frontier = {r["key"] for r in blocking_keys(delta, bl, "id").collect()}
+    touched = set()
+    hops = 0
+    while frontier:
+        new = set().union(*(comps_of.get(k, set()) for k in frontier)) - touched
+        if not new:
+            break
+        touched |= new
+        frontier = set().union(*(keys_of.get(c, set()) for c in new))
+        hops += 1
+    return touched, hops
+
+
+_CAP_ROWS = [
+    row
+    for c in range(4)
+    for row in ((2 * c + 1, f"nm {c}a", f"pair{c}@x.com"), (2 * c + 2, "shared nm", f"pair{c}@x.com"))
+]
+
+
+@pytest.mark.parametrize(
+    "batches, max_identities, hops",
+    [
+        # bridges an old singleton and a cluster of the previous fold
+        ([[(1, "a one", "e1@x.com"), (4, "b one", "e4@x.com"), (5, "c one", "e5@x.com")],
+          [(6, "z one", "e5@x.com"), (7, "q one", "e7@x.com")],
+          [(9, "q one", "e4@x.com"), (10, "new", "e10@x.com")]], 20, 1),
+        # cap-split clusters reached through a shared name: a second hop
+        ([_CAP_ROWS, [(100, "other", "pair0@x.com")]], 4, 2),
+        # five of 200 clusters
+        ([[(3 * g + j, f"name {g} {j}", f"g{g}@x.com") for g in range(200) for j in range(3)],
+          [(1000 + g, f"fresh {g}", f"g{g}@x.com") for g in range(5)]], 20, 1),
+        # all-popular keys seed nothing
+        ([[(1, "popular", "popular@email.com"), (2, "n two", "e2@x.com")],
+          [(1, "popular", "popular@email.com")]], 20, 0),
+    ],
+    ids=["bridge", "second-hop", "five-of-200", "all-popular"],
+)
+def test_closure_matches_a_driver_side_walk(spark, tmp_path, batches, max_identities, hops):
+    """The bucket-probing closure returns the touched components (with
+    their membership buckets), the member rows and the hop count of a
+    closure walked by hand over full reads of the store."""
+    state, _ = _fold_batches(spark, tmp_path, batches[:-1], max_identities=max_identities)
+    delta = _full_persons(spark, batches[-1])
+    touched, scope, got_hops, _ = _touched_closure_bucketed(state, delta, BL)
+    want_touched, want_hops = _closure_by_hand(state, delta, BL)
+    assert set(touched) == want_touched
+    assert got_hops == want_hops == hops
+    members = state.read("membership")
+    buckets = members.select("component", state.bucket_expr("membership").alias("b")).collect()
+    assert touched == {r["component"]: r["b"] for r in buckets if r["component"] in touched}
+    want_scope = members.where(F.col("component").isin(list(touched)))
+    assert sorted(scope.collect()) == sorted(want_scope.collect())

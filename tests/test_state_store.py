@@ -109,6 +109,51 @@ def test_every_live_leaf_holds_one_part_file(spark, tmp_path):
             assert len(parts) == 1, (table, bucket, gen, parts)
 
 
+def test_commit_writes_each_table_in_parallel_tasks(spark, tmp_path):
+    """Each table's write stage runs min(affected buckets, its share of
+    the cores) tasks — an explicit count AQE does not coalesce to one task
+    — and every leaf still holds one part file."""
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    state = IncrementalState(spark, str(tmp_path))
+    members = (
+        _full_persons(spark, _corpus(4))
+        .withColumn("component", F.col("id"))
+        .withColumn("external_id", F.lit(""))
+    )
+    # plain rows: no shuffle before the write's own
+    kidx = spark.createDataFrame(
+        [(i, 1000 + i) for i in range(12)], "component long, key long"
+    )
+    writes = {}
+    for table, df in (("membership", members), ("key_index", kidx)):
+        buckets = sorted(r["b"] for r in df.select(state.bucket_expr(table).alias("b")).distinct().collect())
+        assert len(buckets) >= 2, (table, buckets)
+        writes[table] = (df, buckets)
+    try:
+        sc.setJobGroup("commit", "commit")
+        state.commit(0, writes, exact_mode=True)
+        _last_job_in(spark, "after-commit")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # a write's result job also lists its shuffle's (skipped) map stage;
+    # the result stage is the job's last
+    write_tasks = sorted(
+        tracker.getStageInfo(max(info.stageIds)).numTasks
+        for info in map(tracker.getJobInfo, tracker.getJobIdsForGroup("commit"))
+        if len(info.stageIds) > 1
+    )
+    share = sc.defaultParallelism // len(IncrementalState.TABLES)
+    want = sorted(min(len(b), share) for _, b in writes.values())
+    assert write_tasks == want and min(want) > 1, (write_tasks, want)
+    for table, (_, buckets) in writes.items():
+        for b in buckets:
+            assert len(glob.glob(os.path.join(state._leaf(table, b, 0), "part-*.parquet"))) == 1
+
+
 def test_fold_jobs_inherit_caller_job_group(spark, tmp_path):
     """The commit's writes run in pool threads; every job the fold starts,
     those included, must carry the caller's job group."""
