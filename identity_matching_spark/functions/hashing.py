@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from identity_matching_spark.session import barrier
+
 # 31-bit Mersenne prime: hash values and permutation params live below 2^31,
 # so every product in the universal hash (a*x + b) stays below 2^62 — exact
 # int64 arithmetic, no silent wraparound. (The earlier 2^61-1 field overflowed
@@ -229,7 +231,7 @@ def lsh_candidate_edges(
     # consumer but is a trivial JVM generator.
     banded = per_text.select(
         "_text", "_min_id", "_n", udf(F.col("_text")).alias("_bands")
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
     bands = banded.select(
         "_text", "_min_id", "_n", F.explode("_bands").alias("bucket")
     )

@@ -25,12 +25,10 @@ Scale notes:
   blocks are bounded by aliases-per-person — convergence in a handful of
   rounds, each round = 2 shuffle joins on the same key layout.
 * Lineage is truncated every iteration (north_rule: checkpointed CC
-  iterations). When the SparkContext has a checkpoint directory configured
-  (``sc.setCheckpointDir``), the truncation is a *reliable* ``checkpoint()``
-  into it — an executor loss mid-loop replays from the checkpoint, not from
-  the raw edges. Without one it falls back to ``localCheckpoint`` (fast,
-  but executor-lost state recomputes) — fine in local mode, configure a
-  checkpoint dir on a real cluster.
+  iterations) by ``session.barrier``: a reliable checkpoint into the
+  SparkContext's checkpoint dir when one is set (an executor loss mid-loop
+  replays from it, not from the raw edges), a local checkpoint otherwise
+  — fine in local mode, configure a checkpoint dir on a real cluster.
 * For cross-*job* durability, pass a ``CheckpointStore``: every completed
   iteration's labels are persisted under a key that includes a fingerprint
   of the (symmetrized) edge input, so a killed job resumes from the last
@@ -48,6 +46,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from identity_matching_spark.session import barrier
 
 # bytes per symmetrized edge row on the driver: two longs
 EDGE_ROW_BYTES = 16
@@ -79,27 +79,6 @@ def edges_fingerprint(edges: DataFrame) -> str:
         F.sum(F.xxhash64(F.lit("salt"), "src", "dst").cast("decimal(38,0)")).alias("h2"),
     ).collect()[0]
     return hashlib.sha256(f"{row['n']}|{row['h1']}|{row['h2']}".encode()).hexdigest()[:12]
-
-
-def _truncate(df: DataFrame, reliable: bool, eager: bool) -> tuple[DataFrame, DataFrame | None]:
-    """Cut lineage: reliable checkpoint when a checkpoint dir is configured
-    (survives executor loss), localCheckpoint otherwise.
-
-    The reliable path persists first: an unpersisted RDD is recomputed from
-    scratch by ``doCheckpoint`` when it writes the checkpoint files, doubling
-    every iteration's work — exactly the cluster path the feature targets.
-
-    Returns ``(truncated, cache_handle)``. The checkpointed DataFrame has a
-    NEW plan (LogicalRDD), so calling ``unpersist`` on it would not release
-    the cache entry — that entry is keyed to the pre-checkpoint plan. The
-    caller must unpersist the returned handle once the next iteration's
-    checkpoint has materialized (verified empirically: unpersisting the
-    post-checkpoint DataFrame leaves the CacheManager entry alive).
-    """
-    if not reliable:
-        return df.localCheckpoint(eager=eager), None
-    cached = df.persist()
-    return cached.checkpoint(eager=eager), cached
 
 
 def _min_labels(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -202,29 +181,18 @@ def connected_components(
     min member id, /root/reference/people.go:332-353).
     """
     spark = edges.sparkSession
-    reliable = spark.sparkContext.getCheckpointDir() is not None
-
     counted = Observation()
-    e, e_handle = _truncate(
-        symmetrize(edges).observe(counted, F.count(F.lit(1)).alias("rows")),
-        reliable,
-        eager=True,
-    )
+    e = barrier(symmetrize(edges).observe(counted, F.count(F.lit(1)).alias("rows")), eager=True)
     if nodes is not None:
         nodes = nodes.select(F.col("id").cast("long")).distinct()
     cap = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     if counted.get["rows"] * EDGE_ROW_BYTES <= cap:
-        labels = _finish_on_driver(e, nodes)
-        if e_handle is not None:
-            e_handle.unpersist()
-        return labels
+        return _finish_on_driver(e, nodes)
 
     if nodes is None:
         nodes = e.select(F.col("src").alias("id")).distinct()
 
-    labels, labels_handle = _truncate(
-        nodes.select("id", F.col("id").alias("component")), reliable, eager=True
-    )
+    labels = barrier(nodes.select("id", F.col("id").alias("component")), eager=True)
     prev_sum = labels.agg(F.sum(F.col("component").cast("decimal(38,0)"))).collect()[0][0]
 
     start_iter = 0
@@ -236,11 +204,7 @@ def connected_components(
             if store.exists(f"{iter_key}_iter{i}"):
                 # materialize off the store file: the scaffolding is deleted
                 # after convergence and the result must not depend on it
-                if labels_handle is not None:
-                    labels_handle.unpersist()
-                labels, labels_handle = _truncate(
-                    store.read(f"{iter_key}_iter{i}"), reliable, eager=True
-                )
+                labels = barrier(store.read(f"{iter_key}_iter{i}"), eager=True)
                 prev_sum = labels.agg(
                     F.sum(F.col("component").cast("decimal(38,0)"))
                 ).collect()[0][0]
@@ -248,20 +212,12 @@ def connected_components(
                 break
 
     converged = False
-    prev_cached: DataFrame | None = labels_handle
     for _it in range(start_iter, MAX_ITER):
-        # lazy checkpoint: the convergence aggregation below is the single
-        # action per round — it materializes the checkpoint as it runs
-        lbl, lbl_handle = _truncate(_round(e, labels), reliable, eager=False)
-        cur_sum = lbl.agg(F.sum(F.col("component").cast("decimal(38,0)"))).collect()[0][0]
-        if reliable:
-            # this round's checkpoint is on disk; free the previous round's
-            # cache (the PERSIST handle — unpersisting the post-checkpoint
-            # DataFrame would be a no-op, see _truncate)
-            if prev_cached is not None:
-                prev_cached.unpersist()
-            prev_cached = lbl_handle
-        labels = lbl
+        # lazy barrier (no checkpoint dir): the convergence aggregation
+        # below is the single action per round — it materializes the
+        # barrier as it runs
+        labels = barrier(_round(e, labels))
+        cur_sum = labels.agg(F.sum(F.col("component").cast("decimal(38,0)"))).collect()[0][0]
         # labels only decrease, so an unchanged sum proves no label moved
         if cur_sum == prev_sum:
             converged = True
@@ -269,12 +225,6 @@ def connected_components(
         if store is not None:
             labels = store.write(f"{iter_key}_iter{_it}", labels)
         prev_sum = cur_sum
-
-    # loop done: the surviving labels are backed by checkpoint files (or a
-    # store parquet), never by these caches — release them all
-    for h in (prev_cached, e_handle):
-        if h is not None:
-            h.unpersist()
 
     if store is not None and converged:
         # converged: iteration scaffolding is no longer a valid resume point.

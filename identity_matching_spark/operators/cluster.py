@@ -39,6 +39,7 @@ from identity_matching_spark.operators.blocking import (
     star_edges,
 )
 from identity_matching_spark.operators.cc import connected_components
+from identity_matching_spark.session import barrier
 
 _EDGE_SCHEMA = "src long, dst long, is_j3 boolean"
 
@@ -316,7 +317,7 @@ def reduce_people(
             .otherwise(F.col("id"))
             .alias("_q"),
         )
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     if external_ids is None and extra_edges is None:
         members0 = qfull.select(*persons.columns, F.col("_q").alias("component"))
@@ -341,7 +342,7 @@ def reduce_people(
         members0 = (
             qfull.join(comp0_q.withColumnRenamed("id", "_q"), "_q")
             .select(*persons.columns, "component")
-            .localCheckpoint(eager=False)
+            .transform(barrier)
         )
     # without external ids every component's ext is the empty string: the
     # blocks take it as a literal instead of a strict aggregate + join
@@ -421,7 +422,7 @@ def reduce_people(
         block_input = (
             block_input.join(totals, "name_key")
             .where(F.col("_nc") >= 2)
-            .localCheckpoint(eager=False)
+            .transform(barrier)
         )
         safe = block_input.where(F.col("_tw") <= max_identities)
         unsafe = block_input.where(F.col("_tw") > max_identities)
@@ -445,7 +446,7 @@ def reduce_people(
         # counters exactly when no external matcher is given; with one, the
         # reference skips matched emails during email blocking, so the
         # occupancy figure is an upper bound there.
-        name_edges = name_edges.localCheckpoint(eager=False)
+        name_edges = name_edges.transform(barrier)
         email_stats = persons.groupBy("email").agg(
             F.count(F.lit(1)).alias("n"), F.max(F.col("pop_email").cast("int")).alias("pop")
         )

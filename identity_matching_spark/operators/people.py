@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from identity_matching_spark.functions.normalize import clean_email, clean_name, name_key
 from identity_matching_spark.operators.blacklist import Blacklist
+from identity_matching_spark.session import barrier
 
 
 def verify_unique_ids(df: DataFrame) -> None:
@@ -96,7 +97,7 @@ def build_persons(
     # sub-predicate references — re-running translate+regex per reference
     # per RAW row (measured 12× slower at 2.7M signatures). With the
     # barrier the predicates read materialized attributes once.
-    df = df.localCheckpoint(eager=False)
+    df = df.transform(barrier)
 
     popular = blacklist.is_popular_name(F.col("name_c"))
     if popular_names is not None:

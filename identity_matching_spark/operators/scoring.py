@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from identity_matching_spark.functions.similarity import jaro_winkler_udf, levenshtein_ratio
+from identity_matching_spark.session import barrier
 
 
 def score_pairs(
@@ -41,7 +42,7 @@ def score_pairs(
     # and the back-join below; without it Catalyst duplicates the subtree
     # and the whole candidate DAG (LSH banding, bucket join, name joins)
     # executes twice inside one action.
-    cand = candidates.join(left, "src").join(right, "dst").localCheckpoint(eager=False)
+    cand = candidates.join(left, "src").join(right, "dst").transform(barrier)
 
     # Identical non-empty names are jw=1.0 by definition (empty==empty is
     # pinned to 0.0, matching the scalar kernel) — short-circuit them in the

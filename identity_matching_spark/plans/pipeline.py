@@ -11,7 +11,9 @@ stage 6  aliases/identities outputs
 Each stage is a pure DataFrame function; with a ``CheckpointStore`` the
 pipeline resumes from the last completed stage and checkpoint names carry the
 config fingerprint (cache invalidation semantics of the reference's
-``findSignatures``/SQL-hash, people.go:434-442,581-603).
+``findSignatures``/SQL-hash, people.go:434-442,581-603). Without a store each
+stage output is cut off by ``session.barrier``, the engine's one barrier
+policy.
 """
 
 from __future__ import annotations
@@ -41,6 +43,7 @@ from identity_matching_spark.operators.stats import (
     frequency_stats,
 )
 from identity_matching_spark.sources.io import CheckpointStore
+from identity_matching_spark.session import barrier
 
 # a name is popular once it co-occurs with this many distinct emails
 # (research pipeline.py:272)
@@ -84,10 +87,10 @@ def run_pipeline(
 
     def checkpoint(stage: str, compute):
         if store is None:
-            # no durable store: still materialize the stage boundary (lazy
-            # local checkpoint) so downstream consumers reuse it instead of
-            # recomputing the whole upstream DAG per consumer
-            return compute().localCheckpoint(eager=False)
+            # no durable store: still cut the stage boundary with a barrier
+            # so downstream consumers reuse it instead of recomputing the
+            # whole upstream DAG per consumer
+            return compute().transform(barrier)
         return store.get_or_compute(stage, compute)
 
     # stage 0 — signatures (raw-value dedup mirrors the reference's GROUP BY

@@ -3,13 +3,14 @@
 The defaults target correctness at local scale and the right physical plans at
 cluster scale: AQE (runtime coalesce + skew-join splitting), Arrow transfer for
 the few pandas UDFs, and a shuffle-partition count sized to the parallelism.
+``barrier`` is the one place that cuts lineage between stages.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -62,7 +63,23 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.legacy.createHiveTableByDefault", "false")
+        # drop reliable checkpoint files with their RDD, or a stream piles them up
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def barrier(df: DataFrame, eager: bool = False) -> DataFrame:
+    """``df`` with its lineage cut: the engine's only stage barrier.
+
+    With a checkpoint dir on the SparkContext (``sc.setCheckpointDir``) it is
+    a reliable ``checkpoint``, which survives executor loss, and always eager:
+    a lazy one runs its input twice (once more to write the files), and only
+    a persist, which leaves a cached plan behind, would avoid that. Otherwise
+    it is a ``localCheckpoint``, lazy unless ``eager``.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=eager)

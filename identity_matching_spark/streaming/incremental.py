@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from identity_matching_spark.operators import blocking
+from identity_matching_spark.session import barrier
 
 
 # --- delta-scoped incremental clustering ---------------------------------
@@ -452,7 +453,7 @@ def _touched_closure_bucketed(
         rows = (
             state.read_buckets("membership", mb)
             .join(F.broadcast(new_comps), "component", "semi")
-            .localCheckpoint(eager=False)
+            .transform(barrier)
         )
         scope = scope.unionByName(rows)
     raise RuntimeError(
@@ -567,7 +568,7 @@ def fold_batch(
             "re-resolve the corpus from scratch into a fresh store"
         )
     spark = state.spark
-    delta = delta_persons.localCheckpoint(eager=False)
+    delta = delta_persons.transform(barrier)
 
     if not state.exists():
         membership = delta.join(
@@ -589,13 +590,13 @@ def fold_batch(
     def observed(df: DataFrame, metric: str) -> DataFrame:
         """``df``, counting its rows into ``metrics[metric]`` when metrics
         are collected; ``df`` must feed exactly one action's plan directly
-        (an Observation reads 0 through a lazy checkpoint)."""
+        (an Observation reads 0 through a lazy barrier)."""
         if not collect_metrics:
             return df
         observations[metric] = Observation()
         return df.observe(observations[metric], F.count(F.lit(1)).alias("rows"))
 
-    delta_ids = delta.select("id").distinct().localCheckpoint(eager=False)
+    delta_ids = delta.select("id").distinct().transform(barrier)
 
     # --- touched closure, which reads the scope (bucket probes) -----------
     with _job_tag(spark, "fold:closure"):
@@ -605,10 +606,10 @@ def fold_batch(
     # --- re-resolve the scoped slice, then its affected buckets -----------
     with _job_tag(spark, "fold:re-resolve"):
         scope = scope.drop("component", "external_id")
-        scoped = scope.unionByName(delta).dropDuplicates(["id"]).localCheckpoint(eager=False)
+        scoped = scope.unionByName(delta).dropDuplicates(["id"]).transform(barrier)
         # keys verified as in a from-scratch run: a surrogate collision must raise, not merge
         rescoped = reduce_people(scoped, blacklist, max_identities=max_identities)
-        rescoped = rescoped.localCheckpoint(eager=False)
+        rescoped = rescoped.transform(barrier)
         # membership: the touched components (their buckets are known from
         # the closure), whose rows are replaced, and the rescoped ones — one
         # row per scoped person; key_index: the scope's keys, which are the

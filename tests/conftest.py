@@ -23,6 +23,19 @@ def broadcast_threshold(spark):
 
 
 @pytest.fixture
+def checkpoint_dir(spark, tmp_path):
+    """A checkpoint dir on the SparkContext for the test: every
+    ``session.barrier`` then writes a reliable checkpoint into it. Unset
+    afterwards, so the other tests keep the ``localCheckpoint`` path
+    (PySpark has no unset API; the Scala setter is public in bytecode)."""
+    path = str(tmp_path / "spark_ckpt")
+    sc = spark.sparkContext
+    sc.setCheckpointDir(path)
+    yield path
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
+
+
+@pytest.fixture
 def cc_loop(broadcast_threshold):
     """Run ``connected_components`` on its join loop, whatever the graph size:
     for tests that pin the loop's store, resume and checkpoint behaviour."""

@@ -7,9 +7,9 @@ loop test here runs under ``cc_loop`` (broadcast threshold -1). Covers:
 * fingerprint isolation: labels from a DIFFERENT graph sharing the store and
   stage prefix are never resumed (the ADVICE stale-resume hazard);
 * cleanup: iteration scaffolding is deleted once the loop converges;
-* reliable mode: with a Spark checkpoint dir configured the loop writes
-  reliable checkpoints into it (executor-loss durability on a cluster), and
-  releases its caches (ADVICE r2 regression).
+* reliable mode: with a Spark checkpoint dir configured (``checkpoint_dir``)
+  the loop writes reliable checkpoints into it (executor-loss durability on
+  a cluster), and leaves no cached plan behind (ADVICE r2 regression).
 """
 
 import os
@@ -79,37 +79,21 @@ def test_iteration_files_cleaned_after_convergence(spark, tmp_path):
     assert leftovers == []
 
 
-def test_reliable_checkpoint_used_when_dir_configured(spark, tmp_path):
-    ckpt_dir = str(tmp_path / "spark_ckpt")
-    spark.sparkContext.setCheckpointDir(ckpt_dir)
-    try:
-        e = _edges(spark, [(1, 2), (2, 3), (3, 4), (4, 5)])
-        out = _collect(connected_components(e))
-        assert set(out.values()) == {1}
-        # reliable checkpoints landed in the configured dir
-        sub = []
-        for root, _dirs, files in os.walk(ckpt_dir):
-            sub.extend(files)
-        assert sub, "no reliable checkpoint files written"
-    finally:
-        # unset so the session-scoped fixture's other tests keep the fast
-        # localCheckpoint path (no public unset API; the Scala var is
-        # package-public in bytecode)
-        jsc = spark.sparkContext._jsc.sc()
-        getattr(jsc, "checkpointDir_$eq")(spark.sparkContext._jvm.scala.Option.apply(None))
+def test_reliable_checkpoint_used_when_dir_configured(spark, checkpoint_dir):
+    e = _edges(spark, [(1, 2), (2, 3), (3, 4), (4, 5)])
+    out = _collect(connected_components(e))
+    assert set(out.values()) == {1}
+    # reliable checkpoints landed in the configured dir
+    sub = []
+    for root, _dirs, files in os.walk(checkpoint_dir):
+        sub.extend(files)
+    assert sub, "no reliable checkpoint files written"
 
 
-def test_cc_reliable_mode_leaves_no_cached_plans(spark, tmp_path):
-    from identity_matching_spark.operators.cc import connected_components
-
+def test_cc_reliable_mode_leaves_no_cached_plans(spark, checkpoint_dir):
     spark.catalog.clearCache()
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    try:
-        e = spark.createDataFrame([(i, i + 1) for i in range(1, 30)], "src long, dst long")
-        labels = connected_components(e)
-        assert {r["component"] for r in labels.collect()} == {1}
-        cm = spark._jsparkSession.sharedState().cacheManager()
-        assert cm.isEmpty(), "CC left persisted plans in the CacheManager"
-    finally:
-        jsc = spark.sparkContext._jsc.sc()
-        getattr(jsc, "checkpointDir_$eq")(spark.sparkContext._jvm.scala.Option.apply(None))
+    e = spark.createDataFrame([(i, i + 1) for i in range(1, 30)], "src long, dst long")
+    labels = connected_components(e)
+    assert {r["component"] for r in labels.collect()} == {1}
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    assert cm.isEmpty(), "CC left persisted plans in the CacheManager"

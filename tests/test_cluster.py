@@ -318,7 +318,7 @@ def test_connected_components_edge_cases(spark, broadcast_threshold, edges, node
     assert loop == want
 
 
-def test_small_graph_finishes_on_driver(spark, tmp_path, broadcast_threshold):
+def test_small_graph_finishes_on_driver(spark, tmp_path, broadcast_threshold, request):
     """Under get_spark's threshold a small graph skips the join loop: the
     edge barrier plus one collect, no store iteration files, and in reliable
     mode no persisted plan left behind."""
@@ -340,14 +340,10 @@ def test_small_graph_finishes_on_driver(spark, tmp_path, broadcast_threshold):
     assert len(sc.statusTracker().getJobIdsForGroup("cc_driver_finish")) <= 3
 
     spark.catalog.clearCache()
-    sc.setCheckpointDir(str(tmp_path / "ckpt"))
-    try:
-        assert run() == want
-        cm = spark._jsparkSession.sharedState().cacheManager()
-        assert cm.isEmpty(), "the driver finish left persisted plans in the CacheManager"
-    finally:
-        jsc = sc._jsc.sc()
-        getattr(jsc, "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
+    request.getfixturevalue("checkpoint_dir")
+    assert run() == want
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    assert cm.isEmpty(), "the driver finish left persisted plans in the CacheManager"
     assert [d for d in os.listdir(tmp_path) if "_iter" in d] == []
 
 
