@@ -1,16 +1,10 @@
-"""Clustering quality evaluation (SURVEY §2.9).
+"""Clustering quality evaluation (SURVEY §2.9): pairwise precision/recall/F1.
 
-Two metric families:
-
-* ``pairwise_prf`` — the BASELINE gate: precision/recall/F1 over entity
-  pairs. Computed from counts, never materializing pairs: for cluster sizes
-  n the pair count is Σ n(n-1)/2, so TP/FP/FN come from three hash
-  aggregations — O(rows), works at any scale.
-* ``per_cluster_prf`` — the research prototype's per-ground-truth-entity
-  precision/recall/F1 with unweighted and cluster-size-weighted averages
-  (semantics of /root/reference/research/idmatching/pipeline.py:224-260).
+``pairwise_prf`` is the BASELINE gate: precision/recall/F1 over entity
+pairs. Computed from counts, never materializing pairs: for cluster sizes n
+the pair count is Σ n(n-1)/2, so TP/FP/FN come from three hash
+aggregations — O(rows), works at any scale.
 """
-
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
@@ -40,34 +34,3 @@ def pairwise_prf(assignments: DataFrame) -> dict:
         "recall": recall,
         "f1": f1,
     }
-
-
-def per_cluster_prf(assignments: DataFrame) -> dict:
-    """Per ground-truth entity: its members' predicted clusters are compared
-    member-by-member (intersection / cluster size, intersection / truth
-    size), averaged unweighted and weighted by predicted-cluster size."""
-    cell = assignments.groupBy("person", "component").agg(F.count(F.lit(1)).alias("inter"))
-    truth_sz = assignments.groupBy("person").agg(F.count(F.lit(1)).alias("t_sz"))
-    pred_sz = assignments.groupBy("component").agg(F.count(F.lit(1)).alias("p_sz"))
-    scored = (
-        cell.join(truth_sz, "person")
-        .join(pred_sz, "component")
-        .withColumn("prec", F.col("inter") / F.col("p_sz"))
-        .withColumn("rec", F.col("inter") / F.col("t_sz"))
-        .withColumn(
-            "f1",
-            F.when(
-                (F.col("prec") + F.col("rec")) > 0,
-                2 * F.col("prec") * F.col("rec") / (F.col("prec") + F.col("rec")),
-            ).otherwise(F.lit(0.0)),
-        )
-    )
-    row = scored.agg(
-        F.avg("prec").alias("precision"),
-        F.avg("rec").alias("recall"),
-        F.avg("f1").alias("f1"),
-        (F.sum(F.col("prec") * F.col("p_sz")) / F.sum("p_sz")).alias("w_precision"),
-        (F.sum(F.col("rec") * F.col("p_sz")) / F.sum("p_sz")).alias("w_recall"),
-        (F.sum(F.col("f1") * F.col("p_sz")) / F.sum("p_sz")).alias("w_f1"),
-    ).collect()[0]
-    return {k: float(row[k]) for k in row.asDict()}

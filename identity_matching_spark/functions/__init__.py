@@ -3,7 +3,6 @@ from identity_matching_spark.functions.normalize import (  # noqa: F401
     clean_name,
     name_key,
     normalize_spaces,
-    remove_parens,
     strip_accents_col,
     strip_accents_py,
 )

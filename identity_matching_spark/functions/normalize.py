@@ -9,7 +9,6 @@ Semantics match the reference exactly:
   (/root/reference/research/idmatching/__init__.py:4-7).
 * ``normalizeSpaces`` (/root/reference/people.go:635-637): split on any
   unicode whitespace, join with single spaces.
-* ``removeParens`` (/root/reference/people.go:629-633).
 * repo-qualified name rendering ``{name, repo}``
   (/root/reference/people.go:100-105).
 
@@ -99,22 +98,6 @@ def clean_name(col: Column) -> Column:
 
 def clean_email(col: Column) -> Column:
     return _clean(col)
-
-
-def remove_parens(col: Column) -> Column:
-    """Drop a trailing ``(...)`` parenthetical from a name."""
-    return F.regexp_replace(col, r"([^\(]+)\s+\(([^\)]+)\)", "$1")
-
-
-def unique_sorted(arr: Column) -> Column:
-    """P5: sorted dedup of a string array (reference strings.go:12-25)."""
-    return F.array_sort(F.array_distinct(arr))
-
-
-def is_capitalized(col: Column) -> Column:
-    """P7: first character uppercase (reference strings.go:36-39)."""
-    first = F.substring(col, 1, 1)
-    return (first == F.upper(first)) & (first != F.lower(first))
 
 
 def name_key(name: Column, repo: Column, is_popular: Column) -> Column:

@@ -22,7 +22,8 @@ ASCII so the scorer is oracle-checkable against an independent engine):
 
 DuckDB operates on UTF-8 *bytes*; this implementation operates on
 codepoints, which is strictly better for diacritic-bearing names — the two
-agree on all-ASCII input (property-tested in tests/test_similarity_kernel.py).
+agree on all-ASCII input (property-tested in tests/test_similarity_kernel.py,
+against DuckDB and the scalar spec in tests/reference_impl.py).
 """
 
 from __future__ import annotations
@@ -36,54 +37,6 @@ from pyspark.sql.types import DoubleType
 JW_PREFIX_WEIGHT = 0.1
 JW_MAX_PREFIX = 4
 JW_BOOST_THRESHOLD = 0.7
-
-
-def jaro(s1: str, s2: str) -> float:
-    """Scalar reference implementation (kept as the spec the vectorized
-    kernel is property-tested against)."""
-    n1, n2 = len(s1), len(s2)
-    if not n1 or not n2:
-        return 0.0
-    if s1 == s2:
-        return 1.0
-    window = max(n1, n2) // 2 - 1
-    if window < 0:
-        window = 0
-    m1 = [False] * n1
-    m2 = [False] * n2
-    matches = 0
-    for i, c in enumerate(s1):
-        lo, hi = max(0, i - window), min(n2, i + window + 1)
-        for j in range(lo, hi):
-            if not m2[j] and s2[j] == c:
-                m1[i] = m2[j] = True
-                matches += 1
-                break
-    if not matches:
-        return 0.0
-    t = 0
-    k = 0
-    for i in range(n1):
-        if m1[i]:
-            while not m2[k]:
-                k += 1
-            if s1[i] != s2[k]:
-                t += 1
-            k += 1
-    t //= 2  # integer half-transpositions (DuckDB / classic C semantics)
-    return (matches / n1 + matches / n2 + (matches - t) / matches) / 3
-
-
-def jaro_winkler(s1: str, s2: str) -> float:
-    j = jaro(s1, s2)
-    if j <= JW_BOOST_THRESHOLD:
-        return j
-    prefix = 0
-    for a, b in zip(s1[:JW_MAX_PREFIX], s2[:JW_MAX_PREFIX]):
-        if a != b:
-            break
-        prefix += 1
-    return j + prefix * JW_PREFIX_WEIGHT * (1 - j)
 
 
 # --- numpy-vectorized batch kernel ---------------------------------------

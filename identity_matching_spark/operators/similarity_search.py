@@ -1,15 +1,12 @@
 """Approximate nearest-neighbor search over embedding columns.
 
-Two paths over ``DataFrame[id, embedding: array<float>]``:
-
-* ``brute_force_topk`` — exact baseline: broadcast the (small) query set,
-  JVM-side cosine (zip_with/aggregate — no Python), window top-k. One pass
-  over the corpus; at 100 TB this is the scan-everything fallback.
-* ``ivf_topk`` — scale path: a deterministic random-hyperplane coarse
-  quantizer assigns every vector to a cell (like IVF/LSH bucketing); queries
-  probe their own cell plus ``n_probe`` neighboring cells (lowest Hamming
-  distance), so the scan touches ~n_probe/2^bits of the corpus. Partition
-  the corpus by cell and the probe join becomes partition-pruned.
+Over ``DataFrame[id, embedding: array<float>]``, ``ivf_topk`` is the scale
+path: a deterministic random-hyperplane coarse quantizer assigns every
+vector to a cell (like IVF/LSH bucketing); queries probe their own cell plus
+``n_probe`` neighboring cells (lowest Hamming distance), so the scan touches
+~n_probe/2^bits of the corpus. Partition the corpus by cell and the probe
+join becomes partition-pruned. Cosine runs JVM-side (zip_with/aggregate —
+no Python). ``ivf_neardup_pairs`` applies the same quantizer corpus-vs-corpus.
 
 The quantizer's hyperplanes are seeded numpy vectors broadcast as literals —
 deterministic across runs and cluster sizes.
@@ -33,27 +30,6 @@ def _vectors(df: DataFrame, id_alias: str, vec_alias: str) -> DataFrame:
     return df.select(
         F.col("id").alias(id_alias), F.col("embedding").cast("array<double>").alias(vec_alias)
     )
-
-
-def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector — the BASELINE/
-    ORACLE shape (broadcast corpus×queries). Production searches take
-    :func:`ivf_topk` / :func:`ivf_neardup_pairs`; nothing in the package
-    calls this from a pipeline (tests and q14's oracle twin only).
-
-    Returns DataFrame[query_id, neighbor_id, sim, rank]; ties broken by
-    neighbor id ascending (deterministic).
-    """
-    c = _vectors(corpus, "neighbor_id", "emb")
-    q = _vectors(queries, "query_id", "qemb")
-    sim = F.round(cosine_similarity(F.col("qemb"), F.col("emb")), ROUND_DIGITS)
-    sims = (
-        c.crossJoin(F.broadcast(q))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", sim.alias("sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return sims.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 def _hyperplanes(dim: int, bits: int) -> np.ndarray:

@@ -978,9 +978,10 @@ def q29(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q32(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The cache-merge relation behind ``write_match_cache`` (updates win per
-    email, untouched entries survive — external/cache.go DumpOnDisk), driven
-    on two deterministic cache states derived from the customer table."""
+    """The external-match cache merge relation ``merge_match_cache``
+    (updates win per email, untouched entries survive — external/cache.go
+    DumpOnDisk), driven on two deterministic cache states derived from the
+    customer table."""
     from identity_matching_spark.sources.io import merge_match_cache
 
     c = _t(spark, sf_dir, "customer")

@@ -9,7 +9,8 @@ from identity_matching_spark.operators.multimodal import (
     sample_video_frames,
     synth_media,
 )
-from identity_matching_spark.operators.similarity_search import brute_force_topk, ivf_topk
+from identity_matching_spark.operators.similarity_search import ivf_topk
+from reference_impl import brute_force_topk
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the busy spark "

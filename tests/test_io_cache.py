@@ -1,79 +1,9 @@
-"""Signature CSV cache roundtrip (S2/S3) — semantics of
-/root/reference/people.go:444-579 and people_test.go:181-211: normalization
-happens at read time; rows with empty fields or bad timestamps are dropped."""
-
-import datetime as dt
+"""``CheckpointStore`` (S4 cache-or-source): durable CC iteration
+checkpoints and the catalog-table backend."""
 
 import pytest
-from pyspark.sql import functions as F
 
-from identity_matching_spark.sources.io import (
-    CheckpointStore,
-    read_signature_cache,
-    write_signature_cache,
-)
-
-
-def test_cache_roundtrip_normalizes_and_drops(spark, tmp_path):
-    rows = [
-        ("repo1", "Máximo  Cuadros", "MC@Gmail.com", "aaa", dt.datetime(2019, 1, 1)),
-        ("repo2", "bob", "bob@google.com", "bbb", dt.datetime(2019, 2, 1)),
-        ("", "noname", "x@y.com", "ccc", dt.datetime(2019, 3, 1)),  # empty repo → dropped
-        ("repo3", "", "x@y.com", "ddd", dt.datetime(2019, 3, 1)),  # empty name → dropped
-    ]
-    df = spark.createDataFrame(
-        rows, "repo string, name string, email string, hash string, ts timestamp"
-    )
-    path = str(tmp_path / "cache")
-    write_signature_cache(df, path)
-    back = read_signature_cache(spark, path)
-    got = {(r["repo"], r["name"], r["email"], r["hash"]) for r in back.collect()}
-    assert got == {
-        ("repo1", "maximo cuadros", "mc@gmail.com", "aaa"),
-        ("repo2", "bob", "bob@google.com", "bbb"),
-    }
-    ts = {r["repo"]: r["ts"] for r in back.collect()}
-    assert ts["repo1"] == dt.datetime(2019, 1, 1)
-
-
-def test_cache_drops_unparseable_time(spark, tmp_path):
-    p = tmp_path / "cache2"
-    p.mkdir()
-    (p / "part.csv").write_text(
-        "repo,name,email,hash,time\n"
-        "r1,alice,a@b.com,h1,2019-01-01T00:00:00Z\n"
-        "r2,bob,b@b.com,h2,not-a-time\n"
-    )
-    back = read_signature_cache(spark, str(p))
-    names = [r["name"] for r in back.collect()]
-    assert names == ["alice"]
-
-
-def test_bucketed_join_is_shuffle_free(spark, tmp_path, monkeypatch):
-    """Bucketed tables joined on the bucket key must not re-shuffle either
-    side (SortMergeJoin over pre-bucketed scans — no Exchange)."""
-    from pyspark.sql import functions as F
-
-    from identity_matching_spark.sources import io
-    from identity_matching_spark.sources.io import write_bucketed_table
-
-    a = spark.range(5000).select(F.col("id"), (F.col("id") % 7).alias("x"))
-    b = spark.range(5000).select(F.col("id"), (F.col("id") % 11).alias("y"))
-    monkeypatch.setattr(io, "N_BUCKETS", 8)
-    write_bucketed_table(a, "t_aliases", ["id"])
-    write_bucketed_table(b, "t_identities", ["id"])
-    # broadcast would bypass bucketing — force the shuffle-join path
-    prev_threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("t_aliases").join(spark.table("t_identities"), "id")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 5000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_threshold)
-        spark.sql("DROP TABLE IF EXISTS t_aliases")
-        spark.sql("DROP TABLE IF EXISTS t_identities")
+from identity_matching_spark.sources.io import CheckpointStore
 
 
 @pytest.mark.usefixtures("cc_loop")

@@ -1,4 +1,4 @@
-"""Small-operator parity tests: P5/P7 helpers, reporter counters, CSV export,
+"""Small-operator parity tests: reporter counters, the salted distinct count,
 and the property test pinning the JVM diacritics strip to the reference
 Python implementation."""
 
@@ -8,28 +8,10 @@ from pyspark.sql import functions as F
 
 from identity_matching_spark.functions.normalize import (
     _strip_accents_udf,
-    is_capitalized,
     strip_accents_col,
     strip_accents_py,
-    unique_sorted,
 )
 from identity_matching_spark.reporter import Reporter
-from identity_matching_spark.sources.io import export_csv
-
-
-def test_unique_sorted(spark):
-    df = spark.createDataFrame([(["b", "a", "b", "c", "a"],)], "arr array<string>")
-    assert df.select(unique_sorted(F.col("arr")).alias("u")).collect()[0]["u"] == [
-        "a",
-        "b",
-        "c",
-    ]
-
-
-def test_is_capitalized(spark):
-    df = spark.createDataFrame([("Word",), ("word",), ("1word",)], "s string")
-    got = [r[0] for r in df.select(is_capitalized(F.col("s"))).collect()]
-    assert got == [True, False, False]
 
 
 def test_strip_accents_jvm_matches_python_reference(spark):
@@ -60,14 +42,6 @@ def test_reporter_counters(spark):
     rep.commit("people after reduce", 42)
     report = rep.report()
     assert report["people after reduce"] == 42
-
-
-def test_export_csv(spark, tmp_path):
-    df = spark.createDataFrame([(2, "b"), (1, "a")], "id long, v string")
-    path = str(tmp_path / "out")
-    export_csv(df, path)
-    back = spark.read.option("header", True).csv(path).collect()
-    assert [(r["id"], r["v"]) for r in back] == [("1", "a"), ("2", "b")]
 
 
 def test_salted_count_distinct_exact(spark):

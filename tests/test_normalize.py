@@ -1,9 +1,8 @@
 """Normalization unit tests.
 
-Cases ported from the reference's test suite:
-/root/reference/people_test.go:253-280 (TestCleanName, TestRemoveParens,
-TestNormalizeSpaces) and the diacritics behavior of
-/root/reference/strings.go:41-47.
+Cases ported from the reference's test suite: people_test.go:253-280
+(TestCleanName, TestNormalizeSpaces) and the diacritics behavior of
+strings.go:41-47.
 """
 
 from pyspark.sql import functions as F
@@ -13,7 +12,6 @@ from identity_matching_spark.functions.normalize import (
     clean_name,
     name_key,
     normalize_spaces,
-    remove_parens,
     strip_accents_py,
 )
 
@@ -61,18 +59,6 @@ def test_normalize_spaces(spark):
     }
     outs = _apply(spark, normalize_spaces, list(cases))
     assert outs == list(cases.values())
-
-
-def test_remove_parens(spark):
-    cases = {
-        "name (asdf)": "name",
-        "name (asdf) surname": "name surname",  # per the reference regex
-        "name": "name",
-    }
-    outs = _apply(spark, remove_parens, list(cases))
-    # reference regex `([^\(]+)\s+\(([^\)]+)\)` replaces with group 1
-    assert outs[0] == "name"
-    assert outs[2] == "name"
 
 
 def test_name_key_repo_qualification(spark):

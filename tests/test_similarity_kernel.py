@@ -9,11 +9,9 @@ import duckdb
 import pandas as pd
 import pytest
 
-from identity_matching_spark.functions.similarity import (
-    jaro_winkler,
-    jaro_winkler_batch,
-)
+from identity_matching_spark.functions.similarity import jaro_winkler_batch
 from identity_matching_spark.operators.scoring import score_pairs
+from reference_impl import jaro_winkler
 
 CURATED = [
     ("martha", "marhta"),

@@ -1,7 +1,9 @@
-"""Gate: no option that only its default reaches. ``tools/unused_params.py``
-lists the defaulted parameters (and dataclass fields) of public package
-functions that no caller outside ``tests/`` sets, and exits non-zero when one
-is not on its allowlist or an allowlist entry lists nothing."""
+"""Gate: no public package code that only tests reach.
+``tools/unused_params.py`` lists the defaulted parameters (and dataclass
+fields) of public package functions that no caller outside ``tests/`` sets,
+and the public functions and classes that no code outside ``tests/``
+references; it exits non-zero when one is not on its allowlists or an
+allowlist entry lists nothing."""
 
 import os
 import subprocess

@@ -1,17 +1,21 @@
 #!/usr/bin/env python
-"""List defaulted parameters of public package functions that no caller sets,
-and fail on any that is not on the allowlist below.
+"""Fail on public package code that only tests reach: options that only
+their default reaches, and functions or classes that nothing references.
 
 An option that only its default reaches is a branch nothing runs: fold it
-into a constant. This scans the ``identity_matching_spark`` package for
-public functions (module-level ``def``s and the methods of public classes
-whose names do not start with ``_``; a class's ``__init__`` is its
-constructor) and prints every parameter with a default that no call in the
-package, ``perfbench/``, ``tools/``, ``bench/``, ``bench.py`` or
-``__spark_entry__.py`` sets, by keyword or by position. Callers under
-``tests/`` do not count. The fields with defaults of public dataclasses
-(``PipelineConfig``) are checked the same way against the keywords of
-``ClassName(...)`` calls.
+into a constant. A function that only tests call is code no run executes:
+delete it, or move it under ``tests/`` when tests compare against it.
+
+Both checks scan the ``identity_matching_spark`` package against the code
+outside ``tests/``: the package itself, ``perfbench/``, ``tools/``,
+``bench/``, ``bench.py`` and ``__spark_entry__.py``.
+
+*Parameters.* For public functions (module-level ``def``s and the methods
+of public classes whose names do not start with ``_``; a class's
+``__init__`` is its constructor) it prints every parameter with a default
+that no call sets, by keyword or by position. The fields with defaults of
+public dataclasses (``PipelineConfig``) are checked the same way against
+the keywords of ``ClassName(...)`` calls.
 
 Calls are matched to functions by name only (``f(...)``, ``x.f(...)``;
 ``ClassName(...)`` for ``__init__``), so a call of another function of the
@@ -21,9 +25,25 @@ The list can therefore miss an unused option, but does not name one that a
 caller sets directly. A dataclass field set only through a ``**mapping``
 is listed (the mapping's keys are not read).
 
-Prints one ``path:line function(parameter)`` line per parameter (allowed
-ones with their reason), then their count. Exits 1 when a listed parameter
-is not on ``ALLOWED`` or an ``ALLOWED`` entry lists nothing (remove it).
+*Functions.* It prints every public module-level function, public class and
+public method of a public class whose name nothing references. These count
+as references, matched by name only:
+
+* a ``Name`` or ``Attribute`` load (``f``, ``x.f``);
+* a ``from module import f`` alias, except in the package's own
+  ``__init__.py`` files, whose re-exports reach nothing by themselves;
+* a decorator on the def that registers it (the driver-query registry
+  reaches ``q01``-``q33`` that way); the wrappers in ``WRAPPERS``
+  (``property``, ``pandas_udf``, ...) register nothing and do not count.
+
+A reference from inside the def or class of the same name (recursion, a
+classmethod building its own class) does not count.
+
+Prints one ``path:line function(parameter)`` line per parameter and one
+``path:line function`` line per function (allowed ones with their reason),
+each list followed by its count. Exits 1 when a listed entry is not on
+``ALLOWED`` (parameters) or ``ALLOWED_UNREFERENCED`` (functions), or an
+entry of either lists nothing (remove it).
 
 Usage: python tools/unused_params.py
 """
@@ -51,9 +71,20 @@ ALLOWED = {
         "event-time deployment setting: idle time that closes a conversation",
     "streaming.incremental.run_incremental_resolution(trigger_seconds)":
         "stream deployment setting: micro-batch interval",
-    "sources.io.export_jdbc(mode)": "S8 parquet->SQL export, run only with a JDBC driver jar",
-    "sources.io.export_jdbc(properties)": "S8 parquet->SQL export: connection properties",
-    "sources.io.export_jdbc(batch_size)": "S8 parquet->SQL export: insert batching",
+}
+
+# public functions and classes a deployment reaches, though no code in this
+# repo references them; keyed by module (dotted, under the package) and name
+ALLOWED_UNREFERENCED = {
+    "streaming.incremental.run_incremental_resolution":
+        "the streaming entry point a deployment calls",
+}
+
+# decorators that wrap a def without registering it anywhere: a def carrying
+# only these is not referenced by its decorators
+WRAPPERS = {
+    "staticmethod", "classmethod", "property", "cached_property", "dataclass",
+    "pandas_udf", "udf", "wraps",
 }
 
 
@@ -161,9 +192,75 @@ def _set_by_calls() -> dict[str, tuple[set[str], int, bool]]:
     return {k: (v[0], v[1], v[2]) for k, v in seen.items()}
 
 
-def _allow_key(path: str, label: str, name: str) -> str:
+def _referenced_names() -> set[str]:
+    """Names that code outside ``tests/`` references: ``Name`` and
+    ``Attribute`` loads, ``from x import name`` aliases (except in the
+    package's ``__init__.py`` re-exports) and registering decorators (any
+    decorator but the wrappers in ``WRAPPERS``) of a def. A reference from
+    inside a def or class of the same name does not count."""
+    names: set[str] = set()
+
+    def visit(node: ast.AST, enclosing: tuple[str, ...], reexport: bool) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            if any(_decorator_name(d) not in WRAPPERS for d in node.decorator_list):
+                names.add(node.name)
+            enclosing += (node.name,)
+        elif isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+            if node.id not in enclosing:
+                names.add(node.id)
+        elif isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
+            if node.attr not in enclosing:
+                names.add(node.attr)
+        elif isinstance(node, ast.ImportFrom) and not reexport:
+            names.update(a.name for a in node.names)
+        for child in ast.iter_child_nodes(node):
+            visit(child, enclosing, reexport)
+
+    package_dir = os.path.join(ROOT, PACKAGE)
+    for rel in CALLER_PATHS:
+        for path in _py_files(rel):
+            reexport = path.startswith(package_dir) and path.endswith("__init__.py")
+            visit(_parse(path), (), reexport)
+    return names
+
+
+def _decorator_name(d: ast.expr) -> str | None:
+    f = d.func if isinstance(d, ast.Call) else d
+    return f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
+
+
+def _public_definitions():
+    """Yield (path, line, name, label) of each public module-level function
+    and class and each public method of a public class."""
+    for path in _py_files(PACKAGE):
+        for node in _parse(path).body:
+            if not isinstance(node, (ast.FunctionDef, ast.ClassDef)) or node.name.startswith("_"):
+                continue
+            yield path, node.lineno, node.name, node.name
+            if isinstance(node, ast.ClassDef):
+                for item in node.body:
+                    if isinstance(item, ast.FunctionDef) and not item.name.startswith("_"):
+                        yield path, item.lineno, item.name, f"{node.name}.{item.name}"
+
+
+def _module_key(path: str, label: str) -> str:
     module = os.path.relpath(path, os.path.join(ROOT, PACKAGE))[: -len(".py")]
-    return f"{module.replace(os.sep, '.')}.{label}({name})"
+    return f"{module.replace(os.sep, '.')}.{label}"
+
+
+def _report(kind: str, rows: list[tuple[str, str]], allowed: dict[str, str]) -> int:
+    """Print each (row, key) with its allowlist reason, then the stale
+    allowlist entries and a count line; return the number of failures."""
+    bad = 0
+    for row, key in sorted(rows):
+        reason = allowed.get(key)
+        print(f"{row}  [allowed: {reason}]" if reason else f"{row}  NOT ALLOWED")
+        bad += reason is None
+    stale = sorted(set(allowed) - {key for _, key in rows})
+    for key in stale:
+        print(f"allowlist entry {key} lists nothing: remove it")
+    print(f"{len(rows)} {kind} ({bad} not allowed, {len(stale)} stale allowlist entries)")
+    return bad + len(stale)
 
 
 def main() -> int:
@@ -178,19 +275,20 @@ def main() -> int:
                 continue
             if index is not None and index < n_pos:
                 continue
-            key = _allow_key(path, label, name)
+            key = f"{_module_key(path, label)}({name})"
             unused.append((f"{os.path.relpath(path, ROOT)}:{line} {label}({name})", key))
-    bad = 0
-    for row, key in sorted(unused):
-        reason = ALLOWED.get(key)
-        print(f"{row}  [allowed: {reason}]" if reason else f"{row}  NOT ALLOWED")
-        bad += reason is None
-    stale = sorted(set(ALLOWED) - {key for _, key in unused})
-    for key in stale:
-        print(f"allowlist entry {key} lists nothing: remove it")
-    print(f"{len(unused)} defaulted parameters no caller outside tests/ sets "
-          f"({bad} not allowed, {len(stale)} stale allowlist entries)")
-    return 1 if bad or stale else 0
+    failures = _report("defaulted parameters no caller outside tests/ sets", unused, ALLOWED)
+    referenced = _referenced_names()
+    unreached = [
+        (f"{os.path.relpath(path, ROOT)}:{line} {label}", _module_key(path, label))
+        for path, line, name, label in _public_definitions()
+        if name not in referenced
+    ]
+    failures += _report(
+        "public functions and classes no code outside tests/ references",
+        unreached, ALLOWED_UNREFERENCED,
+    )
+    return 1 if failures else 0
 
 
 if __name__ == "__main__":
