@@ -77,24 +77,8 @@ def main(argv: list[str] | None = None) -> int:
     # the run stages committed their own counters (people found / filtering
     # drops in operators/people.py, match + edge classes in
     # operators/cluster.py — reference keys, people.go:141-167,
-    # matching.go:129-233); on a checkpoint-RESUMED run those stages were
-    # read from disk and never executed, so fall back to output-derived
-    # gauges for the cardinality counters rather than dropping them
-    resumed = reporter.report()
-    if "people found" not in resumed:
-        # must equal a fresh run's build_persons counter, which counts the
-        # CLEANED-triplet dedup — not the raw signature rows
-        from identity_matching_spark.operators.people import normalize_signatures
-
-        reporter.commit(
-            "people found",
-            normalize_signatures(out["signatures"])
-            .select("repo", "name_c", "email_c")
-            .distinct()
-            .count(),
-        )
-    if "people after filtering" not in resumed:
-        reporter.commit("people after filtering", out["persons"].count())
+    # matching.go:129-233); a checkpoint-RESUMED stage commits them again
+    # from its sidecar (CheckpointStore.get_or_compute)
     reporter.commit("people after reduce", out["identities"].count())
     reporter.commit("alias rows", out["aliases"].count())
     reporter.commit("elapsed_sec", round(time.time() - t0, 2))

@@ -12,37 +12,28 @@ Semantics match the reference exactly:
 * repo-qualified name rendering ``{name, repo}``
   (/root/reference/people.go:100-105).
 
-Everything stays JVM-side except the diacritics strip, which has no Spark
-built-in. That one is an Arrow-vectorized pandas UDF, and it is only invoked
-on rows that actually contain non-ASCII characters — ASCII rows (the vast
-majority at corpus scale) short-circuit through ``F.when`` and never leave
-whole-stage codegen.
+Everything runs in the JVM, the diacritics strip included: Spark has no
+built-in for it, so it is a ``translate`` map generated from unicodedata
+plus a ``regexp_replace`` of the remaining combining marks
+(:func:`strip_accents_col`).
 """
 
 from __future__ import annotations
 
 import unicodedata
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 # Java regex with the UNICODE_CHARACTER_CLASS flag so \s covers U+3000 and
 # friends, mirroring Go strings.Fields / Python str.split().
 _UNICODE_WS = r"(?U)\s+"
-_NON_ASCII = r"[^\x00-\x7F]"
 
 
 def strip_accents_py(s: str) -> str:
     """Reference-identical accent strip: NFD → drop Mn marks → NFC."""
     s = "".join(c for c in unicodedata.normalize("NFD", s) if unicodedata.category(c) != "Mn")
     return unicodedata.normalize("NFC", s)
-
-
-@F.pandas_udf(StringType())
-def _strip_accents_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda x: None if x is None else strip_accents_py(x))
 
 
 def _build_translate_map() -> tuple[str, str]:
@@ -75,8 +66,7 @@ def strip_accents_col(col: Column) -> Column:
     * ``regexp_replace(\\p{Mn})`` then removes freestanding combining marks
       (already-decomposed input).
 
-    ``_strip_accents_udf`` remains as the reference implementation; a
-    property test pins equality between the two.
+    A property test pins it to ``strip_accents_py``.
     """
     return F.regexp_replace(
         F.translate(col, _TRANSLATE_SRC, _TRANSLATE_DST), r"\p{Mn}", ""

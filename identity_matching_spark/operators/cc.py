@@ -10,8 +10,8 @@ finishes in-core, on the driver.
 
 Scale notes:
 * Small graphs finish on the driver. The symmetrized edges are materialized
-  once by an eager barrier that also counts them (an ``Observation``, no
-  extra job). When ``rows × 16 B`` (two longs) fits the session's
+  once by a barrier that also counts them (an ``Observation``, no extra
+  job). When ``rows × 16 B`` (two longs) fits the session's
   ``spark.sql.autoBroadcastJoinThreshold`` — the size this engine already
   treats as "small enough to build on the driver and broadcast" (8 MB under
   ``session.get_spark``; −1 means never) — the edges are collected once via
@@ -35,7 +35,9 @@ Scale notes:
   finished iteration — and a different graph sharing the store can never
   resume from stale labels. Iteration files are deleted on convergence.
 * Labels only decrease and are bounded by the component minimum, so the
-  total-sum convergence test is exact (no row-level diff join needed).
+  total-sum convergence test is exact (no row-level diff join needed). The
+  sum is an ``Observation`` on the barrier that materializes the labels, so
+  a round is one action.
 """
 
 from __future__ import annotations
@@ -47,7 +49,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from identity_matching_spark.session import barrier
+from identity_matching_spark.session import barrier, observed
 
 # bytes per symmetrized edge row on the driver: two longs
 EDGE_ROW_BYTES = 16
@@ -129,6 +131,16 @@ def _finish_on_driver(e: DataFrame, nodes: DataFrame | None) -> DataFrame:
     )
 
 
+def _summed(labels: DataFrame) -> tuple[DataFrame, object]:
+    """``labels`` materialized by a barrier, and the sum of their components,
+    which rides that barrier's action as an ``Observation``."""
+    total = Observation()
+    labels = barrier(
+        labels.observe(total, F.sum(F.col("component").cast("decimal(38,0)")).alias("sum"))
+    )
+    return labels, observed(total, "sum")["sum"]
+
+
 def _round(e: DataFrame, labels: DataFrame) -> DataFrame:
     """One min-label propagation + pointer-jump round (lazy plan)."""
     nbr_min = (
@@ -182,18 +194,17 @@ def connected_components(
     """
     spark = edges.sparkSession
     counted = Observation()
-    e = barrier(symmetrize(edges).observe(counted, F.count(F.lit(1)).alias("rows")), eager=True)
+    e = barrier(symmetrize(edges).observe(counted, F.count(F.lit(1)).alias("rows")))
     if nodes is not None:
         nodes = nodes.select(F.col("id").cast("long")).distinct()
     cap = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    if counted.get["rows"] * EDGE_ROW_BYTES <= cap:
+    if observed(counted, "rows")["rows"] * EDGE_ROW_BYTES <= cap:
         return _finish_on_driver(e, nodes)
 
     if nodes is None:
         nodes = e.select(F.col("src").alias("id")).distinct()
 
-    labels = barrier(nodes.select("id", F.col("id").alias("component")), eager=True)
-    prev_sum = labels.agg(F.sum(F.col("component").cast("decimal(38,0)"))).collect()[0][0]
+    labels, prev_sum = _summed(nodes.select("id", F.col("id").alias("component")))
 
     start_iter = 0
     iter_key = None
@@ -204,20 +215,13 @@ def connected_components(
             if store.exists(f"{iter_key}_iter{i}"):
                 # materialize off the store file: the scaffolding is deleted
                 # after convergence and the result must not depend on it
-                labels = barrier(store.read(f"{iter_key}_iter{i}"), eager=True)
-                prev_sum = labels.agg(
-                    F.sum(F.col("component").cast("decimal(38,0)"))
-                ).collect()[0][0]
+                labels, prev_sum = _summed(store.read(f"{iter_key}_iter{i}"))
                 start_iter = i + 1
                 break
 
     converged = False
     for _it in range(start_iter, MAX_ITER):
-        # lazy barrier (no checkpoint dir): the convergence aggregation
-        # below is the single action per round — it materializes the
-        # barrier as it runs
-        labels = barrier(_round(e, labels))
-        cur_sum = labels.agg(F.sum(F.col("component").cast("decimal(38,0)"))).collect()[0][0]
+        labels, cur_sum = _summed(_round(e, labels))
         # labels only decrease, so an unchanged sum proves no label moved
         if cur_sum == prev_sum:
             converged = True

@@ -28,7 +28,7 @@ Pipeline shape (matching /root/reference/matching.go:102-236):
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from identity_matching_spark.operators import blocking
@@ -39,7 +39,7 @@ from identity_matching_spark.operators.blocking import (
     star_edges,
 )
 from identity_matching_spark.operators.cc import connected_components
-from identity_matching_spark.session import barrier
+from identity_matching_spark.session import barrier, observed
 
 _EDGE_SCHEMA = "src long, dst long, is_j3 boolean"
 
@@ -434,11 +434,20 @@ def reduce_people(
 
     if reporter is not None:
         # A7 edge-class counters (matching.go:129,142,156,209,283). One
-        # conditional-agg job per class, only when a reporter is attached.
-        # Barrier first: the 'graph edges' count below and the CC call both
-        # consume name_edges — without it the star-edge/greedy derivation
-        # would run twice.
-        #
+        # conditional-agg job per person-side class, only when a reporter is
+        # attached. The name-pass edges are counted by class, J2 =
+        # per-external-id name stars and J3 = the anonymous-group merge edges
+        # (matching.go:184-207), by an Observation on the barrier that
+        # materializes them for the CC call: no extra job.
+        edge_counts = Observation()
+        name_edges = barrier(
+            name_edges.observe(
+                edge_counts,
+                F.count(F.lit(1)).alias("total"),
+                F.count(F.when(F.col("is_j3"), 1)).alias("j3"),
+            )
+        )
+
         # NOTE on semantics: the email-side counters are BLOCK-OCCUPANCY
         # counts (members/edges of non-popular multi-member email blocks),
         # computed in one aggregate rather than traced edge-by-edge. On the
@@ -446,7 +455,6 @@ def reduce_people(
         # counters exactly when no external matcher is given; with one, the
         # reference skips matched emails during email blocking, so the
         # occupancy figure is an upper bound there.
-        name_edges = name_edges.transform(barrier)
         email_stats = persons.groupBy("email").agg(
             F.count(F.lit(1)).alias("n"), F.max(F.col("pop_email").cast("int")).alias("pop")
         )
@@ -472,12 +480,7 @@ def reduce_people(
         reporter.commit("people matched by name", int(row["matched"] or 0))
         reporter.commit("popular names found", int(row["popular"] or 0))
 
-        # name-pass edges split by class in one aggregate: J2 = per-external-id
-        # name stars, J3 = the anonymous-group merge edges (matching.go:184-207)
-        row = name_edges.agg(
-            F.count(F.lit(1)).alias("total"),
-            F.count(F.when(F.col("is_j3"), 1)).alias("j3"),
-        ).collect()[0]
+        row = observed(edge_counts, "total", "j3")
         reporter.commit("graph edges", int(row["total"]))
         reporter.commit("graph edges by name (J2)", int(row["total"] - row["j3"]))
         reporter.commit("graph edges anonymous merge (J3)", int(row["j3"]))

@@ -138,19 +138,13 @@ def _ppm_frames(buf: bytes) -> list[np.ndarray] | None:
 
 
 def _try_decode_image(payload: bytes | None) -> np.ndarray | None:
-    """Real pixel decode when possible: PIL (any format) or stdlib binary
-    PPM (P6). Returns a float32 grayscale array in [0,1], else None."""
+    """Real pixel decode when possible: stdlib binary PPM (P6), or PIL for
+    the formats the stdlib cannot read. A P6 payload always takes the
+    stdlib parse, so its features do not depend on whether PIL is
+    installed. Returns a float32 grayscale array in [0,1], else None."""
     if not payload:
         return None
     buf = bytes(payload)
-    if HAVE_PIL:  # pragma: no cover - PIL absent in this container
-        import io
-
-        try:
-            img = PIL.Image.open(io.BytesIO(buf)).convert("L")
-            return np.asarray(img, dtype=np.float32) / 255.0
-        except Exception:
-            return None
     if buf[:2] == b"P6":
         frames = _ppm_frames(buf)
         if frames is None:
@@ -171,6 +165,14 @@ def _try_decode_image(payload: bytes | None) -> np.ndarray | None:
             )
             return None
         return frames[0]
+    if HAVE_PIL:  # pragma: no cover - needs PIL
+        import io
+
+        try:
+            img = PIL.Image.open(io.BytesIO(buf)).convert("L")
+            return np.asarray(img, dtype=np.float32) / 255.0
+        except Exception:
+            return None
     return None
 
 

@@ -91,7 +91,7 @@ def build_persons(
     df = df.groupBy("repo", "name_c", "email_c").agg(
         F.max("hash").alias("hash"), F.max("ts").alias("ts")
     )
-    # materialization barrier (lazy): without it Catalyst pushes the
+    # materialization barrier: without it Catalyst pushes the
     # blacklist filter below this aggregate, substituting the full
     # clean_name/clean_email expression trees into every one of the ~10
     # sub-predicate references — re-running translate+regex per reference

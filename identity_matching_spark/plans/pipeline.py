@@ -91,7 +91,7 @@ def run_pipeline(
             # so downstream consumers reuse it instead of recomputing the
             # whole upstream DAG per consumer
             return compute().transform(barrier)
-        return store.get_or_compute(stage, compute)
+        return store.get_or_compute(stage, compute, reporter)
 
     # stage 0 — signatures (raw-value dedup mirrors the reference's GROUP BY
     # discovery SQL, people.go:428-432)

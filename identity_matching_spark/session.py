@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 
 def get_spark(
@@ -71,15 +71,28 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def barrier(df: DataFrame, eager: bool = False) -> DataFrame:
-    """``df`` with its lineage cut: the engine's only stage barrier.
+def barrier(df: DataFrame) -> DataFrame:
+    """``df`` materialized where it stands, its lineage cut: the engine's
+    only stage barrier. Every job of ``df`` runs before this returns, so an
+    ``Observation`` on ``df`` is readable right after it (:func:`observed`).
 
     With a checkpoint dir on the SparkContext (``sc.setCheckpointDir``) it is
-    a reliable ``checkpoint``, which survives executor loss, and always eager:
-    a lazy one runs its input twice (once more to write the files), and only
-    a persist, which leaves a cached plan behind, would avoid that. Otherwise
-    it is a ``localCheckpoint``, lazy unless ``eager``.
+    a reliable ``checkpoint``, which survives executor loss; otherwise a
+    ``localCheckpoint``.
     """
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=eager)
+    return df.localCheckpoint(eager=True)
+
+
+def observed(observation: Observation, *names: str) -> dict:
+    """The row ``observation`` collected, as a dict. AQE prunes a frame it
+    finds empty at run time from the plan with its observation, which then
+    completes with an empty row that PySpark cannot convert: that frame had
+    no rows, and each of ``names`` reads 0."""
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        return observation.get
+    except Py4JJavaError:
+        return dict.fromkeys(names, 0)

@@ -12,8 +12,10 @@ generalizes that into a per-stage checkpoint contract:
 * re-running with the same config hash reads the checkpoint instead of
   recomputing (resumability); a config change produces a new suffix —
   fingerprint invalidation exactly like the reference;
-* alongside each checkpoint a ``_metrics`` row set records row counts and
-  per-partition lineage (north_rule: per-partition lineage + metrics).
+* alongside each checkpoint a ``<stage>_metrics`` sidecar records its
+  per-partition row counts (north_rule: per-partition lineage + metrics),
+  the write's seconds and the reporter counters the stage committed, which
+  a resumed run reports again.
 
 The signatures checkpoint carries the reference's CSV signature cache
 (S2/S3). Also provides the external-match cache merge relation (J4; the
@@ -74,42 +76,33 @@ class CheckpointStore:
             return self.spark.catalog.tableExists(self.path(stage))
         return os.path.exists(os.path.join(self.path(stage), "_SUCCESS"))
 
-    def write(self, stage: str, df: DataFrame) -> DataFrame:
-        """Materialize a stage output + metrics/lineage sidecar; returns the
-        re-read DataFrame so downstream plans start from the checkpoint (no
-        recomputation, truncated lineage)."""
+    def write(self, stage: str, df: DataFrame, counters: dict | None = None) -> DataFrame:
+        """Materialize a stage output + its ``<stage>_metrics`` sidecar; returns
+        the re-read DataFrame so downstream plans start from the checkpoint (no
+        recomputation, truncated lineage). The sidecar holds one row per
+        output partition with its row count (one row with NULL ``partition``
+        and ``rows`` for an empty output), each carrying the write's
+        ``seconds`` and the reporter ``counters`` the stage committed, as JSON."""
         t0 = time.time()
-        if self.table_prefix:
-            self._create_or_replace(df, self.path(stage))
-            out = self.spark.read.table(self.path(stage))
-        else:
-            df.write.mode("overwrite").parquet(self.path(stage))
-            out = self.spark.read.parquet(self.path(stage))
+        self._save(df, stage)
+        out = self.read(stage)
         # per-partition lineage + row counts (north_rule)
-        lineage = (
-            out.groupBy(F.spark_partition_id().alias("partition"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .withColumn("stage", F.lit(stage))
-            .withColumn("config", F.lit(self.suffix))
+        lineage = out.groupBy(F.spark_partition_id().alias("partition")).agg(
+            F.count(F.lit(1)).alias("rows")
         )
-        if self.table_prefix:
-            self._create_or_replace(lineage, self.path(f"{stage}_metrics"))
-        else:
-            lineage.write.mode("overwrite").parquet(self.path(f"{stage}_metrics"))
-            meta = {
-                "stage": stage,
-                "rows": out.count(),
-                "seconds": round(time.time() - t0, 3),
-                "config": self.suffix,
-            }
-            with open(os.path.join(self.path(stage), "_metrics.json"), "w") as fh:
-                json.dump(meta, fh)
+        meta = self.spark.createDataFrame(
+            [(stage, self.suffix, round(time.time() - t0, 3), json.dumps(counters or {}))],
+            "stage string, config string, seconds double, counters string",
+        )
+        self._save(meta.join(lineage, how="left"), f"{stage}_metrics")
         return out
 
-    def _create_or_replace(self, df: DataFrame, name: str) -> None:
-        """``writeTo(...).createOrReplace()`` with a session-catalog fallback.
+    def _save(self, df: DataFrame, stage: str) -> None:
+        """Overwrite ``stage`` with ``df``: a parquet directory, or under a
+        table prefix ``writeTo(...).createOrReplace()`` with a session-catalog
+        fallback.
 
-        The primary path is the DSv2 atomic RTAS an Iceberg/v2 catalog
+        The primary table path is the DSv2 atomic RTAS an Iceberg/v2 catalog
         provides. Spark's built-in session catalog (V1 tables) rejects it
         with UNSUPPORTED_FEATURE.TABLE_OPERATION; for that specific error —
         and only that one — fall back to drop + ``saveAsTable``. Non-atomic
@@ -118,6 +111,10 @@ class CheckpointStore:
         real deployments should configure an Iceberg catalog; the fallback
         keeps the table-mode code path executable everywhere.
         """
+        name = self.path(stage)
+        if not self.table_prefix:
+            df.write.mode("overwrite").parquet(name)
+            return
         try:
             df.writeTo(name).createOrReplace()
         except Exception as exc:  # AnalysisException; keyed on the error class
@@ -141,11 +138,25 @@ class CheckpointStore:
 
         shutil.rmtree(self.path(stage), ignore_errors=True)
 
-    def get_or_compute(self, stage: str, compute) -> DataFrame:
-        """Resume-from-checkpoint contract (reference cache-or-source S4)."""
-        if self.exists(stage):
+    def get_or_compute(self, stage: str, compute, reporter=None) -> DataFrame:
+        """Resume-from-checkpoint contract (reference cache-or-source S4).
+        With a ``reporter``, a computed stage keeps the counters its
+        computation committed in its sidecar, and a resumed one commits them
+        again from there, so a resumed run reports what a fresh one does. A
+        stage whose sidecar is missing (a crash between the two writes) is
+        computed again."""
+        if self.exists(stage) and self.exists(f"{stage}_metrics"):
+            if reporter is not None:
+                # a sidecar written before counters were kept has none to replay
+                sidecar = self.read(f"{stage}_metrics")
+                counters = sidecar.first()["counters"] if "counters" in sidecar.columns else "{}"
+                for name, value in json.loads(counters).items():
+                    reporter.commit(name, value)
             return self.read(stage)
-        return self.write(stage, compute())
+        before = reporter.report() if reporter is not None else {}
+        df = compute()
+        counters = dict(reporter.report().items() - before.items()) if reporter is not None else {}
+        return self.write(stage, df, counters)
 
 
 # --- external-match cache merge (J4; external/cache.go:153-259) ----------

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from identity_matching_spark.operators import blocking
-from identity_matching_spark.session import barrier
+from identity_matching_spark.session import barrier, observed
 
 
 # --- delta-scoped incremental clustering ---------------------------------
@@ -462,18 +462,6 @@ def _touched_closure_bucketed(
     )
 
 
-def _observed_rows(observation) -> int:
-    """The ``rows`` an Observation counted. A frame AQE finds empty at run
-    time is pruned from the plan with its observation, which then completes
-    with an empty row that PySpark cannot convert: that frame had 0 rows."""
-    from py4j.protocol import Py4JJavaError
-
-    try:
-        return observation.get["rows"]
-    except Py4JJavaError:
-        return 0
-
-
 @contextmanager
 def _job_tag(spark, tag: str):
     """Tag every Spark job started in the block (this thread) with ``tag``."""
@@ -587,10 +575,9 @@ def fold_batch(
 
     observations: dict[str, Observation] = {}
 
-    def observed(df: DataFrame, metric: str) -> DataFrame:
+    def counted(df: DataFrame, metric: str) -> DataFrame:
         """``df``, counting its rows into ``metrics[metric]`` when metrics
-        are collected; ``df`` must feed exactly one action's plan directly
-        (an Observation reads 0 through a lazy barrier)."""
+        are collected; ``df`` must feed exactly one action's plan."""
         if not collect_metrics:
             return df
         observations[metric] = Observation()
@@ -609,7 +596,7 @@ def fold_batch(
         scoped = scope.unionByName(delta).dropDuplicates(["id"]).transform(barrier)
         # keys verified as in a from-scratch run: a surrogate collision must raise, not merge
         rescoped = reduce_people(scoped, blacklist, max_identities=max_identities)
-        rescoped = rescoped.transform(barrier)
+        rescoped = counted(rescoped, "scope_rows").transform(barrier)
         # membership: the touched components (their buckets are known from
         # the closure), whose rows are replaced, and the rescoped ones — one
         # row per scoped person; key_index: the scope's keys, which are the
@@ -617,7 +604,7 @@ def fold_batch(
         # rows alike
         affected = _collect_bucket_sets(
             state,
-            membership=observed(rescoped, "scope_rows").select("component"),
+            membership=rescoped.select("component"),
             key_index=blocking_keys(scoped, blacklist, "id").select("key"),
         )
     member_buckets = sorted(set(affected["membership"]) | set(touched.values()))
@@ -631,10 +618,10 @@ def fold_batch(
     # components. The same read gives the old rows of ids colliding with
     # the delta, merged with their new rows (delta-sized groupBy).
     old_members = state.read_buckets("membership", member_buckets)
-    merge_input = observed(
+    merge_input = counted(
         old_members.join(F.broadcast(delta_ids), "id", "semi")
         .drop("component", "external_id")
-        .unionByName(observed(delta, "delta_rows")),
+        .unionByName(counted(delta, "delta_rows")),
         "merge_rows",
     )
     merged = merge_input.groupBy(
@@ -671,7 +658,7 @@ def fold_batch(
             exact_mode=True,
         )
     if collect_metrics:
-        metrics.update({metric: _observed_rows(o) for metric, o in observations.items()})
+        metrics.update({m: observed(o, "rows")["rows"] for m, o in observations.items()})
         metrics["member_buckets"] = len(member_buckets)
         metrics["buckets_read"] = buckets_read + len(member_buckets) + len(kidx_buckets)
     return metrics

@@ -7,13 +7,17 @@
 * ``per_cluster_prf`` — the research prototype's per-ground-truth-entity
   precision/recall/F1 (semantics of the reference's
   research/idmatching/pipeline.py:224-260), unweighted and weighted by
-  predicted-cluster size.
+  predicted-cluster size;
+* ``strip_accents_udf`` — the reference accent strip as a pandas UDF, which
+  the JVM ``functions/normalize.strip_accents_col`` must equal.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from identity_matching_spark.functions.similarity import (
     JW_BOOST_THRESHOLD,
@@ -21,6 +25,7 @@ from identity_matching_spark.functions.similarity import (
     JW_PREFIX_WEIGHT,
     cosine_similarity,
 )
+from identity_matching_spark.functions.normalize import strip_accents_py
 from identity_matching_spark.operators.similarity_search import ROUND_DIGITS, _vectors
 
 
@@ -122,3 +127,8 @@ def per_cluster_prf(assignments: DataFrame) -> dict:
         (F.sum(F.col("f1") * F.col("p_sz")) / F.sum("p_sz")).alias("w_f1"),
     ).collect()[0]
     return {k: float(row[k]) for k in row.asDict()}
+
+
+@F.pandas_udf(StringType())
+def strip_accents_udf(s: pd.Series) -> pd.Series:
+    return s.map(lambda x: None if x is None else strip_accents_py(x))

@@ -6,12 +6,9 @@ import random
 
 from pyspark.sql import functions as F
 
-from identity_matching_spark.functions.normalize import (
-    _strip_accents_udf,
-    strip_accents_col,
-    strip_accents_py,
-)
+from identity_matching_spark.functions.normalize import strip_accents_col, strip_accents_py
 from identity_matching_spark.reporter import Reporter
+from reference_impl import strip_accents_udf
 
 
 def test_strip_accents_jvm_matches_python_reference(spark):
@@ -31,7 +28,7 @@ def test_strip_accents_jvm_matches_python_reference(spark):
     values = pools + rand
     df = spark.createDataFrame([(v,) for v in values], "s string")
     out = df.select(
-        strip_accents_col(F.col("s")).alias("jvm"), _strip_accents_udf(F.col("s")).alias("py")
+        strip_accents_col(F.col("s")).alias("jvm"), strip_accents_udf(F.col("s")).alias("py")
     ).collect()
     for v, r in zip(values, out):
         assert r["jvm"] == r["py"] == strip_accents_py(v), repr(v)

@@ -100,6 +100,34 @@ def test_image_kernel_decodes_real_ppm(spark):
     assert stub.shape == (16,) and not np.allclose(stub, stub[0])
 
 
+def test_ppm_decode_does_not_depend_on_pil(monkeypatch):
+    """A P6 payload takes the stdlib parse whether or not PIL is installed,
+    the strict-parse stub fallback included: PIL only adds the formats the
+    stdlib cannot read. A PIL stand-in fails if it is called."""
+    import pandas as pd
+
+    from identity_matching_spark.operators import multimodal
+
+    kernel, _ = multimodal.image_features(dim=16)
+    batch = pd.DataFrame({
+        "media_id": ["real", "malformed"],
+        # a second whitespace byte after maxval fails the strict parse
+        "payload": [_ppm_bytes(value=200), _ppm_bytes().replace(b"255\n", b"255\n\n", 1)],
+    })
+    without = next(kernel(iter([batch])))["feature"].tolist()
+
+    class _Image:
+        @staticmethod
+        def open(*_args):
+            raise AssertionError("PIL decoded a P6 payload")
+
+    monkeypatch.setattr(multimodal, "HAVE_PIL", True)
+    monkeypatch.setattr(multimodal, "PIL", type("PIL", (), {"Image": _Image}), raising=False)
+    assert next(kernel(iter([batch])))["feature"].tolist() == without
+    assert without[0] == pytest.approx([200.0 / 255.0] * 16)
+    assert without[1] == multimodal._fake_decode(batch["payload"][1], 16).tolist()
+
+
 def test_pil_image_decode_when_available(spark):
     """PIL widens the image path to compressed formats; absent here."""
     from identity_matching_spark.operators import multimodal

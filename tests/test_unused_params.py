@@ -1,9 +1,9 @@
 """Gate: no public package code that only tests reach.
 ``tools/unused_params.py`` lists the defaulted parameters (and dataclass
 fields) of public package functions that no caller outside ``tests/`` sets,
-and the public functions and classes that no code outside ``tests/``
-references; it exits non-zero when one is not on its allowlists or an
-allowlist entry lists nothing."""
+and the module-level functions and classes, public methods and private
+constants that no code outside ``tests/`` references; it exits non-zero
+when one is not on its allowlists or an allowlist entry lists nothing."""
 
 import os
 import subprocess

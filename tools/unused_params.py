@@ -1,6 +1,7 @@
 #!/usr/bin/env python
-"""Fail on public package code that only tests reach: options that only
-their default reaches, and functions or classes that nothing references.
+"""Fail on package code that only tests reach: options that only their
+default reaches, and functions, classes or private constants that nothing
+references.
 
 An option that only its default reaches is a branch nothing runs: fold it
 into a constant. A function that only tests call is code no run executes:
@@ -25,9 +26,10 @@ The list can therefore miss an unused option, but does not name one that a
 caller sets directly. A dataclass field set only through a ``**mapping``
 is listed (the mapping's keys are not read).
 
-*Functions.* It prints every public module-level function, public class and
-public method of a public class whose name nothing references. These count
-as references, matched by name only:
+*Functions.* It prints every module-level function and class, public or
+private, every public method of a public class and every private
+module-level constant (``_NAME = ...``) whose name nothing references.
+These count as references, matched by name only:
 
 * a ``Name`` or ``Attribute`` load (``f``, ``x.f``);
 * a ``from module import f`` alias, except in the package's own
@@ -73,8 +75,9 @@ ALLOWED = {
         "stream deployment setting: micro-batch interval",
 }
 
-# public functions and classes a deployment reaches, though no code in this
-# repo references them; keyed by module (dotted, under the package) and name
+# functions, classes and private constants a deployment reaches, though no
+# code in this repo references them; keyed by module (dotted, under the
+# package) and name
 ALLOWED_UNREFERENCED = {
     "streaming.incremental.run_incremental_resolution":
         "the streaming entry point a deployment calls",
@@ -229,15 +232,33 @@ def _decorator_name(d: ast.expr) -> str | None:
     return f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
 
 
-def _public_definitions():
-    """Yield (path, line, name, label) of each public module-level function
-    and class and each public method of a public class."""
+def _assigned_names(node: ast.stmt) -> list[str]:
+    """The plain names a module-level assignment binds (tuple targets
+    unpacked)."""
+    targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+    names = []
+    for t in targets:
+        for n in ast.walk(t):
+            if isinstance(n, ast.Name):
+                names.append(n.id)
+    return names
+
+
+def _definitions():
+    """Yield (path, line, name, label) of each module-level function and
+    class, each public method of a public class and each private
+    module-level constant."""
     for path in _py_files(PACKAGE):
         for node in _parse(path).body:
-            if not isinstance(node, (ast.FunctionDef, ast.ClassDef)) or node.name.startswith("_"):
+            if isinstance(node, (ast.Assign, ast.AnnAssign)):
+                for name in _assigned_names(node):
+                    if name.startswith("_") and not name.startswith("__"):
+                        yield path, node.lineno, name, name
+                continue
+            if not isinstance(node, (ast.FunctionDef, ast.ClassDef)):
                 continue
             yield path, node.lineno, node.name, node.name
-            if isinstance(node, ast.ClassDef):
+            if isinstance(node, ast.ClassDef) and not node.name.startswith("_"):
                 for item in node.body:
                     if isinstance(item, ast.FunctionDef) and not item.name.startswith("_"):
                         yield path, item.lineno, item.name, f"{node.name}.{item.name}"
@@ -281,11 +302,11 @@ def main() -> int:
     referenced = _referenced_names()
     unreached = [
         (f"{os.path.relpath(path, ROOT)}:{line} {label}", _module_key(path, label))
-        for path, line, name, label in _public_definitions()
+        for path, line, name, label in _definitions()
         if name not in referenced
     ]
     failures += _report(
-        "public functions and classes no code outside tests/ references",
+        "functions, classes and private constants no code outside tests/ references",
         unreached, ALLOWED_UNREFERENCED,
     )
     return 1 if failures else 0
